@@ -1,25 +1,43 @@
 """Batch parse = vectorized header cascade + vectorized tokenizer.
 
 The single entry point the Spark UDF layer wraps: one Arrow batch of raw
-``text`` in, one typed frame (header fields + words/symbols) out. Text
-crosses the JVM↔Python Arrow boundary exactly once (SURVEY.md §4.2 "UDF
-fusion").
+``text`` in, one Arrow struct column (header fields + words/symbols) out.
+Text crosses the JVM↔Python Arrow boundary exactly once (SURVEY.md §4.2
+"UDF fusion"), and the word/symbol ListArrays are built straight from the
+tokenizer's flat output (value array + end offsets).
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..rules.spec import RuleProgram
 from .header import VectorHeaderParser
 from .tokenizer import VectorTokenizer
 
 
+def _list_array(flat: np.ndarray, ends: np.ndarray,
+                valid: np.ndarray) -> pa.ListArray:
+    """ListArray from flat values + inclusive end offsets; rows where
+    ``valid`` is False become null lists."""
+    n = len(ends)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    offsets[1:] = ends
+    # a null at offsets[i] marks list i null; the final offset must stay
+    # non-null (Arrow ListArray.from_arrays convention)
+    off = pa.array(offsets, type=pa.int32(),
+                   mask=np.concatenate((~valid, [False])))
+    values = pa.array(flat, type=pa.string())
+    return pa.ListArray.from_arrays(off, values)
+
+
 class BatchParser:
     """Compiled program, reusable across Arrow batches (built once per
-    executor via the UDF closure)."""
+    executor process, see ``udf._parser_for``)."""
 
     def __init__(self, program: RuleProgram):
         self.program = program
@@ -31,18 +49,47 @@ class BatchParser:
         return self.header.attr_schema
 
     def parse(self, texts: pd.Series,
-              default_year: Optional[pd.Series] = None) -> pd.DataFrame:
-        """→ frame with rule_id, ts, tz_sec, message, words, symbols,
-        error + one column per attr. Failed / empty rows keep null
-        message/words/symbols."""
-        out = self.header.run(texts, default_year=default_year)
-        ok = out["message"].notna()
-        words = pd.Series([None] * len(out), dtype=object)
-        symbols = pd.Series([None] * len(out), dtype=object)
-        if ok.any():
-            w, s = self.tokenizer.run(out.loc[ok, "message"])
-            words[ok.to_numpy()] = pd.Series(w, index=out.index[ok], dtype=object)
-            symbols[ok.to_numpy()] = pd.Series(s, index=out.index[ok], dtype=object)
-        out["words"] = words
-        out["symbols"] = symbols
-        return out
+              default_year: Optional[pd.Series] = None) -> pa.StructArray:
+        """→ struct of rule_id, ts, tz_sec, message, words, symbols,
+        error + one field per attr (``udf.parsed_schema``'s layout).
+        Failed / empty rows keep null message/words/symbols."""
+        hdr = self.header.run(texts, default_year=default_year)
+        ok = hdr["message"].notna()
+        ok_np = ok.to_numpy(dtype=bool)
+
+        # tokenize only ok rows; scatter flat offsets back to full batch
+        n = len(hdr)
+        w_ends_full = np.zeros(n, dtype=np.int64)
+        s_ends_full = np.zeros(n, dtype=np.int64)
+        if ok_np.any():
+            wf, we, sf, se = self.tokenizer.run_flat(hdr.loc[ok, "message"])
+            w_ends_full[ok_np] = we
+            s_ends_full[ok_np] = se
+            # carry forward the running offset across non-ok gaps
+            w_ends_full = np.maximum.accumulate(w_ends_full)
+            s_ends_full = np.maximum.accumulate(s_ends_full)
+        else:
+            wf = np.empty(0, dtype=object)
+            sf = np.empty(0, dtype=object)
+
+        arrays = [
+            pa.array(hdr["rule_id"].to_numpy(np.int32)),
+            pa.array(hdr["ts"], from_pandas=True).cast(pa.timestamp("us")),
+            pa.array(hdr["tz_sec"], type=pa.int32(), from_pandas=True),
+            pa.array(hdr["message"], type=pa.string(), from_pandas=True),
+            _list_array(wf, w_ends_full, ok_np),
+            _list_array(sf, s_ends_full, ok_np),
+            pa.array(hdr["error"], type=pa.string(), from_pandas=True),
+        ]
+        names = ["rule_id", "ts", "tz_sec", "message", "words", "symbols",
+                 "error"]
+        for name, dtype in self.attr_schema:
+            col = hdr[name]
+            if dtype == "int":
+                arrays.append(pa.array(pd.to_numeric(col), type=pa.int64(),
+                                       from_pandas=True))
+            else:
+                arrays.append(pa.array(col, type=pa.string(),
+                                       from_pandas=True))
+            names.append(name)
+        return pa.StructArray.from_arrays(arrays, names=names)

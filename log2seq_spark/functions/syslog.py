@@ -8,7 +8,6 @@ replays it exactly."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # RFC 5424 §6.2.1 facility/severity code tables (public constants)
@@ -45,10 +44,3 @@ def pri_expr(text_col):
                     sev.alias("severity"), fac_name.alias("facility_name"),
                     sev_name.alias("severity_name"), rest.alias("rest"))
 
-
-def with_pri(df: DataFrame, text_col: str = "text",
-             out_col: str = "pri") -> DataFrame:
-    """Adds ``out_col`` with the decoded PRI struct; feed
-    ``out_col.rest`` to the header cascade to parse the remainder with
-    any rule program (PRI strip composes with, not replaces, parsing)."""
-    return df.select("*", pri_expr(F.col(text_col)).alias(out_col))

@@ -61,23 +61,6 @@ def turn_spans(turns: DataFrame, *, conv_col: str = "conv_id",
                  .withColumn("loss", F.col(role_col).isin(list(loss_roles))))
 
 
-def render_conversations(turns: DataFrame, *, conv_col: str = "conv_id",
-                         idx_col: str = "turn_idx",
-                         role_col: str = "role",
-                         text_col: str = "text") -> DataFrame:
-    """→ ``(conv_col, rendered)`` — the full training string per
-    conversation. The per-conv array is bounded by conversation length;
-    use :func:`render_stats` when only digests are needed downstream
-    (keeps rows narrow)."""
-    piece = piece_expr(role_col, text_col)
-    seq = F.transform(
-        F.array_sort(F.collect_list(F.struct(
-            F.col(idx_col).alias("_i"), piece.alias("_p")))),
-        lambda x: x["_p"])
-    return (turns.groupBy(conv_col)
-                 .agg(F.array_join(seq, "").alias("rendered")))
-
-
 def render_samples(turns: DataFrame, *, conv_col: str = "conv_id",
                    idx_col: str = "turn_idx", role_col: str = "role",
                    text_col: str = "text",

@@ -259,19 +259,6 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     return agg.select(F.col(id_col), sim.alias(out_col))
 
 
-def with_simhash(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", out_col: str = "simhash") -> DataFrame:
-    """``df`` with a ``out_col`` 60-bit SimHash column appended (see
-    :func:`simhash_signatures` for the hash itself). Costs one extra
-    shuffle to re-attach the full row; callers that only consume
-    ``(id, simhash)`` should use ``simhash_signatures`` directly."""
-    hashed = simhash_signatures(df, text_col, id_col, out_col)
-    # inner join: explode_outer in simhash_signatures guarantees a
-    # signature row (possibly 0) for EVERY input doc, so no coalesce /
-    # outer join is needed to keep token-less docs
-    return df.join(hashed, id_col)
-
-
 def plane_sign_table(n_planes: int, dim: int) -> list[list[int]]:
     """±1 Rademacher components for plane j at dimension d, derived from
     ``md5(f"{j}#{d}")`` first-byte parity — the exact formula the DuckDB
@@ -654,25 +641,6 @@ def conversation_texts(turns: DataFrame, conv_col: str = "conv_id",
                      F.transform(F.array_sort(F.collect_list(pair)),
                                  lambda x: x["t"]),
                      "\n").alias("text")))
-
-
-def conversation_near_duplicates(turns: DataFrame,
-                                 conv_col: str = "conv_id",
-                                 idx_col: str = "turn_idx",
-                                 text_col: str = "text",
-                                 n_hashes: int = 8, bands: int = 4,
-                                 shingle_n: int = 3) -> DataFrame:
-    """Conversation-level near-dup: the same conversation re-ingested
-    under a fresh conv_id (retry uploads, replayed batches, forked
-    sessions with edited tails) survives turn-level exact dedup —
-    every turn differs or every turn matches but the keys differ.
-    Render each conversation once (:func:`conversation_texts`) and
-    feed the ordinary MinHash-LSH bucketing; returns the same
-    (band, band_hash, n_docs, keep_id) contract as
-    :func:`minhash_near_duplicates` with conv ids as doc ids."""
-    convs = conversation_texts(turns, conv_col, idx_col, text_col)
-    return minhash_near_duplicates(convs, "text", conv_col,
-                                   n_hashes, bands, shingle_n)
 
 
 def fuzzy_contamination(train: DataFrame, evalset: DataFrame,
@@ -1600,21 +1568,3 @@ def conversation_hashes(turns: DataFrame, conv_col: str = "conv_id",
                        .alias("conv_hash"))
                  .withColumnRenamed("_c", conv_col))
 
-
-def conversation_duplicates(turns: DataFrame, conv_col: str = "conv_id",
-                            idx_col: str = "turn_idx",
-                            text_col: str = "text",
-                            role_col: str | None = "role") -> DataFrame:
-    """Whole-conversation exact dedup: conversations whose ordered
-    (role, text) turn sequences are identical collapse to one group —
-    (conv_hash, n_convs, keep_conv) with ``keep_conv`` = the
-    lexicographically smallest conversation id. The transcript-level
-    twin of :func:`exact_duplicates`: re-delivered or forked-then-merged
-    conversations are the common source of whole-sequence duplicates in
-    agent-log corpora. Two shuffles total (per-conv assembly, then the
-    tiny hash groupBy)."""
-    h = conversation_hashes(turns, conv_col, idx_col, text_col, role_col)
-    return (h.groupBy("conv_hash")
-             .agg(F.count("*").alias("n_convs"),
-                  F.min(conv_col).alias("keep_conv"))
-             .filter(F.col("n_convs") > 1))

@@ -24,8 +24,6 @@ from typing import List, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import textstats
-
 # a funnel stage is (name, keep_predicate); NULL predicate == fail
 Stage = Tuple[str, Column]
 
@@ -55,13 +53,6 @@ def annotate_funnel(df: DataFrame,
     ]
     return df.withColumn(reason_col, F.coalesce(
         *branches, F.lit(None).cast("string")))
-
-
-def apply_funnel(df: DataFrame, stages: Sequence[Stage]) -> DataFrame:
-    """Rows surviving every stage (annotation column dropped)."""
-    ann = annotate_funnel(df, stages, reason_col="__funnel_reason")
-    return ann.filter(F.col("__funnel_reason").isNull()) \
-              .drop("__funnel_reason")
 
 
 def funnel_census(df: DataFrame, stages: Sequence[Stage]) -> DataFrame:
@@ -124,12 +115,3 @@ def standard_quality_funnel(docs: DataFrame,
         ("lang", F.col("predicted_lang") == lang),
     ]
 
-
-def standard_quality_census(docs: DataFrame,
-                            text_col: str = "text",
-                            lang: str = "en") -> DataFrame:
-    """Convenience: features + the standard funnel census in one call."""
-    feats = textstats.lang_id(
-        textstats.quality_features(docs, text_col), text_col)
-    return funnel_census(feats, standard_quality_funnel(
-        feats, text_col, lang))

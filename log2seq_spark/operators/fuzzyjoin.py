@@ -147,109 +147,3 @@ def fuzzy_self_pairs(df: DataFrame, col: str = "s", max_dist: int = 1,
                 .filter(F.col("dist") >= 0)
                 .distinct())
 
-
-def fuzzy_join(left: DataFrame, right: DataFrame,
-               left_col: str, right_col: str, max_dist: int = 1,
-               max_len: int = 64,
-               max_bucket: int | None = 10_000) -> DataFrame:
-    """Bipartite fuzzy match: distinct values of ``left.left_col``
-    against distinct values of ``right.right_col``, returning
-    ``(left_col, right_col, dist)`` for every cross-side pair within
-    ``max_dist`` (equal strings included, dist 0) — the
-    dictionary-correction / record-linkage shape. Same blocking,
-    guards, and verification as :func:`fuzzy_self_pairs`; join the
-    result back to the row tables on the string columns."""
-    tagged = (left.filter(F.col(left_col).isNotNull())
-                  .select(F.col(left_col).alias("_fz_s"),
-                          F.lit("l").alias("_side")).distinct()
-              .unionByName(
-                  right.filter(F.col(right_col).isNotNull())
-                       .select(F.col(right_col).alias("_fz_s"),
-                               F.lit("r").alias("_side")).distinct()))
-    pairs = fuzzy_self_pairs(tagged, "_fz_s", max_dist, max_len,
-                             max_bucket)
-    sides = tagged.groupBy("_fz_s").agg(
-        F.max(F.col("_side") == "l").alias("_l"),
-        F.max(F.col("_side") == "r").alias("_r"))
-    a = sides.select(F.col("_fz_s").alias("s_a"), F.col("_l").alias("_la"),
-                     F.col("_r").alias("_ra"))
-    b = sides.select(F.col("_fz_s").alias("s_b"), F.col("_l").alias("_lb"),
-                     F.col("_r").alias("_rb"))
-    # a pair qualifies in either orientation; exact cross-side equals
-    # (dist 0) never form a self-pair, so add them from `sides` directly
-    both = (pairs.join(a, "s_a").join(b, "s_b")
-                 .filter((F.col("_la") & F.col("_rb"))
-                         | (F.col("_lb") & F.col("_ra"))))
-    lr = both.select(
-        F.when(F.col("_la") & F.col("_rb"), F.col("s_a"))
-         .otherwise(F.col("s_b")).alias(left_col),
-        F.when(F.col("_la") & F.col("_rb"), F.col("s_b"))
-         .otherwise(F.col("s_a")).alias(right_col), "dist")
-    # symmetric pairs (both strings on both sides) qualify in BOTH
-    # orientations — emit the second one
-    swapped = both.filter((F.col("_la") & F.col("_rb"))
-                          & (F.col("_lb") & F.col("_ra"))).select(
-        F.col("s_b").alias(left_col), F.col("s_a").alias(right_col),
-        "dist")
-    equal = (sides.filter(F.col("_l") & F.col("_r"))
-                  .select(F.col("_fz_s").alias(left_col),
-                          F.col("_fz_s").alias(right_col),
-                          F.lit(0).alias("dist")))
-    return lr.unionByName(swapped).unionByName(equal)
-
-
-def resolve_entities(df: DataFrame, col: str, max_dist: int = 1,
-                     count_col: str | None = None,
-                     max_len: int = 64,
-                     max_bucket: int | None = 10_000) -> DataFrame:
-    """End-to-end entity resolution for a string column — the composed
-    recipe (fuzzy match → transitive clustering → survivorship): every
-    distinct value mapped to its variant-cluster's canonical spelling.
-
-    Returns ``(col, canonical, cluster_size)``: one row per distinct
-    value (values with no fuzzy neighbor map to themselves,
-    cluster_size 1 — cluster_size counts distinct SPELLINGS).
-    Survivorship elects the MOST FREQUENT spelling — frequency = the
-    value's row count in ``df`` (or the per-row ``count_col`` summed
-    per value, for pre-aggregated inputs); ties break to the
-    lexicographically smallest spelling. Fully deterministic.
-
-    Composition of existing scale shapes: :func:`fuzzy_self_pairs`
-    (complete, bucket-bounded) feeding
-    :func:`~log2seq_spark.operators.dedup.duplicate_clusters`
-    (size-gated driver union-find ↔ distributed min-label propagation)
-    plus one broadcast join back. Apply the result to rows with an
-    equi-join on ``col``. NOTE: variant chains merge transitively — on
-    dense ID-like vocabularies (sequential serials) everything within
-    stepping distance collapses into one component, which is usually
-    NOT what you want there; entity resolution is for vocabularies
-    where variants are sparse typos, and the cluster_size column is
-    the audit signal for over-merging."""
-    from .dedup import duplicate_clusters
-
-    pairs = fuzzy_self_pairs(df, col, max_dist, max_len, max_bucket)
-    clusters = duplicate_clusters(pairs, "s_a", "s_b", out_id="_fz_s")
-    vals = (df.filter(F.col(col).isNotNull())
-              .select(F.col(col).alias("_fz_s")).distinct())
-    freq = (F.sum(F.col(count_col).cast("long")) if count_col is not None
-            else F.count("*").cast("long"))
-    counts = (df.filter(F.col(col).isNotNull())
-                .groupBy(F.col(col).alias("_fz_s"))
-                .agg(freq.alias("_fz_n")))
-    member = (vals.join(clusters, "_fz_s", "left")
-                  .withColumn("cluster_id",
-                              F.coalesce("cluster_id", F.col("_fz_s"))))
-    # two tiny per-cluster passes: winning count, then the smallest
-    # spelling among winners (struct-max would pick the LARGEST string
-    # at equal counts — not the deterministic order we document)
-    weighted = member.join(counts, "_fz_s")
-    win = (weighted.groupBy("cluster_id")
-                   .agg(F.max("_fz_n").alias("_wn"),
-                        F.count("*").alias("cluster_size")))
-    canon = (weighted.join(win, "cluster_id")
-             .filter(F.col("_fz_n") == F.col("_wn"))
-             .groupBy("cluster_id", "cluster_size")
-             .agg(F.min("_fz_s").alias("canonical")))
-    return (member.join(canon, "cluster_id")
-                  .select(F.col("_fz_s").alias(col), "canonical",
-                          "cluster_size"))

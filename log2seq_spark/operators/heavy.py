@@ -60,24 +60,6 @@ def mg_update(counters: dict, item, cnt: int, k: int) -> dict:
     return counters
 
 
-def mg_merge(counters: dict, other: dict, k: int) -> dict:
-    """Merge two weighted Misra–Gries summaries into one bounded at
-    ``k`` entries (Agarwal et al. 2012, "Mergeable summaries"): sum
-    counters item-wise, then subtract the (k+1)-largest value from all
-    and drop the non-positive. Error adds: each input's counter
-    underestimates its item's true count by at most (its stream's
-    decremented weight), and the merge decrement adds at most the
-    subtracted value — so the merged summary still contains every item
-    with true combined count > n_total/(k+1)."""
-    merged = dict(counters)
-    for item, c in other.items():
-        merged[item] = merged.get(item, 0) + c
-    if len(merged) > k:
-        cut = sorted(merged.values(), reverse=True)[k]
-        merged = {i: c - cut for i, c in merged.items() if c > cut}
-    return merged
-
-
 def _mg_partition_summaries(df: DataFrame, col: str, k: int,
                             with_totals: bool = False) -> DataFrame:
     """One weighted Misra–Gries summary per input partition: at most
@@ -113,24 +95,6 @@ def _mg_partition_summaries(df: DataFrame, col: str, k: int,
 def _mg_partition_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
     """Candidate items only (see :func:`_mg_partition_summaries`)."""
     return _mg_partition_summaries(df, col, k).select(col)
-
-
-def mg_global_summary(df: DataFrame, col: str = "token",
-                      k: int = 20) -> dict:
-    """One k-bounded weighted Misra–Gries summary of the whole frame,
-    as a ``{item: weight}`` dict: partition summaries (≤ partitions×k
-    rows — the only data that ever reaches the driver) folded with
-    :func:`mg_update`. The decrement potential argument composes
-    across levels (every decremented unit destroys k+1 units of total
-    weight, wherever it happens), so the folded summary keeps the
-    stream-level guarantee: every item with count > n/(k+1) is
-    present, and each weight underestimates its item's true count by
-    at most n/(k+1). The mergeable state for the streaming twin
-    (``streaming/stream.py``)."""
-    out: dict = {}
-    for r in _mg_partition_summaries(df, col, k).collect():
-        out = mg_update(out, r[col], r["w"], k)
-    return out
 
 
 def _grouped_mg_candidates(df: DataFrame, group_cols: list,

@@ -489,13 +489,6 @@ def semantic_duplicates(embs: DataFrame,
               .select("centroid", "id_a", "id_b", "cosine"))
 
 
-def semantic_drop_list(pairs: DataFrame) -> DataFrame:
-    """SemDeDup pruning rule: within every duplicate pair keep the
-    lower id — any vector dominated by a smaller id is dropped. One
-    distinct over the pair frame's ``id_b`` column."""
-    return pairs.select(F.col("id_b").alias("drop_id")).distinct()
-
-
 def quantized_topk(embs: DataFrame, query_vec, k: int = 10, *,
                    rescore: int | None = None,
                    vec_col: str = "embedding",

@@ -10,7 +10,7 @@ Plan shape (all DataFrame ops; the parse UDF is the only Python):
    cannot stall a whole executor — then ``sortWithinPartitions(conv_id,
    turn_idx)`` for stable turn order (per-turn checks are keyed, so the
    chunk salt never breaks correctness);
-3. one Arrow-vectorized parse UDF → struct column (text crosses the
+3. one ``mapInArrow`` parse → struct column (text crosses the
    JVM↔Python boundary once);
 4. broadcast hash joins against the tiny role/tool/severity dictionaries
    (no shuffle);
@@ -69,16 +69,9 @@ class PipelineConfig:
     partitions: Optional[int] = None
     program: RuleProgram = field(default_factory=default_program)
     input_id: str = "transcripts"
-    write_tokens: bool = True
-    write_templates: bool = True
     # sink backend seam: parquet | iceberg | auto (iceberg when its
     # runtime jar is present; see plans/sink.py)
     sink_backend: str = "parquet"
-    # aggregate feed: True (default) reads the precomputed ok/fail/empty
-    # boolean columns back from the routed sink; False re-derives them
-    # from the message/error/rule_id columns (the pre-v2 path, kept as
-    # the measured A/B seam — see BENCH/DELTAS.md round 4)
-    agg_from_flags: bool = True
     # token aggregate mode: None writes the full per-(bucket, sink)
     # token counts (a distinct-token-sized shuffle — fine to sf-scale,
     # the 10^12-turn bottleneck); an int k switches AGG_TOKEN to exact
@@ -211,20 +204,13 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
     # listing/opens (measured eff ~0.5 across core counts). Only the
     # null-flags of message/error and the empty-flag of rule_id are
     # consumed downstream, so booleans ride the cache, not the strings —
-    # and with agg_from_flags the booleans come straight off the routed
-    # sink's flag columns, so the scan never decodes the string columns.
-    if cfg.agg_from_flags:
-        df = df.select("bucket", "sink",
-                       F.col("ok").alias("_ok"),
-                       "words",
-                       F.col("empty").alias("_empty"),
-                       F.col("fail").alias("_fail")).persist()
-    else:
-        df = df.select("bucket", "sink",
-                       F.col("message").isNotNull().alias("_ok"),
-                       "words",
-                       (F.col("rule_id") == -2).alias("_empty"),
-                       F.col("error").isNotNull().alias("_fail")).persist()
+    # and they come straight off the routed sink's flag columns, so the
+    # scan never decodes the string columns.
+    df = df.select("bucket", "sink",
+                   F.col("ok").alias("_ok"),
+                   "words",
+                   F.col("empty").alias("_empty"),
+                   F.col("fail").alias("_fail")).persist()
 
     # ONE stats pass feeds both the sink-counts table and the manifest
     stats = (df.groupBy("bucket", "sink").agg(
@@ -248,42 +234,40 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
                       os.path.join(cfg.out_dir, AGG_SINK), ["bucket"],
                       backend=cfg.sink_backend)
 
-    if cfg.write_tokens:
-        tok_stream = (df.filter(F.col("_ok"))
-                        .select("bucket", "sink",
-                                F.explode("words").alias("token")))
-        if cfg.tokens_heavy_k:
-            # bounded-shuffle mode: exact counts of tokens above 1/k of
-            # their (bucket, sink) volume — the only token aggregate
-            # that survives a 10^12-turn vocabulary
-            from ..operators.heavy import heavy_hitters
-            tok_agg = heavy_hitters(tok_stream, "token",
-                                    k=cfg.tokens_heavy_k,
-                                    group_cols=["bucket", "sink"])
-        else:
-            tok_agg = (tok_stream.groupBy("bucket", "sink", "token")
-                                 .agg(F.count("*").alias("n")))
-        write_partitioned(
-            tok_agg.repartition(min(p, cfg.n_buckets), "bucket"),
-            os.path.join(cfg.out_dir, AGG_TOKEN), ["bucket"],
-            backend=cfg.sink_backend)
+    tok_stream = (df.filter(F.col("_ok"))
+                    .select("bucket", "sink",
+                            F.explode("words").alias("token")))
+    if cfg.tokens_heavy_k:
+        # bounded-shuffle mode: exact counts of tokens above 1/k of
+        # their (bucket, sink) volume — the only token aggregate
+        # that survives a 10^12-turn vocabulary
+        from ..operators.heavy import heavy_hitters
+        tok_agg = heavy_hitters(tok_stream, "token",
+                                k=cfg.tokens_heavy_k,
+                                group_cols=["bucket", "sink"])
+    else:
+        tok_agg = (tok_stream.groupBy("bucket", "sink", "token")
+                             .agg(F.count("*").alias("n")))
+    write_partitioned(
+        tok_agg.repartition(min(p, cfg.n_buckets), "bucket"),
+        os.path.join(cfg.out_dir, AGG_TOKEN), ["bucket"],
+        backend=cfg.sink_backend)
 
-    if cfg.write_templates:
-        # mask once into a single separator-joined key; the display form
-        # (separator → space) is derived on the few aggregated rows
-        tkey = F.concat_ws("\x1e", F.expr(_MASK))
-        write_partitioned(
-            df.filter(F.col("_ok"))
-              .select("bucket", tkey.alias("template_key"))
-              .groupBy("bucket", F.md5("template_key").alias("template_id"))
-              .agg(F.count("*").alias("n"),
-                   F.min("template_key").alias("template_key"))
-              .withColumn("template",
-                          F.regexp_replace("template_key", "\x1e", " "))
-              .drop("template_key")
-              .repartition(8, "bucket"),
-            os.path.join(cfg.out_dir, AGG_TEMPLATE), ["bucket"],
-            backend=cfg.sink_backend)
+    # mask once into a single separator-joined key; the display form
+    # (separator → space) is derived on the few aggregated rows
+    tkey = F.concat_ws("\x1e", F.expr(_MASK))
+    write_partitioned(
+        df.filter(F.col("_ok"))
+          .select("bucket", tkey.alias("template_key"))
+          .groupBy("bucket", F.md5("template_key").alias("template_id"))
+          .agg(F.count("*").alias("n"),
+               F.min("template_key").alias("template_key"))
+          .withColumn("template",
+                      F.regexp_replace("template_key", "\x1e", " "))
+          .drop("template_key")
+          .repartition(8, "bucket"),
+        os.path.join(cfg.out_dir, AGG_TEMPLATE), ["bucket"],
+        backend=cfg.sink_backend)
 
     df.unpersist()
 

@@ -135,10 +135,6 @@ class CompiledHeaderRule:
     pattern: re.Pattern
     picked: Tuple[HeaderField, ...]
 
-    @property
-    def has_direct_timestamp(self) -> bool:
-        return any(f.value_name == "timestamp" for f in self.picked)
-
 
 def compile_header_rule(rule: HeaderRule) -> CompiledHeaderRule:
     fields = rule.fields

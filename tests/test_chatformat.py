@@ -55,8 +55,8 @@ class TestTurnSpans:
 
 class TestRender:
     def test_rendered_string(self, turns):
-        out = {r["conv_id"]: r["rendered"]
-               for r in chatformat.render_conversations(turns).collect()}
+        out = {r["conv_id"]: r["text"]
+               for r in chatformat.render_samples(turns).collect()}
         assert out["a"] == _render_py([x for x in TURNS if x[0] == "a"])
         assert out["b"] == "<|user|>\nping\n"
 

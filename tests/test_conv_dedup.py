@@ -40,7 +40,8 @@ class TestConversationDedup:
         assert rendered["x"].count("\n") == 2
 
     def test_reingested_and_forked_conversations_bucket(self, turns):
-        buckets = dedup.conversation_near_duplicates(turns).collect()
+        buckets = dedup.minhash_near_duplicates(
+            dedup.conversation_texts(turns), "text", "conv_id").collect()
         assert buckets  # at least one shared band
         # every bucket is the a/a2/f family; x never buckets
         fam = set()

@@ -53,15 +53,14 @@ class TestFunnel:
         assert got == {1: "gate", 2: None}
 
     def test_apply_matches_census_kept(self, spark):
-        df = _docs(spark)
-        cen = funnel.standard_quality_census(df)
-        kept = cen.filter(F.col("stage") == "kept").first()["n_out"]
         from log2seq_spark.operators import textstats
-        feats = textstats.lang_id(textstats.quality_features(df))
-        surv = funnel.apply_funnel(
-            feats, funnel.standard_quality_funnel(feats))
+        feats = textstats.lang_id(textstats.quality_features(_docs(spark)))
+        stages = funnel.standard_quality_funnel(feats)
+        cen = funnel.funnel_census(feats, stages)
+        kept = cen.filter(F.col("stage") == "kept").first()["n_out"]
+        surv = funnel.annotate_funnel(feats, stages).filter(
+            F.col("drop_reason").isNull())
         assert surv.count() == kept
-        assert "drop_reason" not in surv.columns
 
     def test_duplicate_stage_names_raise(self, spark):
         df = spark.range(1)
@@ -261,9 +260,9 @@ class TestSemanticDedup:
     def test_drop_list(self, spark):
         pairs = similarity.semantic_duplicates(
             self._embs(spark), self.CENTS, threshold=0.9)
-        drops = {r["drop_id"]
-                 for r in similarity.semantic_drop_list(pairs).collect()}
-        # lowest id of each dup family survives
+        # SemDeDup pruning: the larger id of every pair is dropped, so
+        # the lowest id of each dup family survives
+        drops = {r["id_b"] for r in pairs.collect()}
         assert drops == {1, 2, 11}
 
 

@@ -69,33 +69,6 @@ class TestFuzzySelfPairs:
             fuzzyjoin.fuzzy_self_pairs(df, "s", max_bucket=5).collect()
 
 
-class TestFuzzyJoin:
-    def test_bipartite_orientation(self, spark):
-        left = _strs(spark, ["color", "flavor"], "w")
-        right = _strs(spark, ["colour", "flavour", "colors"], "d")
-        out = {(r["w"], r["d"]): r["dist"]
-               for r in fuzzyjoin.fuzzy_join(left, right, "w", "d",
-                                             max_dist=1).collect()}
-        assert out == {("color", "colour"): 1, ("color", "colors"): 1,
-                       ("flavor", "flavour"): 1}
-
-    def test_exact_cross_side_match_is_dist0(self, spark):
-        left = _strs(spark, ["alpha", "beta"], "w")
-        right = _strs(spark, ["alpha", "gamma"], "d")
-        out = {(r["w"], r["d"]): r["dist"]
-               for r in fuzzyjoin.fuzzy_join(left, right, "w", "d").collect()}
-        assert out[("alpha", "alpha")] == 0
-
-    def test_symmetric_value_on_both_sides(self, spark):
-        left = _strs(spark, ["abc", "abd"], "w")
-        right = _strs(spark, ["abd", "abc"], "d")
-        out = {(r["w"], r["d"]) for r in
-               fuzzyjoin.fuzzy_join(left, right, "w", "d").collect()}
-        # both orientations + both exact matches
-        assert out == {("abc", "abd"), ("abd", "abc"),
-                       ("abc", "abc"), ("abd", "abd")}
-
-
 def _levenshtein(a: str, b: str) -> int:
     if len(a) < len(b):
         a, b = b, a
@@ -131,40 +104,3 @@ class TestFuzzCompleteness:
                    max_bucket=None).collect()}
         assert got == want
 
-
-class TestResolveEntities:
-    def test_frequency_survivorship(self, spark):
-        # "server01" is the dominant spelling; typo variants map to it
-        rows = (["server01"] * 5 + ["serverO1"] * 2 + ["serve01"]
-                + ["gateway"] * 3)
-        df = _strs(spark, rows)
-        out = {r["s"]: r for r in
-               fuzzyjoin.resolve_entities(df, "s").collect()}
-        assert out["serverO1"]["canonical"] == "server01"
-        assert out["serve01"]["canonical"] == "server01"
-        assert out["server01"]["canonical"] == "server01"
-        assert out["server01"]["cluster_size"] == 3
-        # untouched singleton maps to itself
-        assert out["gateway"]["canonical"] == "gateway"
-        assert out["gateway"]["cluster_size"] == 1
-
-    def test_tie_breaks_lexicographic(self, spark):
-        df = _strs(spark, ["abc", "abd"])          # 1 row each: tie
-        out = {r["s"]: r["canonical"] for r in
-               fuzzyjoin.resolve_entities(df, "s").collect()}
-        assert out == {"abc": "abc", "abd": "abc"}
-
-    def test_precomputed_counts(self, spark):
-        df = spark.createDataFrame([("abc", 1), ("abd", 9)],
-                                   "s string, n long")
-        out = {r["s"]: r["canonical"] for r in
-               fuzzyjoin.resolve_entities(df, "s",
-                                          count_col="n").collect()}
-        assert out == {"abc": "abd", "abd": "abd"}
-
-    def test_transitive_chain_one_cluster(self, spark):
-        # aaa ~ aab ~ abb ~ bbb: one component although ed(aaa,bbb)=3
-        df = _strs(spark, ["aaa", "aab", "abb", "bbb"])
-        out = fuzzyjoin.resolve_entities(df, "s").collect()
-        assert {r["cluster_size"] for r in out} == {4}
-        assert {r["canonical"] for r in out} == {"aaa"}

@@ -378,9 +378,7 @@ class TestGrokFuzz:
     def test_random_grok_programs_recover_planted_values(self):
         import random
 
-        import pandas as pd
-
-        from log2seq_spark.functions.parse import BatchParser
+        from parsed_frame import parse_frame
 
         rng = random.Random(20260818)
         n_ok = 0
@@ -403,7 +401,7 @@ class TestGrokFuzz:
                 else:
                     expected.append((attrs, stmt))
                 lines.append(line)
-            batch = BatchParser(prog).parse(pd.Series(lines, dtype=object))
+            batch = parse_frame(prog, lines)
             for i, (line, exp) in enumerate(zip(lines, expected)):
                 try:
                     rec = eng.parse_line(line)

@@ -157,7 +157,11 @@ class TestMgSummaries:
         df = (spark.createDataFrame([(t,) for t in rows], "token string")
                    .repartition(6))
         k = 10
-        summary = heavy.mg_global_summary(df, "token", k)
+        # partition summaries folded with mg_update — the streaming
+        # state update's composition (streaming_heavy_hitters)
+        summary: dict = {}
+        for r in heavy._mg_partition_summaries(df, "token", k).collect():
+            summary = heavy.mg_update(summary, r["token"], r["w"], k)
         assert len(summary) <= k
         true = Counter(rows)
         n = len(rows)
@@ -169,15 +173,6 @@ class TestMgSummaries:
         for item, c in true.items():
             if c > n / (k + 1):
                 assert item in summary
-
-    def test_mg_merge_bounds_and_content(self):
-        a = {"x": 10, "y": 5, "z": 3}
-        b = {"x": 4, "w": 6, "v": 1}
-        merged = heavy.mg_merge(a, b, k=3)
-        # summed: x14 w6 y5 z3 v1; cut = 4th largest (3); z, v drop
-        assert merged == {"x": 11, "w": 3, "y": 2}
-        # merging with empty is identity
-        assert heavy.mg_merge(a, {}, k=3) == a
 
     def test_partition_totals_ride_along(self, spark):
         rows = ["a"] * 7 + ["b"] * 5

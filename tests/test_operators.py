@@ -77,7 +77,7 @@ class TestDedup:
 
     def test_simhash_close_for_near_dups(self, docs):
         rows = {r["doc_id"]: r["simhash"]
-                for r in dedup.with_simhash(docs).collect()}
+                for r in dedup.simhash_signatures(docs).collect()}
         assert rows[0] == rows[1]
         ham_near = bin(rows[0] ^ rows[2]).count("1")
         ham_far = bin(rows[0] ^ rows[3]).count("1")
@@ -593,25 +593,6 @@ class TestDedup:
                  turns, role_col=None).collect()}
         assert len({h["x"], h["y"], h["z"]}) == 3
 
-    def test_conversation_duplicates(self, spark):
-        # whole-conversation dedup: identical ordered (role, text)
-        # sequences collapse regardless of row order; same words under a
-        # different role do NOT collapse; keep_conv = min conv id.
-        rows = [
-            ("a", 0, "user", "hi"), ("a", 1, "assistant", "hello"),
-            ("b", 1, "assistant", "hello"), ("b", 0, "user", "hi"),  # dup, shuffled rows
-            ("c", 0, "assistant", "hi"), ("c", 1, "user", "hello"),  # roles swapped
-            ("d", 0, "user", "hi"),                                   # prefix only
-        ]
-        turns = spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, role string, text string")
-        out = dedup.conversation_duplicates(turns).collect()
-        assert len(out) == 1
-        assert out[0]["n_convs"] == 2 and out[0]["keep_conv"] == "a"
-        # role-blind hashing merges the role-swapped conversation too
-        blind = dedup.conversation_duplicates(turns, role_col=None).collect()
-        assert len(blind) == 1 and blind[0]["n_convs"] == 3
-
     def test_incremental_near_dup_index(self, spark):
         # LSH screening against the persisted bucket index: a new doc
         # nearly identical to history hits a shared band bucket
@@ -795,7 +776,6 @@ class TestDedup:
                 "with anything else present"),
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        import pyspark.sql.functions as F
         composite = (dedup.duplicate_span_stats(docs, k=8)
                      .join(dedup.drop_duplicate_spans(docs, k=8),
                            "doc_id"))
@@ -1956,7 +1936,7 @@ class TestStreaming:
                   "tool string, ts timestamp")
         stream = spark.readStream.schema(schema).parquet(inp)
         parsed = with_parsed(stream, default_program(), text_col="text",
-                             ts_col="ts", engine="pandas")
+                             ts_col="ts")
         out = conversation_summaries(parsed, watermark="10 minutes")
         q = (out.writeStream.outputMode("append")
              .format("memory").queryName("l2s_conv_summaries")

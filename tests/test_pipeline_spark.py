@@ -39,11 +39,43 @@ def _oracle_rows(turns_df):
             eng = LineEngine(program, default_year=year)
             engines[year] = eng
         try:
-            parsed = eng.parse_line(r["text"])
+            # NULL text reads as an empty line, as in the Arrow parse
+            parsed = eng.parse_line(r["text"] or "")
         except ParseFailure:
             parsed = {"error": "fail"}
         out[(r["conv_id"], r["turn_idx"])] = (r["text"], parsed)
     return out
+
+
+def _check_vs_oracle(rows, oracle):
+    """Assert parsed rows (``parsed.*`` keyed by conv_id, turn_idx)
+    equal the oracle turn by turn; returns the number of parsed turns."""
+    assert len(rows) == len(oracle)
+    n_ok = 0
+    for row in rows:
+        text, exp = oracle[(row["conv_id"], row["turn_idx"])]
+        if exp is None:               # empty line
+            assert row["rule_id"] == -2, text
+            assert row["message"] is None and row["error"] is None
+            continue
+        if "words" not in exp:
+            assert row["rule_id"] == -1 and row["words"] is None, text
+            assert row["error"] is not None, text
+            continue
+        assert row["rule_id"] == exp["rule_id"], text
+        assert row["message"] == exp["message"], text
+        assert row["words"] == exp["words"], text
+        assert row["symbols"] == exp["symbols"], text
+        assert row["host"] == exp.get("host"), text
+        assert row["error"] is None, text
+        # byte-exact reconstruction per turn
+        w, s = row["words"], row["symbols"]
+        assert len(s) == len(w) + 1
+        rebuilt = s[0] + "".join(a + b for a, b in zip(w, s[1:]))
+        assert rebuilt == row["message"]
+        assert row["ts"] == exp["timestamp"].replace(tzinfo=None), text
+        n_ok += 1
+    return n_ok
 
 
 class TestPipelineEquality:
@@ -54,32 +86,9 @@ class TestPipelineEquality:
         assert turns.select("conv_id").distinct().count() == N_CONVS
 
     def test_per_turn_equality_vs_oracle(self, spark, turns):
-        oracle = _oracle_rows(turns)
         got = enriched_turns(spark, turns, PipelineConfig(out_dir="unused")) \
             .select("conv_id", "turn_idx", "parsed.*").collect()
-        assert len(got) == len(oracle)
-        n_ok = 0
-        for row in got:
-            text, exp = oracle[(row["conv_id"], row["turn_idx"])]
-            if exp is None:               # empty line
-                assert row["rule_id"] == -2
-                continue
-            if "error" in exp and "words" not in exp:
-                assert row["error"] is not None
-                continue
-            assert row["message"] == exp["message"], text
-            assert row["words"] == exp["words"], text
-            assert row["symbols"] == exp["symbols"], text
-            assert row["host"] == exp.get("host"), text
-            # byte-exact reconstruction per turn
-            w, s = row["words"], row["symbols"]
-            assert len(s) == len(w) + 1
-            rebuilt = s[0] + "".join(a + b for a, b in zip(w, s[1:]))
-            assert rebuilt == row["message"]
-            wall = exp["timestamp"].replace(tzinfo=None)
-            assert row["ts"] == wall, text
-            n_ok += 1
-        assert n_ok > 0.9 * len(got)
+        assert _check_vs_oracle(got, _oracle_rows(turns)) > 0.9 * len(got)
 
     def test_routing_and_aggregates(self, spark, turns, tmpdir_path):
         cfg = PipelineConfig(out_dir=tmpdir_path, n_buckets=8, partitions=8)
@@ -160,17 +169,30 @@ class TestPipelineEquality:
         assert sc.agg(F.sum("n_rows")).first()[0] == n_half
 
 
-class TestArrowEngineParity:
-    def test_arrow_equals_pandas_udf(self, spark, turns):
+class TestArrowParseOracle:
+    def test_with_parsed_matches_line_engine(self, spark, turns):
+        """The one production parse path (mapInArrow) against the
+        ``rules.engine`` oracle, turn by turn, including one turn each
+        of NULL, empty, control-character and non-ASCII text."""
+        import datetime as dt
         from log2seq_spark.functions.udf import with_parsed
-        from log2seq_spark.rules.presets import default_program
-        prog = default_program()
-        cols = ["conv_id", "turn_idx", "parsed"]
-        a = (with_parsed(turns, prog, engine="pandas").select(cols)
-             .orderBy("conv_id", "turn_idx").collect())
-        b = (with_parsed(turns, prog, engine="arrow").select(cols)
-             .orderBy("conv_id", "turn_idx").collect())
-        assert a == b
+        ts = dt.datetime(2024, 3, 1)
+        odd = spark.createDataFrame(
+            [("odd", 0, "user", None, "none", ts),
+             ("odd", 1, "user", "", "none", ts),
+             ("odd", 2, "user", "Jan  1 12:00:00 h a\x01b\tc\x7f d",
+              "none", ts),
+             ("odd", 3, "user", "Jan  2 01:02:03 host1 ユーザー が ログイン",
+              "none", ts)],
+            turns.schema)
+        df = turns.unionByName(odd)
+        got = (with_parsed(df, default_program())
+               .select("conv_id", "turn_idx", "parsed.*").collect())
+        _check_vs_oracle(got, _oracle_rows(df))
+        odd_rows = {r["turn_idx"]: r for r in got if r["conv_id"] == "odd"}
+        assert odd_rows[0]["rule_id"] == odd_rows[1]["rule_id"] == -2
+        assert odd_rows[2]["words"] == ["a\x01b\tc\x7f", "d"]
+        assert odd_rows[3]["words"] == ["ユーザー", "が", "ログイン"]
 
 
 class TestSkewHandling:

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from log2seq_spark.operators import (anomaly, eventseq, fuzzyjoin,
-                                     gapfill, pca, scrub)
+                                     gapfill, scrub)
 
 
 def _plan(df):
@@ -46,13 +46,6 @@ class TestSession3PlanShapes:
         p = _plan(eventseq.transition_matrix(df))
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
-
-    def test_pca_projection_is_map_only(self, spark):
-        df = spark.createDataFrame([(0, [1.0, 2.0]), (1, [2.0, 1.0])],
-                                   "vec_id long, embedding array<double>")
-        model = pca.pca_fit(df, k=1)
-        p = _plan(pca.pca_project(df, model))
-        assert "Exchange" not in p
 
     def test_normalize_text_is_map_only_with_one_arrow_hop(self, spark):
         df = spark.createDataFrame([(1, "x")], "doc_id long, text string")

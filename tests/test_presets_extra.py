@@ -11,7 +11,7 @@ from log2seq_spark.rules import (LineEngine, RuleProgram, HeaderRule,
                                  date, time_of_day, hostname, statement)
 from log2seq_spark.rules.presets import (hdfs_program, hpc_program,
                                          spark_log_program, default_actions)
-from log2seq_spark.functions import BatchParser
+from parsed_frame import parse_frame
 
 HDFS_LINE = ("081109 203615 148 INFO dfs.DataNode$PacketResponder: "
              "PacketResponder 1 for block blk_38865049064139660 terminating")
@@ -33,8 +33,7 @@ class TestHdfs:
         assert d["words"][0] == "PacketResponder"
 
     def test_vectorized_matches(self):
-        bp = BatchParser(hdfs_program())
-        out = bp.parse(pd.Series([HDFS_LINE], dtype=object))
+        out = parse_frame(hdfs_program(), [HDFS_LINE])
         row = out.iloc[0]
         assert pd.Timestamp(row["ts"]) == pd.Timestamp(2008, 11, 9, 20, 36, 15)
         assert int(row["processid"]) == 148
@@ -61,8 +60,7 @@ class TestHpc:
         assert eng.parse_line("!!!") is None
 
     def test_vectorized_attrs(self):
-        bp = BatchParser(hpc_program())
-        out = bp.parse(pd.Series([HPC_LINE, "!!!"], dtype=object))
+        out = parse_frame(hpc_program(), [HPC_LINE, "!!!"])
         row = out.iloc[0]
         assert int(row["logid"]) == 134681
         assert row["node"] == "node-246"
@@ -88,8 +86,7 @@ class TestSparkLog:
         assert "timestamp" not in d
 
     def test_vectorized_cascade(self):
-        bp = BatchParser(spark_log_program())
-        out = bp.parse(pd.Series([SPARK_LINE, "free-form line"], dtype=object))
+        out = parse_frame(spark_log_program(), [SPARK_LINE, "free-form line"])
         assert out.iloc[0]["rule_id"] == 0
         assert out.iloc[1]["rule_id"] == 1
         assert out.iloc[1]["message"] == "free-form line"
@@ -111,10 +108,8 @@ class TestAstimezone:
         d2 = eng.parse_line("2020-05-02 10:00:00 myhost msg here")
         assert d2["timestamp"].hour == 19
 
-        bp = BatchParser(prog)
-        out = bp.parse(pd.Series(["2020-05-02 10:00:00Z myhost msg here",
-                                  "2020-05-02 10:00:00 myhost msg here"],
-                                 dtype=object))
+        out = parse_frame(prog, ["2020-05-02 10:00:00Z myhost msg here",
+                                 "2020-05-02 10:00:00 myhost msg here"])
         assert out.iloc[0]["ts"].hour == 19
         assert out.iloc[1]["ts"].hour == 19
         assert out.iloc[0]["tz_sec"] == 9 * 3600

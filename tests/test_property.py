@@ -82,12 +82,11 @@ header_lines = st.text(alphabet=_ALPHABET + "\t", min_size=0, max_size=100)
 @settings(max_examples=100, deadline=None)
 @given(lines=st.lists(header_lines, min_size=1, max_size=6))
 def test_header_cascade_never_crashes_and_agrees(lines):
-    from log2seq_spark.functions import BatchParser
     from log2seq_spark.rules import LineEngine, ParseFailure
-    bp = BatchParser(default_program())
+    from parsed_frame import parse_frame
     oracle = LineEngine(default_program(), default_year=2024)
-    out = bp.parse(pd.Series(lines, dtype=object),
-                   default_year=pd.Series([2024.0] * len(lines)))
+    out = parse_frame(default_program(), lines,
+                      default_year=pd.Series([2024.0] * len(lines)))
     for i, line in enumerate(lines):
         row = out.iloc[i]
         try:

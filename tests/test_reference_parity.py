@@ -14,7 +14,7 @@ from log2seq_spark.rules import (RuleProgram, HeaderRule, LineEngine,
                                  statement, digit, hostname, user_field,
                                  time_of_day, month_abbr, string, group)
 from log2seq_spark.rules.presets import default_actions, apache_errorlog_program
-from log2seq_spark.functions import BatchParser
+from parsed_frame import parse_frame
 
 
 def _reference_openssh_parser():
@@ -49,8 +49,7 @@ def ssh_lines():
 class TestOpenSSHCorpusParity:
     def test_full_corpus_identical(self, ssh_lines):
         ref = _reference_openssh_parser()
-        bp = BatchParser(_our_openssh_program())
-        out = bp.parse(pd.Series(ssh_lines, dtype=object))
+        out = parse_frame(_our_openssh_program(), ssh_lines)
 
         n_ok = n_fail = 0
         for i, line in enumerate(ssh_lines):

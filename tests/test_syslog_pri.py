@@ -2,13 +2,19 @@
 lookups, invalid-PRI rejection, null propagation, and composition with
 the header cascade over the stripped remainder."""
 
-from log2seq_spark.functions.syslog import with_pri
+from pyspark.sql import functions as F
+
+from log2seq_spark.functions.syslog import pri_expr
+
+
+def _with_pri(df):
+    return df.select("*", pri_expr(F.col("text")).alias("pri"))
 
 
 def _decode(spark, *lines):
     df = spark.createDataFrame([(t,) for t in lines], "text string")
     return {r["text"]: r["pri"].asDict() for r in
-            with_pri(df).collect() if r["text"] is not None}
+            _with_pri(df).collect() if r["text"] is not None}
 
 
 class TestPriDecode:
@@ -34,19 +40,18 @@ class TestPriDecode:
 
     def test_null_text(self, spark):
         df = spark.createDataFrame([(None,)], "text string")
-        r = with_pri(df).collect()[0]["pri"]
+        r = _with_pri(df).collect()[0]["pri"]
         assert r["pri"] is None and r["rest"] is None
 
     def test_composes_with_header_cascade(self, spark):
         # PRI strip -> parse the remainder with the default preset: the
-        # intended composition (with_pri feeds pri.rest to with_parsed)
-        from pyspark.sql import functions as F
+        # intended composition (pri.rest feeds with_parsed)
         from log2seq_spark.functions.udf import with_parsed
         from log2seq_spark.rules.presets import default_program
         df = spark.createDataFrame(
             [("<34>Jan  1 12:34:56 host1 su[7]: auth failure",)],
             "text string")
-        stripped = with_pri(df).select(F.col("pri.rest").alias("text"),
+        stripped = _with_pri(df).select(F.col("pri.rest").alias("text"),
                                        F.col("pri.severity_name"))
         parsed = with_parsed(stripped, default_program(default_year=2023),
                              text_col="text", ts_col=None)

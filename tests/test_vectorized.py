@@ -15,6 +15,8 @@ from log2seq_spark.rules import (LineEngine, ParseFailure, split, fix, fix_ip,
 from log2seq_spark.rules.presets import default_program, apache_errorlog_program
 from log2seq_spark.functions import VectorTokenizer, BatchParser
 
+from parsed_frame import parse_frame
+
 
 GOLDEN_STATEMENTS = [
     "system[12345]: host 2001:0db8:1234::1 (interface:eth0) disconnected",
@@ -119,9 +121,8 @@ class TestBatchParserEquality:
     def test_default_program_vs_oracle(self):
         program = default_program()
         oracle = LineEngine(program, default_year=2024)
-        bp = BatchParser(program)
-        out = bp.parse(pd.Series(HEADER_LINES, dtype=object),
-                       default_year=pd.Series([2024] * len(HEADER_LINES)))
+        out = parse_frame(program, HEADER_LINES,
+                          default_year=pd.Series([2024] * len(HEADER_LINES)))
         for i, line in enumerate(HEADER_LINES):
             row = out.iloc[i]
             try:
@@ -163,8 +164,7 @@ class TestBatchParserEquality:
         line = "Jan  1 12:34:56 host1 app[1]: hi"
         with pytest.raises(ParseFailure, match="year"):
             LineEngine(program, default_year=None).parse_line(line)
-        out = BatchParser(program).parse(pd.Series([line], dtype=object),
-                                         default_year=None)
+        out = parse_frame(program, [line], default_year=None)
         row = out.iloc[0]
         assert row["rule_id"] == -1
         assert row["message"] is None and row["words"] is None
@@ -186,7 +186,7 @@ class TestBatchParserEquality:
             "[Mon Dec 05 08:10:12.123456 2016] [authz_core:error] "
             "[pid 1:tid 2] [client 1.2.3.4] AH01630: client denied",
         ]
-        out = bp.parse(pd.Series(lines, dtype=object))
+        out = parse_frame(program, lines)
         schema_names = [n for n, _ in bp.attr_schema]
         assert {"severityname", "modulename", "processid", "threadid", "host"} \
             <= set(schema_names)
@@ -209,9 +209,8 @@ class TestBatchParserEquality:
         program = default_program()
         oracle = LineEngine(program, default_year=2024)
         lines = (HEADER_LINES * 50) + _random_header_lines(500)
-        bp = BatchParser(program)
-        out = bp.parse(pd.Series(lines, dtype=object),
-                       default_year=pd.Series([2024.0] * len(lines)))
+        out = parse_frame(program, lines,
+                          default_year=pd.Series([2024.0] * len(lines)))
         n_checked = 0
         for i, line in enumerate(lines):
             try:

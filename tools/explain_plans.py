@@ -52,7 +52,7 @@ def main():
     # query sections too; these show the bare operator plans)
     import datetime as dt
     from log2seq_spark.operators import (anomaly, eventseq, fuzzyjoin,
-                                         gapfill, pca, scrub)
+                                         gapfill, scrub)
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     sections.append(("anomaly: robust_outliers (rank-median x2 + "
                      "broadcast stats join-back)",
@@ -77,10 +77,6 @@ def main():
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     sections.append(("scrub: normalize_text (map-only, one Arrow hop)",
                      scrub.normalize_text(docs)))
-    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    _pca_model = pca.pca_fit(embs, k=4)
-    sections.append(("pca: pca_project (JVM-only zip_with/aggregate "
-                     "projection)", pca.pca_project(embs, _pca_model)))
 
     for name, fn in entrymod.queries().items():
         sections.append((f"query: {name}", fn(spark, SF_DIR)))
