@@ -1095,8 +1095,7 @@ def q_approx_distinct_users(spark, sf_dir):
     mode): the Deequ/TFDV-style per-column census of the events table
     (count / nulls / distinct / min / max rendered as strings) — one
     single-pass aggregate unpivoted to rows, every value
-    DuckDB-replayed exactly. ``profile_drift`` (snapshot comparison)
-    is unit-tested on top of these profiles."""
+    DuckDB-replayed exactly."""
     from log2seq_spark.operators.expectations import table_profile
     ev = _t(spark, sf_dir, "events")
     est = F.approx_count_distinct("user_id", 0.02)
@@ -1415,10 +1414,9 @@ GROUP BY n_name
 
 def q_sliding_window_counts(spark, sf_dir):
     """Sliding time-window aggregation (``F.window``, 1-hour windows
-    every 30 minutes) — the batch twin of the streaming windowed
-    aggregate (same operator + watermark in streaming/stream.py). Each
-    event lands in exactly two windows; Spark plans this as an explode
-    over the precomputed window set + one hash aggregate. The oracle
+    every 30 minutes). Each event lands in exactly two windows; Spark
+    plans this as an explode over the precomputed window set + one hash
+    aggregate. The oracle
     replays window assignment arithmetically (the two 30-minute-aligned
     starts covering each event)."""
     ev = _t(spark, sf_dir, "events")

@@ -49,33 +49,45 @@ def load_program_script(path: str):
     return getattr(mod, "program")
 
 
-def _program(args):
-    if args.parser_script:
-        return load_program_script(args.parser_script)
-    if getattr(args, "grok", None):
-        # grok front-end: one rule per --grok, cascaded first-match-wins;
-        # year_from_ts so year-less timestamps (%{SYSLOGTIMESTAMP:...})
-        # ride the same --year / wall-clock-year plumbing as the presets
-        from .rules.grok import grok_program
-        return grok_program(args.grok, year_from_ts=True)
-    from .rules import presets
-    named = {"default": presets.default_program,
-             "apache": presets.apache_errorlog_program,
-             "hdfs": presets.hdfs_program,
-             "hpc": presets.hpc_program,
-             "spark": presets.spark_log_program,
-             "bgl": presets.bgl_program,
-             "windows": presets.windows_program,
-             "linux": presets.linux_program,
-             "proxifier": presets.proxifier_program,
-             "android": presets.android_program,
-             "hadoop": presets.hadoop_program,
-             "healthapp": presets.healthapp_program,
-             "mac": presets.mac_program,
-             "openstack": presets.openstack_program,
-             "thunderbird": presets.thunderbird_program,
-             "zookeeper": presets.zookeeper_program}
-    return named[args.preset]()
+def _load_program(args):
+    """The parse program the flags select, or None after printing
+    ``cannot load …`` to stderr (the caller exits 2: a startup error,
+    reference __main__.py:89-148)."""
+    try:
+        if args.parser_script:
+            return load_program_script(args.parser_script)
+        if getattr(args, "grok", None):
+            # grok front-end: one rule per --grok, cascaded
+            # first-match-wins; year_from_ts so year-less timestamps
+            # (%{SYSLOGTIMESTAMP:...}) ride the same --year /
+            # wall-clock-year plumbing as the presets
+            from .rules.grok import grok_program
+            return grok_program(args.grok, year_from_ts=True)
+        from .rules import presets
+        named = {"default": presets.default_program,
+                 "apache": presets.apache_errorlog_program,
+                 "hdfs": presets.hdfs_program,
+                 "hpc": presets.hpc_program,
+                 "spark": presets.spark_log_program,
+                 "bgl": presets.bgl_program,
+                 "windows": presets.windows_program,
+                 "linux": presets.linux_program,
+                 "proxifier": presets.proxifier_program,
+                 "android": presets.android_program,
+                 "hadoop": presets.hadoop_program,
+                 "healthapp": presets.healthapp_program,
+                 "mac": presets.mac_program,
+                 "openstack": presets.openstack_program,
+                 "thunderbird": presets.thunderbird_program,
+                 "zookeeper": presets.zookeeper_program}
+        return named[args.preset]()
+    except Exception as e:
+        what = (f"parser script {args.parser_script}"
+                if args.parser_script else
+                "grok expression" if getattr(args, "grok", None)
+                else f"preset {args.preset}")
+        print(f"cannot load {what}: {e}", file=sys.stderr)
+        return None
 
 
 # tar archives are checked before the plain .gz/.bz2 suffixes so that
@@ -128,14 +140,8 @@ def cmd_parse(args) -> int:
     + summary → stderr; exit 0 when ≥1 line parses, 1 when nothing
     parses, 2 on a startup error (reference __main__.py:89-148)."""
     # -- startup validation (exit 2) before any Spark work
-    try:
-        program = _program(args)
-    except Exception as e:
-        what = (f"parser script {args.parser_script}"
-                if args.parser_script else
-                "grok expression" if getattr(args, "grok", None)
-                else f"preset {args.preset}")
-        print(f"cannot load {what}: {e}", file=sys.stderr)
+    program = _load_program(args)
+    if program is None:
         return 2
     files = list(args.files)
     if args.input:
@@ -212,12 +218,9 @@ def cmd_parse(args) -> int:
         # multi-file: spark.read.text lists splits in its own (size/path)
         # order, so the row-order id must be prefixed with the file's
         # ARGUMENT position to preserve the user's ordering (reference
-        # CLI parity). input_file_name() yields a file: URI.
-        expanded = []
-        for p in files:
-            hits = sorted(_glob.glob(p)) if _glob.has_magic(p) else [p]
-            expanded.extend(hits or [p])
-        uris = [Path(os.path.abspath(p)).as_uri() for p in expanded]
+        # CLI parity; globs were expanded above). input_file_name()
+        # yields a file: URI.
+        uris = [Path(os.path.abspath(p)).as_uri() for p in files]
         file_seq = F.array_position(F.array(*[F.lit(u) for u in uris]),
                                     F.input_file_name())
         df = (spark.read.text(files).withColumnRenamed("value", "text")
@@ -395,14 +398,8 @@ def cmd_parse(args) -> int:
 
 def cmd_pipeline(args) -> int:
     from .plans.pipeline import PipelineConfig, run_pipeline
-    try:
-        program = _program(args)
-    except Exception as e:
-        what = (f"parser script {args.parser_script}"
-                if args.parser_script else
-                "grok expression" if getattr(args, "grok", None)
-                else f"preset {args.preset}")
-        print(f"cannot load {what}: {e}", file=sys.stderr)
+    program = _load_program(args)
+    if program is None:
         return 2
     spark, owns = _cli_spark("log2seq-spark-pipeline", log_level="WARN")
     turns = (spark.table(args.input) if args.input_kind == "table"
@@ -507,9 +504,8 @@ def _template_state_fold(spark, lines, state_dir: str, text_col: str,
     (``templates --state-dir``, ``rare --state-dir``): validate the
     tokenization stamp, read the newest committed profile, fold this
     corpus in, and (when ``write``) commit the merge as the next epoch
-    under the streaming miner's protocol (one state format, every
-    consumer — ``current_templates()``, the streaming rare/new
-    detector, both CLI commands interoperate on the same directory).
+    (``plans/epochs.py`` protocol — both commands interoperate on the
+    same directory).
 
     Returns ``(prior, merged, epoch)``: the pre-batch profile, the
     history-∪-batch profile (the committed parquet read back when
@@ -517,22 +513,21 @@ def _template_state_fold(spark, lines, state_dir: str, text_col: str,
     the merge), and the committed epoch id (None when ``write`` is
     False). Raises ``ValueError`` on a tokenization-stamp mismatch."""
     from .operators.templates import merge_profiles, position_profiles
-    from .streaming.stream import (_PROFILE_SCHEMA, _check_epoch_params,
-                                   _committed_epochs, _prune_epochs,
-                                   _read_prior_epoch)
+    from .plans import epochs as ep
     params = {"tokens_col": tokens_col,
               "text_col": (text_col if tokens_col is None else None)}
-    _check_epoch_params(state_dir, params, spark=spark)
-    epochs = _committed_epochs(state_dir, spark=spark)
-    epoch = (epochs[-1] + 1) if epochs else 0
-    prior = _read_prior_epoch(spark, state_dir, epoch, _PROFILE_SCHEMA)
+    ep.check_params(state_dir, params, spark=spark)
+    committed = ep.committed_ids(state_dir, spark=spark)
+    epoch = (committed[-1] + 1) if committed else 0
+    prior = (spark.read.parquet(f"{state_dir}/epoch={committed[-1]}")
+             if committed else spark.createDataFrame([], ep.PROFILE_SCHEMA))
     merged = merge_profiles(
         prior, position_profiles(lines, text_col, tokens_col=tokens_col))
     if not write:
         return prior, merged, None
     epoch_path = f"{state_dir}/epoch={epoch}"
     merged.write.mode("overwrite").parquet(epoch_path)
-    _prune_epochs(state_dir, epoch, keep_epochs=3, spark=spark)
+    ep.prune(state_dir, epoch, keep_epochs=3, spark=spark)
     return prior, spark.read.parquet(epoch_path), epoch
 
 
@@ -554,9 +549,8 @@ def cmd_templates(args) -> int:
                         args.multiline_sep)
     if getattr(args, "state_dir", None):
         # incremental mining: fold THIS corpus's position profile into
-        # the same epoch-versioned state the streaming miner keeps
-        # (streaming/stream.py protocol — one format, every consumer:
-        # current_templates(), the rare-line detectors, this command).
+        # the epoch-versioned state (plans/epochs.py protocol — one
+        # format for this command and `rare --state-dir`).
         # Printed templates cover everything mined into the state so
         # far; per-shard cost is one profile aggregate over the shard
         # plus a merge against the (groups-bounded) state.
@@ -585,25 +579,6 @@ def cmd_templates(args) -> int:
     return 0
 
 
-def _committed_gens(spark, dir_path: str) -> list[int]:
-    """``gen=N`` children of ``dir_path`` whose Spark write finished
-    (``_SUCCESS`` marker — the Hadoop commit protocol writes it last,
-    so a crashed writer's partial generation is invisible)."""
-    from . import fsio
-    if not fsio.exists(spark, dir_path):
-        return []
-    out = []
-    for name in fsio.list_child_names(spark, dir_path):
-        if name.startswith("gen="):
-            try:
-                n = int(name[len("gen="):])
-            except ValueError:
-                continue
-            if fsio.exists(spark, f"{dir_path}/{name}/_SUCCESS"):
-                out.append(n)
-    return sorted(out)
-
-
 def _index_segments(spark, index_dir: str):
     """Log-structured index state: (segment paths, live delta gens,
     next gen number). Layout:
@@ -619,9 +594,10 @@ def _index_segments(spark, index_dir: str):
     got around to deleting them — which is what makes compaction
     crash-safe: the base commits first (atomic ``_SUCCESS``), deletion
     of absorbed segments is best-effort cleanup."""
-    bases = _committed_gens(spark, f"{index_dir}/base")
+    from .plans.epochs import committed_ids
+    bases = committed_ids(f"{index_dir}/base", "gen", spark)
     j = bases[-1] if bases else 0
-    deltas = [n for n in _committed_gens(spark, f"{index_dir}/delta")
+    deltas = [n for n in committed_ids(f"{index_dir}/delta", "gen", spark)
               if n > j]
     paths = ([f"{index_dir}/base/gen={j}"] if bases else []) + \
             [f"{index_dir}/delta/gen={n}" for n in deltas]
@@ -899,8 +875,8 @@ def cmd_substr(args) -> int:
         # gram-space stamp: an index built with a different tokenizer
         # column or k is a DIFFERENT hash space — mixing them would
         # silently miss every historical duplicate. Stamped on first
-        # publish, refused on drift (same discipline as the streaming
-        # epoch state and templates --state-dir).
+        # publish, refused on drift (same discipline as the
+        # templates --state-dir epoch state).
         import json as _json
         stamp_path = f"{args.index_dir}/_params.json"
         stamp = {"text_col": args.text_col, "k": args.k}
@@ -1055,8 +1031,8 @@ def cmd_rare(args) -> int:
         # incremental screening: rarity judged against EVERYTHING ever
         # mined into the epoch state (history ∪ this batch — a message
         # common within the batch is not an anomaly), plus is_new for
-        # Drain groups history has never seen. Same state dir the
-        # streaming miner / `templates --state-dir` maintain; unless
+        # Drain groups history has never seen. Same state dir
+        # `templates --state-dir` maintains; unless
         # --screen-only, this batch is folded in as the next epoch so
         # the next shard screens against it too.
         try:
@@ -1845,9 +1821,9 @@ def main(argv=None) -> int:
                    help="joiner between a record's lines (default: space)")
     p.add_argument("--state-dir", default=None,
                    help="incremental mining: fold this corpus into the "
-                        "epoch-versioned profile state kept here (same "
-                        "format as the streaming miner; printed "
-                        "templates cover everything mined so far)")
+                        "epoch-versioned profile state kept here "
+                        "(printed templates cover everything mined so "
+                        "far)")
     p.set_defaults(fn=cmd_templates)
 
     p = sub.add_parser(
@@ -1959,7 +1935,7 @@ def main(argv=None) -> int:
     p.add_argument("--state-dir", default=None,
                    help="screen against the accumulated template state "
                         "kept here (same epoch format as `templates "
-                        "--state-dir` and the streaming miner): rarity "
+                        "--state-dir`): rarity "
                         "covers history ∪ batch, is_new flags "
                         "never-seen groups, batch folded in after")
     p.add_argument("--screen-only", action="store_true",

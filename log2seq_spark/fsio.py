@@ -1,9 +1,9 @@
 """Scheme-aware driver-side filesystem I/O.
 
 The engine's two driver-side state protocols — the pipeline's
-checkpoint manifest (``plans/manifest.py``) and the streaming
-epoch-versioned operator state (``streaming/stream.py``) — read, list,
-write, and delete small control files next to the Spark-written data.
+checkpoint manifest (``plans/manifest.py``) and the epoch-versioned
+operator state (``plans/epochs.py``) — read, list, write, and delete
+small control files next to the Spark-written data.
 On a laptop those paths are local disk; on a real cluster they live on
 whatever shared filesystem the ``spark-submit`` run writes to (HDFS,
 S3, GCS, …), where the driver's ``open``/``os``/``shutil`` cannot
@@ -34,9 +34,8 @@ def is_uri_path(path: str) -> bool:
 
 def resolve_spark(spark, path: str):
     """The session whose Hadoop configuration serves ``path``: the one
-    passed in, else the active session (set inside ``foreachBatch``),
-    else a clear error — URI-path state I/O cannot fall back to local
-    ``open``."""
+    passed in, else the active session, else a clear error — URI-path
+    state I/O cannot fall back to local ``open``."""
     if spark is not None:
         return spark
     from pyspark.sql import SparkSession

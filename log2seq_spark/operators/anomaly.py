@@ -113,8 +113,8 @@ def novel_line_flags(lines: DataFrame, prior_profile: DataFrame,
     real-time "first occurrence of a new message shape" signal).
 
     ``prior_profile`` is a :func:`~log2seq_spark.operators.templates.\
-position_profiles` table (e.g. the epoch state kept by
-    ``streaming/stream.py::streaming_template_mining``); pass
+position_profiles` table (e.g. the epoch state ``templates
+    --state-dir`` keeps, ``plans/epochs.py``); pass
     ``merged_profile`` when the caller has already folded the batch in
     (avoids profiling the batch twice).
 
@@ -193,6 +193,31 @@ def template_drift(lines_a: DataFrame, lines_b: DataFrame,
     return jt.select("template", "n_a", "n_b", status.alias("status"))
 
 
+_DURATION_MS = {"millisecond": 1, "second": 1000, "minute": 60_000,
+                "hour": 3_600_000, "day": 86_400_000}
+
+
+def duration_ms(spec: str) -> int:
+    """Parse a Spark-style interval string like '30 minutes', '1 hour'
+    or the compound form '1 hour 30 minutes' — any spec ``F.window``
+    accepts must parse here too, or a caller tuning the window from
+    Spark docs crashes at plan construction."""
+    toks = spec.strip().split()
+    if not toks or len(toks) % 2:
+        raise ValueError(
+            f"cannot parse interval {spec!r}: expected 'N unit "
+            "[N unit ...]' (e.g. '30 minutes', '1 hour 30 minutes')")
+    total = 0
+    for n, unit in zip(toks[::2], toks[1::2]):
+        try:
+            total += int(n) * _DURATION_MS[unit.rstrip("s").lower()]
+        except (ValueError, KeyError):
+            raise ValueError(
+                f"cannot parse interval {spec!r}: bad component "
+                f"{n!r} {unit!r}") from None
+    return total
+
+
 def burst_windows(events: DataFrame, ts_col: str = "ts",
                   key_col: str | None = None,
                   window: str = "1 hour",
@@ -216,7 +241,6 @@ def burst_windows(events: DataFrame, ts_col: str = "ts",
     hottest key — exactly the key whose bursts are being hunted — and
     is bounded by (period / window) rows per key, not by event count.
     """
-    from ..streaming.stateful import duration_ms
     wsec = duration_ms(window) // 1000
     ws = (F.unix_timestamp(F.window(F.col(ts_col), window)["start"])
           .alias("window_start"))

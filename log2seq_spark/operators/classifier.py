@@ -1,11 +1,8 @@
 """FastText-style hashed n-gram linear classifier inference — the
 model-based quality filter of modern training-data pipelines (the
 public recipe: fastText quality classifiers in LLaMA's and CCNet's
-data work, FineWeb-Edu's educational-quality scorer) — plus the
-matching trainer: scoring 10^12 documents under a fixed linear model
-is map-only work, and :func:`train_classifier` fits that model by
-distributed full-batch logistic GD over a labeled set (cost bounded by
-the labeled set, never the corpus).
+data work, FineWeb-Edu's educational-quality scorer): scoring 10^12
+documents under a fixed linear model is map-only work.
 
 Model: tokens → lowercased bigrams → hash-bucketed into ``dim``
 features (md5-prefix → bigint, the repo's established engine-portable
@@ -108,89 +105,3 @@ def classify(docs: DataFrame, *, id_col: str = "doc_id",
          .alias("clf_score"))
 
 
-def doc_features(docs: DataFrame, *, id_col: str = "doc_id",
-                 text_col: str = "text", dim: int = 1024) -> DataFrame:
-    """Sparse mean-of-one-hot features per document:
-    ``(id_col, bucket, x)`` with ``x = count(bucket in doc) /
-    n_grams(doc)`` — exactly the feature map :func:`classify` scores
-    (score = sigmoid(sum_b w_b·x_b) = sigmoid(mean of per-gram bucket
-    weights), so weights trained on these features drop straight into
-    ``classify(weights=...)``). Gram-less docs (<2 tokens) are
-    excluded: their score is weight-independent (0.5) and they carry
-    no gradient."""
-    rows = (bigram_buckets(docs, id_col=id_col, text_col=text_col,
-                           dim=dim)
-            .where(F.col("bucket").isNotNull()))
-    counts = rows.groupBy(id_col, "bucket").agg(
-        F.count(F.lit(1)).alias("_c"))
-    totals = rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
-    return (counts.join(totals, id_col)
-                  .select(id_col, "bucket",
-                          (F.col("_c") / F.col("_n")).alias("x")))
-
-
-def train_classifier(docs: DataFrame, *, label_col: str = "label",
-                     id_col: str = "doc_id", text_col: str = "text",
-                     dim: int = 1024, iters: int = 30,
-                     lr: float = 2.0, l2: float = 0.0) -> DataFrame:
-    """Train the fastText-style quality classifier this module scores:
-    full-batch logistic-regression gradient descent over the hashed
-    bigram mean features, returning the ``(bucket, weight)`` frame
-    :func:`classify` consumes. Labels are 0/1 doubles in
-    ``label_col``.
-
-    Spark shape: the sparse feature frame (one row per (doc, bucket))
-    is built ONCE and persisted; each iteration is two
-    map-side-combinable aggregates over it — scores per doc
-    (broadcast-join the dim-bounded weights), then gradient per bucket
-    (join the per-doc residuals back, one shuffle keyed by the
-    labeled-set's doc ids). Cost scales with the LABELED set (typically
-    10^5-10^6 docs), never the 10^12-doc corpus the trained weights
-    screen; weights (≤ dim rows) are the only thing collected.
-    Deterministic: zero init, fixed iteration count, no sampling —
-    identical inputs give identical weights up to float-sum order.
-
-    The gradient of mean log-loss with L2 is
-    ``g_b = mean_i((p_i - y_i)·x_ib) + l2·w_b``; updates are plain
-    ``w -= lr·g``. Mean-of-one-hot features are small (each x_b ≤
-    1/n_grams), so gradients are too: on separable quality data
-    lr ≈ 10-20 with ~60 iterations gives a solid margin (the unit
-    test's setting); tune per set."""
-    spark = docs.sparkSession
-    feats = doc_features(docs, id_col=id_col, text_col=text_col,
-                         dim=dim).persist()
-    labels = docs.select(F.col(id_col),
-                         F.col(label_col).cast("double").alias("_y"))
-    n_docs = labels.count()
-    try:
-        w = {}          # bucket -> weight, dim-bounded
-        for _ in range(iters):
-            if w:
-                wdf = F.broadcast(spark.createDataFrame(
-                    list(w.items()), "bucket bigint, weight double"))
-                scored = (feats.join(wdf, "bucket", "left")
-                          .withColumn("_wx",
-                                      F.coalesce("weight", F.lit(0.0))
-                                      * F.col("x")))
-            else:
-                scored = feats.withColumn("_wx", F.lit(0.0))
-            resid = (scored.groupBy(id_col)
-                     .agg(F.sum("_wx").alias("_z"))
-                     .join(labels, id_col)
-                     .select(id_col,
-                             (F.lit(1.0)
-                              / (F.lit(1.0) + F.exp(-F.col("_z")))
-                              - F.col("_y")).alias("_r")))
-            grad = (feats.join(resid, id_col)
-                    .groupBy("bucket")
-                    .agg((F.sum(F.col("x") * F.col("_r"))
-                          / F.lit(float(n_docs))).alias("_g"))
-                    .collect())
-            for r in grad:
-                b = r["bucket"]
-                w[b] = (w.get(b, 0.0)
-                        - lr * (r["_g"] + l2 * w.get(b, 0.0)))
-    finally:
-        feats.unpersist()
-    return spark.createDataFrame(
-        sorted(w.items()), "bucket bigint, weight double")

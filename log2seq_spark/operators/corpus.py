@@ -35,12 +35,12 @@ def clean_corpus(docs: DataFrame, text_col: str = "text",
     dropped).
 
     Document identity is the composite (``id_col``, post-scrub content
-    hash), NOT the id alone — matching the streaming twin's (id, hash)
-    discipline: an id repeated with different payloads is two separate
-    documents (keyed by id alone, their lines would interleave into one
-    garbled row), and null ids are ordinary values throughout. Rows
-    identical in BOTH id and payload collapse to one logical doc and
-    share a verdict (there is no per-row identity to tell them apart).
+    hash), NOT the id alone: an id repeated with different payloads is
+    two separate documents (keyed by id alone, their lines would
+    interleave into one garbled row), and null ids are ordinary values
+    throughout. Rows identical in BOTH id and payload collapse to one
+    logical doc and share a verdict (there is no per-row identity to
+    tell them apart).
     Keeper election (line dedup and exact dedup) orders real ids before
     null ids, lowest id first, content hash as the tiebreak.
 
@@ -117,32 +117,21 @@ quality_features` score on the cleaned text ``>= quality_min``.
     q = (textstats.quality_features(cur, text_col)
          if quality_min is not None else cur)
 
-    # null-safe identity compare: id != keeper yields NULL for null-id
-    # rows and would never flag their duplicates
-    reason = drop_reason_expr(
-        text_col, ~F.col("_ck").eqNullSafe(F.col("_keeper")),
-        quality_min)
-    return (q.select(F.col(id_col),
-                     F.col(text_col).alias("clean_text"),
-                     reason.isNull().alias("kept"),
-                     reason.alias("drop_reason")))
-
-
-def drop_reason_expr(text_col: str, is_dup, quality_min: float | None):
-    """The recipe's verdict column (null = kept), shared by the batch
-    and streaming variants so the precedence can never drift:
-    empty → exact_dup → low_quality. ``is_dup`` is a boolean Column;
-    when ``quality_min`` is set the frame must already carry
-    ``quality_score``.
-
-    Whitespace-class emptiness: trim() strips only spaces, and a doc
-    whose duplicated lines were all removed reassembles to bare
-    newlines — that must classify as empty, not ship to training."""
+    # verdict precedence: empty → exact_dup → low_quality. Emptiness is
+    # whitespace-class: trim() strips only spaces, and a doc whose
+    # duplicated lines were all removed reassembles to bare newlines —
+    # that must classify as empty, not ship to training
     empty = (F.coalesce(
         F.regexp_replace(F.col(text_col), r"\s+", ""), F.lit("")) == "")
+    # null-safe identity compare: id != keeper yields NULL for null-id
+    # rows and would never flag their duplicates
+    is_dup = ~F.col("_ck").eqNullSafe(F.col("_keeper"))
     reason = (F.when(empty, F.lit("empty"))
                .when(is_dup, F.lit("exact_dup")))
     if quality_min is not None:
         reason = reason.when(F.col("quality_score") < quality_min,
                              F.lit("low_quality"))
-    return reason
+    return (q.select(F.col(id_col),
+                     F.col(text_col).alias("clean_text"),
+                     reason.isNull().alias("kept"),
+                     reason.alias("drop_reason")))

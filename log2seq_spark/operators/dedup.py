@@ -620,29 +620,6 @@ def contamination_report(train: DataFrame, evalset: DataFrame,
                         (ratio >= threshold).alias("contaminated")))
 
 
-def conversation_texts(turns: DataFrame, conv_col: str = "conv_id",
-                       idx_col: str = "turn_idx",
-                       text_col: str = "text") -> DataFrame:
-    """One row per conversation: (``conv_col``, text) with the turns'
-    texts joined in ``idx_col`` order — the rendering that makes every
-    document-level dedup/similarity operator conversation-level.
-
-    One hash shuffle on the conversation id; turn order is restored
-    INSIDE the aggregate (``array_sort`` over (idx, text) structs —
-    struct ordering is field order, so idx decides), never with a
-    global sort. Long conversations are one group each here — fine for
-    dedup hashing (the value is bounded by conversation length); this
-    is NOT the salted path the parse pipeline uses, because a signature
-    needs the whole conversation in one place by definition."""
-    pair = F.struct(F.col(idx_col).alias("i"),
-                    F.col(text_col).alias("t"))
-    return (turns.groupBy(F.col(conv_col))
-                 .agg(F.array_join(
-                     F.transform(F.array_sort(F.collect_list(pair)),
-                                 lambda x: x["t"]),
-                     "\n").alias("text")))
-
-
 def fuzzy_contamination(train: DataFrame, evalset: DataFrame,
                         text_col: str = "text", id_col: str = "doc_id",
                         n_hashes: int = 8, bands: int = 4,
@@ -898,98 +875,6 @@ def _reassembled_docs(docs: DataFrame, kept_lines: DataFrame,
                          .alias("clean_text")))
 
 
-def line_dedup_index(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     sep: str = "\n",
-                     keyed: DataFrame | None = None) -> DataFrame:
-    """Line-hash index for INCREMENTAL corpus-level line dedup: one row
-    per distinct non-empty line ever seen, (line_hash, keep_id) with
-    ``keep_id`` = the lowest owning doc id — the line-granularity twin
-    of :func:`exact_dedup_index`. Size is bounded by distinct-line
-    novelty, not corpus volume.
-
-    ``keyed`` accepts a precomputed (persisted) :func:`_keyed_lines`
-    frame so a caller that also screens the batch pays the line
-    explode + md5 ONCE per batch (the ``signatures=`` pattern of
-    :func:`near_dup_against_index`; the streaming wrapper does this)."""
-    lines = (_checked_ownership(keyed, sep) if keyed is not None
-             else _keyed_lines(docs, text_col, id_col, sep))
-    return (lines.filter(F.col("_h").isNotNull())
-            .select(F.col("_h").alias("line_hash"), "_id").distinct()
-            .groupBy("line_hash")
-            .agg(F.min("_id").alias("keep_id")))
-
-
-def drop_duplicate_lines_against_index(new_docs: DataFrame,
-                                       index: DataFrame,
-                                       text_col: str = "text",
-                                       id_col: str = "doc_id",
-                                       sep: str = "\n",
-                                       keyed: DataFrame | None = None) \
-        -> DataFrame:
-    """Incremental :func:`drop_duplicate_lines`: a non-empty line is
-    kept only in the document where it was FIRST seen — the historical
-    :func:`line_dedup_index` keeper when the line is known, else the
-    batch's lowest-id owner — and removed from every other document.
-    Empty lines always survive. Returns (``id_col``, clean_text) for
-    every input doc. Same contract as :func:`dedup_against_index`:
-    equals the batch operator over history ∪ batch provided batch ids
-    sort after history ids (with an empty index it IS the batch
-    operator — unit-tested). ``id_col`` IS the document identity
-    (see :func:`drop_duplicate_lines`) — and unlike the batch twin,
-    here it must be a STABLE SCALAR, because keepers persist in the
-    index across batches.
-
-    Shape at scale: the batch's lines join the (small) line index on
-    the 32-char hash plus one batch-local ownership aggregate —
-    history is never re-split. ``keyed`` = precomputed (persisted)
-    :func:`_keyed_lines`, see :func:`line_dedup_index`."""
-    keyed = (_checked_ownership(keyed, sep) if keyed is not None
-             else _keyed_lines(new_docs, text_col, id_col, sep))
-    batch_own = (keyed.filter(F.col("_h").isNotNull())
-                      .select("_id", "_h").distinct()
-                      .groupBy("_h")
-                      .agg(F.min("_id").alias("_bk")))
-    # "_in_index" is an explicit presence marker (same reason as
-    # dedup_against_index): a line first seen under a null-id doc has a
-    # null index keeper, and testing _seen.isNotNull() would hand the
-    # line back to the batch owner in every later batch
-    j = (keyed.join(batch_own, "_h", "left")
-              .join(index.select(F.col("line_hash").alias("_h"),
-                                 F.col("keep_id").alias("_seen"),
-                                 F.lit(True).alias("_in_index")),
-                    "_h", "left"))
-    # keep: empty line | this doc is the historical keeper (re-ingested)
-    # | line is new and this doc is its first (min-id) batch owner;
-    # null-safe comparisons so null-id docs behave like the exact twin
-    keep = (F.col("_h").isNull()
-            | F.when(F.col("_in_index").isNotNull(),
-                     F.col("_id").eqNullSafe(F.col("_seen")))
-               .otherwise(F.col("_id").eqNullSafe(F.col("_bk"))))
-    return _reassembled_docs(new_docs, j.filter(keep), id_col, sep)
-
-
-def updated_line_dedup_index(index: DataFrame, new_docs: DataFrame,
-                             text_col: str = "text",
-                             id_col: str = "doc_id",
-                             sep: str = "\n",
-                             keyed: DataFrame | None = None) -> DataFrame:
-    """The line index after absorbing a batch: prior entries win
-    (first-seen-keeps, matching the screen's verdicts), plus one row
-    per line hash first seen in this batch. First-wins via anti-join
-    rather than min-over-union: min() ignores NULL ids, so a line whose
-    historical keeper is a null-id doc would silently hand ownership to
-    the first real-id batch doc — contradicting the screen, which
-    already told that doc to drop the line. Equals min-over-union under
-    the ids-sort-after-history contract (and is cheaper: the history
-    rows are never re-aggregated). ``keyed`` = precomputed (persisted)
-    :func:`_keyed_lines`, see :func:`line_dedup_index`."""
-    fresh = (line_dedup_index(new_docs, text_col, id_col, sep,
-                              keyed=keyed)
-             .join(index.select("line_hash"), "line_hash", "left_anti"))
-    return index.unionByName(fresh)
-
-
 def duplicate_window_ownership(docs: DataFrame, k: int = 8,
                                text_col: str = "text",
                                id_col: str = "doc_id") -> DataFrame:
@@ -1055,28 +940,19 @@ def _is_dup_window():
             & ~F.col("_id").eqNullSafe(F.col("_keeper")))
 
 
-def duplicate_span_stats(docs: DataFrame, k: int = 8,
-                         text_col: str = "text",
-                         id_col: str = "doc_id",
-                         ownership: DataFrame | None = None) -> DataFrame:
-    """Per-doc exact duplicate-substring profile: how much of each doc
-    is covered by k-token runs that also appear verbatim in another
-    (lower-id) document. Returns (``id_col``, n_toks, n_windows,
-    n_dup_windows, n_spans, dup_tokens): ``n_spans`` = count of merged
-    maximal duplicated spans, ``dup_tokens`` = token positions covered
-    by at least one removable window.
+def _dup_span_fold(own: DataFrame, k: int):
+    """Per-doc duplicate-window aggregate over a
+    :func:`duplicate_window_ownership` frame plus the span merge over
+    it: ``(per, fold)`` where ``per`` has (_id, n_toks, n_windows,
+    n_dup_windows, _dp) with ``_dp`` the sorted removable-window
+    positions, and ``fold`` is a struct Column over ``_dp`` whose
+    ``spans`` / ``covered`` fields are the merged maximal span count
+    and the token positions covered by removable windows.
 
-    Span merge runs as a single ``aggregate`` fold over the per-doc
-    sorted dup-window position array (state = (spans, covered,
-    prev_end)) — per-doc work bounded by doc length, no window-function
-    shuffle beyond the one groupBy.
-
-    ``ownership`` lets a caller that also runs
-    :func:`drop_duplicate_spans` share (e.g. persist) one
-    :func:`duplicate_window_ownership` subtree instead of computing the
-    window hashes twice."""
-    own = (ownership if ownership is not None
-           else duplicate_window_ownership(docs, k, text_col, id_col))
+    The merge is a single ``aggregate`` fold over the sorted position
+    array (state = (spans, covered, prev_end)) — per-doc work bounded
+    by doc length, no window-function shuffle beyond the one
+    groupBy."""
     per = (own.groupBy("_id", "n_toks")
               .agg(F.count("pos").alias("n_windows"),
                    F.sum(F.when(_is_dup_window(), 1).otherwise(0))
@@ -1094,6 +970,27 @@ def duplicate_span_stats(docs: DataFrame, k: int = 8,
             (acc["covered"] + F.when(p > acc["prev_end"], F.lit(k))
               .otherwise(p + F.lit(k - 1) - acc["prev_end"])).alias("covered"),
             F.greatest(acc["prev_end"], p + F.lit(k - 1)).alias("prev_end")))
+    return per, fold
+
+
+def duplicate_span_stats(docs: DataFrame, k: int = 8,
+                         text_col: str = "text",
+                         id_col: str = "doc_id",
+                         ownership: DataFrame | None = None) -> DataFrame:
+    """Per-doc exact duplicate-substring profile: how much of each doc
+    is covered by k-token runs that also appear verbatim in another
+    (lower-id) document. Returns (``id_col``, n_toks, n_windows,
+    n_dup_windows, n_spans, dup_tokens): ``n_spans`` = count of merged
+    maximal duplicated spans, ``dup_tokens`` = token positions covered
+    by at least one removable window (span merge: :func:`_dup_span_fold`).
+
+    ``ownership`` lets a caller that also runs
+    :func:`drop_duplicate_spans` share (e.g. persist) one
+    :func:`duplicate_window_ownership` subtree instead of computing the
+    window hashes twice."""
+    own = (ownership if ownership is not None
+           else duplicate_window_ownership(docs, k, text_col, id_col))
+    per, fold = _dup_span_fold(own, k)
     return (per.select(F.col("_id").alias(id_col), "n_toks", "n_windows",
                        "n_dup_windows",
                        fold["spans"].alias("n_spans"),
@@ -1128,23 +1025,7 @@ def duplicate_span_profile(docs: DataFrame, k: int = 8,
     """
     own = (ownership if ownership is not None
            else duplicate_window_ownership(docs, k, text_col, id_col))
-    per = (own.groupBy("_id", "n_toks")
-              .agg(F.count("pos").alias("n_windows"),
-                   F.sum(F.when(_is_dup_window(), 1).otherwise(0))
-                    .alias("n_dup_windows"),
-                   F.array_sort(F.collect_list(
-                       F.when(_is_dup_window(), F.col("pos")))).alias("_dp")))
-    fold = F.aggregate(
-        "_dp",
-        F.struct(F.lit(0).cast("long").alias("spans"),
-                 F.lit(0).cast("long").alias("covered"),
-                 F.lit(-1).cast("long").alias("prev_end")),
-        lambda acc, p: F.struct(
-            (acc["spans"] + F.when(p > acc["prev_end"], 1).otherwise(0)
-             ).alias("spans"),
-            (acc["covered"] + F.when(p > acc["prev_end"], F.lit(k))
-              .otherwise(p + F.lit(k - 1) - acc["prev_end"])).alias("covered"),
-            F.greatest(acc["prev_end"], p + F.lit(k - 1)).alias("prev_end")))
+    per, fold = _dup_span_fold(own, k)
     toks = F.filter(F.split(normalized_text(F.col(text_col)), " "),
                     lambda t: t != "")
     tok_arr = docs.select(F.col(id_col).alias("_tid"), toks.alias("_w"))
@@ -1342,10 +1223,10 @@ def updated_dedup_index(index: DataFrame,
     the content hash, so no join back to the docs is needed (and a
     null or repeated id can't lose its hash). ``new_docs``/``text_col``
     remain only for decision frames predating the carried hash.
-    First-wins via anti-join, like :func:`updated_line_dedup_index` /
-    :func:`updated_minhash_index`: prior entries are appended to, never
-    re-aggregated — per-epoch cost scales with the BATCH, not with the
-    (corpus-novelty-sized) index a long-running stream accumulates.
+    First-wins via anti-join, like :func:`updated_minhash_index`: prior
+    entries are appended to, never re-aggregated — per-batch cost scales
+    with the BATCH, not with the (corpus-novelty-sized) index that
+    accumulates over many ingestions.
 
     ``delta_only=True`` returns JUST the fresh entries (disjoint from
     ``index`` by construction) instead of the union — the seam for
@@ -1428,7 +1309,7 @@ def near_dup_against_index(new_docs: DataFrame, index: DataFrame,
     ``signatures`` accepts the batch's precomputed (persisted)
     :func:`minhash_band_signatures` so a caller that also feeds
     :func:`updated_minhash_index` pays the signature aggregate ONCE
-    per batch, not twice (the streaming wrapper does this).
+    per batch, not twice (``dedup --index-dir --mode near`` does this).
 
     ``index_bloom`` (operators/bloom.py dict over — or over a SUPERSET
     of — the index's :func:`bucket_key_expr` values) short-circuits
@@ -1529,42 +1410,4 @@ def updated_minhash_index(index: DataFrame, new_docs: DataFrame,
                        ["band", "band_hash"], "left_anti"))
     return fresh if delta_only else index.unionByName(fresh)
 
-
-def conversation_hashes(turns: DataFrame, conv_col: str = "conv_id",
-                        idx_col: str = "turn_idx",
-                        text_col: str = "text",
-                        role_col: str | None = "role") -> DataFrame:
-    """Canonical content hash per conversation over the north-rule turns
-    table (conv_id, turn_idx, role, text, ...): turns are assembled in
-    ``idx_col`` order with unit separators, optionally role-qualified so
-    the same words spoken by different roles hash differently. Returns
-    (``conv_col``, n_turns, conv_hash).
-
-    Order safety without a global sort: per-conv (turn_idx, unit-hash)
-    structs are collected and ``array_sort``-ed inside the one groupBy —
-    partition order of the input never changes the hash (the same
-    reassembly discipline as :func:`drop_duplicate_lines`).
-
-    Injection safety: each turn is hashed to a FIXED-WIDTH digest
-    before the per-conv concatenation (role and text digests
-    concatenated, then the ordered turn digests), so no byte sequence
-    inside a turn's text can mimic a turn or role boundary, and null
-    text/role hash like any other value instead of being skipped —
-    turn-count and boundary structure are therefore part of the hash."""
-    t = F.coalesce(F.md5(F.col(text_col)), F.lit(":null:"))
-    if role_col is not None:
-        unit = F.md5(F.concat(
-            F.coalesce(F.md5(F.col(role_col)), F.lit(":null:")), t))
-    else:
-        unit = t
-    return (turns.select(F.col(conv_col).alias("_c"),
-                         F.struct(F.col(idx_col).alias("i"),
-                                  unit.alias("u")).alias("_s"))
-                 .groupBy("_c")
-                 .agg(F.count("*").alias("n_turns"),
-                      F.md5(F.concat_ws(
-                          "",
-                          F.array_sort(F.collect_list("_s")).getField("u")))
-                       .alias("conv_hash"))
-                 .withColumnRenamed("_c", conv_col))
 

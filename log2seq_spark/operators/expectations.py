@@ -29,19 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-class ExpectationError(AssertionError):
-    """Raised by ``expect`` when any check fails; carries the report."""
-
-    def __init__(self, report: List[dict]):
-        self.report = report
-        failed = [r for r in report if not r["passed"]]
-        lines = [f"  {r['check']}: expected {r['expected']}, "
-                 f"observed {r['observed']}" for r in failed]
-        super().__init__(
-            f"{len(failed)}/{len(report)} data-quality checks failed:\n"
-            + "\n".join(lines))
-
-
 @dataclass(frozen=True)
 class Check:
     """One expectation: named aggregate columns + a verdict over them."""
@@ -166,18 +153,6 @@ def row_count(lo: int, hi: Optional[int] = None) -> Check:
         aggs={}, judge=judge)
 
 
-def mean_between(col: str, lo: float, hi: float) -> Check:
-    a = f"__mean_{col}"
-
-    def judge(vals, n):
-        m = vals[a]
-        return (m is not None and lo <= m <= hi), f"mean = {m}"
-    return Check(
-        name=f"mean_between({col})",
-        expected=f"[{lo}, {hi}]",
-        aggs={a: F.avg(col)}, judge=judge)
-
-
 def satisfies(name: str, condition: str,
               max_bad_frac: float = 0.0) -> Check:
     """Arbitrary per-row SQL predicate (e.g. ``"len(symbols) =
@@ -219,15 +194,6 @@ def evaluate(df: DataFrame, checks: Sequence[Check]) -> List[dict]:
         out.append({"check": c.name, "expected": c.expected,
                     "observed": observed, "passed": bool(passed)})
     return out
-
-
-def expect(df: DataFrame, checks: Sequence[Check]) -> List[dict]:
-    """Gate semantics: evaluate and RAISE (``ExpectationError``, with
-    the full report attached) when any check fails."""
-    report = evaluate(df, checks)
-    if any(not r["passed"] for r in report):
-        raise ExpectationError(report)
-    return report
 
 
 def transcript_checks(max_null_text: float = 0.01) -> List[Check]:
@@ -307,39 +273,3 @@ def table_profile(df: DataFrame, cols: Sequence[str] | None = None,
                 "min_s", "max_s"))
 
 
-def profile_drift(before: DataFrame, after: DataFrame,
-                  null_frac_tol: float = 0.05,
-                  distinct_rel_tol: float = 0.5) -> DataFrame:
-    """Schema + distribution drift between two snapshots' profiles
-    (both from :func:`table_profile`): one row per column seen in
-    either, ``(column, status, n_null_frac_a, n_null_frac_b,
-    n_distinct_a, n_distinct_b)`` with status ∈ 'added' / 'removed' /
-    'null_drift' (null fraction moved more than ``null_frac_tol``
-    absolute) / 'distinct_drift' (distinct count moved more than
-    ``distinct_rel_tol`` relative) / 'ok'. The inputs are k-row
-    profiles, so this is driver-cheap by construction — the corpus
-    passes already happened in ``table_profile``."""
-    a = before.select(F.col("column"),
-                      (F.col("n_null").cast("double")
-                       / F.col("n")).alias("_fa"),
-                      F.col("n_distinct").alias("_da"))
-    b = after.select(F.col("column"),
-                     (F.col("n_null").cast("double")
-                      / F.col("n")).alias("_fb"),
-                     F.col("n_distinct").alias("_db"))
-    j = a.join(b, "column", "full_outer")
-    null_drift = (F.abs(F.col("_fb") - F.col("_fa"))
-                  > F.lit(float(null_frac_tol)))
-    dist_drift = (F.abs(F.col("_db") - F.col("_da")).cast("double")
-                  > F.lit(float(distinct_rel_tol))
-                  * F.greatest(F.col("_da").cast("double"), F.lit(1.0)))
-    status = (F.when(F.col("_fa").isNull(), F.lit("added"))
-               .when(F.col("_fb").isNull(), F.lit("removed"))
-               .when(null_drift, F.lit("null_drift"))
-               .when(dist_drift, F.lit("distinct_drift"))
-               .otherwise(F.lit("ok")))
-    return j.select("column", status.alias("status"),
-                    F.round("_fa", 6).alias("null_frac_a"),
-                    F.round("_fb", 6).alias("null_frac_b"),
-                    F.col("_da").alias("n_distinct_a"),
-                    F.col("_db").alias("n_distinct_b"))

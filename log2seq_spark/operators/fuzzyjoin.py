@@ -120,7 +120,8 @@ def fuzzy_self_pairs(df: DataFrame, col: str = "s", max_dist: int = 1,
              .otherwise(F.raise_error(F.concat(
                  F.lit(f"fuzzy_self_pairs: variant bucket exceeds "
                        f"max_bucket={max_bucket} for key hash "),
-                 F.col("_fz_k").cast("string")))))
+                 F.col("_fz_k").cast("string"),
+                 F.lit(", which holds e.g. "), F.col("_fz_s")))))
     ids = F.array_sort(F.collect_list("_fz_s"))
     buckets = (guarded.filter(F.col("_n") > 1)
                       .groupBy("_fz_k").agg(ids.alias("_ss")))

@@ -15,10 +15,8 @@ built-in expressions (approx quantile boundaries driver-side, JVM
 binary-search bucketing, bitwise interleave in codegen); no Python
 touches a row.
 
-Compaction exists because APPENDING sinks accrete small files: the
-streaming router writes one file per (sink, bucket) dir per micro-batch
-(streaming/stream.py), and externally-fed directories arrive however
-the upstream sharded them; at 100 TB the file COUNT (listing, footer
+Compaction exists because APPENDING sinks accrete small files:
+externally-fed directories arrive however the upstream sharded them; at 100 TB the file COUNT (listing, footer
 reads, task scheduling) becomes the bottleneck before the bytes do.
 The batch pipeline does NOT need this — its fan-out write repartitions
 on the partition keys, so each (sink, bucket) dir gets exactly one file

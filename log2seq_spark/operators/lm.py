@@ -26,9 +26,9 @@ so the DuckDB oracle replays scores bit-for-bit after rounding):
   (contexts, unigrams) broadcast when pruned. Log-probs fold in one
   per-doc aggregate.
 * **Bounded-vocabulary mode for the 10^12-token regime**: an unpruned
-  web-scale bigram table is the classic state blow-up. ``top_vocab``
-  keeps the k most frequent tokens (exact, deterministic tie-break)
-  and both training and scoring map everything else to ``<unk>`` via a
+  web-scale bigram table is the classic state blow-up. Given a
+  ``vocab`` table (e.g. the k most frequent tokens), both training and
+  scoring map everything else to ``<unk>`` via a
   broadcast join BEFORE counting, so the bigram key space is ≤ (k+2)²
   and the side tables are broadcastable by construction. The pruning
   invariant (pruned-vocab scoring ≡ scoring a manually-UNK'd corpus
@@ -55,20 +55,6 @@ def _lower_tokens(text_col):
     """Lowercased whitespace tokens, empties dropped — the LM's one
     tokenization (shared shape with textstats.tokens_expr)."""
     return F.transform(tokens_expr(text_col), lambda t: F.lower(t))
-
-
-def top_vocab(docs: DataFrame, text_col: str = "text",
-              k: int = 50_000) -> DataFrame:
-    """The k most frequent (lowercased) tokens — ``(token)`` — with a
-    deterministic tie-break (count desc, token asc). ``orderBy.limit``
-    compiles to TakeOrdered (per-partition top-k then a k-row merge),
-    never a global sort shuffle."""
-    return (docs.select(F.explode(_lower_tokens(F.col(text_col)))
-                        .alias("token"))
-                .groupBy("token").agg(F.count("*").alias("_n"))
-                .orderBy(F.col("_n").desc(), F.col("token").asc())
-                .limit(k)
-                .select("token"))
 
 
 def _pairs(docs: DataFrame, id_col: str | None, text_col: str,
@@ -114,19 +100,10 @@ def train_bigram_lm(docs: DataFrame, text_col: str = "text",
     The ONE corpus-scale aggregate. Unigram/context/total tables are
     derived views over this result (:func:`context_counts`,
     :func:`unigram_counts`) — never a second scan. Mergeable: summing
-    per-shard tables ≡ training on the union (:func:`merge_bigram_lms`).
+    per-shard tables ≡ training on the union.
     """
     return (_pairs(docs, None, text_col, vocab)
             .groupBy("prev", "cur").agg(F.count("*").alias("n")))
-
-
-def merge_bigram_lms(*lms: DataFrame) -> DataFrame:
-    """Fold per-shard bigram tables into the union's table (counts are
-    associative — the incremental-training step)."""
-    u = lms[0]
-    for p in lms[1:]:
-        u = u.unionByName(p)
-    return u.groupBy("prev", "cur").agg(F.sum("n").alias("n"))
 
 
 def context_counts(bigrams: DataFrame) -> DataFrame:

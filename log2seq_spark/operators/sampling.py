@@ -33,13 +33,6 @@ def hash_bucket(id_col: Column, seed: int = 0) -> Column:
             % F.lit(N_BUCKETS)).cast("int")
 
 
-def hash_sample(df: DataFrame, rate: float, id_col: str = "doc_id",
-                seed: int = 0) -> DataFrame:
-    """Keep a deterministic ``rate`` fraction keyed by ``id_col``."""
-    thr = int(round(rate * N_BUCKETS))
-    return df.filter(hash_bucket(F.col(id_col), seed) < F.lit(thr))
-
-
 def leakage_safe_split(df: DataFrame, clusters: DataFrame | None = None,
                        *, val_rate: float = 0.05, id_col: str = "doc_id",
                        cluster_id_col: str = "cluster_id",
@@ -53,7 +46,7 @@ def leakage_safe_split(df: DataFrame, clusters: DataFrame | None = None,
     near-duplicate of a validation document can never land in train, so
     eval contamination is impossible by construction rather than by
     audit. With ``clusters=None`` this degrades to a plain
-    content-addressed split (same membership as :func:`hash_sample`).
+    content-addressed split (val = ``hash_bucket(id) < val_rate * 10000``).
 
     Scale shape: one left join against the cluster map (only docs that
     appear in near-dup pairs — a small fraction of the corpus, typically

@@ -217,71 +217,20 @@ def ivf_topk_indexed(spark, path: str, centroids: List[Sequence[float]],
         centroids = load_ivf_centroids(spark, path)
     probe = _probe_cells(centroids, query_vec, n_probe)
     q = list(query_vec)
-    df = None
-    for seg in ivf_segment_paths(spark, path):
-        scan = (spark.read.parquet(seg)
-                     .filter(F.col("centroid").isin(probe))
-                     .select(F.col(id_col), F.col(vec_col)))
-        df = scan if df is None else df.unionByName(scan)
+    df = spark.read.parquet(path).filter(F.col("centroid").isin(probe))
     return (df.select(F.col(id_col),
                       cosine_expr(F.col(vec_col), _vec_lit(q)).alias("cosine"))
               .orderBy(F.desc("cosine"), F.asc(id_col))
               .limit(k))
 
 
-def _ingested_through(spark, path: str) -> int:
-    """Newest ingest epoch the base layout has folded in (``-1`` when
-    none): epochs ≤ this are superseded by the base whether or not
-    compaction got around to deleting them — the crash-safety rule the
-    dedup LSM index established (`__main__.py::_index_segments`)."""
-    import json
-
-    from .. import fsio
-
-    txt = fsio.read_text(spark, f"{path}/_ivf_ingested_through.json")
-    return -1 if txt is None else int(json.loads(txt))
-
-
-def ivf_segment_paths(spark, path: str) -> List[str]:
-    """All live data roots of an IVF layout: the base (``path`` itself,
-    whose partition discovery skips the underscore-prefixed ingest
-    area) plus every committed streaming-ingest epoch newer than the
-    base's fold horizon. Each root is centroid-partitioned, so a probe
-    prunes every segment independently."""
-    from ..streaming.stream import _committed_epochs
-
-    through = _ingested_through(spark, path)
-    return [path] + [f"{path}/_ingest/epoch={e}"
-                     for e in _committed_epochs(f"{path}/_ingest",
-                                                spark=spark)
-                     if e > through]
-
-
-def ingest_ivf_epoch(embs: DataFrame, path: str, epoch: int,
-                     vec_col: str = "embedding") -> None:
-    """Exactly-once building block for streaming ingestion: assign the
-    batch against the stamped cell space and (over)write it as
-    ``_ingest/epoch=<epoch>`` — a checkpoint replay of the same
-    micro-batch rewrites the same directory, so duplicates are
-    impossible by construction (contrast :func:`append_ivf_index`,
-    whose in-place append is for single-shot batch CLI use). The
-    underscore prefix keeps the ingest area invisible to the base
-    root's partition discovery."""
-    centroids = load_ivf_centroids(embs.sparkSession, path)
-    assigned = assign_centroid(embs, centroids, vec_col)
-    (assigned.repartition("centroid")
-             .write.mode("overwrite").partitionBy("centroid")
-             .parquet(f"{path}/_ingest/epoch={int(epoch)}"))
-
-
 def compact_ivf_index(spark, path: str,
                       target_file_bytes: int = 128 << 20) -> tuple:
-    """Small-files / segment maintenance for an ingest-heavy index:
-    every :func:`append_ivf_index` lands one new parquet file per
-    touched cell and every streaming epoch adds a whole segment, so
-    after thousands of ingest batches a probe pays per-file (and
-    per-segment) open cost instead of scan cost. Fold the base plus
-    every live ingest epoch into **size-targeted** files per cell —
+    """Small-files maintenance for an append-heavy index: every
+    :func:`append_ivf_index` lands one new parquet file per touched
+    cell, so after thousands of ingest batches a probe pays per-file
+    open cost instead of scan cost. Rewrite the index into
+    **size-targeted** files per cell —
     ``ceil(cell_bytes / target_file_bytes)`` each, never exactly one
     per cell regardless of size: a 6 TB cell squeezed into one file
     would serialize its probe onto however many row-group splits that
@@ -289,20 +238,15 @@ def compact_ivf_index(spark, path: str,
     ``spark.sql.files.maxPartitionBytes``) keep probe task counts
     proportional to data scanned. Staging-dir first:
 
-    1. rewrite base ∪ epochs into ``<path>.compacting`` (stamp carried
-       along, ``_ivf_ingested_through.json`` set to the newest folded
-       epoch);
-    2. swap: live → ``<path>.old``, staging → live, drop ``.old`` —
-       folded epoch segments leave with the old base; if one were ever
-       restored from a backup, the through-marker makes readers ignore
-       it (the dedup LSM's superseded-segment rule).
+    1. rewrite the index into ``<path>.compacting`` (centroid stamp
+       carried along);
+    2. swap: live → ``<path>.old``, staging → live, drop ``.old``.
 
-    Returns ``(files_before, files_after)`` (data files, all
-    segments). This is an OFFLINE maintenance pass — no concurrent
-    ingestion (an epoch committed mid-compaction would leave with the
-    old base) and no in-flight probes during the two renames; run it
-    between streaming runs (standard parquet-maintenance contract). A
-    crash before the swap leaves the live index untouched (stale
+    Returns ``(files_before, files_after)`` (data files). This is an
+    OFFLINE maintenance pass — no concurrent appends (a batch appended
+    mid-compaction would leave with the old index) and no in-flight
+    probes during the two renames (standard parquet-maintenance
+    contract). A crash before the swap leaves the live index untouched (stale
     staging is cleared on the next run); a crash between the renames
     leaves ``.old`` intact to restore from."""
     import glob
@@ -324,29 +268,18 @@ def compact_ivf_index(spark, path: str,
                    if not os.path.basename(f).startswith(("_", ".")))
 
     centroids = load_ivf_centroids(spark, path)
-    segs = ivf_segment_paths(spark, path)
-    before = sum(_count_files(s) for s in segs)
-    folded_through = max(
-        [_ingested_through(spark, path)]
-        + [int(s.rsplit("epoch=", 1)[1]) for s in segs[1:]])
-    # per-cell byte totals across all live segments → salt-bucket count
-    # per cell (the local listing is free here — this pass is already
-    # local-rename-only)
+    before = _count_files(path)
+    # per-cell byte totals → salt-bucket count per cell (the local
+    # listing is free here — this pass is already local-rename-only)
     cell_bytes: dict = {}
-    for seg in segs:
-        for f in glob.glob(os.path.join(glob.escape(seg),
-                                        "centroid=*", "*")):
-            if os.path.basename(f).startswith(("_", ".")):
-                continue
-            cell = int(os.path.basename(os.path.dirname(f))
-                       .split("=", 1)[1])
-            cell_bytes[cell] = cell_bytes.get(cell, 0) + os.path.getsize(f)
+    for f in glob.glob(os.path.join(glob.escape(path), "centroid=*", "*")):
+        if os.path.basename(f).startswith(("_", ".")):
+            continue
+        cell = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+        cell_bytes[cell] = cell_bytes.get(cell, 0) + os.path.getsize(f)
     buckets = {c: max(1, -(-b // int(target_file_bytes)))
                for c, b in cell_bytes.items()}
-    df = None
-    for seg in segs:
-        scan = spark.read.parquet(seg)
-        df = scan if df is None else df.unionByName(scan)
+    df = spark.read.parquet(path)
     data_cols = [c for c in df.columns if c != "centroid"]
     if buckets:
         salt_mod = F.element_at(
@@ -364,8 +297,6 @@ def compact_ivf_index(spark, path: str,
        .write.mode("overwrite").partitionBy("centroid").parquet(staging))
     fsio.write_text(spark, f"{staging}/_ivf_centroids.json",
                     json.dumps(centroids))
-    fsio.write_text(spark, f"{staging}/_ivf_ingested_through.json",
-                    json.dumps(folded_through))
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)
     os.rename(staging, path)

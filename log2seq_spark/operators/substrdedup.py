@@ -66,10 +66,9 @@ from .textstats import tokens_expr
 
 __all__ = ["gram_positions", "duplicate_positions", "duplicate_spans",
            "scrub_duplicate_spans", "kept_tokens_expr", "substr_index",
-           "updated_substr_index", "duplicate_positions_against_index",
+           "duplicate_positions_against_index",
            "duplicate_spans_against_index", "scrub_against_index",
            "turn_key_expr", "scrub_turn_boilerplate",
-           "eval_contaminated_spans",
            "top_duplicated_runs"]
 
 
@@ -294,23 +293,6 @@ def substr_index(docs: DataFrame, text_col: str = "text",
     return grams.groupBy("gh").agg(F.count(F.lit(1)).alias("n_occ"))
 
 
-def updated_substr_index(index: DataFrame, new_docs: DataFrame,
-                         text_col: str = "text",
-                         id_col: str = "doc_id",
-                         k: int = 20,
-                         grams: DataFrame | None = None) -> DataFrame:
-    """The index after absorbing ``new_docs``: occurrence counts sum
-    gram-wise (union + one re-aggregate — O(index + batch grams), the
-    LSM-style alternative being to publish the batch's own
-    ``substr_index`` as a delta segment and fold at compaction).
-    ``grams`` shares a precomputed batch gram pass (see
-    :func:`substr_index`)."""
-    delta = substr_index(new_docs, text_col, id_col, k, grams=grams)
-    return (index.unionByName(delta)
-                 .groupBy("gh")
-                 .agg(F.sum("n_occ").alias("n_occ")))
-
-
 def duplicate_positions_against_index(new_docs: DataFrame,
                                       index: DataFrame,
                                       text_col: str = "text",
@@ -377,8 +359,9 @@ def scrub_against_index(new_docs: DataFrame, index: DataFrame,
                         grams: DataFrame | None = None) -> DataFrame:
     """Incremental scrub of one new shard against a persisted gram
     index: ``new_docs`` with history-or-batch-duplicated spans removed
-    (same output contract as :func:`scrub_duplicate_spans`). Pair with
-    :func:`updated_substr_index` to absorb the shard afterwards."""
+    (same output contract as :func:`scrub_duplicate_spans`). Absorb
+    the shard afterwards by publishing its :func:`substr_index` as a
+    new index segment (``substr --index-dir``)."""
     spans = duplicate_spans_against_index(new_docs, index, text_col,
                                           id_col, k, min_count,
                                           grams=grams)
@@ -437,62 +420,6 @@ def scrub_turn_boilerplate(turns: DataFrame, conv_col: str = "conv_id",
     return scrub_duplicate_spans(staged, text_col=text_col,
                                  id_col="__sb_tid", k=k,
                                  min_count=min_count).drop("__sb_tid")
-
-
-def eval_contaminated_spans(train: DataFrame,
-                            evalset: DataFrame | None = None,
-                            text_col: str = "text",
-                            id_col: str = "doc_id", k: int = 20,
-                            eval_text_col: str | None = None,
-                            eval_id_col: str | None = None,
-                            index: DataFrame | None = None,
-                            confirm: bool = False) -> DataFrame:
-    """Maximal spans of ``train`` documents covered by any ``k``-token
-    run that appears VERBATIM in ``evalset`` — ExactSubstr-style
-    benchmark decontamination with positioned evidence (Lee et al.
-    2022 apply the same machinery to eval leakage). Complements the
-    shingle-count ``dedup.contamination_report`` (how MUCH overlaps)
-    and the MinHash ``dedup.fuzzy_contamination`` (near-duplicate
-    docs): this says exactly WHERE the leaked text sits, so the fix
-    can be span redaction (compose with
-    ``scrub_duplicate_spans(train, spans=...)``) instead of dropping
-    whole documents.
-
-    Every train occurrence is flagged — no keeper exemption: eval text
-    must not survive in training data anywhere. ``index`` substitutes
-    a precomputed :func:`substr_index` of the eval corpus (persist it
-    once, screen many training corpora — the eval side is read only
-    through its gram index). Plan: eval-side gram aggregate + one
-    equi-join on the uniform 64-bit hash + the per-doc island merge;
-    never all-pairs.
-
-    ``confirm=True`` (needs ``evalset``, not a hash-only ``index``)
-    joins on the gram TEXT as well as the hash, so a 64-bit collision
-    between an eval gram and an unrelated train gram cannot flag a
-    spurious span — see :func:`duplicate_positions` for the birthday
-    bound that makes this matter beyond ~1e9 distinct grams."""
-    if confirm:
-        if evalset is None:
-            raise ValueError("confirm=True verifies by gram text and "
-                             "needs evalset (the index stores hashes "
-                             "only)")
-        ev = (gram_positions(evalset, eval_text_col or text_col,
-                             eval_id_col or id_col, k, with_text=True)
-              .select("gh", "gtext").distinct())
-        grams = gram_positions(train, text_col, id_col, k,
-                               with_text=True)
-        hits = (grams.join(ev, ["gh", "gtext"])
-                     .select(id_col, "pos", "n_tok"))
-        return _spans_from_positions(hits, id_col, k)
-    if index is None:
-        if evalset is None:
-            raise ValueError("pass evalset or a precomputed index")
-        index = substr_index(evalset, eval_text_col or text_col,
-                             eval_id_col or id_col, k)
-    grams = gram_positions(train, text_col, id_col, k)
-    hits = (grams.join(index.select("gh"), "gh")
-                 .select(id_col, "pos", "n_tok"))
-    return _spans_from_positions(hits, id_col, k)
 
 
 def top_duplicated_runs(docs: DataFrame, text_col: str = "text",

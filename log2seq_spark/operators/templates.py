@@ -22,9 +22,9 @@ the corpus, no skew-prone wide rows, no Python.
 The profile rows (min/max/count per position) are ASSOCIATIVELY
 MERGEABLE — ``merge_profiles(profile(A), profile(B)) ==
 profile(A ∪ B)`` — so mining is incrementally updatable: keep the tiny
-profile table as state, fold each new batch of lines into it (e.g. in
-``foreachBatch``), and re-finalize templates from state alone, never
-re-reading history.
+profile table as state, fold each new batch of lines into it (the
+``templates --state-dir`` epoch state, ``plans/epochs.py``), and
+re-finalize templates from state alone, never re-reading history.
 """
 
 from __future__ import annotations

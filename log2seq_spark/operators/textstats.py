@@ -285,39 +285,3 @@ ngram_jaccard_pairs`'s ``max_docs_per_shingle``). The per-pair count
                 .filter(F.col("n_shared_fp") >= min_shared))
 
 
-def compression_ratio(docs: DataFrame, text_col: str = "text",
-                      level: int = 6) -> DataFrame:
-    """Adds ``compressed_len`` and ``compression_ratio``
-    (compressed/raw UTF-8 bytes; NULL for empty/NULL text) — the
-    compressibility quality signal public corpus pipelines use to
-    catch boilerplate and degenerate repetition (e.g. Dolma's and
-    RedPajama-v2's zlib/gzip document-ratio quality flags): highly
-    compressible text is self-repetitive, suspiciously low ratios are
-    binary junk.
-
-    zlib has no SQL analog, so this is an Arrow-batched pandas UDF
-    (stdlib zlib, deterministic for a fixed level — zlib's output is
-    fully determined by input+level+strategy) and ships with unit
-    tests instead of a DuckDB oracle leg. Map-only, no shuffle; pair
-    with :func:`repetition_stats` (exact n-gram ratios, oracle-checked)
-    when replayability matters more than the single-number signal.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _clen(s):
-        import zlib
-
-        def one(x):
-            if x is None:
-                return None
-            return len(zlib.compress(x.encode("utf-8"), level))
-        return s.map(one)
-
-    raw_len = F.octet_length(F.col(text_col))
-    staged = docs.select("*", _clen(F.col(text_col))
-                         .alias("compressed_len"))
-    ratio = (F.when(raw_len > 0,
-                    F.col("compressed_len").cast("double")
-                    / raw_len.cast("double")))
-    return staged.withColumn("compression_ratio", F.round(ratio, 6))

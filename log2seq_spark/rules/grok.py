@@ -115,15 +115,6 @@ _REF_RE = re.compile(r"%\{(\w+)(?::([^:}]+))?(?::(\w+))?\}")
 _MAX_DEPTH = 16
 
 
-def expand_pattern(name: str,
-                   definitions: Optional[Dict[str, str]] = None) -> str:
-    """The fully-expanded, capture-free regex fragment for dictionary
-    pattern ``name`` (nested ``%{...}`` references resolved recursively,
-    cycle/unknown-name errors raised as RuleDefinitionError)."""
-    defs = {**GROK_PATTERNS, **(definitions or {})}
-    return _expand(f"%{{{name}}}", defs, depth=0)
-
-
 def _expand(fragment: str, defs: Dict[str, str], depth: int) -> str:
     if depth > _MAX_DEPTH:
         raise RuleDefinitionError(

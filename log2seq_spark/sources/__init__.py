@@ -1,5 +1,5 @@
 """Data sources: deterministic synthetic transcripts + table dims, and
-the raw-log DataSources (logtext batch / logtail streaming)."""
+the batch raw-log DataSource (logtext)."""
 
 from . import logfiles
 from .transcripts import (transcripts, write_transcripts, role_dim, tool_dim,

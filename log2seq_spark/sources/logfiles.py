@@ -181,170 +181,3 @@ def register(spark) -> None:
     """Idempotently register the ``logtext`` format on this session."""
     spark.dataSource.register(LogTextDataSource)
 
-
-# ---------------------------------------------------------------------------
-# streaming tail-follow source: spark.readStream.format("logtail")
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
-
-TAIL_SCHEMA = "path string, line_no bigint, text string"
-
-
-def _tail_entry(v) -> tuple[int, int, int, int | None]:
-    """Decode one per-file offset entry → (byte_off, line_count,
-    rotation_generation, inode). Accepts the legacy 2-element form from
-    pre-rotation-tracking checkpoints (gen 0, inode unknown)."""
-    off, lineno = v[0], v[1]
-    gen = v[2] if len(v) > 2 else 0
-    ino = v[3] if len(v) > 3 else None
-    return off, lineno, gen, ino
-
-
-class LogTailStreamReader(SimpleDataSourceStreamReader):
-    """Tail-follow microbatch reader: each batch emits the COMPLETE lines
-    appended to any matching plain-text file since the last offset.
-
-    Spark's built-in file stream source only discovers whole NEW files;
-    log agents instead append to live files and rotate them — this source
-    follows appends. Offsets are a JSON-able dict
-    ``{path: [byte_offset, line_count, rotation_generation, inode]}``:
-    deterministic replay (``readBetweenOffsets``) re-seeks the recorded
-    byte ranges, so a restarted query re-emits a batch byte-identically
-    (exactly-once into an idempotent sink). A partial last line (no
-    trailing newline yet) is left for the next batch. Glob patterns pick
-    up files created after the stream starts.
-
-    Rotation: a shrunken file (copytruncate) or a changed inode
-    (logrotate ``create`` mode — even when the replacement is LONGER
-    than the recorded offset) reopens the file from byte 0 and bumps the
-    entry's ``rotation_generation``. Replay compares generations: a
-    batch that crossed a rotation is re-read as bytes ``[0, end_off)``
-    of the new file, never skipped — without the generation, an
-    ``end < start`` byte range after a reset would silently drop the
-    new file's rows from crash recovery."""
-
-    def __init__(self, options):
-        self._paths = options["path"]
-        self._encoding = options.get("encoding", "utf-8")
-
-    def _files(self):
-        out = []
-        for p in self._paths.split(","):
-            p = p.strip()
-            if p:
-                hits = sorted(_glob.glob(p))
-                out.extend(hits if hits else ([p] if "*" not in p else []))
-        return out
-
-    def initialOffset(self) -> dict:
-        return {}
-
-    def _read_from(self, start: dict):
-        import os
-        end = dict(start)
-        rows = []
-        for fp in self._files():
-            try:
-                st = os.stat(fp)
-            except OSError:
-                continue
-            size = st.st_size
-            off, lineno, gen, ino = _tail_entry(start.get(fp, [0, 0]))
-            if size < off or (ino is not None and st.st_ino != ino):
-                # truncated in place, or replaced by a new file (inode
-                # change catches replacements longer than the old offset,
-                # which a size check alone cannot): follow from zero
-                off, lineno, gen = 0, 0, gen + 1
-            if size == off:
-                end[fp] = [off, lineno, gen, st.st_ino]
-                continue
-            with open(fp, "rb") as f:
-                f.seek(off)
-                chunk = f.read(size - off)
-            # only complete lines; the remainder waits for its newline
-            last_nl = chunk.rfind(b"\n")
-            if last_nl < 0:
-                end[fp] = [off, lineno, gen, st.st_ino]
-                continue
-            complete = chunk[:last_nl + 1]
-            # split on \n ONLY: bytes.splitlines() also splits on bare
-            # \r (progress-bar rewrites), inflating line_no and
-            # diverging from the batch logtext source over the same
-            # bytes; complete ends with \n, so the last piece is empty
-            for raw in complete.split(b"\n")[:-1]:
-                lineno += 1
-                rows.append((fp, lineno,
-                             raw.decode(self._encoding, errors="replace")))
-            end[fp] = [off + last_nl + 1, lineno, gen, st.st_ino]
-        return iter(rows), end
-
-    def read(self, start: dict):
-        return self._read_from(start)
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        import os
-        rows = []
-        for fp, ev in end.items():
-            eoff, _elines, egen, _eino = _tail_entry(ev)
-            soff, lineno, sgen, _sino = _tail_entry(start.get(fp, [0, 0]))
-            if egen != sgen:
-                # the batch crossed a rotation: it emitted the NEW file's
-                # bytes [0, eoff) with line numbers restarting at 1
-                soff, lineno = 0, 0
-            if eoff <= soff:
-                continue
-            # validate the recorded identity BEFORE re-reading: after a
-            # rotation during downtime the path holds a DIFFERENT file,
-            # and blindly seeking [soff, eoff) would silently emit bytes
-            # the original batch never produced — the one thing a
-            # byte-identical replay must never do. Fail loudly instead:
-            # the original bytes are unrecoverable.
-            try:
-                st = os.stat(fp)
-            except OSError as ex:
-                raise RuntimeError(
-                    f"logtail replay of {fp} bytes [{soff}, {eoff}) is "
-                    f"impossible: the file is gone ({ex}); the original "
-                    "batch's bytes are unrecoverable — clear the "
-                    "checkpoint (accepting the gap) or restore the "
-                    "file") from ex
-            if (_eino is not None and st.st_ino != _eino) \
-                    or st.st_size < eoff:
-                raise RuntimeError(
-                    f"logtail replay of {fp} bytes [{soff}, {eoff}) is "
-                    "impossible: the file was rotated or truncated "
-                    f"during downtime (inode {st.st_ino} vs recorded "
-                    f"{_eino}, size {st.st_size}); the original batch's "
-                    "bytes are unrecoverable — clear the checkpoint "
-                    "(accepting the gap) or restore the file")
-            with open(fp, "rb") as f:
-                f.seek(soff)
-                chunk = f.read(eoff - soff)
-            # \n-only split (see _read_from); the recorded eoff is a
-            # newline boundary, so the final empty piece is dropped
-            for raw in chunk.split(b"\n")[:-1]:
-                lineno += 1
-                rows.append((fp, lineno,
-                             raw.decode(self._encoding, errors="replace")))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class LogTailDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "logtail"
-
-    def schema(self) -> str:
-        return TAIL_SCHEMA
-
-    def simpleStreamReader(self, schema) -> LogTailStreamReader:
-        return LogTailStreamReader(self.options)
-
-
-def register_tail(spark) -> None:
-    """Idempotently register the ``logtail`` streaming format."""
-    spark.dataSource.register(LogTailDataSource)

@@ -115,6 +115,18 @@ class TestBurstWindows:
         assert out[("b", 10)]["base_windows"] == 0
 
 
+    def test_duration_ms_compound_intervals(self):
+        # any spec F.window accepts must parse here too
+        from log2seq_spark.operators.anomaly import duration_ms
+        assert duration_ms("30 minutes") == 1_800_000
+        assert duration_ms("1 hour 30 minutes") == 5_400_000
+        assert duration_ms("1 day 2 hours 3 seconds") == 93_603_000
+        with pytest.raises(ValueError, match="cannot parse"):
+            duration_ms("90")
+        with pytest.raises(ValueError, match="cannot parse"):
+            duration_ms("1 fortnight")
+
+
 class TestNovelLineFlags:
     def test_verdicts_against_prior_state(self, spark):
         history = _lines(spark, ["job 12 done", "job 13 done",
@@ -154,62 +166,3 @@ class TestNovelLineFlags:
         assert all(r["template"] == "oom killed pid <*>" for r in rows)
 
 
-class TestStreamingRareLines:
-    def test_epochs_match_batch_novelty(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.streaming import streaming_rare_lines
-        inp = os.path.join(tmpdir_path, "srl_in")
-        ck = os.path.join(tmpdir_path, "srl_ck")
-        prof = os.path.join(tmpdir_path, "srl_prof")
-        outd = os.path.join(tmpdir_path, "srl_out")
-        schema = "text string"
-
-        def run(rows):
-            (spark.createDataFrame([(t,) for t in rows], schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            q = (streaming_rare_lines(
-                    spark.readStream.schema(schema).parquet(inp),
-                    ck, prof, outd, max_lines=1)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        batch1 = ["connect from 10.0.0.1", "connect from 10.0.0.2",
-                  "session closed"]
-        batch2 = ["connect from 10.0.0.3", "disk full on sda",
-                  "session closed"]
-        run(batch1)
-        run(batch2)
-        verdicts = spark.read.parquet(outd)
-        assert sorted(verdicts.columns) == sorted(
-            ["text", "template", "template_lines", "is_rare", "is_new",
-             "epoch"])
-        e2 = {r["text"]: r for r in
-              verdicts.filter("epoch = 1").collect()}
-        # equal to the batch-mode novelty call against epoch-0 state
-        want = {r["text"]: r for r in anomaly.novel_line_flags(
-            _lines(spark, batch2),
-            templates.position_profiles(_lines(spark, batch1)),
-            max_lines=1).collect()}
-        for text, w in want.items():
-            g = e2[text]
-            assert (g["template"], g["template_lines"], g["is_rare"],
-                    g["is_new"]) == (w["template"], w["template_lines"],
-                                     w["is_rare"], w["is_new"])
-        # the cross-epoch wildcard: 3 connect lines ever -> not rare,
-        # shape known from epoch 0 -> not new
-        c3 = e2["connect from 10.0.0.3"]
-        assert c3["template"] == "connect from <*>"
-        assert c3["template_lines"] == 3
-        assert not c3["is_new"] and not c3["is_rare"]
-        # first-ever shape -> new and rare
-        assert e2["disk full on sda"]["is_new"]
-        assert e2["disk full on sda"]["is_rare"]
-        # seen in epoch 0, still only 2 lines ever -> known but...
-        # template_lines = 2 > max_lines=1 -> no longer rare
-        sc = e2["session closed"]
-        assert not sc["is_new"] and not sc["is_rare"]
-        assert sc["template_lines"] == 2
-        # epoch-0 verdicts: everything was new
-        e1 = verdicts.filter("epoch = 0")
-        assert e1.count() == 3
-        assert all(r["is_new"] for r in e1.collect())

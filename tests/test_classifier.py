@@ -93,64 +93,3 @@ class TestClassifier:
         assert a != b
 
 
-class TestTraining:
-    def _labeled(self, spark, n=40, seed=3):
-        import random
-        rng = random.Random(seed)
-        good = ["clear", "helpful", "explains", "carefully", "derives",
-                "theorem", "proof", "structured"]
-        junk = ["zzz", "spamspam", "clickclick", "garbagegarbage",
-                "randomrandom", "noisenoise"]
-        rows = []
-        for i in range(n):
-            vocab = good if i % 2 == 0 else junk
-            text = " ".join(rng.choice(vocab) for _ in range(12))
-            rows.append((f"d{i:03d}", text, float(1 - i % 2)))
-        return spark.createDataFrame(
-            rows, "doc_id string, text string, label double")
-
-    def test_separable_set_learns_and_scores(self, spark):
-        from log2seq_spark.operators import classifier as clf
-        docs = self._labeled(spark)
-        w = clf.train_classifier(docs, dim=256, iters=60, lr=20.0)
-        assert w.count() <= 256
-        scored = (clf.classify(docs, dim=256, weights=w)
-                  .join(docs.select("doc_id", "label"), "doc_id"))
-        rows = scored.collect()
-        good = [r["clf_score"] for r in rows if r["label"] == 1.0]
-        bad = [r["clf_score"] for r in rows if r["label"] == 0.0]
-        assert min(good) > 0.6 and max(bad) < 0.4
-
-    def test_matches_numpy_reference(self, spark):
-        import numpy as np
-        from log2seq_spark.operators import classifier as clf
-        docs = self._labeled(spark, n=20, seed=7)
-        dim, iters, lr = 64, 15, 2.0
-        w = {r["bucket"]: r["weight"] for r in
-             clf.train_classifier(docs, dim=dim, iters=iters,
-                                  lr=lr).collect()}
-        feats = clf.doc_features(docs, dim=dim).collect()
-        y = {r["doc_id"]: r["label"] for r in docs.collect()}
-        ids = sorted(y)
-        X = np.zeros((len(ids), dim))
-        for r in feats:
-            X[ids.index(r["doc_id"]), r["bucket"]] = r["x"]
-        yv = np.array([y[i] for i in ids])
-        wv = np.zeros(dim)
-        for _ in range(iters):
-            p = 1.0 / (1.0 + np.exp(-(X @ wv)))
-            wv -= lr * (X.T @ (p - yv)) / len(ids)
-        got = np.zeros(dim)
-        for b, v in w.items():
-            got[b] = v
-        assert np.allclose(got, wv, atol=1e-9)
-
-    def test_gramless_docs_ignored(self, spark):
-        from log2seq_spark.operators import classifier as clf
-        docs = spark.createDataFrame(
-            [("a", "solo", 1.0), ("b", "alpha beta", 1.0),
-             ("c", "zzz yyy", 0.0)],
-            "doc_id string, text string, label double")
-        w = clf.train_classifier(docs, dim=32, iters=5)
-        # the gram-less doc contributes nothing; training still runs
-        assert w.count() >= 1

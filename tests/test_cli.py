@@ -30,6 +30,16 @@ def run_cli(spark, capsys, monkeypatch):
     return _run
 
 
+def _state_templates(spark, state_dir):
+    """(template, n_lines, n_groups) of the newest committed epoch of a
+    ``--state-dir`` template state."""
+    from log2seq_spark.operators.templates import templates_from_profiles
+    from log2seq_spark.plans.epochs import committed_ids
+    last = committed_ids(state_dir)[-1]
+    return templates_from_profiles(
+        spark.read.parquet(f"{state_dir}/epoch={last}"))
+
+
 class TestReferenceParity:
     def test_stdout_stderr_split(self, run_cli):
         # successes go to stdout; failures + summary go to stderr.
@@ -313,10 +323,10 @@ class TestTemplatesCommand:
 
     def test_state_dir_incremental_equals_batch(self, spark, capsys,
                                                 tmpdir_path):
-        """--state-dir: shard-by-shard mining folds into the streaming
-        miner's epoch state; the second run prints the CUMULATIVE
-        templates (== batch-mining the concatenation) and
-        current_templates() reads the CLI-produced state."""
+        """--state-dir: shard-by-shard mining folds into the epoch
+        state; the second run prints the CUMULATIVE templates
+        (== batch-mining the concatenation), and the newest committed
+        epoch holds the same templates."""
         a = os.path.join(tmpdir_path, "tsA.log")
         b = os.path.join(tmpdir_path, "tsB.log")
         st = os.path.join(tmpdir_path, "tstate")
@@ -334,9 +344,8 @@ class TestTemplatesCommand:
         assert got == ["3\t1\tconn from <*> closed",
                        "2\t1\t<*> packets dropped",
                        "1\t1\tdisk full on /var"]
-        from log2seq_spark.streaming.stream import current_templates
         live = {(r["template"], r["n_lines"], r["n_groups"])
-                for r in current_templates(spark, st).collect()}
+                for r in _state_templates(spark, st).collect()}
         assert ("conn from <*> closed", 3, 1) in live
         assert len(live) == 3
 
@@ -367,13 +376,12 @@ class TestTemplatesCommand:
                              "--state-dir", st]) == 0
             capsys.readouterr()
         from log2seq_spark.operators.templates import mine_templates
-        from log2seq_spark.streaming.stream import current_templates
         batch = {(r["template"], r["n_lines"], r["n_groups"])
                  for r in mine_templates(
                      spark.createDataFrame([(l,) for l in all_lines],
                                            "text string")).collect()}
         live = {(r["template"], r["n_lines"], r["n_groups"])
-                for r in current_templates(spark, st).collect()}
+                for r in _state_templates(spark, st).collect()}
         assert live == batch
 
     def test_state_dir_rejects_tokenization_drift(self, spark, capsys,
@@ -823,9 +831,8 @@ class TestAnomalyCommands:
         # across history ∪ batch); the login lines' template covers 4
         assert cap.out.splitlines() == ["new+rare\t1\tkernel panic now"]
         # the fold committed: template state now covers A ∪ B
-        from log2seq_spark.streaming.stream import current_templates
         live = {(r["template"], r["n_lines"])
-                for r in current_templates(spark, st).collect()}
+                for r in _state_templates(spark, st).collect()}
         assert ("login ok user <*>", 4) in live
 
     def test_rare_state_dir_screen_only_and_out(self, spark, capsys,
@@ -849,8 +856,8 @@ class TestAnomalyCommands:
                for r in spark.read.parquet(dest).collect()}
         assert got["conn from h3 up"] == (False, False)
         assert got["totally novel shape"] == (True, True)
-        from log2seq_spark.streaming.stream import _committed_epochs
-        assert _committed_epochs(st) == [0]   # B was not folded in
+        from log2seq_spark.plans.epochs import committed_ids
+        assert committed_ids(st) == [0]   # B was not folded in
 
     def test_rare_state_dir_rejects_tokenization_drift(self, spark,
                                                        capsys,

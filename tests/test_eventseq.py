@@ -75,27 +75,3 @@ class TestTransitions:
         assert out == {("x", "y"), ("y", "z")}
 
 
-class TestCompressionRatio:
-    def test_repetitive_compresses_more(self, spark):
-        from log2seq_spark.operators import textstats
-        docs = spark.createDataFrame(
-            [(0, "spam " * 200),
-             (1, "the quick brown fox jumps over the lazy dog and then "
-                 "wanders across seventeen unrelated meadows musing"),
-             (2, ""), (3, None)],
-            "doc_id long, text string")
-        out = {r["doc_id"]: r for r in
-               textstats.compression_ratio(docs).collect()}
-        assert out[0]["compression_ratio"] < 0.05       # degenerate
-        assert out[1]["compression_ratio"] > 0.5        # normal prose
-        assert out[2]["compression_ratio"] is None
-        assert out[3]["compressed_len"] is None
-
-    def test_deterministic(self, spark):
-        from log2seq_spark.operators import textstats
-        import zlib
-        text = "deterministic zlib check 123"
-        docs = spark.createDataFrame([(0, text)], "doc_id long, text string")
-        got = textstats.compression_ratio(docs).first()
-        want = len(zlib.compress(text.encode(), 6))
-        assert got["compressed_len"] == want

@@ -22,7 +22,7 @@ def turns(spark):
 
 class TestChecks:
     def test_clean_table_passes_the_transcript_gate(self, turns):
-        report = ex.expect(turns, ex.transcript_checks())
+        report = ex.evaluate(turns, ex.transcript_checks())
         assert all(r["passed"] for r in report)
         assert len(report) == 7
 
@@ -30,7 +30,7 @@ class TestChecks:
         # all checks compile into ONE aggregate: the report comes from
         # one job regardless of how many checks are stacked
         checks = ex.transcript_checks() + [
-            ex.unique("uid"), ex.mean_between("turn_idx", 0, 100),
+            ex.unique("uid"), ex.in_range("uid", 0, 999),
             ex.matches("conv_id", r"^c\d+$"),
         ]
         report = ex.evaluate(turns, checks)
@@ -57,13 +57,6 @@ class TestChecks:
         assert "observed [0, 4]" in by["in_range(v)"]["observed"]
         assert by["accepted_values(v)"]["passed"]
         assert not by["row_count"]["passed"]
-
-    def test_expect_raises_with_report(self, spark):
-        df = spark.range(10).select(F.lit(None).cast("string").alias("t"))
-        with pytest.raises(ex.ExpectationError) as ei:
-            ex.expect(df, [ex.not_null("t")])
-        assert ei.value.report[0]["check"] == "not_null(t)"
-        assert "10 nulls" in str(ei.value)
 
     def test_unique_exact_and_approx(self, spark):
         dup = spark.range(1000).select(
@@ -108,9 +101,8 @@ class TestChecks:
 
 
 class TestTableProfile:
-    def test_profile_and_drift(self, spark):
-        from log2seq_spark.operators.expectations import (profile_drift,
-                                                          table_profile)
+    def test_profile(self, spark):
+        from log2seq_spark.operators.expectations import table_profile
         a = spark.createDataFrame(
             [(1, "x", 1.0), (2, "y", None), (3, "x", 3.0)],
             "id long, s string, v double")
@@ -121,25 +113,3 @@ class TestTableProfile:
         assert (pa["id"]["min_s"], pa["id"]["max_s"]) == ("1", "3")
         assert pa["v"]["n_null"] == 1 and pa["v"]["n_distinct"] == 2
         assert pa["s"]["n_distinct"] == 2
-
-        # drift: drop a column, add one, null-out most of v
-        b = spark.createDataFrame(
-            [(1, None, "n"), (2, None, "n"), (3, 9.9, "n")],
-            "id long, v double, extra string")
-        drift = {r["column"]: r for r in profile_drift(
-            table_profile(a, exact_distinct=True),
-            table_profile(b, exact_distinct=True)).collect()}
-        assert drift["s"]["status"] == "removed"
-        assert drift["extra"]["status"] == "added"
-        assert drift["v"]["status"] == "null_drift"
-        assert drift["id"]["status"] == "ok"
-
-    def test_distinct_drift(self, spark):
-        from log2seq_spark.operators.expectations import (profile_drift,
-                                                          table_profile)
-        a = spark.createDataFrame([(i % 2,) for i in range(10)], "k long")
-        b = spark.createDataFrame([(i,) for i in range(10)], "k long")
-        d = profile_drift(table_profile(a, exact_distinct=True),
-                          table_profile(b, exact_distinct=True)).first()
-        assert d["status"] == "distinct_drift"
-        assert (d["n_distinct_a"], d["n_distinct_b"]) == (2, 10)

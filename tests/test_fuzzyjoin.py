@@ -1,5 +1,7 @@
 """Deletion-neighborhood fuzzy matching (FastSS/SymSpell blocking)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -65,8 +67,12 @@ class TestFuzzySelfPairs:
         # 30 strings that all share the deletion variant "a"
         df = _strs(spark, [f"a{c}" for c in "bcdefghijklmnopqrstuvwxyz"]
                    + ["ab2", "ac2", "ad2", "a"])
-        with pytest.raises(Exception, match="max_bucket"):
+        with pytest.raises(Exception, match="max_bucket") as err:
             fuzzyjoin.fuzzy_self_pairs(df, "s", max_bucket=5).collect()
+        # the message names a member string of the over-cap bucket
+        sample = re.search(r"which holds e\.g\. (\S+)", str(err.value))
+        assert sample and sample.group(1) in {
+            r["s"] for r in df.collect()}
 
 
 def _levenshtein(a: str, b: str) -> int:

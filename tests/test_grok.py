@@ -12,38 +12,41 @@ import re
 import pytest
 
 from log2seq_spark.rules.engine import LineEngine
-from log2seq_spark.rules.grok import (GROK_PATTERNS, expand_pattern,
-                                      grok_program, grok_rule)
+from log2seq_spark.rules.grok import GROK_PATTERNS, grok_program, grok_rule
 from log2seq_spark.rules.spec import RuleDefinitionError
 
 
 class TestExpansion:
     def test_nested_references_resolve(self):
         # IPORHOST -> IPV4 -> literal fragment, all non-capturing
-        pat = expand_pattern("IPORHOST")
+        prog = grok_program("%{IPORHOST:host}: %{GREEDYDATA:message}")
+        pat = prog.header_rules[0].fields[0].user_pattern
         assert "%{" not in pat
         assert "(?P<" not in pat
-        import re
-        assert re.fullmatch(pat, "10.0.0.1")
-        assert re.fullmatch(pat, "web-01.example.com")
-        assert not re.fullmatch(pat, "not a host!")
+        eng = LineEngine(prog)
+        for host in ("10.0.0.1", "web-01.example.com"):
+            assert eng.parse_line(f"{host}: up")["host"] == host
+        with pytest.raises(Exception):
+            eng.parse_line("not a host!: up")
 
     def test_unknown_pattern_raises(self):
         with pytest.raises(RuleDefinitionError, match="unknown grok"):
-            expand_pattern("NO_SUCH_PATTERN")
+            grok_program("%{NO_SUCH_PATTERN:x} %{GREEDYDATA:message}")
 
     def test_cycle_raises(self):
         with pytest.raises(RuleDefinitionError, match="nesting exceeds"):
-            expand_pattern("A", {"A": "%{B}", "B": "%{A}"})
+            grok_program("%{A:x} %{GREEDYDATA:message}",
+                         pattern_definitions={"A": "%{B}", "B": "%{A}"})
 
     def test_nested_semantic_rejected(self):
         with pytest.raises(RuleDefinitionError, match="semantic"):
-            expand_pattern("A", {"A": "x%{WORD:leak}y"})
+            grok_program("%{A:x} %{GREEDYDATA:message}",
+                         pattern_definitions={"A": "x%{WORD:leak}y"})
 
     def test_builtin_patterns_all_expand_and_compile(self):
-        import re
         for name in GROK_PATTERNS:
-            re.compile(expand_pattern(name))
+            rule = grok_rule(f"%{{{name}}} %{{GREEDYDATA:message}}")
+            re.compile(rule.fields[0].user_pattern)
 
 
 class TestCompileErrors:

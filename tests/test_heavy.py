@@ -184,93 +184,3 @@ class TestMgSummaries:
         assert len(totals) == 3 and sum(totals) == 12
 
 
-class TestStreamingHeavyHitters:
-    def test_matches_batch_and_survives_restart(self, spark, tmpdir_path):
-        import os
-        from collections import Counter
-        from log2seq_spark.streaming import (streaming_heavy_hitters,
-                                             current_heavy_hitters)
-        inp = os.path.join(tmpdir_path, "hhin")
-        ck = os.path.join(tmpdir_path, "hhck")
-        st = os.path.join(tmpdir_path, "hhst")
-        schema = "token string"
-
-        # before any epoch commits: empty, with the finalized schema
-        empty = current_heavy_hitters(spark, st)
-        assert empty.count() == 0
-        assert empty.columns == ["token", "w", "n_total", "guaranteed"]
-
-        def run(rows):
-            (spark.createDataFrame([(t,) for t in rows], schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_heavy_hitters(stream, ck, st, k=5)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        batch1 = ["hot"] * 40 + [f"t{i}" for i in range(10)]
-        batch2 = ["hot"] * 30 + ["warm"] * 25 + [f"u{i}" for i in range(5)]
-        run(batch1)   # separate runs share one checkpoint: state carries
-        run(batch2)
-        got = {r["token"]: r for r in
-               current_heavy_hitters(spark, st, k=5).collect()}
-        all_rows = batch1 + batch2
-        n = len(all_rows)
-        true = Counter(all_rows)
-        # superset guarantee over the FULL ingested history
-        for item, c in true.items():
-            if c > n / 6:   # n/(k+1)
-                assert item in got
-        for item, r in got.items():
-            assert r["n_total"] == n
-            assert r["w"] <= true[item]          # lower bound
-            assert true[item] - r["w"] <= n // 6 + 1
-        # 'hot' (70 of 110) is provably heavy: w*k > n even after error
-        assert got["hot"]["guaranteed"]
-
-    def test_replay_overwrites_own_epoch(self, spark, tmpdir_path):
-        # replaying a batch (same batch_id) must reproduce the same
-        # state, not double-count — the exactly-once contract
-        import os
-        from log2seq_spark.streaming import (streaming_heavy_hitters,
-                                             current_heavy_hitters)
-        inp = os.path.join(tmpdir_path, "rpin")
-        st = os.path.join(tmpdir_path, "rpst")
-        schema = "token string"
-        rows = ["a"] * 6 + ["b"] * 2
-
-        def run(ck):
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_heavy_hitters(stream, ck, st, k=4)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        (spark.createDataFrame([(t,) for t in rows], schema)
-              .coalesce(1).write.mode("append").parquet(inp))
-        run(os.path.join(tmpdir_path, "ck1"))
-        # fresh checkpoint => batch 0 REPLAYS over the same state dir
-        run(os.path.join(tmpdir_path, "ck2"))
-        got = {r["token"]: (r["w"], r["n_total"])
-               for r in current_heavy_hitters(spark, st, k=4).collect()}
-        assert got == {"a": (6, 8), "b": (2, 8)}  # not doubled
-
-    def test_param_drift_refused(self, spark, tmpdir_path):
-        import os
-        import pytest as _pytest
-        from log2seq_spark.streaming import streaming_heavy_hitters
-        inp = os.path.join(tmpdir_path, "pdin")
-        st = os.path.join(tmpdir_path, "pdst")
-        schema = "token string"
-        (spark.createDataFrame([("a",)], schema)
-              .coalesce(1).write.mode("append").parquet(inp))
-
-        def run(ck, k):
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_heavy_hitters(stream, ck, st, k=k)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run(os.path.join(tmpdir_path, "cka"), k=4)
-        from pyspark.errors.exceptions.base import StreamingQueryException
-        with _pytest.raises(StreamingQueryException, match="built with"):
-            run(os.path.join(tmpdir_path, "ckb"), k=8)

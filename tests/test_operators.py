@@ -269,53 +269,6 @@ class TestDedup:
         exp = {r["text_hash"]: r["keep_id"] for r in scratch.collect()}
         assert got == exp
 
-    @pytest.mark.parametrize("seed", [3, 17])
-    def test_incremental_line_dedup_equals_batch(self, spark, seed):
-        # with an EMPTY index the incremental operator IS the batch
-        # operator — randomized multi-line docs with heavy line reuse
-        import random
-        rng = random.Random(seed)
-        pool = [f"line {i}" for i in range(6)] + [""]
-        docs = [(i, "\n".join(rng.choice(pool)
-                              for _ in range(rng.randint(1, 6))))
-                for i in range(12)]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        empty_idx = spark.createDataFrame(
-            [], "line_hash string, keep_id long")
-        inc = {r["doc_id"]: r["clean_text"]
-               for r in dedup.drop_duplicate_lines_against_index(
-                   df, empty_idx).collect()}
-        bat = {r["doc_id"]: r["clean_text"]
-               for r in dedup.drop_duplicate_lines(df).collect()}
-        assert inc == bat
-        # and the updated index equals indexing the corpus from scratch
-        upd = {(r["line_hash"], r["keep_id"])
-               for r in dedup.updated_line_dedup_index(
-                   empty_idx, df).collect()}
-        scr = {(r["line_hash"], r["keep_id"])
-               for r in dedup.line_dedup_index(df).collect()}
-        assert upd == scr
-
-    def test_incremental_line_dedup_cross_batch(self, spark):
-        # a line first seen in batch 1 is removed from every batch-2
-        # doc; the re-ingested keeper doc keeps its line; empty lines
-        # survive; a doc reduced to nothing comes back as ""
-        h = spark.createDataFrame(
-            [(0, "shared line\nunique zero"), (1, "other text")],
-            "doc_id long, text string")
-        idx = dedup.line_dedup_index(h)
-        batch = spark.createDataFrame(
-            [(10, "shared line\n\nfresh ten"),   # loses 'shared line'
-             (11, "shared line"),                # reduced to nothing
-             (0, "shared line\nnew tail")],      # keeper re-ingested
-            "doc_id long, text string")
-        got = {r["doc_id"]: r["clean_text"]
-               for r in dedup.drop_duplicate_lines_against_index(
-                   batch, idx).collect()}
-        assert got[10] == "\nfresh ten"
-        assert got[11] == ""
-        assert got[0] == "shared line\nnew tail"
-
     @pytest.mark.parametrize("seed", [7, 21, 99])
     def test_incremental_dedup_fuzz_equals_batch(self, spark, seed):
         # randomized equivalence: split a collision-heavy corpus (tiny
@@ -377,92 +330,6 @@ class TestDedup:
                    for r in scratch.collect()}
         assert got_idx == exp_idx
 
-    @pytest.mark.parametrize("seed", [3, 14])
-    def test_incremental_line_dedup_fuzz_null_id_history(self, spark,
-                                                         seed):
-        # history carries null ids too (the case the earlier fuzz never
-        # generated — precisely where the null-keeper-reads-as-unseen
-        # bug lived): the incremental screen must equal a pure-Python
-        # replay, and absorbing the batch must be first-wins (history
-        # keepers never change)
-        import random
-        rng = random.Random(seed)
-        pool = [f"line {i}" for i in range(5)] + [""]
-
-        def mk(ids, n):
-            return [(rng.choice(ids),
-                     "\n".join(rng.choice(pool)
-                               for _ in range(rng.randint(1, 5))))
-                    for _ in range(n)]
-
-        hist = mk([0, 1, None], 8)
-        batch = mk([100, 101, None], 8)
-        schema = "doc_id long, text string"
-        hdf = spark.createDataFrame(hist, schema)
-        bdf = spark.createDataFrame(batch, schema)
-        idx = dedup.line_dedup_index(hdf)
-
-        # python model of the index: min real id per line, None if the
-        # only owners are null-id docs (min ignores nulls)
-        owners = {}
-        for i, t in hist:
-            for ln in set(t.split("\n")):
-                if ln != "":
-                    owners.setdefault(ln, set()).add(i)
-        model_idx = {ln: min((x for x in s if x is not None),
-                             default=None)
-                     for ln, s in owners.items()}
-        got_idx = {}
-        lines_by_hash = {}
-        from log2seq_spark.operators.dedup import _keyed_lines  # noqa
-        for r in idx.collect():
-            got_idx[r["line_hash"]] = r["keep_id"]
-        # spark keys are md5 hashes; compare via per-line hash map
-        import hashlib
-        hm = {ln: hashlib.md5(ln.encode()).hexdigest()
-              for ln in model_idx}
-        assert got_idx == {hm[ln]: v for ln, v in model_idx.items()}
-
-        # screen: per distinct doc id (nulls group as one doc), keep a
-        # line if empty | in-index and this id IS the keeper | fresh
-        # and this id is the batch min-real-id owner (None if all-null)
-        batch_owner = {}
-        for i, t in batch:
-            for ln in set(t.split("\n")):
-                if ln != "":
-                    batch_owner.setdefault(ln, set()).add(i)
-        batch_min = {ln: min((x for x in s if x is not None),
-                             default=None)
-                     for ln, s in batch_owner.items()}
-        merged = {}
-        for i, t in batch:
-            merged.setdefault(i, []).extend(
-                (pos, ln) for pos, ln in enumerate(t.split("\n")))
-        exp = {}
-        for i, positioned in merged.items():
-            kept = [(p, ln) for p, ln in positioned
-                    if ln == ""
-                    or (ln in model_idx and model_idx[ln] == i)
-                    or (ln not in model_idx and batch_min[ln] == i)]
-            exp[i] = "\n".join(ln for _, ln in sorted(kept))
-        got = {r["doc_id"]: r["clean_text"]
-               for r in dedup.drop_duplicate_lines_against_index(
-                   bdf, idx).collect()}
-        assert got == exp, seed
-
-        # first-wins absorption: every historical entry unchanged
-        new_idx = {r["line_hash"]: r["keep_id"]
-                   for r in dedup.updated_line_dedup_index(
-                       idx, bdf).collect()}
-        for h, v in got_idx.items():
-            assert new_idx[h] == v, seed
-        # fresh lines enter with their batch min-real-id owner
-        for ln, v in batch_min.items():
-            if ln not in model_idx:
-                assert new_idx[hm.get(ln) or
-                               hashlib.md5(ln.encode()).hexdigest()] \
-                    == v, seed
-
     def test_incremental_dedup_null_text(self, spark):
         # batch exact_duplicates groups null texts (groupBy NULL key);
         # the incremental index must too — a plain md5 would emit NULL
@@ -502,11 +369,6 @@ class TestDedup:
             "doc_id long, text string")
         batch = dedup.drop_duplicate_lines(docs).collect()
         assert batch == [(None, "unique content line\nsecond line")]
-        empty_idx = spark.createDataFrame(
-            [], "line_hash string, keep_id long")
-        inc = dedup.drop_duplicate_lines_against_index(
-            docs, empty_idx).collect()
-        assert inc == [(None, "unique content line\nsecond line")]
 
     def test_incremental_dedup_null_keeper_is_seen(self, spark):
         # content first seen under a null-id doc indexes with
@@ -525,25 +387,6 @@ class TestDedup:
         new_idx = dedup.updated_dedup_index(
             idx, dedup.dedup_against_index(batch, idx))
         assert {r["keep_id"] for r in new_idx.collect()} == {None}
-
-    def test_incremental_line_dedup_null_keeper_is_seen(self, spark):
-        # line-granularity twin: a line first seen under a null-id doc
-        # must be removed from every later real-id doc, and the updated
-        # index must keep the null-keeper entry (first-wins), not hand
-        # the line to the batch doc that was just told to drop it
-        hist = spark.createDataFrame(
-            [(None, "shared line")], "doc_id long, text string")
-        batch = spark.createDataFrame(
-            [(7, "shared line\nown line")], "doc_id long, text string")
-        idx = dedup.line_dedup_index(hist)
-        out = dedup.drop_duplicate_lines_against_index(
-            batch, idx).collect()
-        assert out == [(7, "own line")]
-        new_idx = {r["line_hash"]: r["keep_id"]
-                   for r in dedup.updated_line_dedup_index(
-                       idx, batch).collect()}
-        assert sorted(new_idx.values(), key=lambda v: (v is not None, v)) \
-            == [None, 7]
 
     def test_incremental_near_dup_null_owner_bucket(self, spark):
         # an LSH bucket whose historical owner is a null-id doc is
@@ -578,20 +421,6 @@ class TestDedup:
         # matching sep passes through
         out = dedup.drop_duplicate_lines(docs, ownership=own, sep="\n\n")
         assert out.collect()[0]["clean_text"] == "a\n\nb"
-
-    def test_conversation_hash_injection_safe(self, spark):
-        # a turn whose text embeds the old separator byte must NOT
-        # collide with two separate turns carrying the pieces, and a
-        # null-text turn must change the hash rather than vanish
-        turns = spark.createDataFrame(
-            [("x", 0, "hi\x1ehello"),
-             ("y", 0, "hi"), ("y", 1, "hello"),
-             ("z", 0, "hi"), ("z", 1, None)],
-            "conv_id string, turn_idx int, text string")
-        h = {r["conv_id"]: r["conv_hash"]
-             for r in dedup.conversation_hashes(
-                 turns, role_col=None).collect()}
-        assert len({h["x"], h["y"], h["z"]}) == 3
 
     def test_incremental_near_dup_index(self, spark):
         # LSH screening against the persisted bucket index: a new doc
@@ -876,86 +705,6 @@ class TestSimilarity:
             assert got == want
         plan = got_df._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "centroid" in plan
-
-    def test_streaming_ann_ingest_across_restarts(self, spark,
-                                                  tmpdir_path):
-        """Vectors ingested over two separate streaming RUNS are probed
-        together with the base, and the answers equal a one-shot build
-        over everything — the epoch segments are real index, not a side
-        channel."""
-        import os
-        from log2seq_spark.streaming import streaming_ann_ingest
-        rows = [(i, [math.cos(i / 20.0), math.sin(i / 20.0)])
-                for i in range(90)]
-        schema = "vec_id long, embedding array<float>"
-        cents = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [0.0, -1.0]]
-        idx = tmpdir_path + "/sann_idx"
-        similarity.build_ivf_index(
-            spark.createDataFrame(rows[:30], schema), cents, idx)
-        inp = os.path.join(tmpdir_path, "sann_in")
-        ck = os.path.join(tmpdir_path, "sann_ck")
-
-        def run(batch):
-            (spark.createDataFrame(batch, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            q = (streaming_ann_ingest(
-                    spark.readStream.schema(schema).parquet(inp),
-                    ck, idx)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run(rows[30:60])
-        run(rows[60:])
-        # two committed epoch segments beyond the base
-        assert len(similarity.ivf_segment_paths(spark, idx)) == 3
-        full = tmpdir_path + "/sann_full"
-        similarity.build_ivf_index(
-            spark.createDataFrame(rows, schema), cents, full)
-        for q in ([0.6, 0.8], [-0.9, 0.2]):
-            want = [(r["vec_id"], round(r["cosine"], 9)) for r in
-                    similarity.ivf_topk_indexed(spark, full, None, q,
-                                                k=6, n_probe=2).collect()]
-            got = [(r["vec_id"], round(r["cosine"], 9)) for r in
-                   similarity.ivf_topk_indexed(spark, idx, None, q,
-                                               k=6, n_probe=2).collect()]
-            assert got == want
-        # compaction folds the epochs into the base: one segment, one
-        # file per cell, identical answers, superseded epochs gone
-        before, after = similarity.compact_ivf_index(spark, idx)
-        assert before > after
-        assert similarity.ivf_segment_paths(spark, idx) == [idx]
-        got = [(r["vec_id"], round(r["cosine"], 9)) for r in
-               similarity.ivf_topk_indexed(spark, idx, None, [0.6, 0.8],
-                                           k=6, n_probe=2).collect()]
-        want = [(r["vec_id"], round(r["cosine"], 9)) for r in
-                similarity.ivf_topk_indexed(spark, full, None, [0.6, 0.8],
-                                            k=6, n_probe=2).collect()]
-        assert got == want
-
-    def test_ann_ingest_superseded_epoch_is_ignored(self, spark,
-                                                    tmpdir_path):
-        """Crash-safety rule: an epoch segment at or below the base's
-        fold horizon is ignored by readers even if it reappears (e.g.
-        restored from backup) — no double-counted vectors."""
-        rows = [(i, [math.cos(i / 20.0), math.sin(i / 20.0)])
-                for i in range(20)]
-        schema = "vec_id long, embedding array<float>"
-        cents = [[1.0, 0.0], [0.0, 1.0]]
-        idx = tmpdir_path + "/sup_idx"
-        similarity.build_ivf_index(
-            spark.createDataFrame(rows[:10], schema), cents, idx)
-        similarity.ingest_ivf_epoch(
-            spark.createDataFrame(rows[10:], schema), idx, 0)
-        assert len(similarity.ivf_segment_paths(spark, idx)) == 2
-        similarity.compact_ivf_index(spark, idx)
-        # resurrect a copy of the folded epoch
-        similarity.ingest_ivf_epoch(
-            spark.createDataFrame(rows[10:], schema), idx, 0)
-        assert similarity.ivf_segment_paths(spark, idx) == [idx]
-        out = similarity.ivf_topk_indexed(spark, idx, None, [1.0, 0.0],
-                                          k=20, n_probe=2).collect()
-        assert len(out) == 20                      # not 30
-        assert len({r["vec_id"] for r in out}) == 20
 
     def test_ivf_append_refuses_unstamped_dir(self, spark, tmpdir_path):
         rows = [(i, [1.0, float(i)]) for i in range(5)]
@@ -1401,559 +1150,64 @@ class TestMultimodal:
         assert len(out) == 4   # fake fallback without PIL
 
 
-class TestStreaming:
-    def test_streaming_parse_available_now(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.sources.transcripts import transcripts
-        from log2seq_spark.streaming import streaming_parse, streaming_sink_counts
-
-        inp = os.path.join(tmpdir_path, "in")
-        transcripts(spark, 30, seed=7, partitions=2).write.parquet(inp)
-        routed = streaming_parse(spark, inp)
-        counts = streaming_sink_counts(routed, window="1 hour",
-                                       watermark="2 hours")
-        # complete-mode memory sink: append mode would hold back windows
-        # above the final watermark, hiding the tail of the data
-        q = (counts.writeStream.outputMode("complete")
-             .format("memory").queryName("l2s_stream_counts")
-             .option("checkpointLocation", os.path.join(tmpdir_path, "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination(120)
-        res = spark.sql("select * from l2s_stream_counts")
-        n_stream = res.agg(F.sum("n_turns")).first()[0]
-        n_batch = spark.read.parquet(inp).count()
-        assert n_stream == n_batch
-
-    def test_streaming_dedup_exact(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.streaming import streaming_dedup_exact
-        rows = [
-            (0, "alpha content", "2024-01-01 10:00:00"),
-            (1, "alpha content", "2024-01-01 10:05:00"),   # dup within wm
-            (2, "beta content", "2024-01-01 10:01:00"),
-            (3, "alpha content", "2024-01-01 10:07:00"),   # dup within wm
-            (4, "gamma content", "2024-01-01 10:02:00"),
-        ]
-        inp = os.path.join(tmpdir_path, "din")
-        (spark.createDataFrame(rows, "doc_id long, text string, ts_s string")
-              .withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-              .write.parquet(inp))
-        stream = spark.readStream.schema(
-            "doc_id long, text string, ts timestamp").parquet(inp)
-        out = streaming_dedup_exact(stream, watermark="1 hour")
-        q = (out.writeStream.outputMode("append")
-             .format("memory").queryName("l2s_stream_dedup")
-             .option("checkpointLocation", os.path.join(tmpdir_path, "dck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        res = spark.sql("select * from l2s_stream_dedup").collect()
-        # one row per distinct content; duplicates dropped by state
-        assert sorted(r["text"] for r in res) == \
-            ["alpha content", "beta content", "gamma content"]
-
-
-    def test_streaming_dedup_with_index_across_restarts(
-            self, spark, tmpdir_path):
-        # the index-backed variant must dedup across RUNS (beyond any
-        # watermark horizon): content first seen in run 1 is drop_seen
-        # in run 2, and the final kept set equals batch-mode dedup over
-        # everything ingested.
-        import os
-        from log2seq_spark.streaming import streaming_dedup_with_index
-        inp = os.path.join(tmpdir_path, "iin")
-        out = os.path.join(tmpdir_path, "iout")
-        ck = os.path.join(tmpdir_path, "ick")
-        ix = os.path.join(tmpdir_path, "iix")
-        schema = "doc_id long, text string"
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_dedup_with_index(stream, out, ck, ix)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, "alpha"), (1, "beta"), (2, "alpha")])   # in-batch dup
-        run([(10, "alpha"), (11, "gamma")])              # cross-run dup
-        kept = spark.read.parquet(out).collect()
-        assert sorted((r["doc_id"], r["text"]) for r in kept) == \
-            [(0, "alpha"), (1, "beta"), (11, "gamma")]
-        assert all(r["decision"] == "keep" for r in kept)
-        # persisted index covers every distinct content with min owner
-        import glob
-        latest = sorted(glob.glob(os.path.join(ix, "epoch=*")))[-1]
-        idx = {r["keep_id"] for r in spark.read.parquet(latest).collect()}
-        assert idx == {0, 1, 11}
-
-    def test_streaming_index_replay_safety_keep_epochs_1(
-            self, spark, tmpdir_path):
-        # even at the tightest retention, the PREDECESSOR epoch must
-        # survive every commit: a replayed micro-batch reads the newest
-        # epoch below its id, so pruning it would silently reset the
-        # dedup history to empty on crash-replay
-        import glob
-        import os
-        from log2seq_spark.streaming import streaming_dedup_with_index
-        inp = os.path.join(tmpdir_path, "rin")
-        schema = "doc_id long, text string"
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_dedup_with_index(
-                    stream, os.path.join(tmpdir_path, "rout"),
-                    os.path.join(tmpdir_path, "rck"),
-                    os.path.join(tmpdir_path, "rix"), keep_epochs=1)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, "a")])
-        run([(1, "b")])
-        run([(2, "c")])
-        epochs = sorted(int(os.path.basename(p).split("=")[1])
-                        for p in glob.glob(
-                            os.path.join(tmpdir_path, "rix", "epoch=*")))
-        assert epochs == [1, 2]   # current + predecessor, never fewer
-
-    def test_streaming_template_mining_matches_batch(self, spark,
-                                                     tmpdir_path):
-        # incremental mining via epoch-versioned merged profiles must
-        # equal batch-mining everything ingested (merge associativity),
-        # across separate runs sharing one checkpoint.
-        import os
-        from log2seq_spark.streaming import (streaming_template_mining,
-                                             current_templates)
-        from log2seq_spark.operators import templates
-        inp = os.path.join(tmpdir_path, "tmin")
-        ck = os.path.join(tmpdir_path, "tmck")
-        prof = os.path.join(tmpdir_path, "tmprof")
-        schema = "text string"
-
-        # before any epoch commits: empty, with the finalized schema
-        empty = current_templates(spark, prof)
-        assert empty.count() == 0
-        assert empty.columns == ["template", "n_lines", "n_groups"]
-
-        def run(rows):
-            (spark.createDataFrame([(t,) for t in rows], schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_template_mining(stream, ck, prof)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        batch1 = ["connect from 10.0.0.1", "connect from 10.0.0.2",
-                  "session closed"]
-        batch2 = ["connect from 10.0.0.3", "disk full on sda"]
-        run(batch1)
-        run(batch2)
-        got = {(r["template"], r["n_lines"], r["n_groups"])
-               for r in current_templates(spark, prof).collect()}
-        want_df = templates.mine_templates(
-            spark.createDataFrame([(t,) for t in batch1 + batch2], schema))
-        want = {(r["template"], r["n_lines"], r["n_groups"])
-                for r in want_df.collect()}
-        assert got == want
-        # the cross-batch wildcard: position 2 only varies ACROSS epochs
-        assert ("connect from <*>", 3, 1) in got
-        # the returned frame is materialized (localCheckpoint): pruning
-        # every epoch under it — what a running stream eventually does —
-        # must not invalidate a frame handed out earlier
-        import shutil
-        live = current_templates(spark, prof)
-        shutil.rmtree(prof)
-        assert {r["template"] for r in live.collect()} == \
-            {t for t, _, _ in want}
-
-    def test_streaming_template_profiles_prune_keeps_predecessor(
-            self, spark, tmpdir_path):
-        # same replay-safety contract as the dedup index: at
-        # keep_epochs=1 the predecessor epoch always survives a commit
-        import glob
-        import os
-        from log2seq_spark.streaming import streaming_template_mining
-        inp = os.path.join(tmpdir_path, "tpin")
-        schema = "text string"
-
-        def run(rows):
-            (spark.createDataFrame([(t,) for t in rows], schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_template_mining(
-                    stream, os.path.join(tmpdir_path, "tpck"),
-                    os.path.join(tmpdir_path, "tpprof"), keep_epochs=1)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run(["a one"])
-        run(["a two"])
-        run(["a three"])
-        epochs = sorted(int(os.path.basename(p).split("=")[1])
-                        for p in glob.glob(
-                            os.path.join(tmpdir_path, "tpprof", "epoch=*")))
-        assert epochs == [1, 2]
-
-    def test_streaming_template_rejects_tokenization_drift(
-            self, spark, tmpdir_path):
-        # profiles merged across restarts must come from ONE
-        # tokenization — a tokens_col epoch folded into a text-split
-        # epoch would mix incompatible position spaces
-        import os
-        from log2seq_spark.streaming import streaming_template_mining
-        inp = os.path.join(tmpdir_path, "dtin")
-
-        def run(rows, **kw):
-            (spark.createDataFrame([(t, t.split()) for t in rows],
-                                   "text string, words array<string>")
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = (spark.readStream
-                      .schema("text string, words array<string>")
-                      .parquet(inp))
-            q = (streaming_template_mining(
-                    stream, os.path.join(tmpdir_path, "dtck"),
-                    os.path.join(tmpdir_path, "dtprof"), **kw)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run(["alpha beta"])
-        with pytest.raises(Exception, match="matching parameters"):
-            run(["gamma delta"], tokens_col="words")
-
-    def test_streaming_near_dup_with_index_across_restarts(
-            self, spark, tmpdir_path):
-        # near-dup screening across RUNS: content near-identical to a
-        # run-1 doc is flagged in run 2 with the historical owner as
-        # match_id; fresh content is not; the final index equals the
-        # batch index over everything ingested (min-owner associativity).
-        import os
-        from log2seq_spark.streaming import streaming_near_dup_with_index
-        from log2seq_spark.operators import dedup
-        inp = os.path.join(tmpdir_path, "nin")
-        out = os.path.join(tmpdir_path, "nout")
-        ck = os.path.join(tmpdir_path, "nck")
-        ix = os.path.join(tmpdir_path, "nix")
-        schema = "doc_id long, text string"
-        base = "the quick brown fox jumps over the lazy sleeping dog"
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_near_dup_with_index(
-                    stream, out, ck, ix, n_hashes=8, bands=4)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        b1 = [(0, base), (1, "completely different content about spark")]
-        b2 = [(10, base.replace("jumps", "leaps")),   # near dup of 0
-              (11, "a third unrelated text on columnar execution")]
-        run(b1)
-        run(b2)
-        got = {r["doc_id"]: (r["is_near_dup"], r["match_id"])
-               for r in spark.read.parquet(out).collect()}
-        assert got[0] == (False, None) and got[1] == (False, None)
-        assert got[10] == (True, 0)
-        assert got[11] == (False, None)
-        # index == batch minhash_index over the union
-        import glob
-        latest = sorted(glob.glob(os.path.join(ix, "epoch=*")))[-1]
-        stream_idx = {(r["band"], r["band_hash"], r["keep_id"])
-                      for r in spark.read.parquet(latest).collect()}
-        batch_idx = {(r["band"], r["band_hash"], r["keep_id"])
-                     for r in dedup.minhash_index(
-                         spark.createDataFrame(b1 + b2, schema),
-                         n_hashes=8, bands=4).collect()}
-        assert stream_idx == batch_idx
-
-    def test_streaming_near_dup_repeated_id_rows(self, spark,
-                                                 tmpdir_path):
-        # a micro-batch carrying one id with two different payloads
-        # must land TWO annotated rows with per-payload verdicts — an
-        # id-only verdict join would stamp one merged verdict on both
-        import os
-        from log2seq_spark.streaming import streaming_near_dup_with_index
-        inp = os.path.join(tmpdir_path, "rin")
-        out = os.path.join(tmpdir_path, "rout")
-        schema = "doc_id long, text string"
-        base = "the quick brown fox jumps over the lazy sleeping dog"
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_near_dup_with_index(
-                    stream, out, os.path.join(tmpdir_path, "rck"),
-                    os.path.join(tmpdir_path, "rix"),
-                    n_hashes=8, bands=4)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, base)])
-        run([(7, base.replace("jumps", "leaps")),          # near dup of 0
-             (7, "totally unrelated words about columnar engines")])
-        got = {(r["doc_id"], r["text"]): (r["is_near_dup"], r["match_id"])
-               for r in spark.read.parquet(out).collect()}
-        assert len(got) == 3
-        assert got[(7, base.replace("jumps", "leaps"))] == (True, 0)
-        assert got[(7, "totally unrelated words about columnar "
-                       "engines")] == (False, None)
-
-    def test_streaming_line_dedup_across_restarts(self, spark,
-                                                  tmpdir_path):
-        # a boilerplate line first seen in run 1 is stripped from every
-        # run-2 doc; fresh lines survive; the line index persists
-        import os
-        from log2seq_spark.streaming import streaming_line_dedup_with_index
-        inp = os.path.join(tmpdir_path, "lin")
-        out = os.path.join(tmpdir_path, "lout")
-        schema = "doc_id long, text string"
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_line_dedup_with_index(
-                    stream, out, os.path.join(tmpdir_path, "lck"),
-                    os.path.join(tmpdir_path, "lix"))
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, "COPYRIGHT FOOTER\nreal content zero")])
-        run([(10, "real content ten\nCOPYRIGHT FOOTER"),
-             (11, "only fresh lines here")])
-        got = {r["doc_id"]: r["clean_text"]
-               for r in spark.read.parquet(out).collect()}
-        assert got[0] == "COPYRIGHT FOOTER\nreal content zero"
-        assert got[10] == "real content ten"    # footer stripped
-        assert got[11] == "only fresh lines here"
-
-    def test_streaming_clean_corpus_across_restarts(self, spark,
-                                                    tmpdir_path):
-        # the streaming recipe: scrub applies, a doc re-ingested in a
-        # LATER run is exact_dup against the historical index, empties
-        # and low-quality docs get their reasons, precedence matches
-        # the batch recipe (empty > exact_dup > low_quality)
-        import os
-        from log2seq_spark.streaming import streaming_clean_corpus
-        inp = os.path.join(tmpdir_path, "cin")
-        out = os.path.join(tmpdir_path, "cout")
-        schema = "doc_id long, text string"
-        good = ("please contact bob@example.com for the details "
-                "and that is all there is to say about it")
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_clean_corpus(
-                    stream, out, os.path.join(tmpdir_path, "cck"),
-                    os.path.join(tmpdir_path, "cix"))
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, good), (1, "   \n "), (2, "### ???")])
-        run([(10, good), (11, "a fresh second-run doc that is fine "
-                              "and the text of it is long enough")])
-        got = {r["doc_id"]: (r["kept"], r["drop_reason"],
-                             r["clean_text"])
-               for r in spark.read.parquet(out).collect()}
-        assert got[0][0] is True and "<email>" in got[0][2]
-        assert got[1][:2] == (False, "empty")
-        assert got[2][:2] == (False, "low_quality")
-        assert got[10][:2] == (False, "exact_dup")   # cross-run dup
-        assert got[11][:2] == (True, None)
-
-    def test_streaming_clean_corpus_pathological_ids(self, spark,
-                                                     tmpdir_path):
-        # a null-id doc must still get a verdict AND its hash must
-        # enter the index (so a later identical doc is exact_dup);
-        # an id repeated with different payloads must not fan out or
-        # cross-label
-        import os
-        from log2seq_spark.streaming import streaming_clean_corpus
-        inp = os.path.join(tmpdir_path, "xin")
-        out = os.path.join(tmpdir_path, "xout")
-        schema = "doc_id string, text string"
-        t1 = ("the first document and that one is long enough to be "
-              "counted as real text for the gate")
-        t2 = ("the second document and it is also long enough to be "
-              "counted as real text for the gate")
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_clean_corpus(
-                    stream, out, os.path.join(tmpdir_path, "xck"),
-                    os.path.join(tmpdir_path, "xix"))
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(None, t1), ("a", t2), ("a", t1)])   # null id + repeated id
-        run([("z", t1)])                          # dup of batch-1 content
-        rows = spark.read.parquet(out).collect()
-        got = {(r["doc_id"], r["clean_text"][:9]): (r["kept"],
-                                                    r["drop_reason"])
-               for r in rows}
-        assert len(rows) == 4                      # no fan-out, no loss
-        # min(id) ignores nulls, so 'a' keeps t1 and the null-id doc is
-        # the in-batch duplicate (null-safe comparison: NOT a second
-        # bogus keep); the repeated id 'a' carries both its payloads
-        # without cross-labeling
-        assert got[("a", t1[:9])] == (True, None)
-        assert got[("a", t2[:9])] == (True, None)
-        assert got[(None, t1[:9])] == (False, "exact_dup")
-        assert got[("z", t1[:9])] == (False, "exact_dup")
+class TestEpochState:
+    """The epoch-state protocol (``plans/epochs.py``) behind
+    ``templates --state-dir`` / ``rare --state-dir`` and the dedup
+    index's committed-segment listing, on plain local paths."""
 
     def test_epoch_params_guard_recovery(self, tmpdir_path):
         # enforcement starts only once an epoch has COMMITTED (a failed
-        # first batch must not lock in its parameters); once epochs
+        # first run must not lock in its parameters); once epochs
         # exist, a missing/corrupt stamp REFUSES rather than silently
         # restamping with the current run's params — that would accept
         # exactly the drift the guard exists to reject
         import os
-        from log2seq_spark.streaming.stream import _check_epoch_params
+        from log2seq_spark.plans.epochs import check_params
         d = os.path.join(tmpdir_path, "gstate")
-        _check_epoch_params(d, {"a": 1})
-        _check_epoch_params(d, {"a": 2})          # no committed epoch yet
+        check_params(d, {"a": 1})
+        check_params(d, {"a": 2})          # no committed epoch yet
         # corrupt stamp before any commit: restamp freely
         with open(os.path.join(d, "params.json"), "w") as f:
             f.write("{trunc")
-        _check_epoch_params(d, {"a": 2})
+        check_params(d, {"a": 2})
         os.makedirs(os.path.join(d, "epoch=0"))
         open(os.path.join(d, "epoch=0", "_SUCCESS"), "w").close()
-        _check_epoch_params(d, {"a": 2})
+        check_params(d, {"a": 2})
         with pytest.raises(ValueError, match="matching parameters"):
-            _check_epoch_params(d, {"a": 3})
+            check_params(d, {"a": 3})
         with open(os.path.join(d, "params.json"), "w") as f:
             f.write("{trunc")                      # lost/corrupt stamp
         with pytest.raises(ValueError, match="refusing to restamp"):
-            _check_epoch_params(d, {"a": 2})
+            check_params(d, {"a": 2})
         os.remove(os.path.join(d, "params.json"))  # lost stamp
         with pytest.raises(ValueError, match="refusing to restamp"):
-            _check_epoch_params(d, {"a": 2})
+            check_params(d, {"a": 2})
 
-    def test_committed_epochs_glob_metachars(self, tmpdir_path):
+    def test_committed_ids_glob_metachars(self, tmpdir_path):
         # a state dir whose PATH contains glob metacharacters must not
-        # silently read as empty (every batch would see an empty index
-        # and replay safety would never engage)
+        # silently read as empty (every run would see an empty state
+        # and the params guard would never engage)
         import os
-        from log2seq_spark.streaming.stream import _committed_epochs
+        from log2seq_spark.plans.epochs import committed_ids
         d = os.path.join(tmpdir_path, "run[2024]", "idx")
-        os.makedirs(os.path.join(d, "epoch=3"))
-        open(os.path.join(d, "epoch=3", "_SUCCESS"), "w").close()
-        assert _committed_epochs(d) == [3]
+        for key, n in (("epoch", 3), ("gen", 5)):
+            os.makedirs(os.path.join(d, f"{key}={n}"))
+            open(os.path.join(d, f"{key}={n}", "_SUCCESS"), "w").close()
+        os.makedirs(os.path.join(d, "epoch=4"))      # uncommitted
+        assert committed_ids(d) == [3]
+        assert committed_ids(d, "gen") == [5]
 
-    def test_duration_ms_compound_intervals(self):
-        # any spec withWatermark accepts must parse here too
-        from log2seq_spark.streaming.stateful import duration_ms
-        assert duration_ms("30 minutes") == 1_800_000
-        assert duration_ms("1 hour 30 minutes") == 5_400_000
-        assert duration_ms("1 day 2 hours 3 seconds") == 93_603_000
-        with pytest.raises(ValueError, match="cannot parse"):
-            duration_ms("90")
-        with pytest.raises(ValueError, match="cannot parse"):
-            duration_ms("1 fortnight")
-
-    def test_streaming_near_dup_rejects_param_drift(self, spark,
-                                                    tmpdir_path):
-        # restarting against the same index with different LSH params
-        # must fail loudly, not silently miss every historical bucket
+    def test_prune_keeps_predecessor(self, tmpdir_path):
+        # at keep_epochs=1 the predecessor epoch always survives a
+        # commit
         import os
-        from log2seq_spark.streaming import streaming_near_dup_with_index
-        inp = os.path.join(tmpdir_path, "pin")
-        schema = "doc_id long, text string"
-
-        def run(rows, n_hashes):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_near_dup_with_index(
-                    stream, os.path.join(tmpdir_path, "pout"),
-                    os.path.join(tmpdir_path, "pck"),
-                    os.path.join(tmpdir_path, "pix"), n_hashes=n_hashes)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, "some text here for signing")], n_hashes=8)
-        with pytest.raises(Exception, match="matching parameters"):
-            run([(1, "more text")], n_hashes=16)
-
-    def test_streaming_tool_latency_matches_batch(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.sources.transcripts import transcripts
-        from log2seq_spark.streaming import streaming_tool_latency
-
-        inp = os.path.join(tmpdir_path, "tin")
-        transcripts(spark, 40, seed=11, partitions=2).write.parquet(inp)
-        stream = spark.readStream.schema(
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp").parquet(inp)
-        out = streaming_tool_latency(stream, horizon="10 minutes")
-        q = (out.writeStream.outputMode("append")
-             .format("memory").queryName("l2s_tool_latency")
-             .option("checkpointLocation", os.path.join(tmpdir_path, "tck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = {(r["conv_id"], r["a_idx"], r["t_idx"])
-               for r in spark.sql("select * from l2s_tool_latency").collect()}
-
-        batch = spark.read.parquet(inp)
-        a = (batch.filter(F.col("role") == "assistant")
-                  .select("conv_id", F.col("turn_idx").alias("a_idx"),
-                          F.col("ts").alias("a_ts")))
-        t = (batch.filter(F.col("role") == "tool")
-                  .select(F.col("conv_id").alias("c2"),
-                          F.col("turn_idx").alias("t_idx"),
-                          F.col("ts").alias("t_ts")))
-        want = {(r["conv_id"], r["a_idx"], r["t_idx"])
-                for r in a.join(
-                    t, (F.col("conv_id") == F.col("c2"))
-                    & (F.col("t_idx") > F.col("a_idx"))
-                    & (F.col("t_ts") >= F.col("a_ts"))
-                    & (F.col("t_ts") <= F.col("a_ts")
-                       + F.expr("INTERVAL 10 MINUTES"))).collect()}
-        assert want, "fixture produced no assistant->tool pairs"
-        # append-mode holds back rows whose watermark has not passed at
-        # end-of-input; everything emitted must be correct and the
-        # emitted set must cover the closed (watermark-passed) region
-        assert got <= want
-        assert len(got) >= len(want) * 0.5
-
-    def test_stateful_conversation_summaries(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.sources.transcripts import transcripts
-        from log2seq_spark.functions.udf import with_parsed
-        from log2seq_spark.rules.presets import default_program
-        from log2seq_spark.streaming.stateful import conversation_summaries
-
-        inp = os.path.join(tmpdir_path, "sin")
-        transcripts(spark, 20, seed=11, partitions=2).write.parquet(inp)
-        schema = ("conv_id string, turn_idx int, role string, text string, "
-                  "tool string, ts timestamp")
-        stream = spark.readStream.schema(schema).parquet(inp)
-        parsed = with_parsed(stream, default_program(), text_col="text",
-                             ts_col="ts")
-        out = conversation_summaries(parsed, watermark="10 minutes")
-        q = (out.writeStream.outputMode("append")
-             .format("memory").queryName("l2s_conv_summaries")
-             .option("checkpointLocation", os.path.join(tmpdir_path, "sck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        res = {r["conv_id"]: r for r in
-               spark.sql("select * from l2s_conv_summaries").collect()}
-        # conversations whose last turn is older than the final watermark
-        # have been emitted with exact turn counts
-        exp = {r["conv_id"]: r["n"] for r in
-               spark.read.parquet(inp).groupBy("conv_id")
-                    .agg(F.count("*").alias("n")).collect()}
-        assert res, "no conversations emitted"
-        for cid, row in res.items():
-            assert row["n_turns"] == exp[cid], cid
-            assert row["max_turn_idx"] == row["n_turns"] - 1
+        from log2seq_spark.plans.epochs import committed_ids, prune
+        d = os.path.join(tmpdir_path, "pstate")
+        for e in range(3):
+            os.makedirs(os.path.join(d, f"epoch={e}"))
+            open(os.path.join(d, f"epoch={e}", "_SUCCESS"), "w").close()
+            prune(d, e, keep_epochs=1)
+        assert committed_ids(d) == [1, 2]
 
 
 class TestDuplicateClusters:
@@ -2037,49 +1291,6 @@ class TestDuplicateClusters:
                for r in dedup.duplicate_clusters(pairs).collect()}
         # 0/1 exact dups and 2 a near dup of both -> one family kept as 0
         assert got[0] == 0 and got[1] == 0 and got[2] == 0
-
-
-class TestStreamingSink:
-    def _run(self, spark, inp, out, ckpt):
-        import os
-        from log2seq_spark.streaming import (streaming_parse,
-                                             streaming_route_to_sink)
-        routed = streaming_parse(spark, inp).select(
-            "conv_id", "turn_idx", "sink", F.col("parsed.words").alias("words"))
-        q = (streaming_route_to_sink(routed, out, ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    def test_routed_stream_matches_batch_and_replay_is_idempotent(
-            self, spark, tmpdir_path):
-        import os
-        import shutil
-        from log2seq_spark.sources.transcripts import transcripts
-
-        inp = os.path.join(tmpdir_path, "rin")
-        out = os.path.join(tmpdir_path, "rout")
-        ckpt = os.path.join(tmpdir_path, "rck")
-        transcripts(spark, 25, seed=13, partitions=2).write.parquet(inp)
-        n_in = spark.read.parquet(inp).count()
-
-        self._run(spark, inp, out, ckpt)
-        first = spark.read.parquet(out)
-        assert first.count() == n_in
-        assert set(first.select("sink").distinct().toPandas()["sink"]) >= \
-            {"quarantine"}
-        keyed = {(r["conv_id"], r["turn_idx"]) for r in first.collect()}
-
-        # no new data + intact checkpoint: nothing more is written
-        self._run(spark, inp, out, ckpt)
-        assert spark.read.parquet(out).count() == n_in
-
-        # checkpoint lost, full replay: batch ids repeat, the dynamic
-        # overwrite keyed by batch_id replaces rather than appends
-        shutil.rmtree(ckpt)
-        self._run(spark, inp, out, ckpt)
-        again = spark.read.parquet(out)
-        assert again.count() == n_in
-        assert {(r["conv_id"], r["turn_idx"]) for r in again.collect()} == keyed
 
 
 class TestAsofJoin:
@@ -2567,249 +1778,6 @@ class TestLogTextDataSource:
         assert row["words"] == ["app", "1", "INFO", "hi"]
 
 
-class TestLogTailStream:
-    """Streaming tail-follow source (logtail): appends to live files
-    arrive as new microbatch rows; built-in file streaming can't do this
-    (it only discovers whole new files)."""
-
-    def test_appends_arrive_across_batches(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.sources import logfiles
-        logfiles.register_tail(spark)
-        log = os.path.join(tmpdir_path, "app.log")
-        with open(log, "w") as f:
-            f.write("first line\npartial")  # no trailing newline
-        out = os.path.join(tmpdir_path, "sink")
-        ckpt = os.path.join(tmpdir_path, "ckpt")
-        q = (spark.readStream.format("logtail").option("path", log).load()
-             .writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
-        rows = {(r["line_no"], r["text"])
-                for r in spark.read.parquet(out).collect()}
-        assert rows == {(1, "first line")}  # partial line held back
-
-        # complete the partial line and append another
-        with open(log, "a") as f:
-            f.write(" now done\nsecond append\n")
-        q = (spark.readStream.format("logtail").option("path", log).load()
-             .writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
-        rows = {(r["line_no"], r["text"])
-                for r in spark.read.parquet(out).collect()}
-        assert rows == {(1, "first line"), (2, "partial now done"),
-                        (3, "second append")}
-
-    def test_parse_on_the_tail(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.sources import logfiles
-        from log2seq_spark.functions.udf import with_parsed
-        from log2seq_spark.rules.presets import default_program
-        from pyspark.sql import functions as F
-        logfiles.register_tail(spark)
-        log = os.path.join(tmpdir_path, "sys.log")
-        with open(log, "w") as f:
-            f.write("Jan  1 12:34:56 host1 app[1]: INFO hi\n")
-        out = os.path.join(tmpdir_path, "parsed")
-        ckpt = os.path.join(tmpdir_path, "ckpt2")
-        stream = spark.readStream.format("logtail").option("path", log).load()
-        parsed = (with_parsed(stream, default_program(), text_col="text",
-                              default_year=2023)
-                  .select("path", "line_no", F.col("parsed.host").alias("host"),
-                          F.array_join("parsed.words", " ").alias("words")))
-        q = (parsed.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(60)
-        row = spark.read.parquet(out).first()
-        assert row["host"] == "host1" and row["words"] == "app 1 INFO hi"
-
-
-class TestLogTailReaderUnit:
-    """Direct (no-Spark) tests of the tail reader's offset protocol."""
-
-    def _reader(self, path):
-        from log2seq_spark.sources.logfiles import LogTailStreamReader
-        return LogTailStreamReader({"path": path})
-
-    def test_carriage_return_stays_one_row(self, tmpdir_path):
-        # bytes.splitlines() also splits on bare \r (progress-bar
-        # rewrites), inflating line_no and diverging from the batch
-        # logtext source over the same bytes — only \n delimits rows
-        import os
-        log = os.path.join(tmpdir_path, "cr.log")
-        r = self._reader(log)
-        with open(log, "wb") as f:
-            f.write(b"progress 10%\rprogress 100%\ndone\n")
-        rows, off = r.read(r.initialOffset())
-        got = [(n, t) for (_, n, t) in rows]
-        assert got == [(1, "progress 10%\rprogress 100%"), (2, "done")]
-        # replay is byte-identical, including the embedded \r
-        assert [(n, t) for (_, n, t)
-                in r.readBetweenOffsets(r.initialOffset(), off)] == got
-
-    def test_replay_after_downtime_rotation_fails_loudly(self,
-                                                         tmpdir_path):
-        # crash, then logrotate replaces the file while the stream is
-        # DOWN: the recorded byte range now addresses a different file,
-        # and replay must refuse (silently emitting the new file's
-        # bytes would violate the byte-identical replay contract)
-        import os
-        log = os.path.join(tmpdir_path, "dt.log")
-        r = self._reader(log)
-        with open(log, "w") as f:
-            f.write("aaa\nbbb\n")
-        start = r.initialOffset()
-        rows, off = r.read(start)
-        assert len(list(rows)) == 2
-        os.rename(log, log + ".1")
-        with open(log, "w") as f:           # new inode, same length
-            f.write("xxx\nyyy\n")
-        with pytest.raises(RuntimeError, match="rotated or truncated"):
-            list(r.readBetweenOffsets(start, off))
-        # and a deleted file refuses too, with the gap made explicit
-        os.remove(log)
-        with pytest.raises(RuntimeError, match="gone"):
-            list(r.readBetweenOffsets(start, off))
-
-    def test_rotation_restarts_from_zero(self, tmpdir_path):
-        import os
-        log = os.path.join(tmpdir_path, "r.log")
-        r = self._reader(log)
-        with open(log, "w") as f:
-            f.write("aaa\nbbb\n")
-        rows, off = r.read(r.initialOffset())
-        assert [t for (_, _, t) in rows] == ["aaa", "bbb"]
-        # rotate: replace with a SHORTER file
-        with open(log, "w") as f:
-            f.write("new\n")
-        rows, off2 = r.read(off)
-        assert [t for (_, _, t) in rows] == ["new"]
-        # byte offset reset, line count restarted, generation bumped
-        assert off2[log][:3] == [4, 1, off[log][2] + 1]
-
-    def test_rotation_to_longer_file_detected_by_inode(self, tmpdir_path):
-        # logrotate `create` mode: the old file is renamed away and a NEW
-        # file appears under the tailed name. When the replacement is
-        # LONGER than the recorded offset, a size check alone would
-        # misread it as an append mid-line; the inode change must reopen
-        # it from byte 0.
-        import os
-        log = os.path.join(tmpdir_path, "ino.log")
-        r = self._reader(log)
-        with open(log, "w") as f:
-            f.write("old1\n")
-        rows, off = r.read(r.initialOffset())
-        assert [t for (_, _, t) in rows] == ["old1"]
-        os.rename(log, log + ".1")
-        with open(log, "w") as f:       # new inode, longer than 5 bytes
-            f.write("fresh line one\nfresh line two\n")
-        rows, off2 = r.read(off)
-        assert [(n, t) for (_, n, t) in rows] == [
-            (1, "fresh line one"), (2, "fresh line two")]
-        assert off2[log][2] == off[log][2] + 1
-
-    def test_rotation_batch_replays_identically(self, tmpdir_path):
-        # crash-recovery replay of a batch that crossed a rotation: the
-        # end offset is SMALLER than the start offset, but the generation
-        # bump tells readBetweenOffsets to re-read the new file's bytes
-        # [0, end) instead of silently skipping the file (write → rotate
-        # → append → byte-identical replay).
-        import os
-        log = os.path.join(tmpdir_path, "rr.log")
-        r = self._reader(log)
-        with open(log, "w") as f:
-            f.write("aaa\nbbb\nccc\n")
-        start = r.initialOffset()
-        rows, off = r.read(start)
-        assert len(list(rows)) == 3
-        os.rename(log, log + ".1")
-        with open(log, "w") as f:
-            f.write("n1\n")
-        with open(log, "a") as f:
-            f.write("n2\n")
-        rows, off2 = r.read(off)
-        batch = list(rows)
-        assert [(n, t) for (_, n, t) in batch] == [(1, "n1"), (2, "n2")]
-        assert list(r.readBetweenOffsets(off, off2)) == batch
-        # and a legacy 2-element start entry (pre-rotation checkpoint)
-        # still replays the whole current range
-        legacy = {log: [off[log][0], off[log][1]]}
-        assert list(r.readBetweenOffsets(legacy, off2)) == batch
-
-    def test_read_between_offsets_replays_identically(self, tmpdir_path):
-        import os
-        log = os.path.join(tmpdir_path, "p.log")
-        r = self._reader(log)
-        with open(log, "w") as f:
-            f.write("one\ntwo\n")
-        start = r.initialOffset()
-        rows1, end = r.read(start)
-        batch1 = list(rows1)
-        # deterministic recovery replay of the same [start, end) range
-        assert list(r.readBetweenOffsets(start, end)) == batch1
-        with open(log, "a") as f:
-            f.write("three\n")
-        rows2, end2 = r.read(end)
-        batch2 = list(rows2)
-        assert [t for (_, _, t) in batch2] == ["three"]
-        assert list(r.readBetweenOffsets(end, end2)) == batch2
-
-
-class TestLogTailPipelineComposition:
-    def test_tail_parse_route_accumulates_across_appends(self, spark,
-                                                         tmpdir_path):
-        """End-to-end streaming composition: logtail source → vectorized
-        parse → severity routing → foreachBatch parquet sink. Two
-        append rounds; the accumulated sink must equal a batch parse of
-        the final file."""
-        import os
-        from pyspark.sql import functions as F
-        from log2seq_spark.sources import logfiles
-        from log2seq_spark.functions.udf import with_parsed
-        from log2seq_spark.rules.presets import default_program
-        logfiles.register_tail(spark)
-        log = os.path.join(tmpdir_path, "app.log")
-        out = os.path.join(tmpdir_path, "routed")
-        ckpt = os.path.join(tmpdir_path, "ck")
-
-        def run_once():
-            stream = (spark.readStream.format("logtail")
-                      .option("path", log).load())
-            parsed = with_parsed(stream, default_program(),
-                                 text_col="text", default_year=2023)
-            routed = parsed.select(
-                "line_no",
-                F.coalesce(F.element_at("parsed.words", 3),
-                           F.lit("quarantine")).alias("sink"),
-                F.array_join("parsed.words", " ").alias("words"))
-
-            def sink(batch, bid):
-                batch.write.mode("append").parquet(out)
-
-            q = (routed.writeStream.foreachBatch(sink)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        with open(log, "w") as f:
-            f.write("Jan  1 10:00:00 h a[1]: INFO one\n")
-        run_once()
-        with open(log, "a") as f:
-            f.write("Jan  1 10:00:01 h b[2]: WARN two\n"
-                    "Jan  1 10:00:02 h c[3]: INFO three\n")
-        run_once()
-
-        got = {(r["line_no"], r["sink"], r["words"])
-               for r in spark.read.parquet(out).collect()}
-        assert got == {(1, "INFO", "a 1 INFO one"),
-                       (2, "WARN", "b 2 WARN two"),
-                       (3, "INFO", "c 3 INFO three")}
-
-
 class TestCleanCorpus:
     def test_full_recipe(self, spark):
         from log2seq_spark.operators.corpus import clean_corpus
@@ -2972,67 +1940,60 @@ class TestEpochStateUriPaths:
     hdfs://s3a:// shape), exercised through file:// — it routes through
     the same Hadoop FileSystem code path (fsio) on local disk."""
 
-    def test_streaming_dedup_with_uri_dirs(self, spark, tmpdir_path):
+    def test_dedup_index_with_uri_dirs(self, spark, tmpdir_path, capsys):
+        # `dedup --index-dir` lists its committed gen=N segments
+        # through the same URI branch
         import os
-        from log2seq_spark.streaming import streaming_dedup_with_index
-        inp = os.path.join(tmpdir_path, "uin")
-        out = "file://" + os.path.join(tmpdir_path, "uout")
-        ck = os.path.join(tmpdir_path, "uck")          # checkpoint: Spark's own
-        ix = "file://" + os.path.join(tmpdir_path, "uix")
-        schema = "doc_id long, text string"
-
-        def run(rows):
-            (spark.createDataFrame(rows, schema)
-                  .coalesce(1).write.mode("append").parquet(inp))
-            stream = spark.readStream.schema(schema).parquet(inp)
-            q = (streaming_dedup_with_index(stream, out, ck, ix)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-
-        run([(0, "alpha"), (1, "beta"), (2, "alpha")])
-        run([(10, "alpha"), (11, "gamma")])            # cross-run dup
-        kept = spark.read.parquet(out).collect()
-        assert sorted((r["doc_id"], r["text"]) for r in kept) == \
-            [(0, "alpha"), (1, "beta"), (11, "gamma")]
-        # epoch dirs + params stamp landed under the URI state dir
+        from log2seq_spark.__main__ import main
         local_ix = os.path.join(tmpdir_path, "uix")
-        names = {n for n in os.listdir(local_ix) if not n.startswith(".")}
-        assert "params.json" in names
-        assert any(n.startswith("epoch=") for n in names)
+        schema = "doc_id long, text string"
+        got = []
+        for n, rows in enumerate(([(0, "alpha"), (1, "beta"), (2, "alpha")],
+                                  [(10, "alpha"), (11, "gamma")])):
+            inp = os.path.join(tmpdir_path, f"uin{n}")
+            out = os.path.join(tmpdir_path, f"uout{n}")
+            spark.createDataFrame(rows, schema).write.parquet(inp)
+            assert main(["dedup", "--mode", "exact", "--input", inp,
+                         "--out", out,
+                         "--index-dir", "file://" + local_ix]) == 0
+            got += [(r["doc_id"], r["decision"])
+                    for r in spark.read.parquet(out).collect()]
+        capsys.readouterr()
+        assert sorted(got) == [(0, "keep"), (1, "keep"), (2, "drop_batch"),
+                               (10, "drop_seen"), (11, "keep")]
+        assert sorted(os.listdir(os.path.join(local_ix, "delta"))) == \
+            ["gen=1", "gen=2"]
 
     def test_epoch_params_guard_uri(self, spark, tmpdir_path):
-        import json
         import os
         import pytest
-        from log2seq_spark.streaming.stream import (_check_epoch_params,
-                                                    _committed_epochs)
+        from log2seq_spark.plans.epochs import check_params, committed_ids
         local = os.path.join(tmpdir_path, "ustate")
         d = "file://" + local
-        _check_epoch_params(d, {"a": 1}, spark=spark)
-        _check_epoch_params(d, {"a": 2}, spark=spark)  # no committed epoch
+        check_params(d, {"a": 1}, spark=spark)
+        check_params(d, {"a": 2}, spark=spark)  # no committed epoch
         os.makedirs(os.path.join(local, "epoch=0"))
         open(os.path.join(local, "epoch=0", "_SUCCESS"), "w").close()
-        assert _committed_epochs(d, spark=spark) == [0]
-        _check_epoch_params(d, {"a": 2}, spark=spark)
+        assert committed_ids(d, spark=spark) == [0]
+        check_params(d, {"a": 2}, spark=spark)
         with pytest.raises(ValueError, match="matching parameters"):
-            _check_epoch_params(d, {"a": 3}, spark=spark)
+            check_params(d, {"a": 3}, spark=spark)
         os.remove(os.path.join(local, "params.json"))  # lost stamp
         with pytest.raises(ValueError, match="refusing to restamp"):
-            _check_epoch_params(d, {"a": 2}, spark=spark)
+            check_params(d, {"a": 2}, spark=spark)
 
     def test_prune_epochs_uri(self, spark, tmpdir_path):
         import os
-        from log2seq_spark.streaming.stream import (_committed_epochs,
-                                                    _prune_epochs)
+        from log2seq_spark.plans.epochs import committed_ids, prune
         local = os.path.join(tmpdir_path, "uprune")
         d = "file://" + local
         for e in range(5):
             os.makedirs(os.path.join(local, f"epoch={e}"))
             open(os.path.join(local, f"epoch={e}", "_SUCCESS"),
                  "w").close()
-        _prune_epochs(d, 4, keep_epochs=2, spark=spark)
+        prune(d, 4, keep_epochs=2, spark=spark)
         # horizon = 4-2 = 2: epochs 0,1 pruned; 2,3,4 survive
-        assert _committed_epochs(d, spark=spark) == [2, 3, 4]
+        assert committed_ids(d, spark=spark) == [2, 3, 4]
 
 
 class TestMultiline:
@@ -3124,109 +2085,6 @@ class TestMultiline:
         assert got[3]["message"] == "app[1]: INFO ok"
 
 
-class TestStreamingMultiline:
-    def _run(self, spark, inp, out, ck, rows, flush):
-        import time
-        from log2seq_spark.streaming.stateful import (
-            streaming_assemble_multiline)
-        schema = "path string, line_no long, text string"
-        (spark.createDataFrame(rows, schema)
-              .coalesce(1).write.mode("append").parquet(inp))
-        stream = spark.readStream.schema(schema).parquet(inp)
-        recs = streaming_assemble_multiline(stream, r"^\d{4}-",
-                                            flush=flush)
-        q = (recs.writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        if flush == "1 millisecond":
-            # the pending flush fires within the run; let the query
-            # drain it and self-terminate
-            q.awaitTermination(120)
-        else:
-            # an availableNow drain with a pending idle flush stays
-            # alive until the flush fires (and processAllAvailable
-            # blocks on that pending timeout batch) — poll progress
-            # until this run's rows are committed, then stop (see
-            # streaming_assemble_multiline docstring)
-            import time as _time
-            end = _time.time() + 120
-            while _time.time() < end:
-                done = sum(p["numInputRows"] for p in q.recentProgress)
-                if done >= len(rows):
-                    break
-                _time.sleep(0.5)
-            q.stop()
-            q.awaitTermination(60)
-
-    def test_records_emit_across_batches(self, spark, tmpdir_path):
-        # long flush: records close ONLY when the next start arrives,
-        # across micro-batches and restarts (state checkpointed)
-        import os
-        inp, out, ck = (os.path.join(tmpdir_path, n)
-                        for n in ("mlin", "mlout", "mlck"))
-        self._run(spark, inp, out, ck,
-                  [("f", 1, "2024-01-01 00:00:01 ERROR boom"),
-                   ("f", 2, "  at A(file:1)"),
-                   ("f", 3, "  at B(file:2)"),
-                   ("f", 4, "2024-01-01 00:00:02 WARN slow"),
-                   ("f", 5, "  retrying"),
-                   ("g", 1, "  orphan tail"),
-                   ("g", 2, "  more orphan")], flush="10 minutes")
-        got = {(r["path"], r["line_no"]): r
-               for r in spark.read.parquet(out).collect()}
-        assert set(got) == {("f", 1)}                 # only A closed
-        a = got[("f", 1)]
-        assert a["n_lines"] == 3 and a["has_start"] and not a["flushed"]
-        assert a["text"].splitlines() == [
-            "2024-01-01 00:00:01 ERROR boom", "  at A(file:1)",
-            "  at B(file:2)"]
-
-        # batch twin agrees on the closed record
-        from log2seq_spark.operators.multiline import assemble_multiline
-        batch = assemble_multiline(
-            spark.createDataFrame(
-                [("f", "", 1, "2024-01-01 00:00:01 ERROR boom"),
-                 ("f", "", 2, "  at A(file:1)"),
-                 ("f", "", 3, "  at B(file:2)"),
-                 ("f", "", 4, "2024-01-01 00:00:02 WARN slow")],
-                "path string, member string, line_no long, text string"),
-            r"^\d{4}-").filter("line_no = 1").first()
-        assert batch["text"] == a["text"]
-
-        # restart: a new start on f closes B; a start on g closes the
-        # orphan run (has_start=false)
-        self._run(spark, inp, out, ck,
-                  [("f", 6, "2024-01-01 00:00:03 INFO ok"),
-                   ("g", 3, "2024-01-01 00:00:04 INFO begin")],
-                  flush="10 minutes")
-        got = {(r["path"], r["line_no"]): r
-               for r in spark.read.parquet(out).collect()}
-        assert ("f", 4) in got and ("g", 1) in got
-        b = got[("f", 4)]
-        assert b["n_lines"] == 2 and b["has_start"] and not b["flushed"]
-        assert b["text"].endswith("  retrying")
-        orphan = got[("g", 1)]
-        assert orphan["has_start"] is False and orphan["n_lines"] == 2
-
-    def test_idle_flush_emits_open_record(self, spark, tmpdir_path):
-        # Logstash auto_flush semantics: with a tiny flush interval the
-        # availableNow run itself drains the expired state, emitting
-        # the open records with flushed=true
-        import os
-        inp, out, ck = (os.path.join(tmpdir_path, n)
-                        for n in ("flin", "flout", "flck"))
-        self._run(spark, inp, out, ck,
-                  [("f", 1, "2024-01-01 00:00:01 ERROR boom"),
-                   ("f", 2, "  at A(file:1)"),
-                   ("f", 3, "2024-01-01 00:00:02 WARN slow")],
-                  flush="1 millisecond")
-        got = {(r["path"], r["line_no"]): r
-               for r in spark.read.parquet(out).collect()}
-        assert got[("f", 1)]["flushed"] is False      # closed by next start
-        assert got[("f", 3)]["flushed"] is True       # drained by timeout
-        assert got[("f", 3)]["text"] == "2024-01-01 00:00:02 WARN slow"
-
-
 class TestMultilineProperty:
     def test_matches_python_model_on_random_corpora(self, spark):
         # randomized equivalence vs a sequential per-file model — the
@@ -3275,65 +2133,3 @@ class TestMultilineProperty:
             assert got == {k: tuple(v) for k, v in want.items()}, trial
 
 
-class TestShipperComposition:
-    def test_logtail_multiline_parse_end_to_end(self, spark, tmpdir_path):
-        """The full shipper pipeline the docstrings claim: logtail
-        (byte-offset tail-follow) → streaming_assemble_multiline (open
-        record carried ACROSS an append boundary in the state store) →
-        the vectorized header cascade. The stack-trace record closes
-        with a continuation line that arrived one run later."""
-        import os
-        import time
-        from log2seq_spark.functions.udf import with_parsed
-        from log2seq_spark.rules.presets import default_program
-        from log2seq_spark.sources import logfiles
-        from log2seq_spark.streaming.stateful import (
-            streaming_assemble_multiline)
-        logfiles.register_tail(spark)
-        log = os.path.join(tmpdir_path, "app.log")
-        out = os.path.join(tmpdir_path, "out")
-        ck = os.path.join(tmpdir_path, "ck")
-
-        def run(expect_rows):
-            lines = (spark.readStream.format("logtail")
-                     .option("path", log).load())
-            recs = streaming_assemble_multiline(
-                lines, r"^[A-Z][a-z]{2} ", sep=" | ", flush="10 minutes")
-            parsed = with_parsed(recs, default_program(), text_col="text",
-                                 default_year=2024)
-            q = (parsed.select("path", "line_no", "n_lines",
-                               F.col("parsed.host").alias("host"),
-                               F.col("parsed.words").alias("words"))
-                 .writeStream.format("parquet").option("path", out)
-                 .option("checkpointLocation", ck)
-                 .trigger(availableNow=True).start())
-            end = time.time() + 120
-            while time.time() < end:
-                if sum(p["numInputRows"]
-                       for p in q.recentProgress) >= expect_rows:
-                    break
-                time.sleep(0.5)
-            q.stop()
-            q.awaitTermination(60)
-
-        with open(log, "w") as f:
-            f.write("Jan  1 12:00:00 host1 app[1]: ERROR boom\n"
-                    "  at A(file:1)\n")
-        run(2)
-        assert not os.path.exists(out) or not [
-            fn for fn in os.listdir(out) if fn.endswith(".parquet")] or \
-            spark.read.parquet(out).count() == 0   # record still open
-
-        with open(log, "a") as f:
-            f.write("  at B(file:2)\n"
-                    "Jan  1 12:00:01 host1 app[1]: INFO ok\n")
-        run(2)
-        rows = spark.read.parquet(out).collect()
-        assert len(rows) == 1                      # INFO record still open
-        r = rows[0]
-        assert r["line_no"] == 1 and r["n_lines"] == 3
-        assert r["host"] == "host1"
-        w = list(r["words"])
-        # the cross-run continuation rode into the parsed record
-        assert w[:4] == ["app", "1", "ERROR", "boom"]
-        assert "B" in w and "file" in w and "2" in w

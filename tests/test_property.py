@@ -350,36 +350,6 @@ class TestRandomHeaderProgramParity:
         assert n_lines_ok > 250, n_lines_ok
 
 
-class TestLogTailProperty:
-    def test_batched_tail_reconstructs_file(self, tmpdir_path):
-        """Property: for ANY sequence of appends (arbitrary chunk
-        boundaries, with/without trailing newline), concatenating the
-        emitted batch texts equals the file's complete lines, each
-        exactly once, in order."""
-        import os
-        import random
-        from log2seq_spark.sources.logfiles import LogTailStreamReader
-        rng = random.Random(123)
-        log = os.path.join(tmpdir_path, "t.log")
-        open(log, "w").close()
-        reader = LogTailStreamReader({"path": log})
-        off = reader.initialOffset()
-        emitted = []
-        payload = ""
-        for _ in range(30):
-            chunk = "".join(rng.choice("ab\n") for _ in range(rng.randint(1, 9)))
-            payload += chunk
-            with open(log, "a") as f:
-                f.write(chunk)
-            rows, off = reader.read(off)
-            emitted.extend(t for (_, _, t) in rows)
-        complete = payload[:payload.rfind("\n") + 1] if "\n" in payload else ""
-        assert emitted == complete.split("\n")[:-1]
-        # line numbers must be gapless and 1-based
-        rows, _ = reader.read(reader.initialOffset())
-        assert [n for (_, n, _) in rows] == list(range(1, len(emitted) + 1))
-
-
 class TestCorpusDedupProperty:
     """Randomized equivalence of the corpus-level dedup operators
     against direct pure-Python models: whatever the corpus, the Spark
@@ -479,46 +449,6 @@ class TestCorpusDedupProperty:
                              docs, k=k).collect()}
             assert got == exp, trial
             assert got_clean == exp_clean, trial
-
-
-class TestConversationHashProperty:
-    def test_partition_and_row_order_invariance(self, spark):
-        """Property: the conversation hash depends only on the ordered
-        (role, text) sequence — never on row order or partitioning —
-        and distinct sequences get distinct hashes."""
-        import random
-        from log2seq_spark.operators import dedup
-        rng = random.Random(31)
-        convs = {}
-        for c in range(12):
-            n = rng.randint(1, 6)
-            convs[f"c{c}"] = [
-                (i, rng.choice(["user", "assistant", "tool"]),
-                 rng.choice(["hi", "ok", "run it", "done", None]))
-                for i in range(n)]
-        rows = [(cid, i, r, t)
-                for cid, turns in convs.items() for (i, r, t) in turns]
-        schema = "conv_id string, turn_idx int, role string, text string"
-
-        base = {r["conv_id"]: r["conv_hash"]
-                for r in dedup.conversation_hashes(
-                    spark.createDataFrame(rows, schema)).collect()}
-        for trial in range(3):
-            rng.shuffle(rows)
-            got = {r["conv_id"]: r["conv_hash"]
-                   for r in dedup.conversation_hashes(
-                       spark.createDataFrame(rows, schema)
-                            .repartition(rng.randint(2, 7))).collect()}
-            assert got == base, trial
-        # distinct sequences -> distinct hashes (collision would need
-        # md5 breakage at these sizes)
-        seqs = {}
-        for cid, turns in convs.items():
-            seqs.setdefault(tuple((r, t) for _, r, t in turns), []).append(cid)
-        for group in seqs.values():
-            assert len({base[c] for c in group}) == 1
-        assert len({base[c] for cs in seqs.values() for c in cs[:1]}) \
-            == len(seqs)
 
 
 class TestRandomActionPipelineReferenceParity:

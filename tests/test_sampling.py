@@ -8,6 +8,13 @@ from pyspark.sql import functions as F
 from log2seq_spark.operators import sampling
 
 
+def _sample(df, rate, seed=0):
+    """The hash-sampled rows: ``leakage_safe_split``'s 'val' side with
+    no clusters is membership ``hash_bucket(id) < rate * N_BUCKETS``."""
+    return (sampling.leakage_safe_split(df, val_rate=rate, seed=seed)
+            .filter("split = 'val'"))
+
+
 @pytest.fixture(scope="module")
 def table(spark):
     return spark.range(4000).select(
@@ -19,24 +26,24 @@ def table(spark):
 class TestHashSample:
     def test_rate_and_determinism(self, spark, table):
         a = {r["doc_id"] for r in
-             sampling.hash_sample(table, 0.25).collect()}
+             _sample(table, 0.25).collect()}
         b = {r["doc_id"] for r in
-             sampling.hash_sample(table.repartition(13), 0.25).collect()}
+             _sample(table.repartition(13), 0.25).collect()}
         assert a == b                      # partitioning-independent
         assert 0.2 < len(a) / 4000 < 0.3   # ~25%
 
     def test_seed_changes_membership(self, table):
         a = {r["doc_id"] for r in
-             sampling.hash_sample(table, 0.5, seed=0).collect()}
+             _sample(table, 0.5, seed=0).collect()}
         b = {r["doc_id"] for r in
-             sampling.hash_sample(table, 0.5, seed=1).collect()}
+             _sample(table, 0.5, seed=1).collect()}
         assert a != b
         # overlap ≈ rate², not 0 and not 100%
         assert 0.1 < len(a & b) / 4000 < 0.4
 
     def test_edge_rates(self, table):
-        assert sampling.hash_sample(table, 0.0).count() == 0
-        assert sampling.hash_sample(table, 1.0).count() == 4000
+        assert _sample(table, 0.0).count() == 0
+        assert _sample(table, 1.0).count() == 4000
 
     def test_stratified_rates(self, table):
         out = sampling.stratified_sample(
@@ -56,7 +63,7 @@ def test_rate_unbiased(spark):
     from log2seq_spark.operators import sampling
     t = spark.range(20000).withColumnRenamed("id", "doc_id")
     for rate in (0.1, 0.5):
-        got = sampling.hash_sample(t, rate).count() / 20000
+        got = _sample(t, rate).count() / 20000
         assert abs(got - rate) < 0.005, (rate, got)
 
 
@@ -84,8 +91,8 @@ class TestLeakageSafeSplit:
         val = {r["doc_id"] for r in
                sampling.leakage_safe_split(docs, val_rate=0.2)
                .filter("split = 'val'").collect()}
-        sampled = {r["doc_id"] for r in
-                   sampling.hash_sample(docs, 0.2).collect()}
+        sampled = {r["doc_id"] for r in docs.filter(
+            sampling.hash_bucket(F.col("doc_id")) < 2000).collect()}
         assert val == sampled
 
     def test_rate_approx(self, spark):

@@ -202,23 +202,6 @@ class TestConfirmMode:
                   docs, k=3, min_count=2, confirm=True).collect()}
         assert s0 == s1
 
-    def test_eval_confirm_equals_unconfirmed_and_needs_evalset(
-            self, spark):
-        train = _docs(spark, [
-            ("t1", "a b c d e f g"),
-            ("t2", "x y z a b c d"),
-        ])
-        ev = _docs(spark, [("e1", "a b c d q r s")])
-        base = sorted(map(tuple, sd.eval_contaminated_spans(
-            train, ev, k=3).collect()))
-        conf = sorted(map(tuple, sd.eval_contaminated_spans(
-            train, ev, k=3, confirm=True).collect()))
-        assert base == conf and base  # non-empty: the leak is found
-        with pytest.raises(ValueError, match="confirm"):
-            sd.eval_contaminated_spans(
-                train, index=sd.substr_index(ev, k=3), k=3,
-                confirm=True)
-
 
 class TestPlanShape:
     def test_no_cartesian_and_partial_agg(self, spark):
@@ -292,8 +275,12 @@ class TestAgainstIndex:
                 if r["doc_id"].startswith("z")}
         assert inc == full
 
+        # the batch's own index is a delta segment: history ∪ delta
+        # re-aggregated equals the index of the concatenation
         got_idx = {(r["gh"], r["n_occ"]) for r in
-                   sd.updated_substr_index(idx, batch_df, k=k).collect()}
+                   idx.unionByName(sd.substr_index(batch_df, k=k))
+                      .groupBy("gh").agg(F.sum("n_occ").alias("n_occ"))
+                      .collect()}
         want_idx = {(r["gh"], r["n_occ"]) for r in
                     sd.substr_index(_docs(spark, hist + batch),
                                     k=k).collect()}
@@ -573,51 +560,6 @@ class TestSubstrTurnsCLI:
                    "--turns", "--index-dir",
                    os.path.join(tmpdir_path, "x")])
         assert rc == 2
-
-
-class TestEvalContamination:
-    def test_planted_leak_found_and_redactable(self, spark):
-        leak = "the exact benchmark question text appears here verbatim"
-        evalset = _docs(spark, [("e0", leak), ("e1", "other eval")])
-        train = _docs(spark, [
-            ("t0", f"intro words {leak} outro words"),
-            ("t1", "completely clean training document text"),
-            ("t2", leak),                       # whole doc is the leak
-        ])
-        spans = {(r["doc_id"], r["start"], r["end"])
-                 for r in sd.eval_contaminated_spans(
-                     train, evalset, k=8).collect()}
-        assert spans == {("t0", 3, 10), ("t2", 1, 8)}
-
-        # composition: span redaction via the scrub's spans= seam
-        red = {r["doc_id"]: (r["text"], r["n_dropped_tokens"])
-               for r in sd.scrub_duplicate_spans(
-                   train, k=8,
-                   spans=sd.eval_contaminated_spans(
-                       train, evalset, k=8)).collect()}
-        assert red["t0"] == ("intro words outro words", 8)
-        assert red["t2"] == ("", 8)
-        assert red["t1"][1] == 0
-
-    def test_no_keeper_exemption(self, spark):
-        # even the globally-first occurrence is flagged: eval text
-        # must not survive anywhere in training data
-        leak = "l1 l2 l3"
-        evalset = _docs(spark, [("e", leak)])
-        train = _docs(spark, [("a0", leak)])   # a0 < e wouldn't matter
-        assert sd.eval_contaminated_spans(
-            train, evalset, k=3).count() == 1
-
-    def test_precomputed_index_path(self, spark):
-        evalset = _docs(spark, [("e", "x1 x2 x3 x4")])
-        idx = sd.substr_index(evalset, k=4)
-        train = _docs(spark, [("t", "pre x1 x2 x3 x4 post")])
-        spans = [(r["start"], r["end"]) for r in
-                 sd.eval_contaminated_spans(train, index=idx,
-                                            k=4).collect()]
-        assert spans == [(2, 5)]
-        with pytest.raises(ValueError):
-            sd.eval_contaminated_spans(train, k=4)
 
 
 class TestTopRuns:

@@ -28,8 +28,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from log2seq_spark.__main__ import main  # noqa: E402
+from log2seq_spark.operators.templates import (  # noqa: E402
+    templates_from_profiles)
+from log2seq_spark.plans.epochs import committed_ids  # noqa: E402
 from log2seq_spark.session import get_spark  # noqa: E402
-from log2seq_spark.streaming.stream import current_templates  # noqa: E402
 
 
 def shard_lines(spark, shard: int, n: int):
@@ -75,7 +77,8 @@ def run(n_shards: int = 8, per_shard: int = 1_000_000,
         walls.append(round(time.time() - t0, 2))
         assert rc == 0
         verdicts.append(v)
-        g = current_templates(spark, st).count()
+        g = templates_from_profiles(spark.read.parquet(
+            f"{st}/epoch={committed_ids(st)[-1]}")).count()
         groups.append(g)
         print(f"# shard {s}: {walls[-1]}s templates={g} verdict={v}",
               file=sys.stderr)
