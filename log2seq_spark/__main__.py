@@ -174,6 +174,7 @@ def cmd_parse(args) -> int:
         return 2
 
     from .functions.udf import with_parsed, tokenize_statement_udf
+    from .session import _local_frame
     spark, owns = _cli_spark("log2seq-spark-cli")
 
     nonutf8 = args.encoding.lower().replace("_", "-") not in ("utf-8", "utf8")
@@ -212,8 +213,8 @@ def cmd_parse(args) -> int:
         # spark.read.text would emit the raw compressed bytes as
         # mojibake "lines" — the driver-side lzma path reads it right
         lines = list(_iter_local_lines(files, args.encoding))
-        df = spark.createDataFrame(
-            list(enumerate(lines)), "_ord long, text string")
+        df = _local_frame(spark, list(enumerate(lines)),
+                          "_ord long, text string")
     else:
         # multi-file: spark.read.text lists splits in its own (size/path)
         # order, so the row-order id must be prefixed with the file's

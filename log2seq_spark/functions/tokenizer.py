@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import itertools
 import re
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
@@ -38,40 +38,53 @@ def _re2_compatible(pattern: str) -> bool:
         return False
 
 
+def _ascii_gated(tokens: np.ndarray, re2_ok: bool, re2_fn, py_fn
+                 ) -> np.ndarray:
+    """Boolean per token: ``re2_fn`` (pyarrow RE2 over a StringArray) on
+    the ASCII tokens, ``py_fn`` (Python ``re`` over an object array) on
+    the rest, scattered back into token order. RE2 character classes
+    like \\d are ASCII-only while Python's are unicode-aware, so the two
+    engines agree only on ASCII input; gating per token keeps one
+    non-ASCII token from sending its whole batch to Python."""
+    if len(tokens) == 0:
+        return np.zeros(0, dtype=bool)
+    if not re2_ok:
+        return py_fn(tokens)
+    arr = pa.array(tokens, type=pa.string())
+    ascii_mask = pc.string_is_ascii(arr)
+    ascii = ascii_mask.to_numpy(zero_copy_only=False)
+    if ascii.all():
+        return re2_fn(arr)
+    out = np.empty(len(tokens), dtype=bool)
+    out[ascii] = re2_fn(arr.filter(ascii_mask))
+    out[~ascii] = py_fn(tokens[~ascii])
+    return out
+
+
 class _MaskOps:
     """RE2-backed mask evaluation with exact-semantics fallbacks.
 
-    re.match == RE2 search of ``^(?:p)`` — but only over ASCII input
-    (RE2 character classes like \\d are ASCII-only while Python's are
-    unicode-aware), so each batch is ascii-gated; non-ASCII batches and
-    RE2-incompatible patterns take the pandas path. Measured ~5-9×
-    faster than pandas ``.str`` on the preset workload.
+    re.match == RE2 search of ``^(?:p)``, over ASCII tokens only (see
+    :func:`_ascii_gated`); non-ASCII tokens and RE2-incompatible
+    patterns take the pandas path. Measured ~5-9× faster than pandas
+    ``.str`` on the preset workload.
     """
 
     def __init__(self, patterns: List[str]):
         self.wrapped = ["^(?:" + p + ")" for p in patterns]
         self.re2_ok = all(_re2_compatible(w) for w in self.wrapped)
 
-    @staticmethod
-    def to_arrow(tokens: np.ndarray) -> Optional[pa.StringArray]:
-        arr = pa.array(tokens, type=pa.string())
-        if not pc.all(pc.string_is_ascii(arr)).as_py():
-            return None
-        return arr
+    def _re2(self, arr: pa.StringArray) -> np.ndarray:
+        out = np.zeros(len(arr), dtype=bool)
+        for w in self.wrapped:
+            out |= pc.match_substring_regex(arr, w).to_numpy(
+                zero_copy_only=False)
+        return out
 
     def match_any(self, tokens: np.ndarray,
                   rxs: List[re.Pattern]) -> np.ndarray:
-        if len(tokens) == 0:
-            return np.zeros(0, dtype=bool)
-        if self.re2_ok:
-            arr = self.to_arrow(tokens)
-            if arr is not None:
-                out = np.zeros(len(tokens), dtype=bool)
-                for w in self.wrapped:
-                    out |= pc.match_substring_regex(arr, w).to_numpy(
-                        zero_copy_only=False)
-                return out
-        return _match_any_pandas(tokens, rxs)
+        return _ascii_gated(tokens, self.re2_ok, self._re2,
+                            lambda t: _match_any_pandas(t, rxs))
 
 
 class _ContainsOp:
@@ -82,16 +95,16 @@ class _ContainsOp:
         self.pattern = pattern
         self.re2_ok = _re2_compatible(pattern)
 
-    def run(self, tokens: np.ndarray) -> np.ndarray:
-        if len(tokens) == 0:
-            return np.zeros(0, dtype=bool)
-        if self.re2_ok:
-            arr = _MaskOps.to_arrow(tokens)
-            if arr is not None:
-                return pc.match_substring_regex(arr, self.pattern).to_numpy(
-                    zero_copy_only=False)
+    def _re2(self, arr: pa.StringArray) -> np.ndarray:
+        return pc.match_substring_regex(arr, self.pattern).to_numpy(
+            zero_copy_only=False)
+
+    def _pandas(self, tokens: np.ndarray) -> np.ndarray:
         return pd.Series(tokens, dtype=object).str.contains(
             self.pattern, regex=True).to_numpy(dtype=bool)
+
+    def run(self, tokens: np.ndarray) -> np.ndarray:
+        return _ascii_gated(tokens, self.re2_ok, self._re2, self._pandas)
 
 
 class TokenFrame:

@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udf import _drop_zip_finders
 from .textstats import tokens_expr
 
 
@@ -252,6 +253,7 @@ def bpe_encode(docs: DataFrame, merges: list, text_col: str = "text",
 
     @pandas_udf("array<string>")
     def enc(texts: pd.Series) -> pd.Series:
+        _drop_zip_finders()
         cache: dict = {}
 
         def one(text):

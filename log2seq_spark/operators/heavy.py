@@ -41,6 +41,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.udf import _drop_zip_finders
+
 
 def mg_update(counters: dict, item, cnt: int, k: int) -> dict:
     """One weighted Misra–Gries update: add ``cnt`` of ``item`` to a
@@ -74,6 +76,7 @@ def _mg_partition_summaries(df: DataFrame, col: str, k: int,
     import pandas as pd
 
     def mg(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        _drop_zip_finders()
         counters: dict = {}
         n = 0
         for pdf in batches:
@@ -109,6 +112,7 @@ def _grouped_mg_candidates(df: DataFrame, group_cols: list,
                        for f in fields)
 
     def mg(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        _drop_zip_finders()
         per_group: dict = {}
         for pdf in batches:
             vc = pdf.groupby(group_cols, dropna=True,

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, FloatType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
+from ..functions.udf import _drop_zip_finders
+
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = StructType([
@@ -115,6 +117,7 @@ def extract_features(media: DataFrame, payload_col: str = "payload",
     fallback = _fake_decode if auto else None
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_finders()
         for pdf in batches:
             feats, widths, heights, hashes, sizes = [], [], [], [], []
             for payload, mtype in zip(pdf[payload_col], pdf["media_type"]):

@@ -23,6 +23,8 @@ from typing import List, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udf import _drop_zip_finders
+
 # ordered (kind, pattern, placeholder): URLs first so an address inside
 # a query string is consumed by <url> rather than half-masked later
 SCRUB_RULES: List[Tuple[str, str, str]] = [
@@ -113,6 +115,7 @@ def nfc_normalize_udf():
 
     @pandas_udf("string")
     def _nfc(s):
+        _drop_zip_finders()
         return s.str.normalize("NFC")
 
     return _nfc

@@ -30,6 +30,8 @@ from typing import Iterator, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udf import _drop_zip_finders
+
 MARGIN = 1e-6
 
 
@@ -144,6 +146,7 @@ def brute_pair_candidates(e: DataFrame, threshold: float,
     block = max(16, int(4_000_000 // max(n, 1)))
 
     def gen(batches):
+        _drop_zip_finders()
         import numpy as np
         import pyarrow as pa
         u, fr, rk, id_list = bc.value
@@ -210,6 +213,7 @@ def bucket_pair_candidates(buckets: DataFrame, threshold: float,
     n_carry = len(carry_cols)
 
     def gen(batches):
+        _drop_zip_finders()
         import numpy as np
         import pyarrow as pa
         for batch in batches:
@@ -296,6 +300,7 @@ def cell_score_candidates(embs: DataFrame, centroids: Sequence,
     n_cells = len(centroids)
 
     def assign_gen(batches):
+        _drop_zip_finders()
         import numpy as np
         import pyarrow as pa
         cm, cn = bc.value

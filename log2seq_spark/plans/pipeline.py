@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..rules.presets import default_program
 from ..rules.spec import RuleProgram
+from ..session import _local_frame
 from ..functions.udf import with_parsed
 from ..sources.transcripts import role_dim, tool_dim, severity_dim
 from . import manifest as mf
@@ -228,8 +229,11 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
                               metrics={k: 0 for k in ("n_rows", "n_ok",
                                                       "n_fail", "n_empty",
                                                       "n_tokens")})
-    write_partitioned(spark.createDataFrame(stats)
-                      .select("bucket", "sink", "n_rows")
+    write_partitioned(_local_frame(spark,
+                                   [(r.bucket, r.sink, r.n_rows)
+                                    for r in stats],
+                                   "bucket bigint, sink string, "
+                                   "n_rows bigint")
                       .repartition(8, "bucket"),
                       os.path.join(cfg.out_dir, AGG_SINK), ["bucket"],
                       backend=cfg.sink_backend)

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "log2seq-spark", master: str | None = None,
@@ -47,3 +49,13 @@ def get_spark(app_name: str = "log2seq-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def _local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``ddl`` column order) as a
+    DataFrame. Going through pandas lets the session's Arrow path ship
+    them as a ``LocalTableScan``; a plain list plans as ``Scan
+    ExistingRDD``, whose job starts Python workers to unpickle the
+    rows."""
+    names = StructType.fromDDL(ddl).names
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import _local_frame
+
 BASE_EPOCH = 1704067200  # 2024-01-01T00:00:00Z
 
 ROLES = ["user", "assistant", "system", "tool"]
@@ -138,20 +140,22 @@ def transcripts(spark: SparkSession, n_convs: int, seed: int = 42,
 def role_dim(spark: SparkSession) -> DataFrame:
     rows = [("user", "human", False), ("assistant", "model", True),
             ("system", "control", True), ("tool", "tool", True)]
-    return spark.createDataFrame(rows, "role string, role_group string, is_automated boolean")
+    return _local_frame(spark, rows,
+                        "role string, role_group string, is_automated boolean")
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
     rows = [("bash", "shell", "ops"), ("search", "retrieval", "research"),
             ("editor", "files", "ops"), ("browser", "retrieval", "research"),
             ("none", "none", "chat")]
-    return spark.createDataFrame(rows, "tool string, tool_family string, sink_hint string")
+    return _local_frame(spark, rows,
+                        "tool string, tool_family string, sink_hint string")
 
 
 def severity_dim(spark: SparkSession) -> DataFrame:
     rows = [("DEBUG", "low"), ("INFO", "low"), ("NOTICE", "mid"),
             ("WARN", "mid"), ("ERROR", "high"), ("CRIT", "high")]
-    return spark.createDataFrame(rows, "severity string, severity_band string")
+    return _local_frame(spark, rows, "severity string, severity_band string")
 
 
 def write_transcripts(spark: SparkSession, path: str, n_convs: int,

@@ -104,4 +104,3 @@ class TestAssembleContext:
             assert dig[c]["n_turns"] == len(items)
             assert dig[c]["total_ctx_tokens"] == sum(
                 v[1] for _, v in items)
-

@@ -521,3 +521,42 @@ class TestRandomActionPipelineReferenceParity:
                 if ew:
                     n_nonempty += 1
         assert n_nonempty > 400, n_nonempty
+
+
+# per-token ASCII gate (functions.tokenizer._ascii_gated): RE2 runs on the
+# ASCII tokens of a batch and Python re on the rest. The extra characters
+# are ones the two engines read differently: Arabic-Indic digits (Python
+# \d), NBSP (Python \s), é (Python \w), and an astral-plane emoji.
+_GATE_ALPHABET = ("abcXYZ" + _string.digits + " .:/=-_"
+                  + "".join(map(chr, range(0x660, 0x66A))) + " é🚀")
+_GATE_ACTIONS = default_program().actions + (
+    fix(r"\d+"), remove(r"^\s+$"), fix(r"\w+=\w+"))
+
+
+@settings(max_examples=100, deadline=None)
+@given(stmts=st.lists(st.text(alphabet=_GATE_ALPHABET, max_size=60),
+                      min_size=1, max_size=12))
+def test_ascii_gate_matches_all_pandas_and_line_engine(stmts):
+    from log2seq_spark.functions import BatchParser
+    from log2seq_spark.rules import LineEngine, ParseFailure
+    from log2seq_spark.rules.spec import RuleProgram
+    program = RuleProgram(header_rules=default_program().header_rules,
+                          actions=_GATE_ACTIONS)
+    lines = pd.Series(["Jan  1 00:00:00 host app: " + s for s in stmts])
+    years = pd.Series([2024.0] * len(lines))
+    pandas_only = BatchParser(program)
+    for ops in pandas_only.tokenizer._aux:
+        for op in ops:
+            if op is not None:
+                op.re2_ok = False
+    got = BatchParser(program).parse(lines, years).to_pylist()
+    assert got == pandas_only.parse(lines, years).to_pylist()
+    engine = LineEngine(program, default_year=2024)
+    for row, line in zip(got, lines):
+        try:
+            exp = engine.parse_line(line)
+        except ParseFailure:
+            assert row["rule_id"] == -1, line
+            continue
+        assert row["words"] == exp["words"], line
+        assert row["symbols"] == exp["symbols"], line
