@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log2seq_spark.rules.presets import default_program, default_actions
-from log2seq_spark.functions.udf import with_parsed, tokenize_words_udf
+from log2seq_spark.functions.udf import with_parsed, with_tokens
+from log2seq_spark.session import _local_frame
 from log2seq_spark.operators import (anomaly, asof, dedup, heavy, lm,
                                      scrub, similarity, templates,
                                      textstats)
@@ -185,9 +186,9 @@ def q_tokenize_token_counts(spark, sf_dir):
     # pass, and the exact recount would otherwise each re-run the
     # tokenize UDF over the corpus (measured 0.6s -> 3.4s)
     def _build():
-        docs = _tp(spark, sf_dir, "documents")
-        tok = tokenize_words_udf(default_actions())
-        return docs.select(F.explode(tok(F.col("text"))).alias("token"))
+        docs = _tp(spark, sf_dir, "documents").select("text")
+        return (with_tokens(docs, default_actions(), "text", "_tok")
+                .select(F.explode("_tok.words").alias("token")))
     toks = _feed(spark, ("doc_tokens", sf_dir), _build)
     counts = (toks.groupBy("token").agg(F.count("*").alias("n"))
                   .select(F.lit("count").alias("kind"), "token", "n"))
@@ -213,7 +214,8 @@ SELECT 'heavy' AS kind, token, n FROM (
 
 def q_route_severity_counts(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    dim = spark.createDataFrame(
+    dim = _local_frame(
+        spark,
         [("error", "high"), ("purchase", "mid"), ("signup", "mid"),
          ("click", "low"), ("view", "low")],
         "event_type string, band string")

@@ -173,7 +173,7 @@ def cmd_parse(args) -> int:
               f"for --input-kind {args.input_kind}", file=sys.stderr)
         return 2
 
-    from .functions.udf import with_parsed, tokenize_statement_udf
+    from .functions.udf import with_parsed, with_tokens
     from .session import _local_frame
     spark, owns = _cli_spark("log2seq-spark-cli")
 
@@ -298,12 +298,13 @@ def cmd_parse(args) -> int:
 
     nonempty = F.col("text") != ""
     if args.statement:
-        tok = tokenize_statement_udf(tuple(program.actions))
-        out = (df.filter(nonempty)
-                 .withColumn("_tok", tok(F.col("text")))
-                 .select("_ord", "text", F.col("_tok.words").alias("words"),
-                         F.col("_tok.symbols").alias("symbols")))
-        n_ok = out.count()
+        stmts = df.filter(nonempty).select("_ord", "text")
+        # counted before the mapper: Spark cannot prune a mapInArrow
+        # node, so counting its output would tokenize the input twice
+        n_ok = stmts.count()
+        out = (with_tokens(stmts, program.actions, "text", "_tok")
+               .select("_ord", "text", F.col("_tok.words").alias("words"),
+                       F.col("_tok.symbols").alias("symbols")))
         n_fail = 0
         fail_rows = []
         if args.format == "words":

@@ -1,15 +1,16 @@
 """Batch parse = vectorized header cascade + vectorized tokenizer.
 
-The single entry point the Spark UDF layer wraps: one Arrow batch of raw
-``text`` in, one Arrow struct column (header fields + words/symbols) out.
-Text crosses the JVM↔Python Arrow boundary exactly once (SURVEY.md §4.2
-"UDF fusion"), and the word/symbol ListArrays are built straight from the
-tokenizer's flat output (value array + end offsets).
+What the Spark UDF layer wraps: one Arrow batch of raw ``text`` in, one
+Arrow struct column (header fields + words/symbols) out. Text crosses
+the JVM↔Python Arrow boundary exactly once (SURVEY.md §4.2 "UDF
+fusion"), and the word/symbol ListArrays are built straight from the
+tokenizer's flat output (value array + end offsets) by
+:func:`token_lists`, which statement mode (``udf.with_tokens``) shares.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -35,6 +36,25 @@ def _list_array(flat: np.ndarray, ends: np.ndarray,
     return pa.ListArray.from_arrays(off, values)
 
 
+def token_lists(tokenizer: VectorTokenizer, texts: pd.Series,
+                valid: np.ndarray) -> Tuple[pa.ListArray, pa.ListArray]:
+    """(words, symbols) ListArrays over the whole batch: only the
+    ``valid`` rows are tokenized, the rest get null lists."""
+    n = len(texts)
+    w_ends = np.zeros(n, dtype=np.int64)
+    s_ends = np.zeros(n, dtype=np.int64)
+    if valid.any():
+        wf, we, sf, se = tokenizer.run_flat(texts[valid])
+        w_ends[valid] = we
+        s_ends[valid] = se
+        # carry forward the running offset across invalid gaps
+        w_ends = np.maximum.accumulate(w_ends)
+        s_ends = np.maximum.accumulate(s_ends)
+    else:
+        wf = sf = np.empty(0, dtype=object)
+    return _list_array(wf, w_ends, valid), _list_array(sf, s_ends, valid)
+
+
 class BatchParser:
     """Compiled program, reusable across Arrow batches (built once per
     executor process, see ``udf._parser_for``)."""
@@ -54,31 +74,14 @@ class BatchParser:
         error + one field per attr (``udf.parsed_schema``'s layout).
         Failed / empty rows keep null message/words/symbols."""
         hdr = self.header.run(texts, default_year=default_year)
-        ok = hdr["message"].notna()
-        ok_np = ok.to_numpy(dtype=bool)
-
-        # tokenize only ok rows; scatter flat offsets back to full batch
-        n = len(hdr)
-        w_ends_full = np.zeros(n, dtype=np.int64)
-        s_ends_full = np.zeros(n, dtype=np.int64)
-        if ok_np.any():
-            wf, we, sf, se = self.tokenizer.run_flat(hdr.loc[ok, "message"])
-            w_ends_full[ok_np] = we
-            s_ends_full[ok_np] = se
-            # carry forward the running offset across non-ok gaps
-            w_ends_full = np.maximum.accumulate(w_ends_full)
-            s_ends_full = np.maximum.accumulate(s_ends_full)
-        else:
-            wf = np.empty(0, dtype=object)
-            sf = np.empty(0, dtype=object)
+        ok = hdr["message"].notna().to_numpy(dtype=bool)
 
         arrays = [
             pa.array(hdr["rule_id"].to_numpy(np.int32)),
             pa.array(hdr["ts"], from_pandas=True).cast(pa.timestamp("us")),
             pa.array(hdr["tz_sec"], type=pa.int32(), from_pandas=True),
             pa.array(hdr["message"], type=pa.string(), from_pandas=True),
-            _list_array(wf, w_ends_full, ok_np),
-            _list_array(sf, s_ends_full, ok_np),
+            *token_lists(self.tokenizer, hdr["message"], ok),
             pa.array(hdr["error"], type=pa.string(), from_pandas=True),
         ]
         names = ["rule_id", "ts", "tz_sec", "message", "words", "symbols",

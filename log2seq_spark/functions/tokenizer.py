@@ -270,7 +270,7 @@ def _run_action(tf: TokenFrame, act: _CompiledAction,
 
 def _separate_batch_flat(tf: TokenFrame):
     """Vectorized terminal pass → flat words/symbols arrays + per-row end
-    offsets (the Arrow-native shape; list-of-lists built only on demand).
+    offsets (the Arrow-native shape).
 
     Mirrors the oracle's ``separate``: empty words dropped, adjacent
     separators merged, empty symbols inserted between adjacent words and
@@ -307,17 +307,6 @@ def _separate_batch_flat(tf: TokenFrame):
     return tok[is_word], w_ends, sym_flat, sym_ends
 
 
-def _separate_batch(tf: TokenFrame) -> Tuple[List[list], List[list]]:
-    words_flat, w_ends, sym_flat, sym_ends = _separate_batch_flat(tf)
-    words_list = words_flat.tolist()
-    syms_list = sym_flat.tolist()
-    w_starts = np.concatenate(([0], w_ends[:-1]))
-    s_starts = np.concatenate(([0], sym_ends[:-1]))
-    words = [words_list[a:b] for a, b in zip(w_starts, w_ends)]
-    symbols = [syms_list[a:b] for a, b in zip(s_starts, sym_ends)]
-    return words, symbols
-
-
 class VectorTokenizer:
     """Compiled, batch-vectorized statement tokenizer."""
 
@@ -336,15 +325,6 @@ class VectorTokenizer:
             else:
                 contains = None
             self._aux.append((masks, contains))
-
-    def run(self, statements: pd.Series) -> Tuple[List[list], List[list]]:
-        """Batch of statements → (words lists, symbols lists), null-safe:
-        null statements yield empty words + [''] symbols (callers mask
-        them out)."""
-        tf = TokenFrame.from_statements(statements)
-        for act, (masks, contains) in zip(self.actions, self._aux):
-            tf = _run_action(tf, act, masks, contains)
-        return _separate_batch(tf)
 
     def run_flat(self, statements: pd.Series):
         """Arrow-native output: (words_flat, words_end_offsets,

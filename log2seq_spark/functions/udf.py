@@ -1,12 +1,14 @@
 """Spark bindings of rule programs.
 
-The whole parse (header cascade + tokenize + separate) runs inside one
-``DataFrame.mapInArrow`` call that appends one struct column, so raw
-text crosses the JVM↔Python boundary exactly once, the passthrough
-columns cross untouched (zero-copy slices of the input RecordBatch) and
-downstream field accesses are plain columnar ``select``s. The
-BatchParser is compiled lazily once per executor process and cached by
-program identity (the specs are frozen / hashable dataclasses).
+Both bindings, the whole parse (:func:`with_parsed`: header cascade +
+tokenize + separate) and statement mode (:func:`with_tokens`: tokenize +
+separate), run inside one ``DataFrame.mapInArrow`` call that appends one
+struct column, so raw text crosses the JVM↔Python boundary exactly once,
+the passthrough columns cross untouched (zero-copy slices of the input
+RecordBatch) and downstream field accesses are plain columnar
+``select``s. The BatchParser / VectorTokenizer is compiled lazily once
+per executor process and cached by program identity (the specs are
+frozen / hashable dataclasses).
 
 Every product Python UDF body (here and in ``operators/``) starts with
 :func:`_drop_zip_finders`. PySpark's worker calls
@@ -31,13 +33,12 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
                                StructField, StructType, TimestampNTZType)
 
 from ..rules.spec import RuleProgram
 from .header import attr_fields_of
-from .parse import BatchParser
+from .parse import BatchParser, token_lists
 from .tokenizer import VectorTokenizer
 
 
@@ -66,6 +67,12 @@ def _tokenizer_for(actions: tuple) -> VectorTokenizer:
     return VectorTokenizer(actions)
 
 
+TOKENS_SCHEMA = StructType([
+    StructField("words", ArrayType(StringType())),
+    StructField("symbols", ArrayType(StringType())),
+])
+
+
 def parsed_schema(program: RuleProgram) -> StructType:
     """Static struct schema for a program: universal fields + one typed
     field per attr the program's rules can produce."""
@@ -74,8 +81,7 @@ def parsed_schema(program: RuleProgram) -> StructType:
         StructField("ts", TimestampNTZType()),
         StructField("tz_sec", IntegerType()),
         StructField("message", StringType()),
-        StructField("words", ArrayType(StringType())),
-        StructField("symbols", ArrayType(StringType())),
+        *TOKENS_SCHEMA.fields,
         StructField("error", StringType()),
     ]
     for name, dtype in attr_fields_of(program.header_rules):
@@ -84,41 +90,22 @@ def parsed_schema(program: RuleProgram) -> StructType:
     return StructType(fields)
 
 
-def tokenize_words_udf(actions: tuple):
-    """UDF of (statement) → array<string> words, running only the
-    statement-action pipeline (no header cascade). ``actions`` must be the
-    hashable tuple of Action specs."""
+def _append_struct(df: DataFrame, out_col: str, out_type: StructType,
+                   build) -> DataFrame:
+    """One ``mapInArrow`` appending ``out_col``: ``build(rb)`` turns each
+    input RecordBatch into a StructArray of ``out_type``; the input
+    columns pass through as zero-copy slices."""
+    out_schema = StructType(df.schema.fields
+                            + [StructField(out_col, out_type)])
+    names = list(df.columns) + [out_col]
 
-    @pandas_udf(returnType=ArrayType(StringType()))
-    def _tok(statements: pd.Series) -> pd.Series:
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _drop_zip_finders()
-        words, _ = _tokenizer_for(actions).run(statements)
-        out = pd.Series(words, dtype=object)
-        out[statements.isna().to_numpy()] = None
-        return out
+        for rb in batches:
+            yield pa.RecordBatch.from_arrays(rb.columns + [build(rb)],
+                                             names=names)
 
-    return _tok
-
-
-def tokenize_statement_udf(actions: tuple):
-    """UDF of (statement) → struct<words, symbols> — statement-only
-    parsing, the vectorized counterpart of the reference's
-    ``process_statement`` / CLI ``--statement`` mode
-    (``/root/reference/log2seq/__main__.py:79-80``)."""
-
-    schema = StructType([
-        StructField("words", ArrayType(StringType())),
-        StructField("symbols", ArrayType(StringType())),
-    ])
-
-    @pandas_udf(returnType=schema)
-    def _tok(statements: pd.Series) -> pd.DataFrame:
-        _drop_zip_finders()
-        words, symbols = _tokenizer_for(actions).run(statements)
-        return pd.DataFrame({"words": pd.Series(words, dtype=object),
-                             "symbols": pd.Series(symbols, dtype=object)})
-
-    return _tok
+    return df.mapInArrow(mapper, schema=out_schema)
 
 
 def with_parsed(df: DataFrame, program: RuleProgram, text_col: str = "text",
@@ -134,27 +121,39 @@ def with_parsed(df: DataFrame, program: RuleProgram, text_col: str = "text",
     (the CLI defaults it to the wall-clock year, matching the reference
     CLI's now().year behavior)."""
     needs_year = any(r.year_from_ts for r in program.header_rules)
-    out_schema = StructType(df.schema.fields
-                            + [StructField(out_col, parsed_schema(program))])
-
     cols = list(df.columns)
     text_idx = cols.index(text_col)
     ts_idx = cols.index(ts_col) if (needs_year and ts_col in cols) else None
 
-    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _drop_zip_finders()
-        bp = _parser_for(program)
-        for rb in batches:
-            texts = rb.column(text_idx).to_pandas()
-            years = None
-            if ts_idx is not None:
-                years = pd.Series(
-                    pd.to_datetime(rb.column(ts_idx).to_pandas())
-                      .dt.year.astype("float64").to_numpy())
-            elif needs_year and default_year is not None:
-                years = pd.Series(np.full(len(texts), float(default_year)))
-            yield pa.RecordBatch.from_arrays(
-                rb.columns + [bp.parse(texts, years)],
-                names=cols + [out_col])
+    def parse(rb: pa.RecordBatch) -> pa.StructArray:
+        texts = rb.column(text_idx).to_pandas()
+        years = None
+        if ts_idx is not None:
+            years = pd.Series(
+                pd.to_datetime(rb.column(ts_idx).to_pandas())
+                  .dt.year.astype("float64").to_numpy())
+        elif needs_year and default_year is not None:
+            years = pd.Series(np.full(len(texts), float(default_year)))
+        return _parser_for(program).parse(texts, years)
 
-    return df.mapInArrow(mapper, schema=out_schema)
+    return _append_struct(df, out_col, parsed_schema(program), parse)
+
+
+def with_tokens(df: DataFrame, actions, text_col: str,
+                out_col: str) -> DataFrame:
+    """Attach ``struct<words, symbols>`` (``TOKENS_SCHEMA``) to a
+    DataFrame of statements: statement-only tokenizing with no header
+    cascade, the counterpart of the reference's ``process_statement`` /
+    CLI ``--statement`` mode. NULL text gets null lists; ``""`` gets
+    ``[]`` / ``[""]``."""
+    actions = tuple(actions)
+    text_idx = list(df.columns).index(text_col)
+
+    def tokenize(rb: pa.RecordBatch) -> pa.StructArray:
+        texts = rb.column(text_idx).to_pandas()
+        return pa.StructArray.from_arrays(
+            token_lists(_tokenizer_for(actions), texts,
+                        texts.notna().to_numpy(dtype=bool)),
+            names=TOKENS_SCHEMA.names)
+
+    return _append_struct(df, out_col, TOKENS_SCHEMA, tokenize)

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _local_frame
+
 
 def normalized_text(col):
     """Lowercase, collapse whitespace, strip punctuation — the canonical
@@ -537,12 +539,10 @@ def _duplicate_clusters_impl(e: DataFrame, out_id: str, max_iter: int,
                 # union by MIN id so the root IS the canonical label
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        from pyspark.sql.types import StructField, StructType
-        node_t = e.schema["src"].dataType     # follow the caller's id type
-        rows = [(n, find(n)) for n in parent]
-        return spark.createDataFrame(
-            rows, StructType([StructField(out_id, node_t),
-                              StructField("cluster_id", node_t)]))
+        # follow the caller's id type
+        node_t = e.schema["src"].dataType.simpleString()
+        return _local_frame(spark, [(n, find(n)) for n in parent],
+                            f"`{out_id}` {node_t}, cluster_id {node_t}")
 
     # pre-partitioned on dst, the key every round's neighbor join probes,
     # so only the (much smaller) label table shuffles per round

@@ -24,6 +24,8 @@ from typing import List, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import _local_frame
+
 # a funnel stage is (name, keep_predicate); NULL predicate == fail
 Stage = Tuple[str, Column]
 
@@ -69,7 +71,8 @@ def funnel_census(df: DataFrame, stages: Sequence[Stage]) -> DataFrame:
     counts = ann.groupBy("__funnel_reason").agg(
         F.count("*").alias("n_dropped"))
     spark = df.sparkSession
-    order = spark.createDataFrame(
+    order = _local_frame(
+        spark,
         [(i, name) for i, name in enumerate(n for n, _ in stages)]
         + [(len(stages), "kept")],
         "stage_idx int, stage string")

@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import _local_frame
 from .textstats import tokens_expr
 
 __all__ = ["gram_positions", "duplicate_positions", "duplicate_spans",
@@ -450,8 +451,8 @@ def top_duplicated_runs(docs: DataFrame, text_col: str = "text",
                 .where(F.col("n_occ") >= min_count)
                 .orderBy(F.desc("n_occ"), "gh")
                 .limit(top).collect())
-    stats = spark.createDataFrame(
-        win_rows, "gh bigint, n_occ bigint, n_docs bigint")
+    stats = _local_frame(spark, win_rows,
+                         "gh bigint, n_occ bigint, n_docs bigint")
     if not win_rows:
         return stats.withColumn("example", F.lit(None).cast("string"))
     winners = [r["gh"] for r in win_rows]

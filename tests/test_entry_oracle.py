@@ -3,12 +3,13 @@ oracle_sql() entry matches it on DuckDB (row count + schema + multiset of
 canonicalized values) at sf0.001 — a fast local replica of the driver's
 CORRECTNESS gate."""
 
+import pathlib
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 import __spark_entry__ as entrymod
 from tools.check_oracle import TABLES, rows_multiset
 

@@ -83,11 +83,12 @@ class TestCleanCorpusNormalize:
             [(1, "café shared body text"),
              (2, "café shared body text")],
             "doc_id long, text string").write.parquet(src)
-        env = {**os.environ, "PYTHONPATH": "/root/repo"}
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = {**os.environ, "PYTHONPATH": root}
         r = subprocess.run(
             [sys.executable, "-m", "log2seq_spark", "clean",
              "--input", src, "--out", out, "--normalize",
              "--no-line-dedup", "--quality-min", "-1"],
-            capture_output=True, text=True, env=env, cwd="/root/repo")
+            capture_output=True, text=True, env=env, cwd=root)
         assert r.returncode == 0, r.stderr[-800:]
         assert "# exact_dup: 1" in r.stderr

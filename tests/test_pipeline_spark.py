@@ -194,6 +194,29 @@ class TestArrowParseOracle:
         assert odd_rows[2]["words"] == ["a\x01b\tc\x7f", "d"]
         assert odd_rows[3]["words"] == ["ユーザー", "が", "ログイン"]
 
+    def test_with_tokens_matches_tokenize_statement(self, spark):
+        """Statement mode (mapInArrow) against ``rules.engine``'s
+        ``tokenize_statement``: NULL gives null lists; empty, control
+        character, NBSP and non-ASCII statements give the oracle's
+        words and symbols."""
+        from log2seq_spark.functions.udf import with_tokens
+        from log2seq_spark.rules import compile_actions, tokenize_statement
+        from log2seq_spark.rules.presets import default_actions
+        stmts = [None, "", " ", "a\x0Bb c", "x\x01y\x1f z\x7f",
+                 "a\xa0b c\xa0", "ユーザー が ログイン", "café ١٢٣ 10.0.0.1",
+                 "host 2001:db8::1 (eth0) up."]
+        df = spark.createDataFrame(list(enumerate(stmts)),
+                                   "i long, text string").repartition(3)
+        got = {r["i"]: r["tok"] for r in
+               with_tokens(df, default_actions(), "text", "tok").collect()}
+        assert got[0]["words"] is None and got[0]["symbols"] is None
+        compiled = compile_actions(default_actions())
+        for i, text in enumerate(stmts[1:], start=1):
+            words, symbols = tokenize_statement(compiled, text)
+            assert got[i]["words"] == words, text
+            assert got[i]["symbols"] == symbols, text
+        assert got[1]["words"] == [] and got[1]["symbols"] == [""]
+
 
 class TestSkewHandling:
     def test_salted_repartition_splits_monster_conversation(

@@ -13,8 +13,9 @@ from log2seq_spark.rules import (compile_actions, tokenize_statement,
                                  split, fix, fix_ip, remove, fix_partial,
                                  fix_parenthesis, remove_partial,
                                  conditional_split)
-from log2seq_spark.functions import VectorTokenizer
 from log2seq_spark.rules.presets import default_program
+
+from parsed_frame import tokenize_lists
 
 # statement alphabet: letters, digits, the preset separators, quotes,
 # ip-ish punctuation, unicode extras (exercises the non-ASCII fallback)
@@ -44,8 +45,7 @@ pipelines = st.lists(action_pool, min_size=1, max_size=5)
 @given(lines=st.lists(statements, min_size=1, max_size=8), acts=pipelines)
 def test_vectorized_equals_oracle_and_reconstructs(lines, acts):
     compiled = compile_actions(acts)
-    vt = VectorTokenizer(acts)
-    vw, vs = vt.run(pd.Series(lines, dtype=object))
+    vw, vs = tokenize_lists(acts, lines)
     for i, line in enumerate(lines):
         ew, es = tokenize_statement(compiled, line)
         assert vw[i] == ew, (line, acts)
@@ -505,13 +505,12 @@ class TestRandomActionPipelineReferenceParity:
             ours = [c[0] for c in chosen]
             ref = StatementParser([c[1] for c in chosen])
             compiled = compile_actions(ours)
-            vt = VectorTokenizer(ours)
             lines = ["".join(rng.choice(_ALPHABET)
                              for _ in range(rng.randrange(0, 60)))
                      for _ in range(4)]
             lines += ["10.0.0.1.8080 ok: (a(b)c) \"q w\" %ERR-5 1.5",
                       "x  y:z..  127.0.0.1"]
-            vw, vs = vt.run(pd.Series(lines, dtype=object))
+            vw, vs = tokenize_lists(ours, lines)
             for i, line in enumerate(lines):
                 ew, es = ref.process_line(line)
                 ow, os_ = tokenize_statement(compiled, line)

@@ -5,7 +5,9 @@ brings the fixed per-task cost back. Spark-free: the check is an AST
 scan of ``log2seq_spark/``.
 
 A UDF site is a function passed to ``mapInArrow``/``mapInPandas`` or a
-function decorated with ``pandas_udf``."""
+function decorated with ``pandas_udf``. The parse and tokenize bindings
+in ``log2seq_spark/functions/`` use ``mapInArrow`` only: a
+``pandas_udf`` there would bring back the list-of-lists output path."""
 
 import ast
 import pathlib
@@ -88,7 +90,7 @@ def test_udf_bodies_drop_zip_finders_first():
 def test_scan_finds_the_known_sites():
     # guards the check above against passing on a scan that finds nothing
     sites = [label for label, _ in _udf_sites()]
-    assert len(sites) >= 11, sites
+    assert len(sites) >= 9, sites
     assert {"log2seq_spark/functions/udf.py",
             "log2seq_spark/operators/veccand.py",
             "log2seq_spark/operators/heavy.py",
@@ -96,3 +98,10 @@ def test_scan_finds_the_known_sites():
             "log2seq_spark/operators/bpe.py",
             "log2seq_spark/operators/multimodal.py"} <= {
                 label.split(":", 1)[0] for label in sites}
+
+
+def test_functions_package_has_no_pandas_udf():
+    hits = [str(path.relative_to(ROOT))
+            for path in sorted((PACKAGE / "functions").rglob("*.py"))
+            if "pandas_udf" in path.read_text()]
+    assert not hits, hits

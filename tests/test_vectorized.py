@@ -13,9 +13,9 @@ from log2seq_spark.rules import (LineEngine, ParseFailure, split, fix, fix_ip,
                                  remove_partial, conditional_split,
                                  compile_actions, tokenize_statement)
 from log2seq_spark.rules.presets import default_program, apache_errorlog_program
-from log2seq_spark.functions import VectorTokenizer, BatchParser
+from log2seq_spark.functions import BatchParser
 
-from parsed_frame import parse_frame
+from parsed_frame import parse_frame, tokenize_lists
 
 
 GOLDEN_STATEMENTS = [
@@ -73,8 +73,7 @@ class TestTokenizerEquality:
     def test_golden_lines_all_action_sets(self, ai):
         actions = ACTION_SETS[ai]
         compiled = compile_actions(actions)
-        vt = VectorTokenizer(actions)
-        vw, vs = vt.run(pd.Series(GOLDEN_STATEMENTS, dtype=object))
+        vw, vs = tokenize_lists(actions, GOLDEN_STATEMENTS)
         for i, line in enumerate(GOLDEN_STATEMENTS):
             ew, es = tokenize_statement(compiled, line)
             assert vw[i] == ew, (ai, line)
@@ -87,18 +86,17 @@ class TestTokenizerEquality:
         lines = _random_lines()
         actions = default_program().actions
         compiled = compile_actions(actions)
-        vt = VectorTokenizer(actions)
-        vw, vs = vt.run(pd.Series(lines, dtype=object))
+        vw, vs = tokenize_lists(actions, lines)
         for i, line in enumerate(lines):
             ew, es = tokenize_statement(compiled, line)
             assert vw[i] == ew, line
             assert vs[i] == es, line
 
     def test_null_statement(self):
-        vt = VectorTokenizer(default_program().actions)
-        w, s = vt.run(pd.Series([None, "a b"], dtype=object))
-        assert w[0] == [] and s[0] == [""]
-        assert w[1] == ["a", "b"]
+        w, s = tokenize_lists(default_program().actions, [None, "", "a b"])
+        assert w[0] is None and s[0] is None
+        assert w[1] == [] and s[1] == [""]
+        assert w[2] == ["a", "b"]
 
 
 HEADER_LINES = [

@@ -14,7 +14,10 @@ import subprocess
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
+from log2seq_spark.operators import funnel
 from log2seq_spark.plans import pipeline as pl
 from log2seq_spark.sources.transcripts import (role_dim, severity_dim,
                                                tool_dim, transcripts)
@@ -85,8 +88,18 @@ def _local_only(plan):
 
 
 def test_dims_plan_as_local_table_scans(spark):
-    for dim in (role_dim, tool_dim, severity_dim):
-        assert _local_only(_plan(dim(spark))), dim.__name__
+    frames = {dim.__name__: dim(spark)
+              for dim in (role_dim, tool_dim, severity_dim)}
+    # the other leaf of each of these plans is a Parquet scan or a Range:
+    # the band dim and the stage-order frame are their only driver-side
+    # frames
+    frames["route_severity_counts"] = entry.q_route_severity_counts(
+        spark, entry.SF_SMOKE)
+    docs = spark.range(20).withColumn("n", F.col("id") % 4)
+    frames["funnel_census"] = funnel.funnel_census(
+        docs, [("nonzero", F.col("n") > 0), ("small", F.col("n") < 3)])
+    for name, df in frames.items():
+        assert _local_only(_plan(df)), name
 
 
 def test_sink_count_frame_plans_as_local_table_scan(spark, tmpdir_path,

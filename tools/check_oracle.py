@@ -15,6 +15,7 @@ caught before the round ships).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -108,7 +109,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     from log2seq_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)

@@ -37,8 +37,9 @@ def main():
     only = set(sys.argv[3:]) or None
     start = int(os.environ.get("SEED_SWEEP_START", "1"))
 
-    sys.path.insert(0, "/root/repo")
-    sys.path.insert(0, "/root/repo/tools")
+    tools = os.path.dirname(os.path.abspath(__file__))
+    sys.path.insert(0, os.path.dirname(tools))
+    sys.path.insert(0, tools)
     import __spark_entry__ as entrymod
     from check_oracle import check_dir
     from gen_testdata import gen
