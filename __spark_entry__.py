@@ -32,8 +32,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Like _t but spread across cores: the sf tables are single parquet
     files (one scan partition), which serializes compute-heavy operators
-    locally. On a real cluster the input is already many-partitioned and
-    this repartition is a no-op choice."""
+    locally. ``repartition(n)`` always shuffles, also on input that is
+    already many-partitioned; it runs every time because the scan's
+    partition count does not show whether rows are spread (one large
+    single-row-group file scans as many splits, nearly all empty). A
+    condition on the actual data layout stays open in ROADMAP direction
+    1."""
     return _t(spark, sf_dir, name).repartition(
         spark.sparkContext.defaultParallelism)
 

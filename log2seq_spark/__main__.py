@@ -408,7 +408,6 @@ def cmd_pipeline(args) -> int:
              else spark.read.parquet(args.input))
     cfg = PipelineConfig(out_dir=args.out, n_buckets=args.buckets,
                          program=program, input_id=args.input,
-                         sink_backend=args.sink_backend,
                          tokens_heavy_k=args.tokens_heavy_k)
     res = run_pipeline(spark, turns, cfg, resume=not args.no_resume)
     print(f"lineage={res.lineage_id} processed={res.buckets_processed} "
@@ -1758,10 +1757,6 @@ def main(argv=None) -> int:
                         "a catalog is configured)")
     p.add_argument("--out", required=True)
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--sink-backend", default="parquet",
-                   choices=["parquet", "orc", "iceberg", "auto"],
-                   help="physical sink format for routed/agg outputs "
-                        "(iceberg requires its runtime jar + catalog)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--tokens-heavy-k", type=int, default=None,
                    help="bound the token aggregate: write only tokens "

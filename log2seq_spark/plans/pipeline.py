@@ -26,24 +26,30 @@ Plan shape (all DataFrame ops; the parse UDF is the only Python):
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..rules.presets import default_program
 from ..rules.spec import RuleProgram
 from ..session import _local_frame
 from ..functions.udf import with_parsed
 from ..sources.transcripts import role_dim, tool_dim, severity_dim
 from . import manifest as mf
-from .sink import has_data_files, read_partitioned, write_partitioned
 
 ROUTED = "routed"
 AGG_SINK = "agg_sink_counts"
 AGG_TOKEN = "agg_token_counts"
 AGG_TEMPLATE = "agg_template_counts"
+# per-bucket counters: the stats pass, the manifest records and the
+# result metrics all carry exactly these keys
+COUNTERS = ("n_rows", "n_ok", "n_fail", "n_empty", "n_tokens")
+# skew salt: enriched_turns splits conversations into chunks this long
+TURN_CHUNK = 4096
 
 # variable masking for template ids: IPs / hex runs / numbers → placeholders.
 # Fast-path guard first: every maskable class requires a digit or a colon
@@ -66,13 +72,9 @@ _MASK = ("transform(words, w -> "
 class PipelineConfig:
     out_dir: str
     n_buckets: int = 64
-    turn_chunk: int = 4096       # skew salt: split convs into chunks this long
     partitions: Optional[int] = None
     program: RuleProgram = field(default_factory=default_program)
     input_id: str = "transcripts"
-    # sink backend seam: parquet | iceberg | auto (iceberg when its
-    # runtime jar is present; see plans/sink.py)
-    sink_backend: str = "parquet"
     # token aggregate mode: None writes the full per-(bucket, sink)
     # token counts (a distinct-token-sized shuffle — fine to sf-scale,
     # the 10^12-turn bottleneck); an int k switches AGG_TOKEN to exact
@@ -89,6 +91,42 @@ class PipelineResult:
     metrics: Dict
 
 
+def write_partitioned(df: DataFrame, dest: str,
+                      partition_cols: List[str]) -> None:
+    """Partitioned parquet write to ``dest`` with dynamic partition
+    overwrite: only the partitions present in ``df`` are replaced, which
+    is what heals a crashed run's partial buckets on resume. The mode is
+    set per writer, never on the session conf, so unrelated writes in
+    the same session keep their own semantics."""
+    (df.write.mode("overwrite")
+       .option("partitionOverwriteMode", "dynamic")
+       .partitionBy(*partition_cols)
+       .parquet(dest))
+
+
+def has_data_files(spark: SparkSession, dest: str) -> bool:
+    """True when :func:`write_partitioned` left at least one data file
+    under ``dest``.
+
+    Positive emptiness detection for the pipeline read-back: a
+    partitioned write of zero rows leaves no footers, so schema
+    inference on the read-back raises AnalysisException — but so do
+    genuinely broken states (a foreign-format or corrupt data file). The
+    pipeline must tell these apart by probing, never by treating any
+    analysis failure as "empty". Listing goes through the Hadoop
+    FileSystem API so it works on whatever filesystem the path lives
+    on, not just local disk."""
+    fs, path, _ = fsio.hadoop_fs(spark, dest)
+    if not fs.exists(path):
+        return False
+    it = fs.listFiles(path, True)
+    while it.hasNext():
+        name = it.next().getPath().getName()
+        if not name.startswith(("_", ".")):
+            return True
+    return False
+
+
 def enriched_turns(spark: SparkSession, turns: DataFrame,
                    cfg: PipelineConfig) -> DataFrame:
     """parse + enrich + route; no writes. The returned frame carries
@@ -98,7 +136,7 @@ def enriched_turns(spark: SparkSession, turns: DataFrame,
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)).cast("int"))
     # salted repartition + stable within-partition turn order
     df = (df.repartition(p, "conv_id",
-                         (F.col("turn_idx") / cfg.turn_chunk).cast("int"))
+                         (F.col("turn_idx") / TURN_CHUNK).cast("int"))
             .sortWithinPartitions("conv_id", "turn_idx"))
     df = with_parsed(df, cfg.program, text_col="text", ts_col="ts")
 
@@ -175,28 +213,25 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
     # one-per-dir-per-task instead of tasks × dirs (measured 7× faster).
     # Partial writes from a crashed run are healed by dynamic partition
     # overwrite — set per-writer so session-global conf is untouched.
-    import time
     p = cfg.partitions or spark.sparkContext.defaultParallelism
+    routed_dir = os.path.join(cfg.out_dir, ROUTED)
+    nothing_new = PipelineResult(lineage_id=lineage, buckets_processed=[],
+                                 buckets_skipped=sorted(done),
+                                 metrics=dict.fromkeys(COUNTERS, 0))
     _t0 = time.monotonic()
-    write_partitioned(df.repartition(p, "sink", "bucket"),
-                      os.path.join(cfg.out_dir, ROUTED),
-                      ["sink", "bucket"], backend=cfg.sink_backend)
+    write_partitioned(df.repartition(p, "sink", "bucket"), routed_dir,
+                      ["sink", "bucket"])
     wall_route_s = round(time.monotonic() - _t0, 3)
     _t0 = time.monotonic()
-    routed_dir = os.path.join(cfg.out_dir, ROUTED)
-    if not has_data_files(spark, routed_dir, backend=cfg.sink_backend):
+    if not has_data_files(spark, routed_dir):
         # zero input rows on a fresh out_dir: the partitioned write emits
         # no footers, so the read-back could not infer a schema. Detected
         # POSITIVELY (no data files under the routed dir) — a broad
         # except AnalysisException here would also swallow real failures
-        # (resuming with a mismatched --sink-backend, corrupt footers)
-        # as a silent zero-metric success.
-        return PipelineResult(lineage_id=lineage, buckets_processed=[],
-                              buckets_skipped=sorted(done),
-                              metrics={k: 0 for k in ("n_rows", "n_ok",
-                                                      "n_fail", "n_empty",
-                                                      "n_tokens")})
-    df = (read_partitioned(spark, routed_dir, backend=cfg.sink_backend)
+        # (a foreign-format or corrupt file under routed/) as a silent
+        # zero-metric success.
+        return nothing_new
+    df = (spark.read.parquet(routed_dir)
               .filter(F.col("lineage") == lineage))
     if done:
         df = df.filter(~F.col("bucket").isin(sorted(done)))
@@ -224,19 +259,14 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
     if not stats:
         df.unpersist()
         # everything was already committed (a fully-resumed rerun)
-        return PipelineResult(lineage_id=lineage, buckets_processed=[],
-                              buckets_skipped=sorted(done),
-                              metrics={k: 0 for k in ("n_rows", "n_ok",
-                                                      "n_fail", "n_empty",
-                                                      "n_tokens")})
+        return nothing_new
     write_partitioned(_local_frame(spark,
                                    [(r.bucket, r.sink, r.n_rows)
                                     for r in stats],
                                    "bucket bigint, sink string, "
                                    "n_rows bigint")
                       .repartition(8, "bucket"),
-                      os.path.join(cfg.out_dir, AGG_SINK), ["bucket"],
-                      backend=cfg.sink_backend)
+                      os.path.join(cfg.out_dir, AGG_SINK), ["bucket"])
 
     tok_stream = (df.filter(F.col("_ok"))
                     .select("bucket", "sink",
@@ -254,8 +284,7 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
                              .agg(F.count("*").alias("n")))
     write_partitioned(
         tok_agg.repartition(min(p, cfg.n_buckets), "bucket"),
-        os.path.join(cfg.out_dir, AGG_TOKEN), ["bucket"],
-        backend=cfg.sink_backend)
+        os.path.join(cfg.out_dir, AGG_TOKEN), ["bucket"])
 
     # mask once into a single separator-joined key; the display form
     # (separator → space) is derived on the few aggregated rows
@@ -270,8 +299,7 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
                       F.regexp_replace("template_key", "\x1e", " "))
           .drop("template_key")
           .repartition(8, "bucket"),
-        os.path.join(cfg.out_dir, AGG_TEMPLATE), ["bucket"],
-        backend=cfg.sink_backend)
+        os.path.join(cfg.out_dir, AGG_TEMPLATE), ["bucket"])
 
     df.unpersist()
 
@@ -279,15 +307,13 @@ def run_pipeline(spark: SparkSession, turns: DataFrame,
     by_bucket: Dict[int, Dict] = {}
     for r in stats:
         rec = by_bucket.setdefault(
-            r["bucket"], {"bucket": r["bucket"], "n_rows": 0, "n_ok": 0,
-                          "n_fail": 0, "n_empty": 0, "n_tokens": 0})
-        for k in ("n_rows", "n_ok", "n_fail", "n_empty", "n_tokens"):
+            r["bucket"], {"bucket": r["bucket"], **dict.fromkeys(COUNTERS, 0)})
+        for k in COUNTERS:
             rec[k] += int(r[k])
     records = sorted(by_bucket.values(), key=lambda x: x["bucket"])
     mf.append_bucket_records(cfg.out_dir, lineage, records, spark=spark)
 
-    totals = {k: int(sum(r[k] for r in records))
-              for k in ("n_rows", "n_ok", "n_fail", "n_empty", "n_tokens")}
+    totals = {k: int(sum(r[k] for r in records)) for k in COUNTERS}
     # phase walls: the parse→enrich→route fan-out write vs the aggregate
     # passes — the observability a capacity plan needs (profiled ~55%/20%
     # of wall respectively at sf0.1; parse compute rides inside the write

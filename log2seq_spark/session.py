@@ -9,6 +9,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
+_DRIVER_MEM_CAP = 40 << 30
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a local-mode session: the
+    ``SPARK_GRAFT_DRIVER_MEM`` environment variable when set, else half
+    the host's physical memory capped at 40g. A fixed 40g heap on a
+    smaller host lets one large job grow the JVM until the kernel kills
+    it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    except (ValueError, OSError):
+        half = _DRIVER_MEM_CAP
+    return f"{min(half, _DRIVER_MEM_CAP) >> 20}m"
+
+
 def get_spark(app_name: str = "log2seq-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -38,8 +57,7 @@ def get_spark(app_name: str = "log2seq-spark", master: str | None = None,
          .config("spark.sql.session.timeZone", "UTC")
          # local-mode driver IS the executor: an 8g default heap GC-thrashes
          # at ≥16 busy threads (measured 1.5× wall); size for the box
-         .config("spark.driver.memory",
-                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "40g")))
+         .config("spark.driver.memory", driver_memory()))
     # shuffle/spill dirs on tmpfs when available: models per-node NVMe
     # scratch (the sandbox's virtual disk serializes shuffle I/O)
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):

@@ -56,7 +56,7 @@ def conversations(spark: SparkSession, n_convs: int, seed: int = 42) -> DataFram
     # length hashed with its OWN salt: reusing the bucket selector u for
     # the huge branch pinned it to [9900, 9999], so "huge" conversations
     # were only ever 3899-3998 turns — below the pipeline's 4096
-    # turn_chunk, and the chunk-salted repartition the Zipf tail exists
+    # TURN_CHUNK, and the chunk-salted repartition the Zipf tail exists
     # to exercise never actually split a conversation
     u2 = F.pmod(F.xxhash64("cid", F.lit(seed + 2)), F.lit(10000))
     conv_len = (F.when(u < 9500, 2 + F.pmod(u2, F.lit(19)))

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from log2seq_spark.rules import LineEngine, ParseFailure
 from log2seq_spark.rules.presets import default_program
 from log2seq_spark.sources.transcripts import transcripts
+from log2seq_spark.plans import pipeline as pl
 from log2seq_spark.plans.pipeline import (PipelineConfig, run_pipeline,
                                           enriched_turns)
 from log2seq_spark.plans import manifest as mf
@@ -220,7 +221,7 @@ class TestArrowParseOracle:
 
 class TestSkewHandling:
     def test_salted_repartition_splits_monster_conversation(
-            self, spark, tmpdir_path):
+            self, spark, tmpdir_path, monkeypatch):
         """North-rule skew clause: one pathologically long conversation
         must NOT serialize onto one task. The chunk salt in
         enriched_turns splits it across partitions, bounding the largest
@@ -241,7 +242,8 @@ class TestSkewHandling:
         turns = spark.createDataFrame(pdf)
 
         cfg = PipelineConfig(out_dir=os.path.join(tmpdir_path, "skew"),
-                             n_buckets=8, turn_chunk=1024, partitions=16)
+                             n_buckets=8, partitions=16)
+        monkeypatch.setattr(pl, "TURN_CHUNK", 1024)
         df = enriched_turns(spark, turns, cfg)
         sizes = (df.groupBy(F.spark_partition_id().alias("pid"))
                    .count().toPandas())
@@ -256,10 +258,9 @@ class TestSkewHandling:
         a = {(r["conv_id"], r["turn_idx"]): r["words"]
              for r in df.select("conv_id", "turn_idx", "parsed.words")
                         .collect()}
-        cfg2 = PipelineConfig(out_dir=os.path.join(tmpdir_path, "skew2"),
-                              n_buckets=8, turn_chunk=10**9, partitions=16)
+        monkeypatch.setattr(pl, "TURN_CHUNK", 10**9)
         b = {(r["conv_id"], r["turn_idx"]): r["words"]
-             for r in enriched_turns(spark, turns, cfg2)
+             for r in enriched_turns(spark, turns, cfg)
                         .select("conv_id", "turn_idx", "parsed.words")
                         .collect()}
         assert a == b
@@ -314,23 +315,27 @@ def test_empty_input_pipeline(spark, tmpdir_path):
     assert res.buckets_processed == []
 
 
-def test_backend_mismatch_on_resume_raises(spark, tmpdir_path, turns):
-    """Resuming an out_dir written as parquet with --sink-backend orc is
-    a real failure and must raise — the old broad except AnalysisException
-    around the routed read-back turned it into a silent zero-metric
-    success."""
-    import pytest
+def test_foreign_routed_files_on_resume_raise(spark, tmpdir_path, turns):
+    """Non-parquet data files under routed/ (here: the same rows as ORC,
+    as an older build's orc sink wrote them) are a real failure on a
+    fully resumed rerun and must raise — a broad except
+    AnalysisException around the routed read-back would turn it into a
+    silent zero-metric success."""
+    import shutil
     from log2seq_spark.plans.pipeline import PipelineConfig, run_pipeline
-    cfg = PipelineConfig(out_dir=tmpdir_path + "/out", n_buckets=4,
-                         partitions=4, input_id="mix-test")
+    out = tmpdir_path + "/out"
+    cfg = PipelineConfig(out_dir=out, n_buckets=4, partitions=4,
+                         input_id="mix-test")
     run_pipeline(spark, turns.limit(200), cfg, resume=False)
-    bad = PipelineConfig(out_dir=tmpdir_path + "/out", n_buckets=4,
-                         partitions=4, input_id="mix-test",
-                         sink_backend="orc")
+    routed = os.path.join(out, "routed")
+    (spark.read.parquet(routed).write.partitionBy("sink", "bucket")
+          .orc(tmpdir_path + "/orc"))
+    shutil.rmtree(routed)
+    shutil.move(tmpdir_path + "/orc", routed)
     # fully-resumed rerun: nothing is rewritten, so the routed dir still
-    # holds only parquet data files and the orc read-back must fail
+    # holds only the orc data files and the parquet read-back must fail
     with pytest.raises(Exception):
-        run_pipeline(spark, turns.limit(200), bad, resume=True)
+        run_pipeline(spark, turns.limit(200), cfg, resume=True)
 
 
 class TestShortMessageRouting:
@@ -360,14 +365,14 @@ class TestShortMessageRouting:
 class TestSyntheticSkew:
     def test_zipf_tail_crosses_turn_chunk(self, spark):
         # the 1% huge bucket must actually produce conversations longer
-        # than the pipeline's turn_chunk (4096), or the chunk-salted
+        # than the pipeline's TURN_CHUNK (4096), or the chunk-salted
         # repartition path is never exercised by any fixture or bench —
         # the old generator reused the bucket-selector hash as the
         # length, pinning "huge" to 3899-3998 turns
         from log2seq_spark.sources.transcripts import conversations
         conv = conversations(spark, 1200, seed=42)
         mx = conv.agg(F.max("conv_len")).first()[0]
-        assert mx > PipelineConfig.turn_chunk, mx
+        assert mx > pl.TURN_CHUNK, mx
 
 
 class TestLineageSwitch:

@@ -7,7 +7,11 @@ check is an AST scan.
 
 ``ALLOWED`` lists the functions kept without a product consumer, each
 with its reason. An entry that no longer names a function fails the
-check, so the list cannot go stale."""
+check, so the list cannot go stale.
+
+The same rule holds for ``PipelineConfig``: a field that no product
+caller passes is a knob nobody turns, and belongs in a module
+constant."""
 
 import ast
 import pathlib
@@ -96,3 +100,40 @@ def test_package_functions_have_product_consumers():
 def test_allowlist_names_existing_functions():
     defined = {name for name, _ in _package_functions()}
     assert not sorted(set(ALLOWED) - defined)
+
+
+# every PipelineConfig knob must be set by some product caller; out_dir
+# is the required field, so it is set by every caller
+_CONFIG_CALLERS = [ROOT / "log2seq_spark" / "__main__.py", ROOT / "bench.py",
+                   ROOT / "__spark_entry__.py",
+                   *sorted((ROOT / "perfbench").rglob("*.py"))]
+
+
+def _config_fields() -> list:
+    tree = ast.parse((PACKAGE / "plans" / "pipeline.py").read_text())
+    cls = next(node for node in tree.body
+               if isinstance(node, ast.ClassDef)
+               and node.name == "PipelineConfig")
+    return [node.target.id for node in cls.body
+            if isinstance(node, ast.AnnAssign)]
+
+
+def _config_keywords() -> set:
+    """Keywords product code passes to a ``PipelineConfig(...)`` call."""
+    out = set()
+    for path in _CONFIG_CALLERS:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and (
+                    getattr(node.func, "id", None) == "PipelineConfig"
+                    or getattr(node.func, "attr", None) == "PipelineConfig"):
+                out.update(k.arg for k in node.keywords)
+    return out
+
+
+def test_pipeline_config_fields_have_product_callers():
+    fields = _config_fields()
+    assert "out_dir" in fields
+    unset = sorted(set(fields) - _config_keywords() - {"out_dir"})
+    assert not unset, (
+        f"PipelineConfig fields no product caller sets: {unset}; make "
+        "them module constants or wire them into a caller")

@@ -101,7 +101,7 @@ def sample_run(cores: int) -> None:
 
 
 def orchestrate() -> None:
-    from log2seq_spark.session import get_spark
+    from log2seq_spark.session import driver_memory, get_spark
     from log2seq_spark.sources.transcripts import write_transcripts
     path = _turns_path()
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -125,9 +125,9 @@ def orchestrate() -> None:
             # driver memory MUST be on the submit command line — builder
             # conf is a no-op once the JVM is up (local mode: the driver
             # heap IS the executor heap)
-            mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "40g")
             return [spark_submit, "--master", f"local[{cores}]",
-                    "--driver-memory", mem, "--py-files", zip_path,
+                    "--driver-memory", driver_memory(),
+                    "--py-files", zip_path,
                     os.path.abspath(__file__), "--run", str(cores)]
         return [sys.executable, os.path.abspath(__file__),
                 "--run", str(cores)]
