@@ -90,10 +90,6 @@ def _load_program(args):
         return None
 
 
-# tar archives are checked before the plain .gz/.bz2 suffixes so that
-# "x.tar.gz" is read as a tar, not gzip (reference __main__.py:22-33)
-_TAR_SUFFIXES = (".tar", ".tar.gz", ".tgz", ".tar.bz2", ".tbz2",
-                 ".tar.xz", ".txz")
 
 
 def _iter_local_lines(files, encoding="utf-8"):
@@ -101,6 +97,7 @@ def _iter_local_lines(files, encoding="utf-8"):
     reader can't take directly: stdin (no files given), tar-family
     archives, and non-UTF-8 encodings (reference __main__.py:16-47).
     Plain/gz/bz2 UTF-8 files go through ``spark.read.text`` instead."""
+    from .sources.logfiles import _TAR_SUFFIXES
     if not files:
         for line in sys.stdin:
             yield line.rstrip("\r\n")
@@ -175,6 +172,7 @@ def cmd_parse(args) -> int:
 
     from .functions.udf import with_parsed, with_tokens
     from .session import _local_frame
+    from .sources.logfiles import _TAR_SUFFIXES
     spark, owns = _cli_spark("log2seq-spark-cli")
 
     nonutf8 = args.encoding.lower().replace("_", "-") not in ("utf-8", "utf8")

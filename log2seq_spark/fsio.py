@@ -1,21 +1,16 @@
-"""Scheme-aware driver-side filesystem I/O.
+"""Driver-side filesystem I/O through the Hadoop FileSystem API.
 
 The engine's two driver-side state protocols — the pipeline's
 checkpoint manifest (``plans/manifest.py``) and the epoch-versioned
 operator state (``plans/epochs.py``) — read, list, write, and delete
-small control files next to the Spark-written data.
-On a laptop those paths are local disk; on a real cluster they live on
-whatever shared filesystem the ``spark-submit`` run writes to (HDFS,
-S3, GCS, …), where the driver's ``open``/``os``/``shutil`` cannot
-reach. This module routes such paths through the Hadoop FileSystem API
-on the driver's JVM — the same connector stack (and the same
-authentication) the executors use for the data files, so any path
-Spark can write, the control protocols can manage.
-
-A path participates when it carries a URI scheme (``hdfs://``,
-``s3a://``, ``file://``, …); plain paths stay on the fast local-FS
-code paths in the callers. ``file://`` exercises the Hadoop branch on
-local disk, which is how the tests drive it end-to-end.
+small control files next to the Spark-written data. Every such path,
+plain or scheme-qualified (``hdfs://``, ``s3a://``, ``file://``, …),
+goes through the Hadoop FileSystem API on the driver's JVM: the same
+connector stack, authentication and ``fs.defaultFS`` resolution the
+executors use for the data files. A plain path therefore names the
+same place for the control files as for the data Spark writes beside
+them, on a laptop (the local FS) and on a cluster whose default FS is
+HDFS or a ``viewfs://`` mount table alike.
 """
 
 from __future__ import annotations
@@ -27,15 +22,14 @@ _URI_RE = re.compile(r"^[a-z][a-z0-9+.\-]*://", re.IGNORECASE)
 
 
 def is_uri_path(path: str) -> bool:
-    """True for scheme-qualified paths that must go through the Hadoop
-    FileSystem API rather than the driver's local filesystem."""
+    """True for scheme-qualified paths (``hdfs://``, ``file://``, …)."""
     return _URI_RE.match(path) is not None
 
 
 def resolve_spark(spark, path: str):
     """The session whose Hadoop configuration serves ``path``: the one
-    passed in, else the active session, else a clear error — URI-path
-    state I/O cannot fall back to local ``open``."""
+    passed in, else the active session, else a clear error — state I/O
+    has no driver-local fallback."""
     if spark is not None:
         return spark
     from pyspark.sql import SparkSession
@@ -43,8 +37,8 @@ def resolve_spark(spark, path: str):
     if active is not None:
         return active
     raise ValueError(
-        f"path {path!r} has a filesystem scheme; pass the SparkSession "
-        "(spark=) so I/O can go through the Hadoop FileSystem API")
+        f"no active SparkSession for {path!r}: pass spark= so the I/O "
+        "can go through the Hadoop FileSystem API")
 
 
 def hadoop_fs(spark, path: str):
@@ -59,11 +53,6 @@ def hadoop_fs(spark, path: str):
 def exists(spark, path: str) -> bool:
     fs, jpath, _ = hadoop_fs(spark, path)
     return bool(fs.exists(jpath))
-
-
-def mkdirs(spark, path: str) -> None:
-    fs, jpath, _ = hadoop_fs(spark, path)
-    fs.mkdirs(jpath)
 
 
 def delete(spark, path: str, recursive: bool = True) -> None:
@@ -94,16 +83,32 @@ def read_text(spark, path: str) -> Optional[str]:
         stream.close()
 
 
-def write_text(spark, path: str, text: str, overwrite: bool = True) -> None:
-    """Create/overwrite ``path`` with ``text`` in one stream write.
-    Visibility is whatever the store gives a closed single create —
-    atomic on HDFS and on object stores (PUT), torn-write-possible only
-    on a crashed local-FS driver, which the callers' protocols already
-    tolerate (an unreadable control file is refused loudly, never
-    silently adopted)."""
-    fs, jpath, _ = hadoop_fs(spark, path)
-    out = fs.create(jpath, overwrite)
+def write_text(spark, path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically: write a hidden
+    temporary sibling, then rename it over the target. Readers see the
+    old contents or the new, never a torn file. ``FileContext.rename``
+    with ``OVERWRITE`` does the replace; ``FileSystem.rename`` returns
+    False over an existing file instead. On the checksummed local FS
+    the file is written without a ``.crc`` sidecar, so a control file
+    edited or restored by hand stays readable."""
+    from py4j.java_gateway import is_instance_of
+    fs, jpath, jvm = hadoop_fs(spark, path)
+    hfs = jvm.org.apache.hadoop.fs
+    gateway = spark.sparkContext._gateway
+    tmp = hfs.Path(jpath.getParent(), f".{jpath.getName()}.tmp")
+    raw = fs
+    if is_instance_of(gateway, fs, hfs.ChecksumFileSystem):
+        raw = fs.getRawFileSystem()
+        # the rename keeps a target's sidecar, which would then no
+        # longer match the file
+        raw.delete(fs.getChecksumFile(jpath), False)
+    out = raw.create(tmp, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
+    opts = gateway.new_array(hfs.Options.Rename, 1)
+    opts[0] = hfs.Options.Rename.OVERWRITE
+    fc = hfs.FileContext.getFileContext(
+        fs.getUri(), spark._jsc.hadoopConfiguration())
+    fc.rename(fs.makeQualified(tmp), fs.makeQualified(jpath), opts)

@@ -93,6 +93,21 @@ def _pos(value: Column, seed: Column, m_bits: int) -> Column:
     return F.pmod(F.xxhash64(value, seed), F.lit(m_bits))
 
 
+def _probe(c: Column, words: Column, m_bits: int, k: int) -> Column:
+    """``c`` is non-null and all k bits of its positions are set in the
+    ``words`` array<bigint>. ``forall`` over the seed array keeps
+    ``words`` in the plan ONCE (a per-hash conjunction would serialize
+    a literal array k times into every task)."""
+    def hit(s):
+        p = _pos(c, s, m_bits)
+        w = (p / 64).cast("int") + F.lit(1)          # element_at is 1-based
+        b = (p % 64).cast("int")
+        return F.getbit(F.element_at(words, w), b) == F.lit(1)
+
+    return c.isNotNull() & F.forall(
+        F.array(*[F.lit(i) for i in range(k)]), hit)
+
+
 def build_bloom(df: DataFrame, col: Union[str, Column], *,
                 n_items: Optional[int] = None, fpp: float = 0.01,
                 m_bits: Optional[int] = None,
@@ -155,18 +170,7 @@ def might_contain_expr(col: Union[str, Column], bloom: dict) -> Column:
     # filter probed 500k rows in 116s; this shape: 2.3s, flat in m).
     import numpy as _np
     words = F.lit(_np.asarray(bloom["words"], dtype=_np.int64))
-    seeds = F.array(*[F.lit(i) for i in range(k)])
-
-    # forall over the seed array keeps the word-array literal in the
-    # plan ONCE (a per-hash conjunction would serialize it k times
-    # into every task)
-    def _hit(s):
-        p = _pos(c, s, m_bits)
-        w = (p / 64).cast("int") + F.lit(1)          # element_at is 1-based
-        b = (p % 64).cast("int")
-        return F.getbit(F.element_at(words, w), b) == F.lit(1)
-
-    return c.isNotNull() & F.forall(seeds, _hit)
+    return _probe(c, words, m_bits, k)
 
 
 # above this many WORDS, with_might_contain ships the array as a
@@ -194,24 +198,14 @@ def with_might_contain(df: DataFrame, col: Union[str, Column],
     The probe stays all-JVM either way."""
     if len(bloom["words"]) <= EXPR_MAX_WORDS:
         return df.withColumn(out_col, might_contain_expr(col, bloom))
-    import numpy as _np
     spark = df.sparkSession
     one = spark.createDataFrame(
         [( [int(w) for w in bloom["words"]],)],
         "__bloom_words array<bigint>")
-    c = _col(col)
-    m_bits, k = bloom["m_bits"], bloom["k"]
-    seeds = F.array(*[F.lit(i) for i in range(k)])
-    words = F.col("__bloom_words")
-
-    def _hit(s):
-        p = _pos(c, s, m_bits)
-        w = (p / 64).cast("int") + F.lit(1)
-        b = (p % 64).cast("int")
-        return F.getbit(F.element_at(words, w), b) == F.lit(1)
-
+    probe = _probe(_col(col), F.col("__bloom_words"), bloom["m_bits"],
+                   bloom["k"])
     return (df.crossJoin(F.broadcast(one))
-              .withColumn(out_col, c.isNotNull() & F.forall(seeds, _hit))
+              .withColumn(out_col, probe)
               .drop("__bloom_words"))
 
 

@@ -35,14 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import tokens_expr
+from .textstats import lower_tokens_expr
 
 GRAM_SEP = "\x1f"
 TWO_POW_60 = float(1 << 60)
-
-
-def _lower_tokens(text_col):
-    return F.transform(tokens_expr(text_col), lambda t: F.lower(t))
 
 
 def _md5_60(col):
@@ -55,7 +51,7 @@ def bigram_buckets(docs: DataFrame, *, id_col: str = "doc_id",
     """Exploded ``(id_col, bucket)`` — one row per token bigram, bucket
     in [0, dim); docs with <2 tokens keep one null-bucket row so every
     doc reaches the downstream aggregate."""
-    toks = _lower_tokens(F.col(text_col))
+    toks = lower_tokens_expr(F.col(text_col))
     staged = docs.select(F.col(id_col), toks.alias("_w"))
     n = F.size("_w")
     m = F.greatest(n - 1, F.lit(0))

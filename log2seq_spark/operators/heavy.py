@@ -62,35 +62,25 @@ def mg_update(counters: dict, item, cnt: int, k: int) -> dict:
     return counters
 
 
-def _mg_partition_summaries(df: DataFrame, col: str, k: int,
-                            with_totals: bool = False) -> DataFrame:
+def _mg_partition_summaries(df: DataFrame, col: str, k: int) -> DataFrame:
     """One weighted Misra–Gries summary per input partition: at most
     ``k`` rows of ``(item, w)`` each, where ``w`` is the surviving
     counter (a lower bound on the item's within-partition count); every
     item whose within-partition frequency exceeds (partition rows)/k is
-    guaranteed present. ``with_totals`` appends one ``(NULL, n_i)`` row
-    per partition carrying the partition's processed row count, so a
-    caller can learn the stream total from the same single pass.
-    Map-only: no shuffle is induced; the output is tiny by
-    construction."""
+    guaranteed present. Map-only: no shuffle is induced; the output is
+    tiny by construction."""
     import pandas as pd
 
     def mg(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         _drop_zip_finders()
         counters: dict = {}
-        n = 0
         for pdf in batches:
-            n += len(pdf)
             # value_counts folds the Arrow batch first, so the MG
             # update runs per distinct value per batch, not per row
             for item, cnt in pdf[col].value_counts().items():
                 counters = mg_update(counters, item, int(cnt), k)
-        items = list(counters.keys())
-        ws = list(counters.values())
-        if with_totals:
-            items.append(None)
-            ws.append(n)
-        yield pd.DataFrame({col: items, "w": ws})
+        yield pd.DataFrame({col: list(counters.keys()),
+                            "w": list(counters.values())})
 
     return df.select(col).mapInPandas(mg, schema=f"{col} string, w long")
 

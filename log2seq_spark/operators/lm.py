@@ -45,16 +45,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import tokens_expr
+from .textstats import lower_tokens_expr
 
 BOS = "<s>"
 UNK = "<unk>"
-
-
-def _lower_tokens(text_col):
-    """Lowercased whitespace tokens, empties dropped — the LM's one
-    tokenization (shared shape with textstats.tokens_expr)."""
-    return F.transform(tokens_expr(text_col), lambda t: F.lower(t))
 
 
 def _pairs(docs: DataFrame, id_col: str | None, text_col: str,
@@ -64,7 +58,7 @@ def _pairs(docs: DataFrame, id_col: str | None, text_col: str,
     out-of-vocabulary tokens on BOTH sides map to ``<unk>`` via
     broadcast left joins (``<s>`` is exempt: it is a context marker,
     not a token). ``id_col=None`` (training) skips id carriage."""
-    toks = _lower_tokens(F.col(text_col))
+    toks = lower_tokens_expr(F.col(text_col))
     idc = F.lit(0) if id_col is None else F.col(id_col)
     staged = docs.select(idc.alias("_lm_id"), toks.alias("_w"))
     n = F.size("_w")

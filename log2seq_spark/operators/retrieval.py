@@ -21,11 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import tokens_expr
-
-
-def _lower_tokens(text_col):
-    return F.transform(tokens_expr(text_col), lambda t: F.lower(t))
+from .textstats import lower_tokens_expr
 
 
 def bm25_scores(docs: DataFrame, query: str, *, id_col: str = "doc_id",
@@ -44,7 +40,7 @@ def bm25_scores(docs: DataFrame, query: str, *, id_col: str = "doc_id",
     qterms = sorted({t.lower() for t in query.split() if t})
     if not qterms:
         raise ValueError("bm25: empty query")
-    toks = _lower_tokens(F.col(text_col))
+    toks = lower_tokens_expr(F.col(text_col))
     # stats over the whole corpus: one 1-row aggregate, broadcast back
     staged = docs.select(F.col(id_col).alias("_bm_id"), toks.alias("_w"))
     stats = staged.agg(F.count("*").alias("_n"),

@@ -25,6 +25,12 @@ def tokens_expr(text_col):
     return F.filter(F.split(text_col, r"\s+"), lambda t: t != "")
 
 
+def lower_tokens_expr(text_col):
+    """Lowercased whitespace tokens, empties dropped — the one
+    tokenization of the LM, the classifier and BM25 retrieval."""
+    return F.transform(tokens_expr(text_col), lambda t: F.lower(t))
+
+
 # BPE-flavored segmentation classes (GPT-style: letter runs, digit runs
 # chunked to <=3, symbol runs). Leftmost-first alternation with disjoint
 # classes — identical under Java regex and RE2, so a DuckDB oracle

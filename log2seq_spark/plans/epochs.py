@@ -10,20 +10,19 @@ writer's partial directory has no marker and stays invisible. A run reads the ne
 epoch and writes only the next one, so a rerun after a crash recomputes
 from exactly the state the first attempt saw.
 
-Discovery, pruning and stamping run on the driver: plain paths use
-glob/rmtree/open (local/NFS/FUSE mounts); URI paths (``hdfs://``,
-``s3a://``, ``file://``, …) go through the Hadoop FileSystem API
-(``fsio``), the same connector stack the data writes use.
+Discovery, pruning and stamping run on the driver through the Hadoop
+FileSystem API (``fsio``) for plain and scheme-qualified (``hdfs://``,
+``s3a://``, ``file://``, …) paths alike: the same connector stack and
+``fs.defaultFS`` resolution the parquet writes use, so the driver sees
+exactly the epochs Spark committed. Calls take the SparkSession;
+without ``spark=`` the active session is used.
 """
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 import posixpath
 import re
-import shutil
 
 from .. import fsio
 
@@ -36,22 +35,13 @@ PROFILE_SCHEMA = ("_ntok int, _head string, _pos int, "
 def committed_ids(dir_path: str, key: str = "epoch", spark=None) -> list:
     """Sorted ids N of the ``dir_path/<key>=N`` children whose parquet
     commit marker (``_SUCCESS``) exists."""
+    spark = fsio.resolve_spark(spark, dir_path)
     pattern = re.compile(rf"{re.escape(key)}=(\d+)")
     out = []
-    if fsio.is_uri_path(dir_path):
-        spark = fsio.resolve_spark(spark, dir_path)
-        for name in fsio.list_child_names(spark, dir_path):
-            m = pattern.fullmatch(name)
-            if m and fsio.exists(spark, posixpath.join(
-                    dir_path, name, "_SUCCESS")):
-                out.append(int(m.group(1)))
-        return sorted(out)
-    # glob.escape: a state dir whose PATH contains glob metacharacters
-    # ([, ?, *) would silently match nothing — every run would read an
-    # empty state and the params guard would never engage
-    for p in glob.glob(os.path.join(glob.escape(dir_path), f"{key}=*")):
-        m = pattern.fullmatch(os.path.basename(p))
-        if m and os.path.exists(os.path.join(p, "_SUCCESS")):
+    for name in fsio.list_child_names(spark, dir_path):
+        m = pattern.fullmatch(name)
+        if m and fsio.exists(spark, posixpath.join(
+                dir_path, name, "_SUCCESS")):
             out.append(int(m.group(1)))
     return sorted(out)
 
@@ -60,17 +50,11 @@ def prune(dir_path: str, epoch: int, keep_epochs: int, spark=None) -> None:
     """Drop committed epochs strictly below ``epoch - keep_epochs``
     (clamped to >= 1), so the predecessor ``epoch - 1`` always
     survives: ``keep_epochs=1`` keeps exactly {epoch-1, epoch}."""
+    spark = fsio.resolve_spark(spark, dir_path)
     horizon = epoch - max(int(keep_epochs), 1)
-    uri = fsio.is_uri_path(dir_path)
-    if uri:
-        spark = fsio.resolve_spark(spark, dir_path)
     for e in committed_ids(dir_path, spark=spark):
         if e < horizon:
-            if uri:
-                fsio.delete(spark, posixpath.join(dir_path, f"epoch={e}"))
-            else:
-                shutil.rmtree(os.path.join(dir_path, f"epoch={e}"),
-                              ignore_errors=True)
+            fsio.delete(spark, posixpath.join(dir_path, f"epoch={e}"))
 
 
 def check_params(state_dir: str, params: dict, spark=None) -> None:
@@ -80,49 +64,29 @@ def check_params(state_dir: str, params: dict, spark=None) -> None:
     arrays): the first epoch stamps ``params.json`` beside the epoch
     dirs; every later run must present the identical dict.
 
-    The stamp is written atomically (temp file + ``os.replace`` on
-    local paths; one closed create on URI paths — atomic on HDFS and
-    object-store PUTs) and only ENFORCED once a committed epoch exists
-    — parameters can be freely corrected after a failed first run (no
-    committed epoch → restamp freely). Once committed epochs EXIST, a
-    missing or unreadable stamp is refused rather than restamped:
-    silently stamping the CURRENT run's params would accept exactly the
-    drift the guard exists to reject (atomic writes make a truncated
-    stamp impossible in normal operation, so this state means the file
-    was lost or hand-edited — restore it, or rebuild the state dir)."""
-    if fsio.is_uri_path(state_dir):
-        spark = fsio.resolve_spark(spark, state_dir)
-        fsio.mkdirs(spark, state_dir)
-        path = posixpath.join(state_dir, "params.json")
-        txt = fsio.read_text(spark, path)
-        seen = None
-        if txt is not None:
-            try:
-                seen = json.loads(txt)
-            except ValueError:
-                seen = None   # unreadable stamp
-        if committed_ids(state_dir, spark=spark):
-            _enforce_params(state_dir, seen, params)
-            return
-        fsio.write_text(spark, path, json.dumps(params))
-        return
-
-    os.makedirs(state_dir, exist_ok=True)
-    path = os.path.join(state_dir, "params.json")
+    The stamp is written atomically (``fsio.write_text``: temporary
+    sibling renamed over the target) and only ENFORCED once a committed
+    epoch exists — parameters can be freely corrected after a failed
+    first run (no committed epoch → restamp freely). Once committed
+    epochs EXIST, a missing or unreadable stamp is refused rather than
+    restamped: silently stamping the CURRENT run's params would accept
+    exactly the drift the guard exists to reject (atomic writes make a
+    truncated stamp impossible in normal operation, so this state means
+    the file was lost or hand-edited — restore it, or rebuild the state
+    dir)."""
+    spark = fsio.resolve_spark(spark, state_dir)
+    path = posixpath.join(state_dir, "params.json")
+    txt = fsio.read_text(spark, path)
     seen = None
-    if os.path.exists(path):
+    if txt is not None:
         try:
-            with open(path) as f:
-                seen = json.load(f)
+            seen = json.loads(txt)
         except ValueError:
             seen = None   # unreadable stamp
-    if committed_ids(state_dir):
+    if committed_ids(state_dir, spark=spark):
         _enforce_params(state_dir, seen, params)
         return
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f)
-    os.replace(tmp, path)
+    fsio.write_text(spark, path, json.dumps(params))
 
 
 def _enforce_params(state_dir: str, seen, params: dict) -> None:

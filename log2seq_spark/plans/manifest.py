@@ -9,39 +9,28 @@ partially-written bucket partitions from a crashed run are repaired by
 dynamic partition overwrite on the rerun (north rule: "resumable from
 checkpoint with per-partition lineage + metrics").
 
-Two physical layouts behind one API, selected by the path:
+One layout, one I/O path: a run's commit is ONE file
+``<out_dir>/manifest/<lineage>-<first bucket:06d>.jsonl`` holding one
+JSON line per bucket record, written atomically through the Hadoop
+FileSystem API (``fsio.write_text``) for plain and scheme-qualified
+out_dirs alike, so the manifest lands where Spark wrote the data. The
+commits of one lineage cover disjoint bucket sets (resume skips
+committed buckets; a fresh run wipes the manifest), so the first bucket
+names a commit uniquely and re-committing it is idempotent.
 
-* **local path** (no URI scheme): one JSON line per record appended to
-  ``manifest.jsonl`` — simple, greppable, atomic enough on a POSIX
-  driver disk.
-* **URI path** (``hdfs://``, ``s3a://``, ``file://``, …): one marker
-  FILE per record under ``<out_dir>/manifest/`` named
-  ``<lineage>-<bucket>.json``, written through the Hadoop FileSystem
-  API. Object stores have no reliable append, so the jsonl protocol
-  cannot commit there; per-record files make each bucket commit an
-  independent, atomically-visible object, and resume is a directory
-  listing. This is the layout a real cluster run (out_dir on shared
-  storage) uses; the ``file://`` scheme exercises the same code path
-  on local disk in tests.
-
-URI-path calls must pass the SparkSession (the Hadoop conf lives on
-it); local-path calls never need it.
+Calls take the SparkSession (the Hadoop conf lives on it); without
+``spark=`` the active session is used.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 import posixpath
-import re
-import shutil
 from typing import Dict, Iterable, List, Set
 
 from .. import fsio
-from ..fsio import is_uri_path
 
-MANIFEST_NAME = "manifest.jsonl"
 MANIFEST_DIR = "manifest"
 
 # routed-sink schema version: bumped when the routed parquet layout
@@ -56,92 +45,39 @@ def lineage_id(program, input_id: str, n_buckets: int) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-def manifest_path(out_dir: str) -> str:
-    if is_uri_path(out_dir):
-        return posixpath.join(out_dir, MANIFEST_DIR)
-    return os.path.join(out_dir, MANIFEST_NAME)
-
-
-def _record_name(lineage: str, bucket: int) -> str:
-    return f"{lineage}-{int(bucket):06d}.json"
-
-
-def _manifest_spark(spark, out_dir: str):
-    try:
-        return fsio.resolve_spark(spark, out_dir)
-    except ValueError:
-        raise ValueError(
-            f"manifest path {out_dir!r} has a filesystem scheme; pass "
-            "the SparkSession (spark=) so manifest I/O can go through "
-            "the Hadoop FileSystem API") from None
+def _read_commits(spark, out_dir: str, prefix: str = "") -> List[Dict]:
+    """Records of every commit file under ``manifest/`` whose name
+    starts with ``prefix``, in file-name order."""
+    mdir = posixpath.join(out_dir, MANIFEST_DIR)
+    recs: List[Dict] = []
+    for name in sorted(fsio.list_child_names(spark, mdir)):
+        if name.startswith(prefix) and name.endswith(".jsonl"):
+            txt = fsio.read_text(spark, posixpath.join(mdir, name)) or ""
+            recs += [json.loads(x) for x in txt.splitlines() if x.strip()]
+    return recs
 
 
 def completed_buckets(out_dir: str, lineage: str,
                       spark=None) -> Set[int]:
-    done: Set[int] = set()
-    if is_uri_path(out_dir):
-        spark = _manifest_spark(spark, out_dir)
-        pat = re.compile(re.escape(lineage) + r"-(\d+)\.json$")
-        for name in fsio.list_child_names(spark, manifest_path(out_dir)):
-            m = pat.fullmatch(name)
-            if m:
-                done.add(int(m.group(1)))
-        return done
-    path = manifest_path(out_dir)
-    if not os.path.exists(path):
-        return done
-    with open(path) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            rec = json.loads(line)
-            if rec.get("lineage_id") == lineage:
-                done.add(int(rec["bucket"]))
-    return done
+    spark = fsio.resolve_spark(spark, out_dir)
+    return {int(r["bucket"])
+            for r in _read_commits(spark, out_dir, lineage + "-")}
 
 
 def append_bucket_records(out_dir: str, lineage: str,
                           records: List[Dict], spark=None) -> None:
-    if is_uri_path(out_dir):
-        spark = _manifest_spark(spark, out_dir)
-        mdir = manifest_path(out_dir)
-        fsio.mkdirs(spark, mdir)
-        for rec in records:
-            rec = dict(rec)
-            rec["lineage_id"] = lineage
-            # overwrite: re-committing the same bucket (a rerun that
-            # reprocessed it) is idempotent, not an error
-            fsio.write_text(
-                spark,
-                posixpath.join(mdir, _record_name(lineage, rec["bucket"])),
-                json.dumps(rec, sort_keys=True) + "\n")
+    if not records:
         return
-    os.makedirs(out_dir, exist_ok=True)
-    with open(manifest_path(out_dir), "a") as fh:
-        for rec in records:
-            rec = dict(rec)
-            rec["lineage_id"] = lineage
-            fh.write(json.dumps(rec, sort_keys=True) + "\n")
+    spark = fsio.resolve_spark(spark, out_dir)
+    first = min(int(r["bucket"]) for r in records)
+    body = "".join(json.dumps({**r, "lineage_id": lineage},
+                              sort_keys=True) + "\n" for r in records)
+    fsio.write_text(spark, posixpath.join(
+        out_dir, MANIFEST_DIR, f"{lineage}-{first:06d}.jsonl"), body)
 
 
 def read_manifest(out_dir: str, spark=None) -> List[Dict]:
-    if is_uri_path(out_dir):
-        spark = _manifest_spark(spark, out_dir)
-        mdir = manifest_path(out_dir)
-        recs: List[Dict] = []
-        for name in sorted(fsio.list_child_names(spark, mdir)):
-            if not name.endswith(".json"):
-                continue
-            txt = fsio.read_text(spark, posixpath.join(mdir, name))
-            if txt is not None:
-                recs.append(json.loads(txt))
-        return recs
-    path = manifest_path(out_dir)
-    if not os.path.exists(path):
-        return []
-    with open(path) as fh:
-        return [json.loads(x) for x in fh if x.strip()]
+    return _read_commits(fsio.resolve_spark(spark, out_dir), out_dir)
 
 
 def wipe_outputs(out_dir: str, subdirs: Iterable[str],
@@ -149,15 +85,9 @@ def wipe_outputs(out_dir: str, subdirs: Iterable[str],
     """Remove the pipeline's data subdirs AND the manifest — the
     lineage-switch reset (see run_pipeline: keeping another lineage's
     manifest records while deleting its data would make a later run of
-    that lineage "resume" against output that no longer exists)."""
-    if is_uri_path(out_dir):
-        spark = _manifest_spark(spark, out_dir)
-        for sub in list(subdirs) + [MANIFEST_DIR]:
-            fsio.delete(spark, posixpath.join(out_dir, sub))
-        return
-    for sub in subdirs:
-        shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
-    try:
-        os.remove(os.path.join(out_dir, MANIFEST_NAME))
-    except OSError:
-        pass
+    that lineage "resume" against output that no longer exists). An
+    out_dir from the older layout also loses its appended
+    ``manifest.jsonl``, which no reader looks at any more."""
+    spark = fsio.resolve_spark(spark, out_dir)
+    for sub in [*subdirs, MANIFEST_DIR, "manifest.jsonl"]:
+        fsio.delete(spark, posixpath.join(out_dir, sub))

@@ -43,6 +43,8 @@ from typing import Iterator, Sequence
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     InputPartition)
 
+# tar archives are checked before the plain .gz/.bz2 suffixes so that
+# "x.tar.gz" is read as a tar, not gzip (reference __main__.py:22-33)
 _TAR_SUFFIXES = (".tar", ".tar.gz", ".tgz", ".tar.bz2", ".tbz2",
                  ".tar.xz", ".txz")
 

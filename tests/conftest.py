@@ -1,3 +1,4 @@
+import os
 import shutil
 import tempfile
 
@@ -19,3 +20,15 @@ def tmpdir_path():
     d = tempfile.mkdtemp(prefix="l2s_test_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def path_forms():
+    """``forms(root)`` → ``[(path, local dir), …]``: one plain path and
+    one ``file://`` URI under ``root``. Driver-side state I/O goes
+    through the Hadoop FileSystem API for both, so state tests run over
+    each."""
+    def forms(root):
+        plain, uri = os.path.join(root, "plain"), os.path.join(root, "uri")
+        return [(plain, plain), ("file://" + uri, uri)]
+    return forms

@@ -157,8 +157,8 @@ class TestMgSummaries:
         df = (spark.createDataFrame([(t,) for t in rows], "token string")
                    .repartition(6))
         k = 10
-        # partition summaries folded with mg_update — the streaming
-        # state update's composition (streaming_heavy_hitters)
+        # partition summaries folded with mg_update: the weighted
+        # merge of per-partition summaries stays a valid MG summary
         summary: dict = {}
         for r in heavy._mg_partition_summaries(df, "token", k).collect():
             summary = heavy.mg_update(summary, r["token"], r["w"], k)
@@ -173,14 +173,3 @@ class TestMgSummaries:
         for item, c in true.items():
             if c > n / (k + 1):
                 assert item in summary
-
-    def test_partition_totals_ride_along(self, spark):
-        rows = ["a"] * 7 + ["b"] * 5
-        df = (spark.createDataFrame([(t,) for t in rows], "token string")
-                   .repartition(3))
-        out = heavy._mg_partition_summaries(df, "token", 4,
-                                            with_totals=True).collect()
-        totals = [r["w"] for r in out if r["token"] is None]
-        assert len(totals) == 3 and sum(totals) == 12
-
-

@@ -1150,64 +1150,81 @@ class TestMultimodal:
         assert len(out) == 4   # fake fallback without PIL
 
 
+def _commit_epoch(local, name):
+    import os
+    os.makedirs(os.path.join(local, name))
+    open(os.path.join(local, name, "_SUCCESS"), "w").close()
+
+
 class TestEpochState:
     """The epoch-state protocol (``plans/epochs.py``) behind
     ``templates --state-dir`` / ``rare --state-dir`` and the dedup
-    index's committed-segment listing, on plain local paths."""
+    index's committed-segment listing, over a plain path and a
+    ``file://`` path."""
 
-    def test_epoch_params_guard_recovery(self, tmpdir_path):
+    def test_epoch_params_guard_recovery(self, spark, tmpdir_path,
+                                         path_forms):
         # enforcement starts only once an epoch has COMMITTED (a failed
         # first run must not lock in its parameters); once epochs
         # exist, a missing/corrupt stamp REFUSES rather than silently
         # restamping with the current run's params — that would accept
         # exactly the drift the guard exists to reject
         import os
-        from log2seq_spark.plans.epochs import check_params
-        d = os.path.join(tmpdir_path, "gstate")
-        check_params(d, {"a": 1})
-        check_params(d, {"a": 2})          # no committed epoch yet
-        # corrupt stamp before any commit: restamp freely
-        with open(os.path.join(d, "params.json"), "w") as f:
-            f.write("{trunc")
-        check_params(d, {"a": 2})
-        os.makedirs(os.path.join(d, "epoch=0"))
-        open(os.path.join(d, "epoch=0", "_SUCCESS"), "w").close()
-        check_params(d, {"a": 2})
-        with pytest.raises(ValueError, match="matching parameters"):
-            check_params(d, {"a": 3})
-        with open(os.path.join(d, "params.json"), "w") as f:
-            f.write("{trunc")                      # lost/corrupt stamp
-        with pytest.raises(ValueError, match="refusing to restamp"):
-            check_params(d, {"a": 2})
-        os.remove(os.path.join(d, "params.json"))  # lost stamp
-        with pytest.raises(ValueError, match="refusing to restamp"):
-            check_params(d, {"a": 2})
+        from log2seq_spark.plans.epochs import check_params, committed_ids
+        for d, local in path_forms(tmpdir_path):
+            stamp = os.path.join(local, "params.json")
+            check_params(d, {"a": 1}, spark=spark)
+            check_params(d, {"a": 2}, spark=spark)  # no committed epoch
+            # corrupt stamp before any commit: restamp freely
+            with open(stamp, "w") as f:
+                f.write("{trunc")
+            check_params(d, {"a": 2}, spark=spark)
+            _commit_epoch(local, "epoch=0")
+            assert committed_ids(d, spark=spark) == [0]
+            check_params(d, {"a": 2}, spark=spark)
+            with pytest.raises(ValueError, match="matching parameters"):
+                check_params(d, {"a": 3}, spark=spark)
+            with open(stamp, "w") as f:
+                f.write("{trunc")                  # lost/corrupt stamp
+            with pytest.raises(ValueError, match="refusing to restamp"):
+                check_params(d, {"a": 2}, spark=spark)
+            os.remove(stamp)                       # lost stamp
+            with pytest.raises(ValueError, match="refusing to restamp"):
+                check_params(d, {"a": 2}, spark=spark)
 
-    def test_committed_ids_glob_metachars(self, tmpdir_path):
+    def test_committed_ids_glob_metachars(self, spark, tmpdir_path,
+                                          path_forms):
         # a state dir whose PATH contains glob metacharacters must not
         # silently read as empty (every run would see an empty state
         # and the params guard would never engage)
         import os
         from log2seq_spark.plans.epochs import committed_ids
-        d = os.path.join(tmpdir_path, "run[2024]", "idx")
-        for key, n in (("epoch", 3), ("gen", 5)):
-            os.makedirs(os.path.join(d, f"{key}={n}"))
-            open(os.path.join(d, f"{key}={n}", "_SUCCESS"), "w").close()
-        os.makedirs(os.path.join(d, "epoch=4"))      # uncommitted
-        assert committed_ids(d) == [3]
-        assert committed_ids(d, "gen") == [5]
+        for d, local in path_forms(
+                os.path.join(tmpdir_path, "run[2024]")):
+            for name in ("epoch=3", "gen=5"):
+                _commit_epoch(local, name)
+            os.makedirs(os.path.join(local, "epoch=4"))  # uncommitted
+            assert committed_ids(d, spark=spark) == [3]
+            assert committed_ids(d, "gen", spark=spark) == [5]
 
-    def test_prune_keeps_predecessor(self, tmpdir_path):
+    def test_prune_keeps_predecessor(self, spark, tmpdir_path, path_forms):
         # at keep_epochs=1 the predecessor epoch always survives a
-        # commit
+        # commit; at keep_epochs=2 the horizon is epoch-2
         import os
         from log2seq_spark.plans.epochs import committed_ids, prune
-        d = os.path.join(tmpdir_path, "pstate")
-        for e in range(3):
-            os.makedirs(os.path.join(d, f"epoch={e}"))
-            open(os.path.join(d, f"epoch={e}", "_SUCCESS"), "w").close()
-            prune(d, e, keep_epochs=1)
-        assert committed_ids(d) == [1, 2]
+        for d, local in path_forms(tmpdir_path):
+            for e in range(3):
+                _commit_epoch(local, f"epoch={e}")
+                prune(d, e, keep_epochs=1, spark=spark)
+            assert committed_ids(d, spark=spark) == [1, 2]
+            for e in range(3, 5):
+                _commit_epoch(local, f"epoch={e}")
+            prune(d, 4, keep_epochs=2, spark=spark)
+            # horizon = 4-2 = 2: epoch 1 pruned; 2,3,4 survive
+            assert committed_ids(d, spark=spark) == [2, 3, 4]
+            assert sorted(n for n in os.listdir(local)
+                          if n.startswith("epoch=")) == \
+                ["epoch=2", "epoch=3", "epoch=4"]
 
 
 class TestDuplicateClusters:
@@ -1936,13 +1953,13 @@ class TestCleanCorpus:
 
 
 class TestEpochStateUriPaths:
-    """The epoch-state protocol on scheme-qualified state dirs (the
-    hdfs://s3a:// shape), exercised through file:// — it routes through
-    the same Hadoop FileSystem code path (fsio) on local disk."""
+    """The epoch-state protocol behind a CLI consumer given a
+    scheme-qualified state dir (the hdfs:// or s3a:// shape), exercised
+    through file://."""
 
     def test_dedup_index_with_uri_dirs(self, spark, tmpdir_path, capsys):
         # `dedup --index-dir` lists its committed gen=N segments
-        # through the same URI branch
+        # through the Hadoop FileSystem API
         import os
         from log2seq_spark.__main__ import main
         local_ix = os.path.join(tmpdir_path, "uix")
@@ -1963,37 +1980,6 @@ class TestEpochStateUriPaths:
                                (10, "drop_seen"), (11, "keep")]
         assert sorted(os.listdir(os.path.join(local_ix, "delta"))) == \
             ["gen=1", "gen=2"]
-
-    def test_epoch_params_guard_uri(self, spark, tmpdir_path):
-        import os
-        import pytest
-        from log2seq_spark.plans.epochs import check_params, committed_ids
-        local = os.path.join(tmpdir_path, "ustate")
-        d = "file://" + local
-        check_params(d, {"a": 1}, spark=spark)
-        check_params(d, {"a": 2}, spark=spark)  # no committed epoch
-        os.makedirs(os.path.join(local, "epoch=0"))
-        open(os.path.join(local, "epoch=0", "_SUCCESS"), "w").close()
-        assert committed_ids(d, spark=spark) == [0]
-        check_params(d, {"a": 2}, spark=spark)
-        with pytest.raises(ValueError, match="matching parameters"):
-            check_params(d, {"a": 3}, spark=spark)
-        os.remove(os.path.join(local, "params.json"))  # lost stamp
-        with pytest.raises(ValueError, match="refusing to restamp"):
-            check_params(d, {"a": 2}, spark=spark)
-
-    def test_prune_epochs_uri(self, spark, tmpdir_path):
-        import os
-        from log2seq_spark.plans.epochs import committed_ids, prune
-        local = os.path.join(tmpdir_path, "uprune")
-        d = "file://" + local
-        for e in range(5):
-            os.makedirs(os.path.join(local, f"epoch={e}"))
-            open(os.path.join(local, f"epoch={e}", "_SUCCESS"),
-                 "w").close()
-        prune(d, 4, keep_epochs=2, spark=spark)
-        # horizon = 4-2 = 2: epochs 0,1 pruned; 2,3,4 survive
-        assert committed_ids(d, spark=spark) == [2, 3, 4]
 
 
 class TestMultiline:

@@ -3,7 +3,9 @@ transcripts: per-turn byte-exact equality vs the pure oracle, routing /
 aggregate counts vs an independent oracle computation, and the
 checkpoint-manifest resume contract."""
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -397,81 +399,119 @@ class TestLineageSwitch:
         assert r1b.metrics["n_rows"] == r1.metrics["n_rows"]
 
 
+def _commit_files(local):
+    """Visible names under ``<out_dir>/manifest/``."""
+    mdir = os.path.join(local, "manifest")
+    return sorted(n for n in os.listdir(mdir) if not n.startswith("."))
+
+
+def _layout(local):
+    """Directory tree of an out_dir, without data file names (those
+    carry a per-write uuid) or hidden files; manifest files are named."""
+    out = set()
+    for root, dirs, files in os.walk(local):
+        rel = os.path.relpath(root, local)
+        out.add(rel)
+        if rel == "manifest":
+            out.update(os.path.join(rel, f) for f in files
+                       if not f.startswith("."))
+    return out
+
+
 class TestUriPathManifest:
-    """The resume protocol on scheme-qualified out_dirs (hdfs://, s3a://)
-    — exercised through file:// which routes through the same Hadoop
-    FileSystem code path on local disk. Object stores have no reliable
-    append, so URI paths commit one marker file per bucket under
-    <out_dir>/manifest/ instead of appending to manifest.jsonl."""
+    """The resume protocol over a plain out_dir and a file:// out_dir.
+    Both go through the Hadoop FileSystem API and give one layout: a
+    run commits ONE file ``manifest/<lineage>-<first bucket>.jsonl``
+    with a JSON line per bucket."""
 
     def test_full_run_resume_and_lineage_switch(self, spark, turns,
-                                                tmpdir_path):
-        uri = "file://" + tmpdir_path
-        cfg = PipelineConfig(out_dir=uri, n_buckets=8, partitions=8)
-        res1 = run_pipeline(spark, turns, cfg, resume=True)
-        assert sorted(res1.buckets_processed) == list(range(8))
-        assert res1.metrics["n_rows"] == turns.count()
+                                                tmpdir_path, path_forms):
+        layouts = []
+        for out_dir, local in path_forms(tmpdir_path):
+            cfg = PipelineConfig(out_dir=out_dir, n_buckets=8, partitions=8)
+            res1 = run_pipeline(spark, turns, cfg, resume=True)
+            assert sorted(res1.buckets_processed) == list(range(8))
+            assert res1.metrics["n_rows"] == turns.count()
 
-        # per-record marker files, not a jsonl
-        mdir = os.path.join(tmpdir_path, "manifest")
-        # the Hadoop local FS adds .crc sidecars; the manifest reader
-        # filters on the .json suffix, mirror that here
-        names = sorted(n for n in os.listdir(mdir)
-                       if not n.startswith("."))
-        assert len(names) == 8
-        assert all(n.startswith(res1.lineage_id) and n.endswith(".json")
-                   for n in names)
-        assert not os.path.exists(os.path.join(tmpdir_path,
-                                               "manifest.jsonl"))
+            # one commit file for the run, no appended jsonl
+            assert _commit_files(local) == [f"{res1.lineage_id}-000000.jsonl"]
+            assert not os.path.exists(os.path.join(local, "manifest.jsonl"))
 
-        # read_manifest sees the same record schema as the jsonl layout
-        recs = mf.read_manifest(uri, spark=spark)
-        assert len(recs) == 8
-        assert all("lineage_id" in r and "n_rows" in r for r in recs)
-        assert sum(r["n_rows"] for r in recs) == turns.count()
+            recs = mf.read_manifest(out_dir, spark=spark)
+            assert sorted(r["bucket"] for r in recs) == list(range(8))
+            assert all(r["lineage_id"] == res1.lineage_id and "n_rows" in r
+                       for r in recs)
+            assert sum(r["n_rows"] for r in recs) == turns.count()
+            layouts.append(_layout(local))
 
-        # rerun resumes: everything skipped, output intact
-        res2 = run_pipeline(spark, turns, cfg, resume=True)
-        assert res2.buckets_processed == []
-        assert sorted(res2.buckets_skipped) == list(range(8))
-        routed = spark.read.parquet(os.path.join(tmpdir_path, "routed"))
-        assert routed.count() == turns.count()
+            # rerun resumes: everything skipped, output intact
+            res2 = run_pipeline(spark, turns, cfg, resume=True)
+            assert res2.buckets_processed == []
+            assert sorted(res2.buckets_skipped) == list(range(8))
+            routed = spark.read.parquet(os.path.join(local, "routed"))
+            assert routed.count() == turns.count()
 
-        # lineage switch wipes data AND the manifest dir through the FS
-        # API, then reprocesses everything
-        cfg_b = PipelineConfig(out_dir=uri, n_buckets=8, partitions=8,
-                               input_id="inputB")
-        res3 = run_pipeline(spark, turns, cfg_b, resume=True)
-        assert sorted(res3.buckets_processed) == list(range(8))
-        names_b = sorted(n for n in os.listdir(mdir)
-                         if not n.startswith("."))
-        assert names_b and all(n.startswith(res3.lineage_id)
-                               for n in names_b)
+            # lineage switch wipes data AND the manifest dir through the
+            # FS API, then reprocesses everything
+            cfg_b = PipelineConfig(out_dir=out_dir, n_buckets=8,
+                                   partitions=8, input_id="inputB")
+            res3 = run_pipeline(spark, turns, cfg_b, resume=True)
+            assert sorted(res3.buckets_processed) == list(range(8))
+            assert _commit_files(local) == [f"{res3.lineage_id}-000000.jsonl"]
+        assert layouts[0] == layouts[1]
 
     def test_uri_path_spark_resolution(self, spark, tmpdir_path,
-                                       monkeypatch):
-        # with an active session, spark= may be omitted (foreachBatch
-        # closures rely on this); with none at all, URI-path I/O raises
-        # with remediation instead of falling back to local open()
-        assert mf.completed_buckets("file://" + tmpdir_path, "abc") == set()
+                                       monkeypatch, path_forms):
+        # with an active session, spark= may be omitted; with none at
+        # all, state I/O raises with remediation instead of falling back
+        # to the driver's local filesystem
+        forms = path_forms(tmpdir_path)
+        for out_dir, _ in forms:
+            assert mf.completed_buckets(out_dir, "abc") == set()
         from pyspark.sql import SparkSession
         monkeypatch.setattr(SparkSession, "getActiveSession",
                             staticmethod(lambda: None))
-        with pytest.raises(ValueError, match="filesystem scheme"):
-            mf.completed_buckets("file://" + tmpdir_path, "abc")
-        with pytest.raises(ValueError, match="filesystem scheme"):
-            mf.append_bucket_records("file://" + tmpdir_path, "abc",
-                                     [{"bucket": 0}])
+        for out_dir, _ in forms:
+            with pytest.raises(ValueError, match="no active SparkSession"):
+                mf.completed_buckets(out_dir, "abc")
+            with pytest.raises(ValueError, match="no active SparkSession"):
+                mf.append_bucket_records(out_dir, "abc", [{"bucket": 0}])
 
-    def test_recommit_same_bucket_is_idempotent(self, spark, tmpdir_path):
-        uri = "file://" + tmpdir_path
+    def test_recommit_same_bucket_is_idempotent(self, spark, tmpdir_path,
+                                                path_forms):
         rec = {"bucket": 3, "n_rows": 10, "n_ok": 9, "n_fail": 1,
                "n_empty": 0, "n_tokens": 50}
-        mf.append_bucket_records(uri, "deadbeefdeadbeef", [rec],
-                                 spark=spark)
-        mf.append_bucket_records(uri, "deadbeefdeadbeef", [rec],
-                                 spark=spark)
-        assert mf.completed_buckets(uri, "deadbeefdeadbeef",
-                                    spark=spark) == {3}
-        recs = mf.read_manifest(uri, spark=spark)
-        assert len(recs) == 1 and recs[0]["n_rows"] == 10
+        for out_dir, local in path_forms(tmpdir_path):
+            mf.append_bucket_records(out_dir, "deadbeefdeadbeef", [rec],
+                                     spark=spark)
+            mf.append_bucket_records(out_dir, "deadbeefdeadbeef", [rec],
+                                     spark=spark)
+            assert _commit_files(local) == ["deadbeefdeadbeef-000003.jsonl"]
+            assert mf.completed_buckets(out_dir, "deadbeefdeadbeef",
+                                        spark=spark) == {3}
+            recs = mf.read_manifest(out_dir, spark=spark)
+            assert len(recs) == 1 and recs[0]["n_rows"] == 10
+
+    def test_older_jsonl_layout_reprocessed_once(self, spark, turns,
+                                                 tmpdir_path):
+        # an out_dir from the older layout (records appended to
+        # manifest.jsonl) has no commit file: the first rerun
+        # reprocesses every bucket and removes the old file, the next
+        # one resumes
+        cfg = PipelineConfig(out_dir=tmpdir_path, n_buckets=8, partitions=8)
+        res1 = run_pipeline(spark, turns, cfg, resume=True)
+        recs = mf.read_manifest(tmpdir_path, spark=spark)
+        shutil.rmtree(os.path.join(tmpdir_path, "manifest"))
+        legacy = os.path.join(tmpdir_path, "manifest.jsonl")
+        with open(legacy, "w") as fh:
+            fh.writelines(json.dumps(r, sort_keys=True) + "\n" for r in recs)
+
+        res2 = run_pipeline(spark, turns, cfg, resume=True)
+        assert sorted(res2.buckets_processed) == list(range(8))
+        assert ({k: res2.metrics[k] for k in pl.COUNTERS}
+                == {k: res1.metrics[k] for k in pl.COUNTERS})
+        assert not os.path.exists(legacy)
+        assert mf.read_manifest(tmpdir_path, spark=spark) == recs
+
+        res3 = run_pipeline(spark, turns, cfg, resume=True)
+        assert sorted(res3.buckets_skipped) == list(range(8))

@@ -11,7 +11,11 @@ check, so the list cannot go stale.
 
 The same rule holds for ``PipelineConfig``: a field that no product
 caller passes is a knob nobody turns, and belongs in a module
-constant."""
+constant.
+
+And no helper is copy-pasted: two functions (nested ones included)
+whose bodies are identical AST, docstrings ignored, are one helper
+written twice."""
 
 import ast
 import pathlib
@@ -137,3 +141,36 @@ def test_pipeline_config_fields_have_product_callers():
     assert not unset, (
         f"PipelineConfig fields no product caller sets: {unset}; make "
         "them module constants or wire them into a caller")
+
+
+# bodies smaller than this many AST nodes (``return x``, ``pass``) may
+# repeat without being a copied helper
+_COPY_FLOOR = 12
+
+
+def _function_bodies():
+    """(body dump, AST node count, 'module:line:name') per function
+    under the package, docstring dropped."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            body = node.body
+            if (isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                body = body[1:]
+            size = sum(1 for stmt in body for _ in ast.walk(stmt))
+            yield ("\n".join(ast.dump(stmt) for stmt in body), size,
+                   f"{path.relative_to(PACKAGE)}:{node.lineno}:{node.name}")
+
+
+def test_no_copy_pasted_function_bodies():
+    seen = {}
+    for body, size, where in _function_bodies():
+        if size >= _COPY_FLOOR:
+            seen.setdefault(body, []).append(where)
+    copies = sorted(sites for sites in seen.values() if len(sites) > 1)
+    assert not copies, (
+        f"functions with identical bodies: {copies}; keep one helper "
+        "and call it from every site")
