@@ -1156,41 +1156,62 @@ def _commit_epoch(local, name):
     open(os.path.join(local, name, "_SUCCESS"), "w").close()
 
 
+def _check_params_guard(spark, d, local):
+    # enforcement starts only once an epoch has COMMITTED (a failed
+    # first run must not lock in its parameters); once epochs exist, a
+    # missing/corrupt stamp REFUSES rather than silently restamping
+    # with the current run's params — that would accept exactly the
+    # drift the guard exists to reject
+    import os
+    from log2seq_spark.plans.epochs import check_params, committed_ids
+    stamp = os.path.join(local, "params.json")
+    check_params(d, {"a": 1}, spark=spark)
+    check_params(d, {"a": 2}, spark=spark)  # no committed epoch
+    # corrupt stamp before any commit: restamp freely
+    with open(stamp, "w") as f:
+        f.write("{trunc")
+    check_params(d, {"a": 2}, spark=spark)
+    _commit_epoch(local, "epoch=0")
+    assert committed_ids(d, spark=spark) == [0]
+    check_params(d, {"a": 2}, spark=spark)
+    with pytest.raises(ValueError, match="matching parameters"):
+        check_params(d, {"a": 3}, spark=spark)
+    with open(stamp, "w") as f:
+        f.write("{trunc")                  # lost/corrupt stamp
+    with pytest.raises(ValueError, match="refusing to restamp"):
+        check_params(d, {"a": 2}, spark=spark)
+    os.remove(stamp)                       # lost stamp
+    with pytest.raises(ValueError, match="refusing to restamp"):
+        check_params(d, {"a": 2}, spark=spark)
+
+
+def _check_prune(spark, d, local):
+    # at keep_epochs=1 the predecessor epoch always survives a commit;
+    # at keep_epochs=2 the horizon is epoch-2
+    import os
+    from log2seq_spark.plans.epochs import committed_ids, prune
+    for e in range(3):
+        _commit_epoch(local, f"epoch={e}")
+        prune(d, e, keep_epochs=1, spark=spark)
+    assert committed_ids(d, spark=spark) == [1, 2]
+    for e in range(3, 5):
+        _commit_epoch(local, f"epoch={e}")
+    prune(d, 4, keep_epochs=2, spark=spark)
+    # horizon = 4-2 = 2: epoch 1 pruned; 2,3,4 survive
+    assert committed_ids(d, spark=spark) == [2, 3, 4]
+    assert sorted(n for n in os.listdir(local)
+                  if n.startswith("epoch=")) == \
+        ["epoch=2", "epoch=3", "epoch=4"]
+
+
 class TestEpochState:
     """The epoch-state protocol (``plans/epochs.py``) behind
     ``templates --state-dir`` / ``rare --state-dir`` and the dedup
-    index's committed-segment listing, over a plain path and a
-    ``file://`` path."""
+    index's committed-segment listing, over a plain path (the
+    ``file://`` twins are in ``TestEpochStateUriPaths``)."""
 
-    def test_epoch_params_guard_recovery(self, spark, tmpdir_path,
-                                         path_forms):
-        # enforcement starts only once an epoch has COMMITTED (a failed
-        # first run must not lock in its parameters); once epochs
-        # exist, a missing/corrupt stamp REFUSES rather than silently
-        # restamping with the current run's params — that would accept
-        # exactly the drift the guard exists to reject
-        import os
-        from log2seq_spark.plans.epochs import check_params, committed_ids
-        for d, local in path_forms(tmpdir_path):
-            stamp = os.path.join(local, "params.json")
-            check_params(d, {"a": 1}, spark=spark)
-            check_params(d, {"a": 2}, spark=spark)  # no committed epoch
-            # corrupt stamp before any commit: restamp freely
-            with open(stamp, "w") as f:
-                f.write("{trunc")
-            check_params(d, {"a": 2}, spark=spark)
-            _commit_epoch(local, "epoch=0")
-            assert committed_ids(d, spark=spark) == [0]
-            check_params(d, {"a": 2}, spark=spark)
-            with pytest.raises(ValueError, match="matching parameters"):
-                check_params(d, {"a": 3}, spark=spark)
-            with open(stamp, "w") as f:
-                f.write("{trunc")                  # lost/corrupt stamp
-            with pytest.raises(ValueError, match="refusing to restamp"):
-                check_params(d, {"a": 2}, spark=spark)
-            os.remove(stamp)                       # lost stamp
-            with pytest.raises(ValueError, match="refusing to restamp"):
-                check_params(d, {"a": 2}, spark=spark)
+    def test_epoch_params_guard_recovery(self, spark, tmpdir_path):
+        _check_params_guard(spark, tmpdir_path, tmpdir_path)
 
     def test_committed_ids_glob_metachars(self, spark, tmpdir_path,
                                           path_forms):
@@ -1207,24 +1228,8 @@ class TestEpochState:
             assert committed_ids(d, spark=spark) == [3]
             assert committed_ids(d, "gen", spark=spark) == [5]
 
-    def test_prune_keeps_predecessor(self, spark, tmpdir_path, path_forms):
-        # at keep_epochs=1 the predecessor epoch always survives a
-        # commit; at keep_epochs=2 the horizon is epoch-2
-        import os
-        from log2seq_spark.plans.epochs import committed_ids, prune
-        for d, local in path_forms(tmpdir_path):
-            for e in range(3):
-                _commit_epoch(local, f"epoch={e}")
-                prune(d, e, keep_epochs=1, spark=spark)
-            assert committed_ids(d, spark=spark) == [1, 2]
-            for e in range(3, 5):
-                _commit_epoch(local, f"epoch={e}")
-            prune(d, 4, keep_epochs=2, spark=spark)
-            # horizon = 4-2 = 2: epoch 1 pruned; 2,3,4 survive
-            assert committed_ids(d, spark=spark) == [2, 3, 4]
-            assert sorted(n for n in os.listdir(local)
-                          if n.startswith("epoch=")) == \
-                ["epoch=2", "epoch=3", "epoch=4"]
+    def test_prune_keeps_predecessor(self, spark, tmpdir_path):
+        _check_prune(spark, tmpdir_path, tmpdir_path)
 
 
 class TestDuplicateClusters:
@@ -1980,6 +1985,12 @@ class TestEpochStateUriPaths:
                                (10, "drop_seen"), (11, "keep")]
         assert sorted(os.listdir(os.path.join(local_ix, "delta"))) == \
             ["gen=1", "gen=2"]
+
+    def test_epoch_params_guard_uri(self, spark, tmpdir_path):
+        _check_params_guard(spark, "file://" + tmpdir_path, tmpdir_path)
+
+    def test_prune_epochs_uri(self, spark, tmpdir_path):
+        _check_prune(spark, "file://" + tmpdir_path, tmpdir_path)
 
 
 class TestMultiline:
