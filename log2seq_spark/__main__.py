@@ -604,6 +604,25 @@ def _index_segments(spark, index_dir: str):
     return paths, deltas, nxt
 
 
+def _fold_segments(spark, index_dir: str, segments, nxt: int, unit: str,
+                   fold=lambda df: df):
+    """LSM compaction of an :func:`_index_segments` index: write
+    ``fold`` over every live segment as ``base/gen=nxt``, then delete
+    the segments it supersedes. Returns (base path, base rows)."""
+    from . import fsio
+    base_path = f"{index_dir}/base/gen={nxt}"
+    (fold(spark.read.parquet(*segments))
+        .write.mode("overwrite").parquet(base_path))
+    n_total = spark.read.parquet(base_path).count()
+    # base committed — superseded segments are dead to every future
+    # reader; deleting them is cleanup, not correctness
+    for p in segments:
+        fsio.delete(spark, p)
+    print(f"# index: compacted -> base gen={nxt} ({n_total} {unit})",
+          file=sys.stderr)
+    return base_path, n_total
+
+
 def _cmd_dedup_incremental(args, spark) -> int:
     """``dedup --index-dir``: treat ``--input`` as ONE newly-arrived
     shard of a continuously-growing corpus. The shard is screened
@@ -621,7 +640,6 @@ def _cmd_dedup_incremental(args, spark) -> int:
     next gen number — serialize shards through one submitting process
     (readers are safe at any time; segments are immutable once
     committed)."""
-    from . import fsio
     from .operators.dedup import (dedup_against_index,
                                   minhash_band_signatures,
                                   near_dup_against_index,
@@ -720,16 +738,8 @@ def _cmd_dedup_incremental(args, spark) -> int:
     print(f"# index: delta gen={nxt} (+{n_new} entries, "
           f"{len(segments) + 1} segments)", file=sys.stderr)
     if args.compact_every and len(deltas) + 1 > args.compact_every:
-        base_path = f"{args.index_dir}/base/gen={nxt}"
-        (spark.read.parquet(*(segments + [delta_path]))
-              .write.mode("overwrite").parquet(base_path))
-        n_total = spark.read.parquet(base_path).count()
-        # base committed — superseded segments are dead to every future
-        # reader; deleting them is cleanup, not correctness
-        for p in segments + [delta_path]:
-            fsio.delete(spark, p)
-        print(f"# index: compacted -> base gen={nxt} "
-              f"({n_total} entries)", file=sys.stderr)
+        base_path, n_total = _fold_segments(
+            spark, args.index_dir, segments + [delta_path], nxt, "entries")
         if bloom_bits:
             # compaction is the one moment the full index is rewritten
             # anyway — rebuild the sidecar sized to 2x current entries
@@ -968,17 +978,10 @@ def cmd_substr(args) -> int:
         print(f"# index: delta gen={nxt} (+{n_new} gram rows, "
               f"{len(segments) + 1} segments)", file=sys.stderr)
         if args.compact_every and len(deltas) + 1 > args.compact_every:
-            base_path = f"{args.index_dir}/base/gen={nxt}"
-            (spark.read.parquet(*(segments + [delta_path]))
-                  .groupBy("gh").agg(F.sum("n_occ").alias("n_occ"))
-                  .write.mode("overwrite").parquet(base_path))
-            n_total = spark.read.parquet(base_path).count()
-            # base committed — superseded segments are dead to every
-            # future reader; deletion is cleanup, not correctness
-            for p in segments + [delta_path]:
-                fsio.delete(spark, p)
-            print(f"# index: compacted -> base gen={nxt} "
-                  f"({n_total} grams)", file=sys.stderr)
+            _fold_segments(
+                spark, args.index_dir, segments + [delta_path], nxt,
+                "grams", lambda df: df.groupBy("gh").agg(
+                    F.sum("n_occ").alias("n_occ")))
     finally:
         if owns:
             spark.stop()
@@ -1105,13 +1108,16 @@ def cmd_ann(args) -> int:
       stamped cells, O(batch), history untouched;
     - ``ann query``  — top-k probe off the stamp (partition-pruned
       scan); the query vector comes from ``--query-vec`` floats or
-      ``--query-id`` looked up in ``--input``.
+      ``--query-id`` looked up in ``--input``;
+    - ``ann compact`` — bin-pack each cell's undersized files
+      (``layout.compact_tree``); a rerun finishes an interrupted swap.
 
     Prints ``vec_id<TAB>cosine`` rows for query; a ``# cells=…`` /
     ``# appended`` note to stderr for build/append. Exit 2 on an
     unstamped/foreign index dir."""
     from .operators.similarity import (append_ivf_index, build_ivf_index,
-                                       ivf_topk_indexed, kmeans_centroids)
+                                       ivf_topk_indexed, kmeans_centroids,
+                                       load_ivf_centroids)
     if args.action in ("build", "append") and not args.input:
         print(f"ann: {args.action} needs --input", file=sys.stderr)
         return 2
@@ -1135,14 +1141,19 @@ def cmd_ann(args) -> int:
                 return 2
             print("# appended", file=sys.stderr)
         elif args.action == "compact":
-            from .operators.similarity import compact_ivf_index
+            from .operators import layout
             try:
-                before, after = compact_ivf_index(
-                    spark, args.index_dir,
-                    target_file_bytes=args.target_file_mb << 20)
+                load_ivf_centroids(spark, args.index_dir)
             except ValueError as exc:
                 print(f"ann: {exc}", file=sys.stderr)
                 return 2
+            # every centroid=N cell is a leaf; the stamp and _SUCCESS
+            # are _-prefixed, so the bin-packing leaves them alone
+            plans = layout.compact_tree(spark, args.index_dir,
+                                        args.target_file_mb << 20)
+            before = sum(pl["n_files"] for pl in plans)
+            after = sum(pl["n_files"] - len(pl["rewrite"])
+                        + pl.get("compacted_files", 0) for pl in plans)
             print(f"# compacted: {before} -> {after} files",
                   file=sys.stderr)
         else:   # query
@@ -1965,9 +1976,9 @@ def main(argv=None) -> int:
     p.add_argument("--query-id", type=int, default=None,
                    help="query: look this id's vector up in --input")
     p.add_argument("--target-file-mb", type=int, default=128,
-                   help="compact: per-cell output files sized to this "
-                        "(matches spark.sql.files.maxPartitionBytes so "
-                        "probe task counts track data scanned)")
+                   help="compact: bin-pack each cell's files under half "
+                        "this size into files of about this size; "
+                        "larger files are left as they are")
     p.set_defaults(fn=cmd_ann)
 
     p = sub.add_parser(

@@ -15,15 +15,7 @@ HDFS or a ``viewfs://`` mount table alike.
 
 from __future__ import annotations
 
-import re
 from typing import List, Optional
-
-_URI_RE = re.compile(r"^[a-z][a-z0-9+.\-]*://", re.IGNORECASE)
-
-
-def is_uri_path(path: str) -> bool:
-    """True for scheme-qualified paths (``hdfs://``, ``file://``, …)."""
-    return _URI_RE.match(path) is not None
 
 
 def resolve_spark(spark, path: str):
@@ -55,11 +47,10 @@ def exists(spark, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def delete(spark, path: str, recursive: bool = True) -> None:
-    """Quiet recursive delete (missing path is a no-op, like
-    ``shutil.rmtree(..., ignore_errors=True)``)."""
+def delete(spark, path: str) -> None:
+    """Quiet recursive delete: a missing path is a no-op."""
     fs, jpath, _ = hadoop_fs(spark, path)
-    fs.delete(jpath, recursive)
+    fs.delete(jpath, True)
 
 
 def list_child_names(spark, dir_path: str) -> List[str]:

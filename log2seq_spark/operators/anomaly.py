@@ -286,8 +286,7 @@ def _rank_median(df: DataFrame, keys: list[str], val_col: str,
 
 def robust_outliers(df: DataFrame, value_col: str = "value",
                     key_cols: tuple[str, ...] = ("event_type",),
-                    threshold: float = 3.5,
-                    broadcast_stats: bool = True) -> DataFrame:
+                    threshold: float = 3.5) -> DataFrame:
     """Robust per-key outlier scoring via the modified z-score
     (Iglewicz & Hoaglin 1993): ``z = 0.6745 * (v - median) / MAD``,
     flagged when ``|z| > threshold`` (their recommended 3.5). Median +
@@ -302,11 +301,9 @@ def robust_outliers(df: DataFrame, value_col: str = "value",
     Scale shape: two exact rank-median passes (see :func:`_rank_median`
     — each is one shuffle + per-key sort over the values projection,
     never the full rows) producing #keys-row stats tables that join
-    back broadcast (``broadcast_stats=False`` for unbounded key
-    cardinality, e.g. per-user keys — then the joins shuffle on the
-    same key and AQE plans them). Exactness is the point: an
-    approx-percentile MAD moves the outlier cut nondeterministically
-    between runs, which a correctness-gated pipeline can't have.
+    back broadcast. Exactness is the point: an approx-percentile MAD
+    moves the outlier cut nondeterministically between runs, which a
+    correctness-gated pipeline can't have.
     """
     keys = list(key_cols)
     v = F.col(value_col).cast("double")
@@ -316,16 +313,14 @@ def robust_outliers(df: DataFrame, value_col: str = "value",
     vals = (df.select(*keys, v.alias("__ro_v"))
               .filter(F.col("__ro_v").isNotNull()))
     med = _rank_median(vals, keys, "__ro_v", "med")
-    bmed = F.broadcast(med) if broadcast_stats else med
-    dev = (vals.join(bmed, keys)
+    dev = (vals.join(F.broadcast(med), keys)
                .select(*keys, F.abs(F.col("__ro_v") - F.col("med"))
                                 .alias("__ro_av")))
     mad = _rank_median(dev, keys, "__ro_av", "mad")
-    stats = med.join(F.broadcast(mad) if broadcast_stats else mad, keys)
-    bstats = F.broadcast(stats) if broadcast_stats else stats
+    stats = F.broadcast(med.join(F.broadcast(mad), keys))
     z = F.when(F.col("mad") > 0,
                F.lit(0.6745) * (v - F.col("med")) / F.col("mad"))
-    return (df.join(bstats, keys, "left")  # all-NULL keys have no stats
+    return (df.join(stats, keys, "left")  # all-NULL keys have no stats
               .withColumn("robust_z", z)
               .withColumn("is_outlier",
                           F.coalesce(F.abs(z) > F.lit(float(threshold)),

@@ -258,8 +258,7 @@ def compact_dir(spark: SparkSession, dir_path: str, target_bytes: int,
     The window where adopted files and not-yet-deleted originals
     coexist is why table formats own compaction in their commit log;
     over plain directories, run this when the directory has no
-    concurrent reader (e.g. between pipeline runs), exactly like the
-    IVF index's generation swap (similarity.compact_ivf_index).
+    concurrent reader (e.g. between pipeline runs or IVF appends).
 
     Returns the executed plan (+ ``"skipped": True`` when there was
     nothing worth rewriting)."""

@@ -122,8 +122,7 @@ def nfc_normalize_udf():
 
 
 def normalize_text(docs: DataFrame, text_col: str = "text",
-                   out_col: str = "norm_text",
-                   strip_controls: bool = True) -> DataFrame:
+                   out_col: str = "norm_text") -> DataFrame:
     """Unicode hygiene for a text column — the cleaning step every
     multilingual corpus runs before hashing or dedup (decomposed
     accents and zero-width characters make visually identical strings
@@ -136,8 +135,7 @@ def normalize_text(docs: DataFrame, text_col: str = "text",
     scan, map-only; the single Python hop is the NFC batch UDF.
     """
     t = F.col(text_col)
-    stripped = strip_controls_expr(t) if strip_controls else t
-    staged = docs.select("*", stripped.alias("__nz_s"))
+    staged = docs.select("*", strip_controls_expr(t).alias("__nz_s"))
     normed = nfc_normalize_udf()(F.col("__nz_s"))
     return (staged.select("*", normed.alias(out_col))
                   .withColumn("n_controls",

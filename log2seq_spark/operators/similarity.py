@@ -224,86 +224,6 @@ def ivf_topk_indexed(spark, path: str, centroids: List[Sequence[float]],
               .limit(k))
 
 
-def compact_ivf_index(spark, path: str,
-                      target_file_bytes: int = 128 << 20) -> tuple:
-    """Small-files maintenance for an append-heavy index: every
-    :func:`append_ivf_index` lands one new parquet file per touched
-    cell, so after thousands of ingest batches a probe pays per-file
-    open cost instead of scan cost. Rewrite the index into
-    **size-targeted** files per cell —
-    ``ceil(cell_bytes / target_file_bytes)`` each, never exactly one
-    per cell regardless of size: a 6 TB cell squeezed into one file
-    would serialize its probe onto however many row-group splits that
-    one writer happened to emit, while 128 MB files (matching
-    ``spark.sql.files.maxPartitionBytes``) keep probe task counts
-    proportional to data scanned. Staging-dir first:
-
-    1. rewrite the index into ``<path>.compacting`` (centroid stamp
-       carried along);
-    2. swap: live → ``<path>.old``, staging → live, drop ``.old``.
-
-    Returns ``(files_before, files_after)`` (data files). This is an
-    OFFLINE maintenance pass — no concurrent appends (a batch appended
-    mid-compaction would leave with the old index) and no in-flight
-    probes during the two renames (standard parquet-maintenance
-    contract). A crash before the swap leaves the live index untouched (stale
-    staging is cleared on the next run); a crash between the renames
-    leaves ``.old`` intact to restore from."""
-    import glob
-    import json
-    import os
-    import shutil
-
-    from .. import fsio
-    if fsio.is_uri_path(path):
-        raise ValueError(
-            "compact_ivf_index swaps directories with local renames; "
-            "for a cluster filesystem, build_ivf_index the compacted "
-            "layout at a new path and repoint readers (object stores "
-            "have no atomic directory rename to lean on)")
-
-    def _count_files(p):
-        return sum(1 for f in glob.glob(os.path.join(glob.escape(p),
-                                                     "centroid=*", "*"))
-                   if not os.path.basename(f).startswith(("_", ".")))
-
-    centroids = load_ivf_centroids(spark, path)
-    before = _count_files(path)
-    # per-cell byte totals → salt-bucket count per cell (the local
-    # listing is free here — this pass is already local-rename-only)
-    cell_bytes: dict = {}
-    for f in glob.glob(os.path.join(glob.escape(path), "centroid=*", "*")):
-        if os.path.basename(f).startswith(("_", ".")):
-            continue
-        cell = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-        cell_bytes[cell] = cell_bytes.get(cell, 0) + os.path.getsize(f)
-    buckets = {c: max(1, -(-b // int(target_file_bytes)))
-               for c, b in cell_bytes.items()}
-    df = spark.read.parquet(path)
-    data_cols = [c for c in df.columns if c != "centroid"]
-    if buckets:
-        salt_mod = F.element_at(
-            F.create_map(*[F.lit(x) for c, n in sorted(buckets.items())
-                           for x in (c, n)]),
-            F.col("centroid"))
-        salt = F.pmod(F.abs(F.hash(*data_cols)), salt_mod)
-        repartitioned = df.repartition(max(sum(buckets.values()), 1),
-                                       F.col("centroid"), salt)
-    else:   # empty index: nothing to size, keep the layout shape
-        repartitioned = df.repartition("centroid")
-    staging, old = path + ".compacting", path + ".old"
-    shutil.rmtree(staging, ignore_errors=True)
-    (repartitioned
-       .write.mode("overwrite").partitionBy("centroid").parquet(staging))
-    fsio.write_text(spark, f"{staging}/_ivf_centroids.json",
-                    json.dumps(centroids))
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return before, _count_files(path)
-
-
 def kmeans_centroids(embs: DataFrame, k: int = 4, n_iter: int = 3,
                      vec_col: str = "embedding",
                      id_col: str = "vec_id") -> List[List[float]]:

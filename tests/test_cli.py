@@ -970,10 +970,10 @@ class TestAnnCommand:
                  for l in capsys.readouterr().out.splitlines()]
         assert after == ["0", "1", "2"]      # appended odds now probed
 
-    def test_compact_folds_append_files(self, spark, capsys, tmpdir_path):
-        """Three appends leave multiple files per cell; compact folds
-        them to one per cell and the query answer is unchanged."""
-        idx = os.path.join(tmpdir_path, "annc_idx")
+    def _appended_index(self, spark, tmpdir_path, idx):
+        """A 2-cell index built from ids 0..19 plus three appended
+        batches, so every cell holds several undersized files; returns
+        the ``ann query`` output over it."""
         base = self._embs(spark, tmpdir_path, "anncA", range(0, 20))
         assert main(["ann", "build", "--input", base, "--index-dir", idx,
                      "--k-cells", "2"]) == 0
@@ -982,28 +982,84 @@ class TestAnnCommand:
                                range(lo, lo + 20))
             assert main(["ann", "append", "--input", extra,
                          "--index-dir", idx]) == 0
-        capsys.readouterr()
-        assert main(["ann", "query", "--index-dir", idx,
-                     "--query-vec", "1.0,0.0", "--k", "4",
-                     "--n-probe", "2"]) == 0
-        before = capsys.readouterr().out
-        assert main(["ann", "compact", "--index-dir", idx]) == 0
-        err = capsys.readouterr().err
+        return self._query(idx)
+
+    @staticmethod
+    def _query(idx):
+        import contextlib
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            assert main(["ann", "query", "--index-dir", idx,
+                         "--query-vec", "1.0,0.0", "--k", "4",
+                         "--n-probe", "2"]) == 0
+        return buf.getvalue()
+
+    def test_compact_folds_append_files(self, spark, capsys, tmpdir_path,
+                                        path_forms):
+        """Three appends leave several small files per cell; compact
+        bin-packs them into one file per cell, and the query answer and
+        the rows are unchanged. It goes through the Hadoop FileSystem,
+        so a ``file://`` index dir compacts like a plain one."""
         import re
-        m = re.search(r"# compacted: (\d+) -> (\d+) files", err)
-        assert m and int(m.group(1)) > int(m.group(2))
-        assert main(["ann", "query", "--index-dir", idx,
-                     "--query-vec", "1.0,0.0", "--k", "4",
-                     "--n-probe", "2"]) == 0
-        assert capsys.readouterr().out == before
+        for idx, local in path_forms(tmpdir_path):
+            before = self._appended_index(spark, tmpdir_path, idx)
+            n_rows = spark.read.parquet(idx).count()
+            capsys.readouterr()
+            assert main(["ann", "compact", "--index-dir", idx]) == 0
+            m = re.search(r"# compacted: (\d+) -> (\d+) files",
+                          capsys.readouterr().err)
+            assert m and int(m.group(1)) > int(m.group(2)) == 2
+            assert self._query(idx) == before
+            assert spark.read.parquet(idx).count() == n_rows
+            # the stamp survives; no staging or manifest is left behind
+            assert "_ivf_centroids.json" in os.listdir(local)
+            for cell in (d for d in os.listdir(local)
+                         if d.startswith("centroid=")):
+                assert not [n for n in os.listdir(os.path.join(local, cell))
+                            if n.startswith((".compact-", "_COMPACT"))]
+
+    def test_interrupted_compact_finished_by_rerun(self, spark, capsys,
+                                                   tmpdir_path,
+                                                   monkeypatch):
+        """A compaction stopped after a cell's swap manifest is written
+        is finished by the next `ann compact`: same answer, every
+        vector exactly once."""
+        from pyspark.sql import functions as F
+
+        from log2seq_spark.operators import layout
+        idx = os.path.join(tmpdir_path, "annx_idx")
+        before = self._appended_index(spark, tmpdir_path, idx)
+        n_rows = spark.read.parquet(idx).count()
+
+        def crash(*_a, **_k):
+            raise RuntimeError("stopped after the manifest write")
+        monkeypatch.setattr(layout, "_finish_swap", crash)
+        with pytest.raises(RuntimeError, match="manifest write"):
+            main(["ann", "compact", "--index-dir", idx])
+        monkeypatch.undo()
+        pending = [d for d in os.listdir(idx) if os.path.exists(
+            os.path.join(idx, d, layout._MANIFEST))]
+        assert len(pending) == 1
+        # the staged copy is invisible until the swap finishes
+        assert spark.read.parquet(idx).count() == n_rows
+        assert main(["ann", "compact", "--index-dir", idx]) == 0
+        assert not os.path.exists(
+            os.path.join(idx, pending[0], layout._MANIFEST))
+        assert self._query(idx) == before
+        back = spark.read.parquet(idx)
+        assert back.count() == n_rows
+        assert back.groupBy("vec_id").count().filter(
+            F.col("count") > 1).count() == 0
 
     def test_append_to_unstamped_dir_exits_2(self, spark, capsys,
                                              tmpdir_path):
         bare = self._embs(spark, tmpdir_path, "annBare", range(5))
-        code = main(["ann", "append", "--input", bare,
-                     "--index-dir", bare])
-        err = capsys.readouterr().err
-        assert code == 2 and "_ivf_centroids" in err
+        for argv in (["ann", "append", "--input", bare,
+                      "--index-dir", bare],
+                     ["ann", "compact", "--index-dir", bare]):
+            code = main(argv)
+            err = capsys.readouterr().err
+            assert code == 2 and "_ivf_centroids" in err
 
     def test_query_vec_and_missing_args(self, spark, capsys, tmpdir_path):
         base = self._embs(spark, tmpdir_path, "annQ", range(10))

@@ -1,10 +1,11 @@
 """Driver-side state I/O (``fsio``, and through it the checkpoint
-manifest and the epoch state) goes through the Hadoop FileSystem API
-for plain paths too, so it sees the files Spark writes wherever
-``fs.defaultFS`` puts them."""
+manifest, the epoch state and file compaction) goes through the Hadoop
+FileSystem API for plain paths too, so it sees the files Spark writes
+wherever ``fs.defaultFS`` puts them."""
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -33,8 +34,9 @@ def test_write_text_replaces_without_leftovers(spark, tmpdir_path):
 # protocols alike, while the driver's own disk has nothing under
 # <root>/view.
 _VIEWFS_SNIPPET = """
-import json, os, sys
+import contextlib, io, json, math, os, sys
 sys.path.insert(0, {repo!r})
+from log2seq_spark.__main__ import main
 from log2seq_spark.session import get_spark
 from log2seq_spark.plans import epochs, manifest as mf
 from log2seq_spark.plans.pipeline import PipelineConfig, run_pipeline
@@ -66,6 +68,34 @@ seen = {{
 }}
 mf.wipe_outputs(out, ["routed"], spark=spark)
 seen["after_wipe"] = ls(real + "/out")
+def cli(*argv):
+    out, err = io.StringIO(), io.StringIO()
+    with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
+        code = main(list(argv))
+    return code, out.getvalue(), err.getvalue()
+def embs(name, ids):
+    rows = [(i, [math.cos(i / 20.0), math.sin(i / 20.0)]) for i in ids]
+    (spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+          .write.mode("overwrite").parquet(view + "/" + name))
+    return view + "/" + name
+idx = view + "/ivf"
+query = ("ann", "query", "--index-dir", idx, "--query-vec", "1.0,0.0",
+         "--k", "4", "--n-probe", "2")
+ann = {{"build": cli("ann", "build", "--input", embs("e0", range(20)),
+                    "--index-dir", idx, "--k-cells", "2")[0]}}
+for lo in (20, 40):
+    ann[f"append{{lo}}"] = cli("ann", "append", "--input",
+                               embs(f"e{{lo}}", range(lo, lo + 20)),
+                               "--index-dir", idx)[0]
+ann["query_before"] = cli(*query)[1]
+ann["rows_before"] = spark.read.parquet(idx).count()
+code, _, err = cli("ann", "compact", "--index-dir", idx)
+ann["compact"] = [code] + [x for x in err.splitlines()
+                           if x.startswith("# compacted")]
+ann["query_after"] = cli(*query)[1]
+ann["rows_after"] = spark.read.parquet(idx).count()
+ann["real_index"] = ls(real + "/ivf")
+seen["ann"] = ann
 seen["local_view"] = os.path.exists(view)
 print("SEEN " + json.dumps(seen), flush=True)
 spark.stop()
@@ -91,3 +121,14 @@ def test_plain_paths_follow_default_fs(tmpdir_path):
     assert "routed" not in seen["after_wipe"]
     assert "manifest" not in seen["after_wipe"]
     assert not seen["local_view"]
+    # an IVF index on a plain path under the mount builds, appends and
+    # compacts where Spark wrote it, with the same answer and rows
+    ann = seen["ann"]
+    assert (ann["build"], ann["append20"], ann["append40"]) == (0, 0, 0)
+    assert ann["compact"][0] == 0 and len(ann["compact"]) == 2
+    before, after = map(int, re.findall(r"\d+", ann["compact"][1]))
+    assert before > after
+    assert ann["query_before"] and ann["query_after"] == ann["query_before"]
+    assert ann["rows_after"] == ann["rows_before"] == 60
+    assert {"_ivf_centroids.json", "centroid=0",
+            "centroid=1"} <= set(ann["real_index"])

@@ -15,7 +15,12 @@ constant.
 
 And no helper is copy-pasted: two functions (nested ones included)
 whose bodies are identical AST, docstrings ignored, are one helper
-written twice."""
+written twice.
+
+Files Spark writes are moved and deleted through the Hadoop FileSystem
+API (``fsio``), never with ``shutil`` or ``os.rename``/``os.replace``
+on the driver's disk, which is not where a ``hdfs://`` path or a
+non-local ``fs.defaultFS`` puts them."""
 
 import ast
 import pathlib
@@ -174,3 +179,42 @@ def test_no_copy_pasted_function_bodies():
     assert not copies, (
         f"functions with identical bodies: {copies}; keep one helper "
         "and call it from every site")
+
+
+# modules that may touch the driver's own disk: the raw-log readers
+# open user-given local files, and the session makes its local scratch
+# dir
+_LOCAL_DISK_OK = {"sources/logfiles.py", "__main__.py", "session.py"}
+
+
+def _local_disk_moves(tree) -> list:
+    """Line numbers of ``shutil`` imports and ``os.rename``/``os.replace``
+    calls in a module."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            if any(a.name.split(".")[0] == "shutil" for a in node.names):
+                out.append(node.lineno)
+        elif isinstance(node, ast.ImportFrom):
+            if node.module == "shutil" or (
+                    node.module == "os"
+                    and {a.name for a in node.names} & {"rename", "replace"}):
+                out.append(node.lineno)
+        elif (isinstance(node, ast.Attribute)
+              and isinstance(node.value, ast.Name)
+              and node.value.id == "os"
+              and node.attr in ("rename", "replace")):
+            out.append(node.lineno)
+    return out
+
+
+def test_no_driver_local_file_moves():
+    assert all((PACKAGE / rel).is_file() for rel in _LOCAL_DISK_OK)
+    found = sorted(
+        f"{path.relative_to(PACKAGE)}:{line}"
+        for path in PACKAGE.rglob("*.py")
+        if str(path.relative_to(PACKAGE)) not in _LOCAL_DISK_OK
+        for line in _local_disk_moves(ast.parse(path.read_text())))
+    assert not found, (
+        f"driver-local file moves: {found}; go through fsio so the "
+        "Hadoop FileSystem that Spark writes through does the move")
