@@ -33,6 +33,9 @@ from pyspark.sql import functions as F
 from ..functions.udf import _drop_zip_finders
 
 MARGIN = 1e-6
+# n × dim float64 bytes of the matrix the brute path builds on the
+# driver and broadcasts (its unit-row copy is the same size again)
+MAX_BRUTE_BYTES = 512 << 20
 
 
 def _arrow_id_type(spark_dt):
@@ -97,7 +100,8 @@ def brute_pair_candidates(e: DataFrame, threshold: float,
     Returns None when the fast path cannot guarantee equivalence
     (ragged/missing vectors, unorderable or non-finite ids) — caller
     falls back to the legacy crossJoin. Raises ValueError when the
-    input exceeds ``max_rows`` (same contract as the legacy guard)."""
+    input exceeds ``max_rows`` (same contract as the legacy guard) or
+    when its n × dim float64 matrix exceeds ``MAX_BRUTE_BYTES``."""
     import math
 
     rows = e.select("_id", "_v").limit(max_rows + 1).collect()
@@ -110,6 +114,14 @@ def brute_pair_candidates(e: DataFrame, threshold: float,
             f"max_brute_rows if the input really is small.")
     # NULL ids never pair under `id_a < id_b` — drop them up front
     rows = [r for r in rows if r[0] is not None]
+    dim = max((len(r[1]) for r in rows if r[1] is not None), default=0)
+    nbytes = len(rows) * dim * 8
+    if nbytes > MAX_BRUTE_BYTES:
+        raise ValueError(
+            f"embedding_near_duplicates(n_planes=0): {len(rows)} vectors "
+            f"of dim {dim} make a {nbytes}-byte matrix, "
+            f"over MAX_BRUTE_BYTES={MAX_BRUTE_BYTES}. Use n_planes>0 "
+            f"(banded hyperplane LSH) at scale.")
     ids = [r[0] for r in rows]
     for i in ids:
         if isinstance(i, float) and not math.isfinite(i):

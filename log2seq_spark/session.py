@@ -32,7 +32,13 @@ def get_spark(app_name: str = "log2seq-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Local-mode session sized to the host; on a real cluster the same
-    conf keys are supplied via spark-submit instead."""
+    conf keys are supplied via spark-submit instead.
+
+    Spark's cache of compiled generated classes
+    (``spark.sql.codegen.cache.maxEntries``) holds 4096 entries instead
+    of Spark's 100, so a plan that runs again in the session reuses its
+    compiled classes. It is a static conf: it applies only in the call
+    that starts the session."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     # under spark-submit (PythonRunner exports the gateway port) the
     # master/deploy conf comes from the submit command line; setting
@@ -57,7 +63,12 @@ def get_spark(app_name: str = "log2seq-spark", master: str | None = None,
          .config("spark.sql.session.timeZone", "UTC")
          # local-mode driver IS the executor: an 8g default heap GC-thrashes
          # at ≥16 busy threads (measured 1.5× wall); size for the box
-         .config("spark.driver.memory", driver_memory()))
+         .config("spark.driver.memory", driver_memory())
+         # a pass over the 47 runnable driver queries compiles
+         # 1,461-1,476 distinct classes; at Spark's 100 entries every
+         # later pass recompiled them all (1,759-1,855 compiles a pass),
+         # and C2 compiled each new class again
+         .config("spark.sql.codegen.cache.maxEntries", "4096"))
     # shuffle/spill dirs on tmpfs when available: models per-node NVMe
     # scratch (the sandbox's virtual disk serializes shuffle I/O)
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):

@@ -103,6 +103,20 @@ class TestDedup:
         assert dedup.embedding_near_duplicates(
             embs, threshold=0.999, max_brute_rows=20).count() >= 0
 
+    def test_brute_near_dup_byte_guard(self, spark, monkeypatch):
+        # the driver-side matrix is also capped in bytes: 20 vectors of
+        # dim 2 are 320 bytes of float64, under the row cap
+        from log2seq_spark.operators import veccand
+        rows = [(i, [float(i), 1.0]) for i in range(20)]
+        embs = spark.createDataFrame(rows,
+                                     "vec_id long, embedding array<float>")
+        monkeypatch.setattr(veccand, "MAX_BRUTE_BYTES", 319)
+        with pytest.raises(ValueError, match="MAX_BRUTE_BYTES"):
+            dedup.embedding_near_duplicates(embs, max_brute_rows=20)
+        monkeypatch.setattr(veccand, "MAX_BRUTE_BYTES", 320)
+        assert dedup.embedding_near_duplicates(
+            embs, threshold=0.999, max_brute_rows=20).count() >= 0
+
     def test_embedding_lsh_recall(self, spark):
         # 40 well-separated base directions (seeded), each with a slightly
         # perturbed twin (cosine ≈ 0.999): 40 true near-dup pairs. The
