@@ -1,15 +1,15 @@
 """CLI — the spark-submit-able counterpart of the reference's
 ``python -m log2seq`` (``/root/reference/log2seq/__main__.py``).
 
-Reads raw log lines (text/gz/bz2 via ``spark.read.text``) or a turns
-parquet/Iceberg table, parses with a preset or a user parser script
-(a python module exporting a module-global ``program: RuleProgram`` —
-the Spark-first analog of the reference's ``parser`` convention,
-``_common.py:11``; ship it with ``spark-submit --py-files``), and writes
-results or prints a sample. Exit codes mirror the reference
-(``__main__.py:89-148``): 0 when at least one line parses (partial
-failures still exit 0 — they are reported on stderr), 1 when nothing
-parses, 2 on a startup error.
+Reads raw log lines (stdin, or plain/gz/bz2/xz/tar files through one
+reader, ``_read_raw_lines``) or a turns parquet/Iceberg table, parses
+with a preset or a user parser script (a python module exporting a
+module-global ``program: RuleProgram`` — the Spark-first analog of the
+reference's ``parser`` convention, ``_common.py:11``; ship it with
+``spark-submit --py-files``), and writes results or prints a sample.
+Exit codes mirror the reference (``__main__.py:89-148``): 0 when at
+least one line parses (partial failures still exit 0 — they are
+reported on stderr), 1 when nothing parses, 2 on a startup error.
 
 Examples:
     python -m log2seq_spark parse --input logs/*.gz --format words
@@ -20,8 +20,11 @@ Examples:
 from __future__ import annotations
 
 import argparse
+import codecs
+import contextlib
 import glob as _glob
 import importlib.util
+import json
 import os
 import sys
 from pathlib import Path
@@ -39,6 +42,28 @@ def _cli_spark(app_name: str, log_level: str = "ERROR"):
     spark = get_spark(app_name=app_name)
     spark.sparkContext.setLogLevel(log_level)
     return spark, not pre_existing
+
+
+@contextlib.contextmanager
+def _cli_session(app_name: str, log_level: str = "ERROR"):
+    """The one session lifecycle of a CLI command: ``with
+    _cli_session(name) as spark:``. A session the command started is
+    stopped however the block ends (return, early exit code or
+    exception); a pre-existing one is left running."""
+    spark, owns = _cli_spark(app_name, log_level)
+    try:
+        yield spark
+    finally:
+        if owns:
+            spark.stop()
+
+
+def _read_input(spark, kind: str, *paths):
+    """A parquet path, or for ``kind == "table"`` a catalog table name —
+    an Iceberg (or any V2) table when a catalog is configured, a view
+    otherwise."""
+    return (spark.table(paths[0]) if kind == "table"
+            else spark.read.parquet(*paths))
 
 
 def load_program_script(path: str):
@@ -90,46 +115,67 @@ def _load_program(args):
         return None
 
 
+def _read_raw_lines(spark, files, encoding: str = "utf-8"):
+    """The CLI's one raw-log reader: the lines of ``files`` (stdin when
+    none) as ``_ord struct<_src, _pos>, text``. Sorting by ``_ord``
+    gives input order (argument order, then archive order, then line
+    order); ``_src`` tells the lines of one file or archive member from
+    the next. The reader follows from the input:
 
-
-def _iter_local_lines(files, encoding="utf-8"):
-    """Driver-side line iterator for the sources Spark's distributed text
-    reader can't take directly: stdin (no files given), tar-family
-    archives, and non-UTF-8 encodings (reference __main__.py:16-47).
-    Plain/gz/bz2 UTF-8 files go through ``spark.read.text`` instead."""
-    from .sources.logfiles import _TAR_SUFFIXES
+    * tar-family archives, ``.xz`` files and any non-UTF-8 ``encoding``
+      go to the ``logtext`` source (``sources/logfiles.py``): one
+      executor-side read per file and per archive member, nothing
+      materialised on the driver. It plans its partitions in argument
+      order, then archive order, so ``_src`` is the partition id taken
+      right after the scan, and ``_pos`` the line number.
+    * everything else goes to ``spark.read.text``, which splits plain and
+      bz2 files and takes directories, globs and any Hadoop path (it has
+      no XZ codec: an ``.xz`` file would come back as raw compressed
+      bytes). It lists splits in its own order, so ``_src`` leads with
+      the argument position and then the file, and ``_pos`` is the row
+      id, increasing through each file.
+    * stdin is read on the driver, the one raw input that is."""
+    from .sources import logfiles
     if not files:
-        for line in sys.stdin:
-            yield line.rstrip("\r\n")
-        return
-    for fp in files:
-        if fp.endswith(_TAR_SUFFIXES):
-            import tarfile
-            with tarfile.open(fp, "r") as tar:
-                for info in tar.getmembers():
-                    if info.isfile():
-                        with tar.extractfile(info) as f:
-                            for raw in f:
-                                yield raw.decode(encoding).rstrip("\r\n")
-        elif fp.endswith(".xz"):
-            import lzma
-            with lzma.open(fp, "rt", encoding=encoding) as f:
-                for line in f:
-                    yield line.rstrip("\r\n")
-        elif fp.endswith(".bz2"):
-            import bz2
-            with bz2.open(fp, "rt", encoding=encoding) as f:
-                for line in f:
-                    yield line.rstrip("\r\n")
-        elif fp.endswith(".gz"):
-            import gzip
-            with gzip.open(fp, "rt", encoding=encoding) as f:
-                for line in f:
-                    yield line.rstrip("\r\n")
-        else:
-            with open(fp, "rt", encoding=encoding) as f:
-                for line in f:
-                    yield line.rstrip("\r\n")
+        from .session import _local_frame
+        rows = [(i, line.rstrip("\r\n")) for i, line in enumerate(sys.stdin)]
+        df = _local_frame(spark, rows, "_pos long, text string")
+        src, pos, text = F.lit(0), F.col("_pos"), F.col("text")
+    elif (codecs.lookup(encoding).name != "utf-8"
+          or any(fp.endswith(logfiles._TAR_SUFFIXES + (".xz",))
+                 for fp in files)):
+        logfiles.register(spark)
+        # "paths" (a JSON list) rather than the comma-joined "path": a
+        # file name may hold a comma
+        df = (spark.read.format("logtext")
+              .option("paths", json.dumps(files))
+              .option("encoding", encoding).load())
+        src, pos, text = (F.spark_partition_id(), F.col("line_no"),
+                          F.col("text"))
+    else:
+        # input_file_name() yields a file: URI
+        uris = [Path(os.path.abspath(p)).as_uri() for p in files]
+        df = spark.read.text(files)
+        src = F.struct(
+            F.array_position(F.array(*[F.lit(u) for u in uris]),
+                             F.input_file_name()).alias("arg"),
+            F.input_file_name().alias("file"))
+        pos, text = F.monotonically_increasing_id(), F.col("value")
+    return df.select(F.struct(src.alias("_src"), pos.alias("_pos"))
+                     .alias("_ord"), text.alias("text"))
+
+
+def _assemble_records(df, start: str, sep: str):
+    """Logstash-multiline-codec pre-pass over an ``_ord, text`` frame:
+    collapse continuation lines into the record opened by their start
+    line (``start``, rlike semantics), joined by ``sep``. Records are
+    assembled per ``_ord._src``, so one never crosses a file or archive
+    member boundary; each keeps its start line's ``_ord``."""
+    from .operators.multiline import assemble_multiline
+    rec = assemble_multiline(
+        df.select(F.col("_ord._src").alias("_src"), "_ord", "text"),
+        start, group_cols=("_src",), order_col="_ord", sep=sep)
+    return rec.select("_ord", "text")
 
 
 def cmd_parse(args) -> int:
@@ -144,12 +190,9 @@ def cmd_parse(args) -> int:
     if args.input:
         files.append(args.input)
     if args.input_kind == "text":
-        # expand globs ONCE, driver-side, for every downstream reader —
-        # the tar and non-UTF-8 branches open paths literally, so an
-        # unexpanded 'logs/*.gz' crashed them with a raw
-        # FileNotFoundError instead of the validated exit 2 (and
-        # has_magic covers ?/[] patterns, which the old '*' test
-        # rejected as missing files)
+        # expand globs ONCE, driver-side: the argument order of the
+        # expanded files is the output order, and a pattern matching
+        # nothing is a validated exit 2 (has_magic covers ?/[] too)
         expanded = []
         for fp in files:
             if _glob.has_magic(fp):
@@ -170,95 +213,30 @@ def cmd_parse(args) -> int:
               f"for --input-kind {args.input_kind}", file=sys.stderr)
         return 2
 
+    with _cli_session("log2seq-spark-cli") as spark:
+        return _run_parse(spark, args, program, files)
+
+
+def _run_parse(spark, args, program, files) -> int:
+    """:func:`cmd_parse` once its startup checks passed."""
     from .functions.udf import with_parsed, with_tokens
-    from .session import _local_frame
-    from .sources.logfiles import _TAR_SUFFIXES
-    spark, owns = _cli_spark("log2seq-spark-cli")
-
-    nonutf8 = args.encoding.lower().replace("_", "-") not in ("utf-8", "utf8")
     ts_col = None
-    if args.input_kind in ("parquet", "table"):
-        # "table" resolves through the session catalog — an Iceberg (or
-        # any V2) table when a catalog is configured, a view otherwise
-        df = (spark.table(files[0]) if args.input_kind == "table"
-              else spark.read.parquet(*files))
-        df = df.withColumn("_ord", F.monotonically_increasing_id())
-        ts_col = "ts" if "ts" in df.columns else None
-    elif files and args.distributed:
-        # cluster path: every file / tar member is its own executor-side
-        # read partition (Python DataSource); ordering key is (argument
-        # position of the file, member, line_no) so multi-file output
-        # follows the user's argument order like the driver-side path and
-        # the reference CLI (NOT the lexicographic path — /b.log before
-        # /a/z.log when given in that order). Within one archive, members
-        # order by name (the single documented divergence: the driver
-        # path emits them in archive order).
-        from .sources import logfiles
-        logfiles.register(spark)
-        file_seq = F.array_position(
-            F.array(*[F.lit(p) for p in logfiles._expand(",".join(files))]),
-            F.col("path"))
-        df = (spark.read.format("logtext")
-              .option("path", ",".join(files))
-              .option("encoding", args.encoding).load()
-              .select(F.struct(file_seq.alias("file_seq"), "member",
-                               "line_no").alias("_ord"),
-                      "text"))
-    elif not files or nonutf8 or any(fp.endswith(_TAR_SUFFIXES)
-                                     or fp.endswith(".xz")
-                                     for fp in files):
-        # plain .xz included: Hadoop ships no XZ codec, so
-        # spark.read.text would emit the raw compressed bytes as
-        # mojibake "lines" — the driver-side lzma path reads it right
-        lines = list(_iter_local_lines(files, args.encoding))
-        df = _local_frame(spark, list(enumerate(lines)),
-                          "_ord long, text string")
+    if args.input_kind == "text":
+        df = _read_raw_lines(spark, files, args.encoding)
     else:
-        # multi-file: spark.read.text lists splits in its own (size/path)
-        # order, so the row-order id must be prefixed with the file's
-        # ARGUMENT position to preserve the user's ordering (reference
-        # CLI parity; globs were expanded above). input_file_name()
-        # yields a file: URI.
-        uris = [Path(os.path.abspath(p)).as_uri() for p in files]
-        file_seq = F.array_position(F.array(*[F.lit(u) for u in uris]),
-                                    F.input_file_name())
-        df = (spark.read.text(files).withColumnRenamed("value", "text")
-              .withColumn("_ord", F.struct(
-                  file_seq.alias("file_seq"),
-                  F.monotonically_increasing_id().alias("row_id"))))
+        df = _read_input(spark, args.input_kind, *files)
+        ts_col = "ts" if "ts" in df.columns else None
+        df = df.withColumn("_ord", F.struct(
+            F.lit(0).alias("_src"),
+            F.monotonically_increasing_id().alias("_pos")))
 
-    if getattr(args, "multiline_start", None):
-        # Logstash-multiline-codec pre-pass: collapse continuation lines
-        # into the record opened by their start line BEFORE parsing, so a
-        # stack-trace body rides inside its record instead of failing as
-        # N separate lines. Default join is a single SPACE: continuation
-        # lines are whitespace-led, and the header cascade's statement
-        # field does not cross newlines — callers who want raw "\n"
-        # reconstruction use the operator API directly.
-        from .operators.multiline import assemble_multiline
-        if files and args.distributed and args.input_kind == "text":
-            # per-(file, member) records, assembled in parallel
-            split = df.select(F.col("_ord.file_seq").alias("_g1"),
-                              F.col("_ord.member").alias("_g2"),
-                              F.col("_ord.line_no").alias("_ln"), "text")
-            rec = assemble_multiline(split, args.multiline_start,
-                                     group_cols=("_g1", "_g2"),
-                                     order_col="_ln",
-                                     sep=args.multiline_sep)
-            df = rec.select(
-                F.struct(F.col("_g1").alias("file_seq"),
-                         F.col("_g2").alias("member"),
-                         F.col("_ln").alias("line_no")).alias("_ord"),
-                "text")
-        else:
-            # one ordered stream (stdin / driver-side files / text reader
-            # / table): a single window partition, matching the
-            # driver-side reading model these inputs already have
-            rec = assemble_multiline(
-                df.withColumn("_g", F.lit(1)), args.multiline_start,
-                group_cols=("_g",), order_col="_ord",
-                sep=args.multiline_sep)
-            df = rec.select("_ord", "text")
+    if args.multiline_start:
+        # a stack-trace body rides inside its record instead of failing
+        # as N separate lines. Default join is a single SPACE:
+        # continuation lines are whitespace-led, and the header
+        # cascade's statement field does not cross newlines — callers
+        # who want raw "\n" reconstruction use the operator API directly
+        df = _assemble_records(df, args.multiline_start, args.multiline_sep)
 
     # --verbose: reference-parity per-line rule trace (reference
     # _common.py:85-116 / statement.py:44-54 print the trace from inside
@@ -270,7 +248,6 @@ def cmd_parse(args) -> int:
     # implementation uses bare print().
     tracer = None
     if getattr(args, "verbose", False):
-        import contextlib
         import io
 
         def tracer(line: str) -> None:
@@ -294,106 +271,107 @@ def cmd_parse(args) -> int:
                     pass  # the vectorized path already reported it
             sys.stderr.write(buf.getvalue())
 
-    nonempty = F.col("text") != ""
-    if args.statement:
-        stmts = df.filter(nonempty).select("_ord", "text")
-        # counted before the mapper: Spark cannot prune a mapInArrow
-        # node, so counting its output would tokenize the input twice
-        n_ok = stmts.count()
-        out = (with_tokens(stmts, program.actions, "text", "_tok")
-               .select("_ord", "text", F.col("_tok.words").alias("words"),
-                       F.col("_tok.symbols").alias("symbols")))
-        n_fail = 0
-        fail_rows = []
-        if args.format == "words":
-            fmt = lambda r: " ".join(r["words"])
-        else:
-            fmt = lambda r: str((list(r["words"]), list(r["symbols"])))
-        ok_rows = out.orderBy("_ord")
-    else:
-        default_year = args.year
-        if default_year is None and ts_col is None:
-            import datetime
-            default_year = datetime.datetime.now().year
-        # persist: the counts aggregate, the failures collect, and the
-        # success output each re-execute the plan, and the Arrow parse
-        # UDF is the dominant cost — without this the full input is
-        # parsed up to three times (the _write_with_tally discipline)
-        parsed = with_parsed(df.filter(nonempty), program, text_col="text",
-                             ts_col=ts_col, default_year=default_year) \
-            .persist()
-        ok = F.col("parsed.message").isNotNull()
-        is_empty = F.col("parsed.rule_id") == -2
-        counts = parsed.agg(
-            F.sum(ok.cast("long")).alias("n_ok"),
-            F.sum((~ok & ~is_empty).cast("long")).alias("n_fail")).first()
-        n_ok = counts["n_ok"] or 0
-        n_fail = counts["n_fail"] or 0
-        failures = parsed.filter(~ok & ~is_empty).orderBy("_ord")
-        if args.max_failures > 0:
-            failures = failures.limit(args.max_failures)
-        fail_rows = [r["text"] for r in failures.select("_ord", "text")
-                     .collect()] if n_fail else []
-        if args.format == "words":
-            fmt = lambda r: " ".join(r["parsed"]["words"])
-        else:
-            fmt = lambda r: str({k: r["parsed"][k]
-                                 for k in r["parsed"].__fields__
-                                 if r["parsed"][k] is not None})
-        ok_rows = parsed.filter(ok).orderBy("_ord")
-
-    # failures + progress to stderr (reference: parse failed: {line!r})
-    for line in fail_rows:
-        if tracer:
-            tracer(line)
-        print(f"parse failed: {line!r}", file=sys.stderr)
-    if 0 < args.max_failures < n_fail:
-        print("... (further failures suppressed; "
-              "use --max-failures 0 to show all)", file=sys.stderr)
-
-    # successes to stdout / --output (streamed — no full collect)
-    wrote_parquet = False
-    if args.output and args.output.endswith(".parquet"):
+    parsed = None
+    try:
+        nonempty = F.col("text") != ""
         if args.statement:
-            sel = ok_rows.drop("_ord")
+            stmts = df.filter(nonempty).select("_ord", "text")
+            # counted before the mapper: Spark cannot prune a mapInArrow
+            # node, so counting its output would tokenize the input twice
+            n_ok = stmts.count()
+            out = (with_tokens(stmts, program.actions, "text", "_tok")
+                   .select("_ord", "text", F.col("_tok.words").alias("words"),
+                           F.col("_tok.symbols").alias("symbols")))
+            n_fail = 0
+            fail_rows = []
+            if args.format == "words":
+                fmt = lambda r: " ".join(r["words"])
+            else:
+                fmt = lambda r: str((list(r["words"]), list(r["symbols"])))
+            ok_rows = out.orderBy("_ord")
         else:
-            # collision-safe flatten: a turns table already carries ts
-            # (and could carry host/...), and a bare select("*",
-            # "parsed.*") would emit duplicate column names that the
-            # parquet writer rejects — colliding parsed fields get a
-            # parsed_ prefix
-            base = [c for c in ok_rows.columns
-                    if c not in ("parsed", "_ord")]
-            flat = [F.col(f"parsed.{c}").alias(
-                        f"parsed_{c}" if c in base else c)
-                    for c in ok_rows.select("parsed.*").columns]
-            sel = ok_rows.select(*base, *flat)
-        sel.write.mode("overwrite").parquet(args.output)
-        wrote_parquet = True
-    if not args.failures_only and not wrote_parquet:
-        f_out = (open(args.output, "w", encoding=args.encoding)
-                 if args.output else sys.stdout)
-        try:
-            it = ok_rows.toLocalIterator()
-            for i, row in enumerate(it):
-                if args.sample is not None and i >= args.sample:
-                    break
-                if tracer:
-                    tracer(row["text"])
-                if args.show_input:
-                    print(row["text"], file=f_out)
-                print(fmt(row), file=f_out)
-        finally:
-            if args.output:
-                f_out.close()
+            default_year = args.year
+            if default_year is None and ts_col is None:
+                import datetime
+                default_year = datetime.datetime.now().year
+            # persist: the counts aggregate, the failures collect, and the
+            # success output each re-execute the plan, and the Arrow parse
+            # UDF is the dominant cost — without this the full input is
+            # parsed up to three times (the _write_with_tally discipline)
+            parsed = with_parsed(df.filter(nonempty), program, text_col="text",
+                                 ts_col=ts_col, default_year=default_year) \
+                .persist()
+            ok = F.col("parsed.message").isNotNull()
+            is_empty = F.col("parsed.rule_id") == -2
+            counts = parsed.agg(
+                F.sum(ok.cast("long")).alias("n_ok"),
+                F.sum((~ok & ~is_empty).cast("long")).alias("n_fail")).first()
+            n_ok = counts["n_ok"] or 0
+            n_fail = counts["n_fail"] or 0
+            failures = parsed.filter(~ok & ~is_empty).orderBy("_ord")
+            if args.max_failures > 0:
+                failures = failures.limit(args.max_failures)
+            fail_rows = [r["text"] for r in failures.select("_ord", "text")
+                         .collect()] if n_fail else []
+            if args.format == "words":
+                fmt = lambda r: " ".join(r["parsed"]["words"])
+            else:
+                fmt = lambda r: str({k: r["parsed"][k]
+                                     for k in r["parsed"].__fields__
+                                     if r["parsed"][k] is not None})
+            ok_rows = parsed.filter(ok).orderBy("_ord")
 
-    print(f"# processed {n_ok + n_fail} lines: {n_ok} ok, {n_fail} failed",
-          file=sys.stderr)
-    if not args.statement:
-        parsed.unpersist()
-    if owns:
-        spark.stop()
-    return 0 if n_ok > 0 else 1
+        # failures + progress to stderr (reference: parse failed: {line!r})
+        for line in fail_rows:
+            if tracer:
+                tracer(line)
+            print(f"parse failed: {line!r}", file=sys.stderr)
+        if 0 < args.max_failures < n_fail:
+            print("... (further failures suppressed; "
+                  "use --max-failures 0 to show all)", file=sys.stderr)
+
+        # successes to stdout / --output (streamed — no full collect)
+        wrote_parquet = False
+        if args.output and args.output.endswith(".parquet"):
+            if args.statement:
+                sel = ok_rows.drop("_ord")
+            else:
+                # collision-safe flatten: a turns table already carries ts
+                # (and could carry host/...), and a bare select("*",
+                # "parsed.*") would emit duplicate column names that the
+                # parquet writer rejects — colliding parsed fields get a
+                # parsed_ prefix
+                base = [c for c in ok_rows.columns
+                        if c not in ("parsed", "_ord")]
+                flat = [F.col(f"parsed.{c}").alias(
+                            f"parsed_{c}" if c in base else c)
+                        for c in ok_rows.select("parsed.*").columns]
+                sel = ok_rows.select(*base, *flat)
+            sel.write.mode("overwrite").parquet(args.output)
+            wrote_parquet = True
+        if not args.failures_only and not wrote_parquet:
+            f_out = (open(args.output, "w", encoding=args.encoding)
+                     if args.output else sys.stdout)
+            try:
+                it = ok_rows.toLocalIterator()
+                for i, row in enumerate(it):
+                    if args.sample is not None and i >= args.sample:
+                        break
+                    if tracer:
+                        tracer(row["text"])
+                    if args.show_input:
+                        print(row["text"], file=f_out)
+                    print(fmt(row), file=f_out)
+            finally:
+                if args.output:
+                    f_out.close()
+
+        print(f"# processed {n_ok + n_fail} lines: {n_ok} ok, {n_fail} failed",
+              file=sys.stderr)
+        return 0 if n_ok > 0 else 1
+    finally:
+        if parsed is not None:
+            parsed.unpersist()
 
 
 def cmd_pipeline(args) -> int:
@@ -401,27 +379,22 @@ def cmd_pipeline(args) -> int:
     program = _load_program(args)
     if program is None:
         return 2
-    spark, owns = _cli_spark("log2seq-spark-pipeline", log_level="WARN")
-    turns = (spark.table(args.input) if args.input_kind == "table"
-             else spark.read.parquet(args.input))
-    cfg = PipelineConfig(out_dir=args.out, n_buckets=args.buckets,
-                         program=program, input_id=args.input,
-                         tokens_heavy_k=args.tokens_heavy_k)
-    res = run_pipeline(spark, turns, cfg, resume=not args.no_resume)
+    with _cli_session("log2seq-spark-pipeline", log_level="WARN") as spark:
+        turns = _read_input(spark, args.input_kind, args.input)
+        cfg = PipelineConfig(out_dir=args.out, n_buckets=args.buckets,
+                             program=program, input_id=args.input,
+                             tokens_heavy_k=args.tokens_heavy_k)
+        res = run_pipeline(spark, turns, cfg, resume=not args.no_resume)
     print(f"lineage={res.lineage_id} processed={res.buckets_processed} "
           f"skipped={res.buckets_skipped} metrics={res.metrics}",
           file=sys.stderr)
-    if owns:
-        spark.stop()
     return 0
 
 
 def cmd_generate(args) -> int:
     from .sources.transcripts import write_transcripts
-    spark, owns = _cli_spark("log2seq-spark-generate")
-    write_transcripts(spark, args.out, args.convs, seed=args.seed)
-    if owns:
-        spark.stop()
+    with _cli_session("log2seq-spark-generate") as spark:
+        write_transcripts(spark, args.out, args.convs, seed=args.seed)
     return 0
 
 
@@ -451,50 +424,39 @@ def cmd_clean(args) -> int:
     per-doc verdicts (doc_id, clean_text, kept, drop_reason) and prints
     the drop-reason tally to stderr."""
     from .operators.corpus import clean_corpus
-    spark, owns = _cli_spark("log2seq-spark-clean")
-    # normalize ingest parallelism: a documents table arriving as few
-    # parquet files would serialize the CPU-bound scrub/quality regexes
-    # on as few cores (measured 37s -> 12s at sf0.1 on local[32]); the
-    # raw-text shuffle is cheap next to the per-char regex work
-    docs = (spark.read.parquet(args.input)
-            .repartition(spark.sparkContext.defaultParallelism))
-    out = clean_corpus(
-        docs, text_col=args.text_col, id_col=args.id_col,
-        do_normalize=args.normalize,
-        do_scrub=not args.no_scrub,
-        do_line_dedup=not args.no_line_dedup,
-        quality_min=None if args.quality_min < 0 else args.quality_min)
-    _write_with_tally(out, args.out, "drop_reason",
-                      only="kept" if args.kept_only else None,
-                      null_label="kept")
-    if owns:
-        spark.stop()
+    with _cli_session("log2seq-spark-clean") as spark:
+        # normalize ingest parallelism: a documents table arriving as few
+        # parquet files would serialize the CPU-bound scrub/quality
+        # regexes on as few cores (measured 37s -> 12s at sf0.1 on
+        # local[32]); the raw-text shuffle is cheap next to the per-char
+        # regex work
+        docs = (spark.read.parquet(args.input)
+                .repartition(spark.sparkContext.defaultParallelism))
+        out = clean_corpus(
+            docs, text_col=args.text_col, id_col=args.id_col,
+            do_normalize=args.normalize,
+            do_scrub=not args.no_scrub,
+            do_line_dedup=not args.no_line_dedup,
+            quality_min=None if args.quality_min < 0 else args.quality_min)
+        _write_with_tally(out, args.out, "drop_reason",
+                          only="kept" if args.kept_only else None,
+                          null_label="kept")
     return 0
 
 
 def _read_lines(spark, path: str, kind: str, text_col: str,
                 multiline_start=None, multiline_sep=" "):
-    """Shared line-table reader for the template-family subcommands:
-    raw text files (optionally multiline-assembled through the logtext
-    source), a parquet path, or a catalog table."""
-    if kind == "parquet":
-        return spark.read.parquet(path)
-    if kind == "table":
-        return spark.table(path)
+    """Shared line-table reader for the template-family subcommands: a
+    parquet path, a catalog table, or raw log lines through
+    :func:`_read_raw_lines` — optionally assembled into records first,
+    so a stack trace mines as ONE template instead of one per frame
+    line."""
+    if kind != "text":
+        return _read_input(spark, kind, path)
+    lines = _read_raw_lines(spark, [path])
     if multiline_start:
-        # records, not physical lines, are the mining unit: read through
-        # the logtext source (native per-file/member line order) and
-        # collapse continuations first — a stack trace mines as ONE
-        # template instead of one per frame line
-        from .operators.multiline import assemble_multiline
-        from .sources import logfiles
-        logfiles.register(spark)
-        raw = (spark.read.format("logtext")
-               .option("path", path).load())
-        return (assemble_multiline(raw, multiline_start,
-                                   sep=multiline_sep)
-                .withColumnRenamed("text", text_col))
-    return spark.read.text(path).withColumnRenamed("value", text_col)
+        lines = _assemble_records(lines, multiline_start, multiline_sep)
+    return lines.select(F.col("text").alias(text_col))
 
 
 def _template_state_fold(spark, lines, state_dir: str, text_col: str,
@@ -542,39 +504,36 @@ def cmd_templates(args) -> int:
               " table rows carry no per-file line order to assemble by",
               file=sys.stderr)
         return 2
-    spark, owns = _cli_spark("log2seq-spark-templates")
-    lines = _read_lines(spark, args.input, args.input_kind, args.text_col,
-                        getattr(args, "multiline_start", None),
-                        args.multiline_sep)
-    if getattr(args, "state_dir", None):
-        # incremental mining: fold THIS corpus's position profile into
-        # the epoch-versioned state (plans/epochs.py protocol — one
-        # format for this command and `rare --state-dir`).
-        # Printed templates cover everything mined into the state so
-        # far; per-shard cost is one profile aggregate over the shard
-        # plus a merge against the (groups-bounded) state.
-        from .operators.templates import templates_from_profiles
-        try:
-            _, merged, epoch = _template_state_fold(
-                spark, lines, args.state_dir, args.text_col,
-                args.tokens_col, write=True)
-        except ValueError as exc:   # incompatible tokenization stamp
-            print(f"templates: {exc}", file=sys.stderr)
-            if owns:
-                spark.stop()
-            return 2
-        out = templates_from_profiles(merged, min_count=args.min_count)
-        print(f"# state: epoch={epoch}", file=sys.stderr)
-    else:
-        out = mine_templates(lines, args.text_col,
-                             min_count=args.min_count,
-                             tokens_col=args.tokens_col)
-    rows = (out.orderBy(F.desc("n_lines"), "template")
-               .limit(args.top).collect())
+    with _cli_session("log2seq-spark-templates") as spark:
+        lines = _read_lines(spark, args.input, args.input_kind,
+                            args.text_col,
+                            getattr(args, "multiline_start", None),
+                            args.multiline_sep)
+        if getattr(args, "state_dir", None):
+            # incremental mining: fold THIS corpus's position profile
+            # into the epoch-versioned state (plans/epochs.py protocol —
+            # one format for this command and `rare --state-dir`).
+            # Printed templates cover everything mined into the state so
+            # far; per-shard cost is one profile aggregate over the shard
+            # plus a merge against the (groups-bounded) state.
+            from .operators.templates import templates_from_profiles
+            try:
+                _, merged, epoch = _template_state_fold(
+                    spark, lines, args.state_dir, args.text_col,
+                    args.tokens_col, write=True)
+            except ValueError as exc:   # incompatible tokenization stamp
+                print(f"templates: {exc}", file=sys.stderr)
+                return 2
+            out = templates_from_profiles(merged, min_count=args.min_count)
+            print(f"# state: epoch={epoch}", file=sys.stderr)
+        else:
+            out = mine_templates(lines, args.text_col,
+                                 min_count=args.min_count,
+                                 tokens_col=args.tokens_col)
+        rows = (out.orderBy(F.desc("n_lines"), "template")
+                   .limit(args.top).collect())
     for r in rows:
         print(f"{r['n_lines']}\t{r['n_groups']}\t{r['template']}")
-    if owns:
-        spark.stop()
     return 0
 
 
@@ -766,8 +725,7 @@ def cmd_dedup(args) -> int:
     against (and absorbed into) a persisted cross-shard index — see
     :func:`_cmd_dedup_incremental`."""
     from .operators.dedup import dedup_decisions
-    spark, owns = _cli_spark("log2seq-spark-dedup")
-    try:
+    with _cli_session("log2seq-spark-dedup") as spark:
         if args.index_dir is not None:
             return _cmd_dedup_incremental(args, spark)
         docs = (spark.read.parquet(args.input)
@@ -782,9 +740,6 @@ def cmd_dedup(args) -> int:
                               threshold=args.threshold,
                               near_pairs=near_pairs)
         _write_with_tally(out, args.out, "decision")
-    finally:
-        if owns:
-            spark.stop()
     return 0
 
 
@@ -813,8 +768,7 @@ def cmd_substr(args) -> int:
     from .operators.substrdedup import (scrub_against_index,
                                         scrub_duplicate_spans,
                                         substr_index)
-    spark, owns = _cli_spark("log2seq-spark-substr")
-    try:
+    with _cli_session("log2seq-spark-substr") as spark:
         docs = (spark.read.parquet(args.input)
                 .repartition(spark.sparkContext.defaultParallelism))
         if args.top is not None:
@@ -982,9 +936,6 @@ def cmd_substr(args) -> int:
                 spark, args.index_dir, segments + [delta_path], nxt,
                 "grams", lambda df: df.groupBy("gh").agg(
                     F.sum("n_occ").alias("n_occ")))
-    finally:
-        if owns:
-            spark.stop()
     return 0
 
 
@@ -994,20 +945,18 @@ def cmd_drift(args) -> int:
     print ``status<TAB>n_a<TAB>n_b<TAB>template`` rows — "what changed
     between yesterday's logs and today's"."""
     from .operators.anomaly import template_drift
-    spark, owns = _cli_spark("log2seq-spark-drift")
-    a = _read_lines(spark, args.input_a, args.input_kind, args.text_col)
-    b = _read_lines(spark, args.input_b, args.input_kind, args.text_col)
-    out = template_drift(a, b, args.text_col, tokens_col=args.tokens_col,
-                         factor=args.factor)
-    if args.status:
-        keep = [s.strip() for s in args.status.split(",") if s.strip()]
-        out = out.filter(F.col("status").isin(keep))
-    rows = (out.orderBy(F.desc("n_b"), F.desc("n_a"), "template")
-               .limit(args.top).collect())
-    for r in rows:
-        print(f"{r['status']}\t{r['n_a']}\t{r['n_b']}\t{r['template']}")
-    if owns:
-        spark.stop()
+    with _cli_session("log2seq-spark-drift") as spark:
+        a = _read_lines(spark, args.input_a, args.input_kind, args.text_col)
+        b = _read_lines(spark, args.input_b, args.input_kind, args.text_col)
+        out = template_drift(a, b, args.text_col, tokens_col=args.tokens_col,
+                             factor=args.factor)
+        if args.status:
+            keep = [s.strip() for s in args.status.split(",") if s.strip()]
+            out = out.filter(F.col("status").isin(keep))
+        rows = (out.orderBy(F.desc("n_b"), F.desc("n_a"), "template")
+                   .limit(args.top).collect())
+        for r in rows:
+            print(f"{r['status']}\t{r['n_a']}\t{r['n_b']}\t{r['template']}")
     return 0
 
 
@@ -1027,72 +976,67 @@ def cmd_rare(args) -> int:
     leading ``new``/``rare``/``new+rare`` marker; ``--out`` verdicts
     gain ``is_new`` + a ``verdict`` tally column."""
     from .operators.anomaly import novel_line_flags, rare_template_lines
-    spark, owns = _cli_spark("log2seq-spark-rare")
-    lines = _read_lines(spark, args.input, args.input_kind, args.text_col)
-    if getattr(args, "state_dir", None):
-        # incremental screening: rarity judged against EVERYTHING ever
-        # mined into the epoch state (history ∪ this batch — a message
-        # common within the batch is not an anomaly), plus is_new for
-        # Drain groups history has never seen. Same state dir
-        # `templates --state-dir` maintains; unless
-        # --screen-only, this batch is folded in as the next epoch so
-        # the next shard screens against it too.
-        try:
-            prior, merged, epoch = _template_state_fold(
-                spark, lines, args.state_dir, args.text_col,
-                args.tokens_col, write=not args.screen_only)
-        except ValueError as exc:   # incompatible tokenization stamp
-            print(f"rare: {exc}", file=sys.stderr)
-            if owns:
-                spark.stop()
-            return 2
-        out = novel_line_flags(lines, prior, args.text_col,
-                               tokens_col=args.tokens_col,
-                               max_lines=args.max_lines,
-                               merged_profile=merged)
-        if epoch is not None:
-            print(f"# state: epoch={epoch}", file=sys.stderr)
+    with _cli_session("log2seq-spark-rare") as spark:
+        lines = _read_lines(spark, args.input, args.input_kind, args.text_col)
+        if getattr(args, "state_dir", None):
+            # incremental screening: rarity judged against EVERYTHING ever
+            # mined into the epoch state (history ∪ this batch — a message
+            # common within the batch is not an anomaly), plus is_new for
+            # Drain groups history has never seen. Same state dir
+            # `templates --state-dir` maintains; unless
+            # --screen-only, this batch is folded in as the next epoch so
+            # the next shard screens against it too.
+            try:
+                prior, merged, epoch = _template_state_fold(
+                    spark, lines, args.state_dir, args.text_col,
+                    args.tokens_col, write=not args.screen_only)
+            except ValueError as exc:   # incompatible tokenization stamp
+                print(f"rare: {exc}", file=sys.stderr)
+                return 2
+            out = novel_line_flags(lines, prior, args.text_col,
+                                   tokens_col=args.tokens_col,
+                                   max_lines=args.max_lines,
+                                   merged_profile=merged)
+            if epoch is not None:
+                print(f"# state: epoch={epoch}", file=sys.stderr)
+            if args.out:
+                flagged = F.col("is_rare") | F.col("is_new")
+                verdict = (F.when(F.col("is_rare") & F.col("is_new"),
+                                  F.lit("new+rare"))
+                            .when(F.col("is_new"), F.lit("new"))
+                            .when(F.col("is_rare"), F.lit("rare"))
+                            .otherwise(F.lit("common")))
+                _write_with_tally(out.withColumn("verdict", verdict),
+                                  args.out, "verdict",
+                                  only=flagged if args.rare_only else None)
+            else:
+                rows = (out.filter(F.col("is_rare") | F.col("is_new"))
+                           .orderBy(F.coalesce("template_lines", F.lit(0)),
+                                    args.text_col)
+                           .limit(args.top).collect())
+                for r in rows:
+                    nl = r["template_lines"]
+                    mark = "+".join(m for m, on in
+                                    (("new", r["is_new"]),
+                                     ("rare", r["is_rare"])) if on)
+                    print(f"{mark}\t{0 if nl is None else nl}\t"
+                          f"{r[args.text_col]}")
+            return 0
+        out = rare_template_lines(lines, args.text_col,
+                                  tokens_col=args.tokens_col,
+                                  max_lines=args.max_lines)
         if args.out:
-            flagged = F.col("is_rare") | F.col("is_new")
-            verdict = (F.when(F.col("is_rare") & F.col("is_new"),
-                              F.lit("new+rare"))
-                        .when(F.col("is_new"), F.lit("new"))
-                        .when(F.col("is_rare"), F.lit("rare"))
-                        .otherwise(F.lit("common")))
-            _write_with_tally(out.withColumn("verdict", verdict),
-                              args.out, "verdict",
-                              only=flagged if args.rare_only else None)
+            _write_with_tally(
+                out, args.out, "is_rare",
+                only=F.col("is_rare") if args.rare_only else None)
         else:
-            rows = (out.filter(F.col("is_rare") | F.col("is_new"))
+            rows = (out.filter("is_rare")
                        .orderBy(F.coalesce("template_lines", F.lit(0)),
                                 args.text_col)
                        .limit(args.top).collect())
             for r in rows:
                 nl = r["template_lines"]
-                mark = "+".join(m for m, on in
-                                (("new", r["is_new"]),
-                                 ("rare", r["is_rare"])) if on)
-                print(f"{mark}\t{0 if nl is None else nl}\t"
-                      f"{r[args.text_col]}")
-        if owns:
-            spark.stop()
-        return 0
-    out = rare_template_lines(lines, args.text_col,
-                              tokens_col=args.tokens_col,
-                              max_lines=args.max_lines)
-    if args.out:
-        _write_with_tally(out, args.out, "is_rare",
-                          only=F.col("is_rare") if args.rare_only else None)
-    else:
-        rows = (out.filter("is_rare")
-                   .orderBy(F.coalesce("template_lines", F.lit(0)),
-                            args.text_col)
-                   .limit(args.top).collect())
-        for r in rows:
-            nl = r["template_lines"]
-            print(f"{0 if nl is None else nl}\t{r[args.text_col]}")
-    if owns:
-        spark.stop()
+                print(f"{0 if nl is None else nl}\t{r[args.text_col]}")
     return 0
 
 
@@ -1121,8 +1065,7 @@ def cmd_ann(args) -> int:
     if args.action in ("build", "append") and not args.input:
         print(f"ann: {args.action} needs --input", file=sys.stderr)
         return 2
-    spark, owns = _cli_spark("log2seq-spark-ann")
-    try:
+    with _cli_session("log2seq-spark-ann") as spark:
         if args.action == "build":
             embs = spark.read.parquet(args.input)
             cents = kmeans_centroids(embs, k=args.k_cells,
@@ -1187,9 +1130,6 @@ def cmd_ann(args) -> int:
             for r in out.collect():
                 print(f"{r[args.id_col]}\t{round(r['cosine'], 6)}")
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_heavy(args) -> int:
@@ -1201,10 +1141,8 @@ def cmd_heavy(args) -> int:
     streams its whitespace tokens instead of the raw column values."""
     from .operators.heavy import heavy_hitters
     from .operators.textstats import tokens_expr
-    spark, owns = _cli_spark("log2seq-spark-heavy")
-    try:
-        df = (spark.table(args.input) if args.input_kind == "table"
-              else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-heavy") as spark:
+        df = _read_input(spark, args.input_kind, args.input)
         if args.tokenize:
             stream = df.select(
                 F.explode(tokens_expr(F.col(args.col))).alias("item"))
@@ -1214,9 +1152,6 @@ def cmd_heavy(args) -> int:
         out = heavy_hitters(stream, "item", k=args.k)
         for r in out.orderBy(F.desc("n"), "item").collect():
             print(f"{r['n']}\t{r['item']}")
-    finally:
-        if owns:
-            spark.stop()
     return 0
 
 
@@ -1248,8 +1183,7 @@ def cmd_bpe(args) -> int:
             print(f"bpe: cannot load merges {args.merges}: {e}",
                   file=sys.stderr)
             return 2
-    spark, owns = _cli_spark("log2seq-spark-bpe")
-    try:
+    with _cli_session("log2seq-spark-bpe") as spark:
         docs = spark.read.parquet(args.input)
         if args.action == "train":
             merges = bpe_train(docs, args.text_col,
@@ -1274,9 +1208,6 @@ def cmd_bpe(args) -> int:
         print(f"# docs: {tally['d']}  bpe_tokens: {tally['t']}",
               file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_bursts(args) -> int:
@@ -1285,10 +1216,8 @@ def cmd_bursts(args) -> int:
     trailing baseline; prints ``window_start<TAB>key?<TAB>n<TAB>
     base_n/base_windows<TAB>BURST?`` rows."""
     from .operators.anomaly import burst_windows
-    spark, owns = _cli_spark("log2seq-spark-bursts")
-    try:
-        events = (spark.table(args.input) if args.input_kind == "table"
-                  else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-bursts") as spark:
+        events = _read_input(spark, args.input_kind, args.input)
         out = burst_windows(events, args.ts_col, key_col=args.key_col,
                             window=args.window, trailing=args.trailing,
                             mult=args.mult, min_windows=args.min_windows)
@@ -1304,9 +1233,6 @@ def cmd_bursts(args) -> int:
                       "BURST" if r["is_burst"] else "-"]
             print("\t".join(parts))
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_outliers(args) -> int:
@@ -1315,10 +1241,8 @@ def cmd_outliers(args) -> int:
     flagged rows ``key<TAB>value<TAB>z`` (largest |z| first) and a
     per-key tally to stderr."""
     from .operators.anomaly import robust_outliers
-    spark, owns = _cli_spark("log2seq-spark-outliers")
-    try:
-        events = (spark.table(args.input) if args.input_kind == "table"
-                  else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-outliers") as spark:
+        events = _read_input(spark, args.input_kind, args.input)
         keys = tuple(args.key_col.split(",")) if args.key_col else ()
         out = robust_outliers(events, args.value_col, keys,
                               threshold=args.threshold)
@@ -1340,9 +1264,6 @@ def cmd_outliers(args) -> int:
             print(f"# {key}: {r['n']} outliers / {r['total']} rows",
                   file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_fill(args) -> int:
@@ -1351,10 +1272,8 @@ def cmd_fill(args) -> int:
     → double), densify, fill by LOCF + linear interpolation, write the
     filled parquet and print a per-key filled/total tally to stderr."""
     from .operators.gapfill import fill_gaps
-    spark, owns = _cli_spark("log2seq-spark-fill")
-    try:
-        events = (spark.table(args.input) if args.input_kind == "table"
-                  else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-fill") as spark:
+        events = _read_input(spark, args.input_kind, args.input)
         keys = [k for k in (args.key_col.split(",")
                             if args.key_col else [])]
         bucketed = (events
@@ -1386,9 +1305,6 @@ def cmd_fill(args) -> int:
             print(f"# {r[key]}: filled {r['nf']} of {r['n']} grid rows",
                   file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_render(args) -> int:
@@ -1398,22 +1314,19 @@ def cmd_render(args) -> int:
     distributed JSONL. ``--split-val R`` adds a leakage-safe
     content-addressed train/val field hashed on conv_id."""
     from .operators.chatformat import render_samples
-    spark, owns = _cli_spark("log2seq-spark-render")
-    turns = (spark.table(args.input) if args.input_kind == "table"
-             else spark.read.parquet(args.input))
-    out = render_samples(turns, conv_col=args.conv_col,
-                         idx_col=args.idx_col, role_col=args.role_col,
-                         text_col=args.text_col,
-                         loss_roles=tuple(args.loss_roles.split(",")))
-    if args.split_val is not None:
-        from .operators.sampling import leakage_safe_split
-        out = leakage_safe_split(out, val_rate=args.split_val,
-                                 id_col=args.conv_col)
-    out.write.mode("overwrite").json(args.out)
-    n = spark.read.json(args.out).count()
-    print(f"# samples: {n}", file=sys.stderr)
-    if owns:
-        spark.stop()
+    with _cli_session("log2seq-spark-render") as spark:
+        turns = _read_input(spark, args.input_kind, args.input)
+        out = render_samples(turns, conv_col=args.conv_col,
+                             idx_col=args.idx_col, role_col=args.role_col,
+                             text_col=args.text_col,
+                             loss_roles=tuple(args.loss_roles.split(",")))
+        if args.split_val is not None:
+            from .operators.sampling import leakage_safe_split
+            out = leakage_safe_split(out, val_rate=args.split_val,
+                                     id_col=args.conv_col)
+        out.write.mode("overwrite").json(args.out)
+        n = spark.read.json(args.out).count()
+        print(f"# samples: {n}", file=sys.stderr)
     return 0
 
 
@@ -1429,10 +1342,8 @@ def cmd_shards(args) -> int:
               file=sys.stderr)
         return 2
     from .operators import shards as shards_ops
-    spark, owns = _cli_spark("log2seq-spark-shards")
-    try:
-        df = (spark.table(args.input) if args.input_kind == "table"
-              else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-shards") as spark:
+        df = _read_input(spark, args.input_kind, args.input)
         if args.curriculum:
             df = shards_ops.curriculum_phases(
                 df, args.curriculum, n_phases=args.phases,
@@ -1454,9 +1365,6 @@ def cmd_shards(args) -> int:
         print(f"# total: {total} docs in {args.n_shards} shards",
               file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_chunk(args) -> int:
@@ -1465,10 +1373,8 @@ def cmd_chunk(args) -> int:
     ``(doc_id, chunk_idx, n_chunks, chunk_text, n_tokens)`` with a
     per-window-index tally on stderr."""
     from .operators import chunking
-    spark, owns = _cli_spark("log2seq-spark-chunk")
-    try:
-        df = (spark.table(args.input) if args.input_kind == "table"
-              else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-chunk") as spark:
+        df = _read_input(spark, args.input_kind, args.input)
         try:
             ch = chunking.chunk_documents(
                 df, text_col=args.text_col,
@@ -1492,9 +1398,6 @@ def cmd_chunk(args) -> int:
         print(f"# total: {total} chunks from {df.count()} docs",
               file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_check(args) -> int:
@@ -1503,10 +1406,8 @@ def cmd_check(args) -> int:
     stdout; exit 0 when every check passes, 1 when any fails, 2 on a
     bad check spec."""
     from .operators import expectations as ex
-    spark, owns = _cli_spark("log2seq-spark-check")
-    try:
-        df = (spark.table(args.input) if args.input_kind == "table"
-              else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-check") as spark:
+        df = _read_input(spark, args.input_kind, args.input)
         try:
             checks = []
             if args.transcripts:
@@ -1544,9 +1445,6 @@ def cmd_check(args) -> int:
         print(f"# {len(report) - n_fail}/{len(report)} checks passed",
               file=sys.stderr)
         return 0 if n_fail == 0 else 1
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_compact(args) -> int:
@@ -1555,8 +1453,7 @@ def cmd_compact(args) -> int:
     bin-packs each leaf directory's undersized files into
     ~``--target-mb`` rewrites. ``--dry-run`` prints the plan only."""
     from .operators import layout
-    spark, owns = _cli_spark("log2seq-spark-compact")
-    try:
+    with _cli_session("log2seq-spark-compact") as spark:
         target = int(args.target_mb * (1 << 20))
         if args.dry_run:
             # walk the SAME leaf set the real run rewrites (a
@@ -1582,9 +1479,6 @@ def cmd_compact(args) -> int:
         print(f"# total: {total_rewritten} files -> {total_bins} bins",
               file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_expire(args) -> int:
@@ -1593,8 +1487,7 @@ def cmd_expire(args) -> int:
     expire the rest. DRY-RUN unless ``--apply`` — the report prints
     either way, one line per partition."""
     from .operators import layout
-    spark, owns = _cli_spark("log2seq-spark-expire")
-    try:
+    with _cli_session("log2seq-spark-expire") as spark:
         rep = layout.expire_partitions(spark, args.path, args.col,
                                        keep=args.keep, apply=args.apply)
         for r in rep:
@@ -1607,9 +1500,6 @@ def cmd_expire(args) -> int:
               + ("" if args.apply else " (dry-run; pass --apply)"),
               file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_zorder(args) -> int:
@@ -1617,10 +1507,8 @@ def cmd_zorder(args) -> int:
     (``operators/layout.py``), then report the per-column skipping
     effectiveness of the new layout."""
     from .operators import layout
-    spark, owns = _cli_spark("log2seq-spark-zorder")
-    try:
-        df = (spark.table(args.input) if args.input_kind == "table"
-              else spark.read.parquet(args.input))
+    with _cli_session("log2seq-spark-zorder") as spark:
+        df = _read_input(spark, args.input_kind, args.input)
         cols = args.cols.split(",")
         try:
             layout.zorder_write(df, args.out, cols, bits=args.bits,
@@ -1635,9 +1523,6 @@ def cmd_zorder(args) -> int:
                   "(expected scan fraction for a point filter)",
                   file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_redact(args) -> int:
@@ -1646,10 +1531,8 @@ def cmd_redact(args) -> int:
     the keys table, rewriting only the files that contain one. The
     takedown path: a drop-list arrives after the sink was written."""
     from .operators import layout
-    spark, owns = _cli_spark("log2seq-spark-redact")
-    try:
-        keys = (spark.table(args.keys) if args.keys_kind == "table"
-                else spark.read.parquet(args.keys))
+    with _cli_session("log2seq-spark-redact") as spark:
+        keys = _read_input(spark, args.keys_kind, args.keys)
         layout.resume_compaction(spark, args.path)   # finish a crash first
         rep = layout.delete_rows(spark, args.path, keys, args.key)
         state = "skip (no matching keys)" if rep["skipped"] else "done"
@@ -1657,9 +1540,6 @@ def cmd_redact(args) -> int:
               f"rewritten, {rep['n_deleted']} rows deleted",
               file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def cmd_upsert(args) -> int:
@@ -1667,10 +1547,8 @@ def cmd_upsert(args) -> int:
     key-matched rows of the updates table replace stored rows, the rest
     are inserted; only files holding a matched key are rewritten."""
     from .operators import layout
-    spark, owns = _cli_spark("log2seq-spark-upsert")
-    try:
-        ups = (spark.table(args.updates) if args.updates_kind == "table"
-               else spark.read.parquet(args.updates))
+    with _cli_session("log2seq-spark-upsert") as spark:
+        ups = _read_input(spark, args.updates_kind, args.updates)
         layout.resume_compaction(spark, args.path)
         try:
             rep = layout.merge_upsert(spark, args.path, ups, args.key)
@@ -1681,9 +1559,6 @@ def cmd_upsert(args) -> int:
               f"rewritten, {rep['n_updated']} updated, "
               f"{rep['n_inserted']} inserted", file=sys.stderr)
         return 0
-    finally:
-        if owns:
-            spark.stop()
 
 
 def main(argv=None) -> int:
@@ -1692,22 +1567,18 @@ def main(argv=None) -> int:
 
     p = sub.add_parser("parse", help="parse raw lines or a turns table")
     p.add_argument("files", nargs="*",
-                   help="input files (stdin when none given and no --input);"
-                        " plain/.gz/.bz2 text read distributed, tar-family"
-                        " archives read driver-side like the reference")
+                   help="input files or globs (stdin when none given and no"
+                        " --input): plain, .gz, .bz2, .xz and tar-family"
+                        " archives, all read on the executors")
     p.add_argument("--input", default=None,
                    help="additional input path (alias for a positional file)")
     p.add_argument("--input-kind", choices=["text", "parquet", "table"],
                    default="text",
                    help="text files, a parquet path, or a catalog table "
                         "name (Iceberg when a catalog is configured)")
-    p.add_argument("--distributed", action="store_true",
-                   help="read files (incl. tar archives and non-utf8 "
-                        "encodings) through the executor-parallel logtext "
-                        "DataSource instead of driver-side iteration")
     p.add_argument("--encoding", default="utf-8",
-                   help="encoding to load input data (non-UTF-8 inputs are"
-                        " decoded driver-side)")
+                   help="encoding to load input files (undecodable bytes "
+                        "become U+FFFD)")
     p.add_argument("-o", "--output", default=None,
                    help="output filename (formatted text; *.parquet writes"
                         " a parquet table instead)")

@@ -1007,8 +1007,9 @@ def duplicate_span_profile(docs: DataFrame, k: int = 8,
     join: equal by construction to
     ``duplicate_span_stats(...).join(drop_duplicate_spans(...), id_col)``
     for corpora with unique non-null ids (the only corpora that inner
-    join is meaningful for — NULL ids never match themselves in an
-    equi-join, and the composite drops them the same way).
+    join is meaningful for). A null id fails the action with a
+    ``duplicate_span_profile: null <id_col>`` error instead of the doc
+    vanishing from the result.
 
     Why per-doc arrays beat the row shape (guide §2.3 "shuffle keys and
     metadata instead of payloads"): the composite path posexplodes every
@@ -1028,7 +1029,14 @@ def duplicate_span_profile(docs: DataFrame, k: int = 8,
     per, fold = _dup_span_fold(own, k)
     toks = F.filter(F.split(normalized_text(F.col(text_col)), " "),
                     lambda t: t != "")
-    tok_arr = docs.select(F.col(id_col).alias("_tid"), toks.alias("_w"))
+    # a null id never equals itself, so the join below would drop the
+    # doc without a word: fail the action instead. Woven into the
+    # projected id (like hyperplane_signatures' dimension guard), so it
+    # costs no extra job and column pruning cannot remove it
+    tid = F.when(F.col(id_col).isNull(), F.raise_error(F.lit(
+        f"duplicate_span_profile: null {id_col}; every doc needs an id"))
+    ).otherwise(F.col(id_col))
+    tok_arr = docs.select(tid.alias("_tid"), toks.alias("_w"))
     # covered token positions, expanded per dup window; array_except
     # both dedups repeats and preserves the ascending order of the
     # sequence() left operand, so the kept positions are the sorted

@@ -1,18 +1,24 @@
 """Distributed raw-log-file source via the Python DataSource API
 (Spark 4, ``pyspark.sql.datasource``): ``spark.read.format("logtext")``.
 
-The CLI reads tar archives and exotic encodings driver-side (reference
-parity, fine for one terminal's worth of logs); THIS source is the
-cluster path: every plain/gz/bz2/xz file and every member inside a
-tar/tgz/tbz2/txz archive becomes its own input partition, so a directory
-of rotated+archived logs decompresses and splits in parallel across
-executors. Schema::
+The CLI reads tar archives, ``.xz`` files and non-UTF-8 encodings
+through this source (``__main__._read_raw_lines``): every
+plain/gz/bz2/xz file and every member inside a tar/tgz/tbz2/txz archive
+becomes its own input partition, so a directory of rotated+archived
+logs decompresses and splits in parallel across executors. Partitions
+are planned in path order and, inside an archive, in archive order.
+Schema::
 
     path string, member string, line_no bigint, text string
 
-``line_no`` is 1-based within its (file, member). Options:
+``line_no`` is 1-based within its (file, member). Lines are decoded
+like a text-mode ``open``: universal newlines (``\n``, ``\r\n`` and a
+lone ``\r`` all end a line) and undecodable bytes become U+FFFD.
+Options:
 
-* ``path`` — comma-separated files / glob patterns (required);
+* ``path`` — comma-separated files / glob patterns; or ``paths`` — a
+  JSON list of them (what ``load([p1, p2])`` passes), which also reads
+  a file whose name holds a comma;
 * ``encoding`` — text decoding, default utf-8 (errors replaced);
 * ``members`` — comma-separated fnmatch patterns selecting archive
   members (plain files match on basename) at PLANNING time: unmatched
@@ -37,6 +43,8 @@ raw rotated/archived log-file shape those readers cannot split.
 from __future__ import annotations
 
 import glob as _glob
+import io
+import json
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -62,13 +70,13 @@ class _LogPart(InputPartition):
     midx: int = -1
 
 
-def _expand(path_opt: str) -> list[str]:
-    """Expand the comma-separated path option, failing FAST (at planning,
-    on the driver) for paths that match nothing — a typo'd path should
-    not surface as a FileNotFoundError from inside an executor task."""
+def _expand(patterns: list[str]) -> list[str]:
+    """Expand the path patterns, failing FAST (at planning, on the
+    driver) for paths that match nothing — a typo'd path should not
+    surface as a FileNotFoundError from inside an executor task."""
     import os
     out = []
-    for p in path_opt.split(","):
+    for p in patterns:
         p = p.strip()
         if not p:
             continue
@@ -111,7 +119,9 @@ class LogTextReader(DataSourceReader):
     uniformly to the whole relation, visible in the read options)."""
 
     def __init__(self, options):
-        self._paths = _expand(options["path"])
+        paths = options.get("paths")
+        self._paths = _expand(json.loads(paths) if paths is not None
+                              else options["path"].split(","))
         self._encoding = options.get("encoding", "utf-8")
         m = options.get("members")
         self._members = ([p.strip() for p in m.split(",") if p.strip()]
@@ -150,21 +160,25 @@ class LogTextReader(DataSourceReader):
             # partitions() returned [] (empty tar): Spark still
             # schedules one default partition
             return
-        enc = self._encoding
         if part.member:
             import tarfile
             with tarfile.open(part.path, "r") as tar:
                 # extract by POSITION (see _LogPart.midx) — getmembers()
                 # order is the archive order, stable across opens
-                f = tar.extractfile(tar.getmembers()[part.midx])
-                for i, raw in enumerate(f, start=1):
-                    yield (part.path, part.member, i,
-                           raw.decode(enc, errors="replace").rstrip("\r\n"))
+                yield from self._lines(
+                    part, tar.extractfile(tar.getmembers()[part.midx]))
         else:
             with _open_plain(part.path) as f:
-                for i, raw in enumerate(f, start=1):
-                    yield (part.path, part.member, i,
-                           raw.decode(enc, errors="replace").rstrip("\r\n"))
+                yield from self._lines(part, f)
+
+    def _lines(self, part: _LogPart, raw) -> Iterator[tuple]:
+        # decode the stream, not each b"\n"-split piece: a multi-byte
+        # encoding (UTF-16) has NUL bytes around its newlines, and a
+        # lone "\r" ends a line as it does in Hadoop's text reader
+        f = io.TextIOWrapper(raw, encoding=self._encoding,
+                             errors="replace", newline=None)
+        for i, line in enumerate(f, start=1):
+            yield (part.path, part.member, i, line.rstrip("\n"))
 
 
 class LogTextDataSource(DataSource):

@@ -185,25 +185,42 @@ class TestExtendedSources:
             assert f.read().splitlines() == ["app 1 ok one"]
 
 
+def _tar(path, members):
+    """A tar archive at ``path`` holding ``members`` ((name, str or
+    bytes) pairs) in that archive order."""
+    with tarfile.open(path, "w:gz" if path.endswith("gz") else "w") as tar:
+        for name, text in members:
+            body = text.encode() if isinstance(text, str) else text
+            info = tarfile.TarInfo(name)
+            info.size = len(body)
+            tar.addfile(info, io.BytesIO(body))
+    return path
+
+
 class TestDistributedReader:
+    """Tar archives, .xz files and non-UTF-8 encodings are read on the
+    executors (the logtext source), one read per file and archive
+    member; output keeps argument order, then archive order."""
+
     def test_distributed_matches_driver_side_on_tar(self, run_cli,
                                                     tmpdir_path):
-        """--distributed (executor-parallel logtext DataSource) must give
-        the same parse output as the driver-side tar iteration."""
-        tar_path = os.path.join(tmpdir_path, "logs.tar.gz")
-        with tarfile.open(tar_path, "w:gz") as tar:
-            for name, text in [("a.log", "Jan  1 12:34:56 h x[1]: one\n"),
-                               ("b.log", "Jan  2 12:34:56 h y[2]: two\n")]:
-                p = os.path.join(tmpdir_path, name)
-                with open(p, "w") as f:
-                    f.write(text)
-                tar.add(p, arcname=name)
-        code_d, out_d, err_d = run_cli(["-t", "words", "--distributed",
-                                        tar_path])
-        code_l, out_l, err_l = run_cli(["-t", "words", tar_path])
-        assert code_d == code_l == 0
-        assert out_d == out_l
-        assert "2 ok, 0 failed" in err_d
+        tar_path = _tar(os.path.join(tmpdir_path, "logs.tar.gz"),
+                        [("a.log", "Jan  1 12:34:56 h x[1]: one\n"),
+                         ("b.log", "Jan  2 12:34:56 h y[2]: two\n")])
+        code, out, err = run_cli(["-t", "words", tar_path])
+        assert code == 0
+        assert out.splitlines() == ["x 1 one", "y 2 two"]
+        assert "# processed 2 lines: 2 ok, 0 failed" in err
+
+    def test_tar_members_print_in_archive_order(self, run_cli,
+                                                tmpdir_path):
+        # archive order, not member-name order (reference parity)
+        tar_path = _tar(os.path.join(tmpdir_path, "ba.tar"),
+                        [("b.log", "Jan  2 12:34:56 h bb[2]: bfirst\n"),
+                         ("a.log", "Jan  1 12:34:56 h aa[1]: asecond\n")])
+        code, out, err = run_cli(["-t", "words", tar_path])
+        assert code == 0
+        assert out.splitlines() == ["bb 2 bfirst", "aa 1 asecond"]
 
     def test_distributed_mixed_plain_and_gz(self, run_cli, tmpdir_path):
         a = os.path.join(tmpdir_path, "a.log")
@@ -212,26 +229,50 @@ class TestDistributedReader:
         b = os.path.join(tmpdir_path, "b.log.gz")
         with gzip.open(b, "wt") as f:
             f.write("Jan  2 12:34:56 h y[2]: two\n")
-        code, out, err = run_cli(["-t", "words", "--distributed", a, b])
+        code, out, err = run_cli(["-t", "words", a, b])
         assert code == 0
         assert out.splitlines() == ["x 1 one", "y 2 two"]
 
     def test_distributed_preserves_argument_order(self, run_cli,
                                                   tmpdir_path):
-        """Multi-file output must follow the user's argument order (like
-        the driver-side path and the reference CLI), not the
-        lexicographic path order — z.log given first prints first."""
+        """Multi-file output follows the user's argument order (like the
+        reference CLI), not the lexicographic path order — z.log given
+        first prints first, on either reader."""
         z = os.path.join(tmpdir_path, "z.log")
         with open(z, "w") as f:
             f.write("Jan  1 12:34:56 h zz[1]: zfirst\n")
         a = os.path.join(tmpdir_path, "a.log")
         with open(a, "w") as f:
             f.write("Jan  2 12:34:56 h aa[2]: asecond\n")
-        code_d, out_d, _ = run_cli(["-t", "words", "--distributed", z, a])
-        code_l, out_l, _ = run_cli(["-t", "words", z, a])
-        assert code_d == code_l == 0
-        assert out_d.splitlines() == ["zz 1 zfirst", "aa 2 asecond"]
-        assert out_d == out_l
+        t = _tar(os.path.join(tmpdir_path, "m.tar"),
+                 [("m.log", "Jan  3 12:34:56 h mm[3]: mthird\n")])
+        code, out, _ = run_cli(["-t", "words", z, a])
+        assert code == 0
+        assert out.splitlines() == ["zz 1 zfirst", "aa 2 asecond"]
+        code, out, _ = run_cli(["-t", "words", z, t, a])
+        assert code == 0
+        assert out.splitlines() == ["zz 1 zfirst", "mm 3 mthird",
+                                    "aa 2 asecond"]
+
+    def test_utf16_file(self, run_cli, tmpdir_path):
+        p = os.path.join(tmpdir_path, "u16.log")
+        with open(p, "w", encoding="utf-16") as f:
+            f.write("Jan  1 12:34:56 h app[1]: caf\xe9 one\n"
+                    "Jan  2 12:34:56 h app[2]: two\n")
+        code, out, err = run_cli(["-t", "words", "--encoding", "utf-16", p])
+        assert code == 0
+        assert out.splitlines() == ["app 1 caf\xe9 one", "app 2 two"]
+        assert "# processed 2 lines: 2 ok, 0 failed" in err
+
+    def test_undecodable_bytes_become_replacement_chars(self, run_cli,
+                                                        tmpdir_path):
+        # a latin-1 byte in a UTF-8 read raised UnicodeDecodeError on the
+        # driver-side tar path; every reader now replaces it
+        t = _tar(os.path.join(tmpdir_path, "bad.tar"),
+                 [("bad.log", b"Jan  1 12:34:56 h app[1]: caf\xe9 one\n")])
+        code, out, err = run_cli(["-t", "words", t])
+        assert code == 0
+        assert out.splitlines() == ["app 1 caf\ufffd one"]
 
 
 class TestCleanCommand:
@@ -308,6 +349,28 @@ class TestTemplatesCommand:
         lines = out.strip().splitlines()
         assert lines[0] == "2\t1\tconnect from <*>"
         assert "1\t1\tsession closed" in lines
+
+    def test_archive_and_xz_input_read_as_lines(self, spark, capsys,
+                                                tmpdir_path):
+        # tar and .xz inputs mine the same lines as a plain file, not
+        # tar headers or compressed bytes
+        import lzma
+        text = "connect from h1\nconnect from h2\nsession closed\n"
+        plain = os.path.join(tmpdir_path, "tp.log")
+        with open(plain, "w") as f:
+            f.write(text)
+        xz = os.path.join(tmpdir_path, "tp.log.xz")
+        with lzma.open(xz, "wt") as f:
+            f.write(text)
+        tgz = _tar(os.path.join(tmpdir_path, "tp.tar.gz"),
+                   [("tp.log", text)])
+        outs = []
+        for path in (plain, tgz, xz):
+            assert main(["templates", "--input", path]) == 0
+            outs.append(capsys.readouterr().out)
+        assert outs[0].splitlines() == ["2\t1\tconnect from <*>",
+                                        "1\t1\tsession closed"]
+        assert outs[1] == outs[0] and outs[2] == outs[0]
 
     def test_tokens_col_parquet(self, spark, capsys, tmpdir_path):
         src = os.path.join(tmpdir_path, "wdocs")
@@ -618,8 +681,9 @@ class TestParseInputRobustness:
     parquet round-trip with colliding column names."""
 
     def test_glob_expands_for_gz_and_qmark(self, run_cli, tmpdir_path):
-        # the tar/non-UTF-8 branches open paths literally, so globs must
-        # expand driver-side; '?' patterns count as globs too
+        # globs expand driver-side before the reader is chosen (here
+        # the logtext source, for the non-UTF-8 encoding); '?' patterns
+        # count as globs too
         p1 = os.path.join(tmpdir_path, "g1.log.gz")
         with gzip.open(p1, "wt") as f:
             f.write("Jan  1 12:34:56 host app[1]: gz line\n")
@@ -645,6 +709,17 @@ class TestParseInputRobustness:
         code, out, err = run_cli([p, "-t", "words"])
         assert code == 0
         assert out.splitlines() == ["app 1 xz line"]
+
+    def test_comma_in_file_name(self, run_cli, tmpdir_path):
+        # the logtext source takes its paths as a JSON list, so a comma
+        # in a file name does not split it in two
+        import lzma
+        p = os.path.join(tmpdir_path, "a,b.log.xz")
+        with lzma.open(p, "wt") as f:
+            f.write("Jan  1 12:34:56 host app[1]: comma line\n")
+        code, out, err = run_cli([p, "-t", "words"])
+        assert code == 0
+        assert out.splitlines() == ["app 1 comma line"]
 
     def test_parquet_kind_without_input_exits_2(self, run_cli):
         code, out, err = run_cli(["--input-kind", "parquet"])
@@ -701,27 +776,40 @@ class TestMultilineFlag:
         assert wcode == 0 and "||" not in wout
 
     def test_distributed_per_member(self, run_cli, tmpdir_path):
-        # the --distributed path assembles per (file, member) in
-        # parallel; records never leak across members
-        import io as _io
-        import os
-        import tarfile
-        arch = os.path.join(tmpdir_path, "ml.tar.gz")
-        with tarfile.open(arch, "w:gz") as tar:
-            for m, head in (("a.log", "ERROR one"), ("b.log", "WARN two")):
-                body = (f"Jan  1 12:00:00 host1 app[1]: {head}\n"
-                        "  continuation\n").encode()
-                info = tarfile.TarInfo(m)
-                info.size = len(body)
-                tar.addfile(info, _io.BytesIO(body))
+        # records are assembled per archive member; one never leaks
+        # into the next member
+        arch = _tar(os.path.join(tmpdir_path, "ml.tar.gz"),
+                    [(m, f"Jan  1 12:00:00 host1 app[1]: {head}\n"
+                         "  continuation\n")
+                     for m, head in (("a.log", "ERROR one"),
+                                     ("b.log", "WARN two"))])
         code, out, err = run_cli(
-            ["--year", "2023", "--distributed", "--multiline-start",
+            ["--year", "2023", "--multiline-start",
              "^[A-Z][a-z]{2} ", "-t", "words", arch])
         assert code == 0
-        lines = sorted(out.splitlines())
-        assert lines == ["app 1 ERROR one continuation",
-                         "app 1 WARN two continuation"]
+        assert out.splitlines() == ["app 1 ERROR one continuation",
+                                    "app 1 WARN two continuation"]
         assert "# processed 2 lines: 2 ok, 0 failed" in err
+
+    def test_records_stop_at_file_boundary(self, run_cli, tmpdir_path):
+        # a continuation line at the start of file 2 opens an orphan
+        # record of its own; it does not join file 1's last record
+        a = os.path.join(tmpdir_path, "mla.log")
+        with open(a, "w") as f:
+            f.write("Jan  1 12:00:00 host1 app[1]: ERROR one\n"
+                    "  cont one\n")
+        b = os.path.join(tmpdir_path, "mlb.log")
+        with open(b, "w") as f:
+            f.write("  orphan cont\n"
+                    "Jan  1 12:00:01 host1 app[1]: WARN two\n")
+        code, out, err = run_cli(
+            ["--year", "2023", "--multiline-start", "^[A-Z][a-z]{2} ",
+             "-t", "words", a, b])
+        assert code == 0
+        assert out.splitlines() == ["app 1 ERROR one cont one",
+                                    "app 1 WARN two"]
+        assert "parse failed: '  orphan cont'" in err
+        assert "# processed 3 lines: 2 ok, 1 failed" in err
 
 
 class TestTemplatesMultiline:

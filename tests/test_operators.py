@@ -632,6 +632,18 @@ class TestDedup:
         assert got == exp
         assert len(got) == len(rows)
 
+    def test_span_profile_rejects_null_id(self, spark):
+        # a null id never equals itself in the profile's join, so the
+        # doc would vanish from the result without a word: the action
+        # fails instead, whether or not the doc holds a duplicate span
+        shared = "alpha beta gamma delta epsilon zeta eta theta"
+        for null_text in (shared + " tail", "short doc"):
+            docs = spark.createDataFrame(
+                [(0, shared + " keeper"), (None, null_text),
+                 (2, "other words here")], "doc_id long, text string")
+            with pytest.raises(Exception, match="null doc_id"):
+                dedup.duplicate_span_profile(docs, k=8).collect()
+
 
 class TestSimilarity:
     def test_zero_vector_does_not_crash(self, spark):
@@ -1693,6 +1705,53 @@ class TestLogTextDataSource:
                 info.size = len(body)
                 tar.addfile(info, io.BytesIO(body))
         return d
+
+    def _lines(self, spark, **options):
+        from log2seq_spark.sources import logfiles
+        logfiles.register(spark)
+        reader = spark.read.format("logtext")
+        for k, v in options.items():
+            reader = reader.option(k, v)
+        return [r["text"] for r in reader.load().orderBy("line_no")
+                .collect()]
+
+    def test_decodes_like_text_mode_read(self, spark, tmpdir_path):
+        # the stream is decoded, not each b"\n"-split piece: a UTF-16
+        # file has NUL bytes around its newlines
+        import os
+        p = os.path.join(tmpdir_path, "u16.log")
+        with open(p, "w", encoding="utf-16") as f:
+            f.write("caf\xe9 first line\nsecond \u2603 line\n")
+        with open(p, encoding="utf-16") as f:
+            want = [line.rstrip("\n") for line in f]
+        assert len(want) == 2
+        assert self._lines(spark, path=p, encoding="utf-16") == want
+
+    def test_universal_newlines(self, spark, tmpdir_path):
+        # a lone "\r" ends a line, as in Hadoop's text reader
+        import os
+        p = os.path.join(tmpdir_path, "cr.log")
+        with open(p, "wb") as f:
+            f.write(b"a\rb\r\nc")
+        assert self._lines(spark, path=p) == ["a", "b", "c"]
+
+    def test_paths_option_reads_a_comma_in_a_name(self, spark,
+                                                  tmpdir_path):
+        # "paths" (a JSON list, what load([p1, p2]) passes) is not split
+        # on commas; its order is the partition order
+        import json
+        import os
+        a = os.path.join(tmpdir_path, "a,b.log")
+        z = os.path.join(tmpdir_path, "z.log")
+        for p, body in ((a, "from a,b\n"), (z, "from z\n")):
+            with open(p, "w") as f:
+                f.write(body)
+        assert self._lines(spark, paths=json.dumps([a])) == ["from a,b"]
+        df = spark.read.format("logtext").load([z, a])
+        got = [r["text"] for r in df.select(
+            F.spark_partition_id().alias("p"), "text").orderBy("p")
+            .collect()]
+        assert got == ["from z", "from a,b"]
 
     def test_tar_duplicate_member_names(self, spark, tmpdir_path):
         # tar -u / --append archives hold the SAME member name several
