@@ -145,8 +145,6 @@ def _read_raw_lines(spark, files, encoding: str = "utf-8"):
           or any(fp.endswith(logfiles._TAR_SUFFIXES + (".xz",))
                  for fp in files)):
         logfiles.register(spark)
-        # "paths" (a JSON list) rather than the comma-joined "path": a
-        # file name may hold a comma
         df = (spark.read.format("logtext")
               .option("paths", json.dumps(files))
               .option("encoding", encoding).load())
@@ -185,6 +183,12 @@ def cmd_parse(args) -> int:
     # -- startup validation (exit 2) before any Spark work
     program = _load_program(args)
     if program is None:
+        return 2
+    try:
+        codecs.lookup(args.encoding)
+    except LookupError:
+        print(f"cannot read input: unknown encoding {args.encoding}",
+              file=sys.stderr)
         return 2
     files = list(args.files)
     if args.input:
@@ -537,49 +541,35 @@ def cmd_templates(args) -> int:
     return 0
 
 
-def _index_segments(spark, index_dir: str):
-    """Log-structured index state: (segment paths, live delta gens,
-    next gen number). Layout:
-
-    * ``delta/gen=N`` — ONLY the novelty absorbed by ingestion N
-      (published by :func:`_cmd_dedup_incremental`; mutually disjoint
-      by the operators' anti-join construction, so their union has
-      unique keys).
-    * ``base/gen=J`` — a compaction: the FULL index as of delta J.
-
-    A reader takes the newest committed base plus every committed delta
-    with gen > J; deltas ≤ J are superseded whether or not compaction
-    got around to deleting them — which is what makes compaction
-    crash-safe: the base commits first (atomic ``_SUCCESS``), deletion
-    of absorbed segments is best-effort cleanup."""
-    from .plans.epochs import committed_ids
-    bases = committed_ids(f"{index_dir}/base", "gen", spark)
-    j = bases[-1] if bases else 0
-    deltas = [n for n in committed_ids(f"{index_dir}/delta", "gen", spark)
-              if n > j]
-    paths = ([f"{index_dir}/base/gen={j}"] if bases else []) + \
-            [f"{index_dir}/delta/gen={n}" for n in deltas]
-    nxt = max([j] + deltas) + 1
-    return paths, deltas, nxt
+def _open_index(spark, args, params):
+    """The ``plans/epochs.py`` shard protocol's checks for ``--input``
+    against ``--index-dir`` (params stamp, then shard claim): the
+    :class:`~.plans.epochs.IndexShard`, or None after printing the
+    refusal."""
+    from .plans.epochs import IndexShard
+    try:
+        return IndexShard(args.index_dir, args.input, params, spark=spark)
+    except ValueError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return None
 
 
-def _fold_segments(spark, index_dir: str, segments, nxt: int, unit: str,
+def _publish_shard(ix, delta, unit: str, compact_every: int,
                    fold=lambda df: df):
-    """LSM compaction of an :func:`_index_segments` index: write
-    ``fold`` over every live segment as ``base/gen=nxt``, then delete
-    the segments it supersedes. Returns (base path, base rows)."""
-    from . import fsio
-    base_path = f"{index_dir}/base/gen={nxt}"
-    (fold(spark.read.parquet(*segments))
-        .write.mode("overwrite").parquet(base_path))
-    n_total = spark.read.parquet(base_path).count()
-    # base committed — superseded segments are dead to every future
-    # reader; deleting them is cleanup, not correctness
-    for p in segments:
-        fsio.delete(spark, p)
-    print(f"# index: compacted -> base gen={nxt} ({n_total} {unit})",
-          file=sys.stderr)
-    return base_path, n_total
+    """Publish and compact after the shard's output is written, or skip
+    both on a replay. Returns the compaction's (base path, base rows),
+    else None."""
+    if ix.replay is not None:
+        print(f"# index: delta for this input already committed "
+              f"({ix.replay}); skipping publish", file=sys.stderr)
+        return None
+    n_new, compacted = ix.commit(delta, compact_every, fold)
+    print(f"# index: delta gen={ix.gen} (+{n_new} {unit}, "
+          f"{len(ix.segments) + 1} segments)", file=sys.stderr)
+    if compacted is not None:
+        print(f"# index: compacted -> base gen={ix.gen} "
+              f"({compacted[1]} {unit})", file=sys.stderr)
+    return compacted
 
 
 def _cmd_dedup_incremental(args, spark) -> int:
@@ -592,39 +582,42 @@ def _cmd_dedup_incremental(args, spark) -> int:
     (O(batch) publish — persisting the full union would cost O(corpus
     novelty) per shard). Once more than ``--compact-every`` deltas are
     live they are folded into ``base/gen=N`` (LSM-style compaction), so
-    reader segment counts stay bounded. Wires the incremental operators
-    from ``operators/dedup.py`` (``dedup_against_index`` /
+    reader segment counts stay bounded. Stamp, replay guard, publish
+    and compaction are the ``plans/epochs.py`` shard protocol
+    ``substr --index-dir`` also follows; the index is stamped with
+    ``--mode``. Wires the incremental operators from
+    ``operators/dedup.py`` (``dedup_against_index`` /
     ``near_dup_against_index`` + ``updated_*_index(delta_only=True)``)
-    end-to-end. Single-writer: concurrent ingestions would race on the
-    next gen number — serialize shards through one submitting process
-    (readers are safe at any time; segments are immutable once
-    committed)."""
-    from .operators.dedup import (dedup_against_index,
+    end-to-end."""
+    from .operators import bloom as bloomlib
+    from .operators.dedup import (bucket_key_expr, dedup_against_index,
                                   minhash_band_signatures,
                                   near_dup_against_index,
                                   updated_dedup_index,
                                   updated_minhash_index)
+    ix = _open_index(spark, args, {"mode": args.mode})
+    if ix is None:
+        return 2
     docs = (spark.read.parquet(args.input)
             .repartition(spark.sparkContext.defaultParallelism))
     id_type = docs.schema[args.id_col].dataType.simpleString()
-    segments, deltas, nxt = _index_segments(spark, args.index_dir)
     bloom_bits = getattr(args, "bloom_bits", 0) or 0
     sidecar_path = f"{args.index_dir}/_bloom"
-    from .operators import bloom as bloomlib
-    from .operators.dedup import bucket_key_expr
     # membership sidecar: definitely-not-in-the-index keys skip the
     # index join entirely. A half-written/corrupt sidecar loads as
     # None and the screen falls back to the plain join — the sidecar
-    # is an accelerator, never a correctness dependency.
+    # is an accelerator, never a correctness dependency. On a replay
+    # it also holds the shard's own keys: a superset, so still safe.
     sidecar = None
-    if bloom_bits and segments:
+    if bloom_bits and ix.screen:
         try:
             sidecar = bloomlib.load_bloom(spark, sidecar_path)
         except Exception:
             sidecar = None
+    sigs = None
     if args.mode == "exact":
         schema = f"text_hash string, keep_id {id_type}"
-        index = (spark.read.parquet(*segments) if segments
+        index = (spark.read.parquet(*ix.screen) if ix.screen
                  else spark.createDataFrame([], schema))
         side_key = lambda df: df.select(F.col("text_hash").alias("_k"))
         decisions = dedup_against_index(docs, index,
@@ -634,7 +627,7 @@ def _cmd_dedup_incremental(args, spark) -> int:
         delta = updated_dedup_index(index, decisions, delta_only=True)
     else:
         schema = f"band int, band_hash string, keep_id {id_type}"
-        index = (spark.read.parquet(*segments) if segments
+        index = (spark.read.parquet(*ix.screen) if ix.screen
                  else spark.createDataFrame([], schema))
         side_key = lambda df: df.select(bucket_key_expr().alias("_k"))
         # signatures computed ONCE, shared by the screen and the
@@ -653,66 +646,55 @@ def _cmd_dedup_incremental(args, spark) -> int:
             F.col("match_id").alias("keep_id"))
         delta = updated_minhash_index(index, docs, signatures=sigs,
                                       delta_only=True)
-    if bloom_bits:
-        # sidecar update BEFORE the delta publish: under any crash the
-        # sidecar is then a SUPERSET of the committed index — extra
-        # members are harmless false positives, while missing members
-        # would short-circuit a seen hash to "novel" and break
-        # exactness. (A crash after the save re-ingests the shard:
-        # re-merging the same hashes is idempotent.) Same (m, k) as
-        # the standing sidecar so merge_blooms applies; a fresh
-        # sidecar takes m from --bloom-bits with k=5 — near-optimal
-        # across the 7-15 bits/key loads a fixed-size filter passes
-        # through as the index grows.
-        delta = delta.persist()
-        m = sidecar["m_bits"] if sidecar else bloom_bits
-        k = sidecar["k"] if sidecar else 5
-        if sidecar is None and segments:
-            # no loadable sidecar over a NON-empty index (first run
-            # with the sidecar enabled, or a corrupt/half-written
-            # save): bootstrap from the FULL index ∪ delta — seeding
-            # from the delta alone would persist a SUBSET, and a
-            # subset sidecar short-circuits seen keys to "novel" on
-            # the next shard
-            feed = side_key(index).unionByName(side_key(delta))
-            merged = bloomlib.build_bloom(feed, "_k",
-                                          m_bits=m, k=k, n_items=-1)
-        else:
-            delta_bloom = bloomlib.build_bloom(side_key(delta), "_k",
-                                               m_bits=m, k=k, n_items=-1)
-            merged = (bloomlib.merge_blooms(sidecar, delta_bloom)
-                      if sidecar else delta_bloom)
-        bloomlib.save_bloom(spark, merged, sidecar_path)
-    # publish the delta: if it fails, no verdicts were emitted for a
-    # shard the index never absorbed (overwrite is safe — an
-    # uncommitted gen dir can only be a crashed writer's leftovers)
-    delta_path = f"{args.index_dir}/delta/gen={nxt}"
-    delta.write.mode("overwrite").parquet(delta_path)
-    n_new = spark.read.parquet(delta_path).count()
-    _write_with_tally(decisions, args.out, "decision")
-    if args.mode != "exact":
-        sigs.unpersist()  # both consumers (delta + verdicts) are done
-    if bloom_bits:
-        delta.unpersist()  # bloom build + publish are done
-    print(f"# index: delta gen={nxt} (+{n_new} entries, "
-          f"{len(segments) + 1} segments)", file=sys.stderr)
-    if args.compact_every and len(deltas) + 1 > args.compact_every:
-        base_path, n_total = _fold_segments(
-            spark, args.index_dir, segments + [delta_path], nxt, "entries")
-        if bloom_bits:
-            # compaction is the one moment the full index is rewritten
-            # anyway — rebuild the sidecar sized to 2x current entries
-            # (the incremental merges keep m fixed, so a corpus that
-            # outgrew --bloom-bits re-tightens its FPR here). Rebuild
-            # AFTER base commit is safe: until the save lands, the old
-            # sidecar is still a superset of the same logical index.
-            m_r, k_r = bloomlib.bloom_parameters(
-                max(2 * n_total, 1), 0.01)
-            m_r = min(max(m_r, bloom_bits), bloomlib.MAX_EXPR_BITS)
-            rebuilt = bloomlib.build_bloom(
-                side_key(spark.read.parquet(base_path)), "_k",
-                m_bits=m_r, k=k_r, n_items=n_total)
-            bloomlib.save_bloom(spark, rebuilt, sidecar_path)
+    try:
+        _write_with_tally(decisions, args.out, "decision")
+        if bloom_bits and ix.replay is None:
+            # sidecar update BEFORE the delta publish: under any crash
+            # the sidecar is then a SUPERSET of the committed index —
+            # extra members are harmless false positives, while missing
+            # members would short-circuit a seen key to "novel" and
+            # break exactness. Same (m, k) as the standing sidecar so
+            # merge_blooms applies; a fresh sidecar takes m from
+            # --bloom-bits with k=5 — near-optimal across the 7-15
+            # bits/key loads a fixed-size filter passes through as the
+            # index grows.
+            delta = delta.persist()
+            feed = side_key(delta)
+            if sidecar is None and ix.segments:
+                # no loadable sidecar over a NON-empty index (first run
+                # with the sidecar enabled, or a corrupt/half-written
+                # save): bootstrap from the FULL index ∪ delta — seeding
+                # from the delta alone would persist a SUBSET, and a
+                # subset sidecar short-circuits seen keys to "novel" on
+                # the next shard
+                feed = side_key(index).unionByName(feed)
+            m = sidecar["m_bits"] if sidecar else bloom_bits
+            k = sidecar["k"] if sidecar else 5
+            fresh = bloomlib.build_bloom(feed, "_k", m_bits=m, k=k,
+                                         n_items=-1)
+            merged = (bloomlib.merge_blooms(sidecar, fresh) if sidecar
+                      else fresh)
+            bloomlib.save_bloom(spark, merged, sidecar_path)
+        compacted = _publish_shard(ix, delta, "entries",
+                                   args.compact_every)
+    finally:
+        if sigs is not None:
+            sigs.unpersist()
+        delta.unpersist()
+    if bloom_bits and compacted is not None:
+        # compaction is the one moment the full index is rewritten
+        # anyway — rebuild the sidecar sized to 2x current entries
+        # (the incremental merges keep m fixed, so a corpus that
+        # outgrew --bloom-bits re-tightens its FPR here). Rebuild
+        # AFTER base commit is safe: until the save lands, the old
+        # sidecar is still a superset of the same logical index.
+        base_path, n_total = compacted
+        m_r, k_r = bloomlib.bloom_parameters(max(2 * n_total, 1), 0.01)
+        m_r = min(max(m_r, bloom_bits), bloomlib.MAX_EXPR_BITS)
+        rebuilt = bloomlib.build_bloom(
+            side_key(spark.read.parquet(base_path)), "_k",
+            m_bits=m_r, k=k_r, n_items=n_total)
+        bloomlib.save_bloom(spark, rebuilt, sidecar_path)
     return 0
 
 
@@ -758,13 +740,10 @@ def cmd_substr(args) -> int:
     (and absorbed into) a persisted cross-shard gram index — history
     text is never re-read; the keeper policy becomes arrival order
     (grams already in the index scrub from every batch copy). The
-    index reuses the delta/base LSM layout of ``dedup --index-dir``;
-    segments hold partial ``(gh, n_occ)`` counts and readers fold them
-    with one sum. Scrubbed output commits BEFORE the delta publish:
-    a crash in between re-runs cleanly (output overwrite is
-    idempotent), whereas screening a shard against an index that had
-    already absorbed it would scrub away the shard's own keeper
-    copies. Single-writer, like the other incremental surfaces."""
+    index follows the ``plans/epochs.py`` shard protocol of ``dedup
+    --index-dir`` (stamped with ``--text-col`` and ``--k``); segments
+    hold partial ``(gh, n_occ)`` counts and readers fold them with one
+    sum."""
     from .operators.substrdedup import (scrub_against_index,
                                         scrub_duplicate_spans,
                                         substr_index)
@@ -822,81 +801,17 @@ def cmd_substr(args) -> int:
             _write_with_tally(out.withColumn("scrub_status", status),
                               args.out, "scrub_status")
             return 0
-        import hashlib
-        from . import fsio
         from .operators.substrdedup import gram_positions
-        segments, deltas, nxt = _index_segments(spark, args.index_dir)
-        # replay guard (claim-then-publish): before publishing, the
-        # shard's input path claims its gen number in _shards/. A
-        # re-run of a shard whose delta already committed must NOT
-        # screen against its own grams — that would scrub the shard's
-        # keeper copies — nor publish a second, double-counting delta.
-        # Claim written BEFORE the delta commit, so there is no window
-        # where a committed delta is untracked; a claim with an
-        # uncommitted gen is a crashed pre-publish run and is safely
-        # re-claimed. Single-writer, like the other index surfaces.
         # gram-space stamp: an index built with a different tokenizer
         # column or k is a DIFFERENT hash space — mixing them would
-        # silently miss every historical duplicate. Stamped on first
-        # publish, refused on drift (same discipline as the
-        # templates --state-dir epoch state).
-        import json as _json
-        stamp_path = f"{args.index_dir}/_params.json"
-        stamp = {"text_col": args.text_col, "k": args.k}
-        prior_stamp = fsio.read_text(spark, stamp_path)
-        if prior_stamp is not None:
-            try:
-                prior_params = _json.loads(prior_stamp)
-            except ValueError:
-                prior_params = None
-            if prior_params != stamp:
-                print(f"error: index {args.index_dir!r} was built "
-                      f"with params {prior_stamp} but this run uses "
-                      f"{_json.dumps(stamp)}; the gram spaces are "
-                      "incompatible. Refusing.", file=sys.stderr)
-                return 2
-        elif segments:
-            # committed segments but no stamp: the gram space that
-            # built them is unknowable, and adopting THIS run's params
-            # would accept exactly the drift the stamp exists to
-            # reject (a mismatched k joins nothing and silently
-            # misses every historical duplicate)
-            print(f"error: index {args.index_dir!r} has committed "
-                  "segments but no _params.json (pre-stamp index or "
-                  "torn write); record the original text_col/k in "
-                  "_params.json by hand before ingesting more "
-                  "shards. Refusing.", file=sys.stderr)
+        # silently miss every historical duplicate
+        ix = _open_index(spark, args, {"text_col": args.text_col,
+                                       "k": args.k})
+        if ix is None:
             return 2
-        claim_path = (f"{args.index_dir}/_shards/"
-                      f"{hashlib.md5(args.input.encode()).hexdigest()}")
-        claimed = fsio.read_text(spark, claim_path)
-        prior = None
-        if claimed is not None:
-            try:
-                claimed_gen = int(claimed)
-            except ValueError:
-                print(f"error: unreadable shard claim {claim_path!r} "
-                      f"(contents {claimed!r}) — torn write from a "
-                      "crashed run; inspect the index before "
-                      "re-ingesting this input. Refusing.",
-                      file=sys.stderr)
-                return 2
-            base_gen = max([0] + [int(p.rsplit("=", 1)[1])
-                                  for p in segments if "/base/" in p])
-            if claimed_gen <= base_gen:
-                print(f"error: input {args.input!r} was already "
-                      f"ingested (gen {claimed}) and compacted into "
-                      f"base gen={base_gen}; re-screening it against "
-                      "the folded index would scrub its keeper "
-                      "copies. Refusing.", file=sys.stderr)
-                return 2
-            prior = next((p for p in segments
-                          if p.endswith(f"delta/gen={claimed_gen}")),
-                         None)
-        screen_segs = [p for p in segments if p != prior]
-        index = (spark.read.parquet(*screen_segs)
+        index = (spark.read.parquet(*ix.screen)
                  .groupBy("gh").agg(F.sum("n_occ").alias("n_occ"))
-                 if screen_segs else
+                 if ix.screen else
                  spark.createDataFrame([], "gh bigint, n_occ bigint"))
         # ONE tokenize+hash pass shared by screen and publish (the
         # signatures-computed-once discipline of dedup --index-dir);
@@ -911,31 +826,12 @@ def cmd_substr(args) -> int:
                 min_count=args.min_count, grams=grams)
             _write_with_tally(out.withColumn("scrub_status", status),
                               args.out, "scrub_status")
-            if prior is not None:
-                print(f"# index: delta for this input already "
-                      f"committed ({prior}); skipping publish",
-                      file=sys.stderr)
-                return 0
-            delta = substr_index(docs, k=args.k, grams=grams)
-            delta_path = f"{args.index_dir}/delta/gen={nxt}"
-            if prior_stamp is None:
-                fsio.write_text(spark, stamp_path, _json.dumps(stamp))
-            # claim BEFORE publish: a claim pointing at an uncommitted
-            # gen is a crashed pre-publish run (safely re-claimed); a
-            # claim pointing at a committed gen is the replay guard's
-            # signal
-            fsio.write_text(spark, claim_path, str(nxt))
-            delta.write.mode("overwrite").parquet(delta_path)
-            n_new = spark.read.parquet(delta_path).count()
+            _publish_shard(
+                ix, substr_index(docs, k=args.k, grams=grams), "grams",
+                args.compact_every, lambda df: df.groupBy("gh").agg(
+                    F.sum("n_occ").alias("n_occ")))
         finally:
             grams.unpersist()
-        print(f"# index: delta gen={nxt} (+{n_new} gram rows, "
-              f"{len(segments) + 1} segments)", file=sys.stderr)
-        if args.compact_every and len(deltas) + 1 > args.compact_every:
-            _fold_segments(
-                spark, args.index_dir, segments + [delta_path], nxt,
-                "grams", lambda df: df.groupBy("gh").agg(
-                    F.sum("n_occ").alias("n_occ")))
     return 0
 
 
@@ -1188,8 +1084,7 @@ def cmd_bpe(args) -> int:
         if args.action == "train":
             merges = bpe_train(docs, args.text_col,
                                n_merges=args.n_merges,
-                               min_count=args.min_count,
-                               engine=args.engine)
+                               min_count=args.min_count)
             with open(args.merges, "w") as f:
                 _json.dump([list(m) for m in merges], f)
             print(f"# merges: {len(merges)} -> {args.merges}",
@@ -1886,10 +1781,6 @@ def main(argv=None) -> int:
     p.add_argument("--min-count", type=int, default=2,
                    help="train: stop when the best pair drops below "
                         "this count")
-    p.add_argument("--engine", choices=["auto", "driver", "distributed"],
-                   default="auto",
-                   help="merge-loop engine (auto gates on distinct "
-                        "words)")
     p.add_argument("--counts-only", action="store_true",
                    help="encode: write n_bpe_tokens without the pieces "
                         "arrays")

@@ -1126,6 +1126,35 @@ def exact_dedup_index(docs: DataFrame, text_col: str = "text",
                 .agg(F.min(id_col).alias("keep_id")))
 
 
+def _join_index(batch: DataFrame, idx: DataFrame, on: list, probe,
+                index_bloom: dict | None) -> DataFrame:
+    """``batch`` left-joined to the index rows ``idx`` on ``on``. With
+    ``index_bloom`` (a sidecar over — or over a superset of — the
+    index's ``probe`` values) only the rows that may be in the index
+    enter the join; the rest take NULL for every ``idx`` column, which
+    is what the join would have given them."""
+    if index_bloom is None:
+        return batch.join(idx, on, "left")
+    from .bloom import with_might_contain
+    # EAGER localCheckpoint, deliberately: (1) the batch is probed
+    # exactly once (the hot/cold branches re-read the materialized rows
+    # instead of re-running the batch plan + probe per branch), and (2)
+    # it severs the logical lineage so Catalyst's
+    # InferFiltersFromConstraints cannot copy the probe across the
+    # equi-join onto the INDEX side — measured doing exactly that,
+    # re-probing every index row for zero pruning (all members pass
+    # their own filter). Bounded by the batch, which already fits by
+    # assumption.
+    flagged = with_might_contain(batch, probe, index_bloom,
+                                 "_maybe").localCheckpoint()
+    hot = flagged.where(F.col("_maybe")).drop("_maybe")
+    cold = flagged.where(~F.col("_maybe")).drop("_maybe")
+    for f in idx.schema.fields:
+        if f.name not in on:
+            cold = cold.withColumn(f.name, F.lit(None).cast(f.dataType))
+    return hot.join(idx, on, "left").unionByName(cold)
+
+
 def dedup_against_index(new_docs: DataFrame, index: DataFrame,
                         text_col: str = "text",
                         id_col: str = "doc_id",
@@ -1178,29 +1207,7 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
     idx = index.select(F.col("text_hash").alias("_h"),
                        F.col("keep_id").alias("_seen_keeper"),
                        F.lit(True).alias("_in_index"))
-    if index_bloom is not None:
-        from .bloom import with_might_contain
-        # EAGER localCheckpoint, deliberately: (1) the batch is probed
-        # exactly once (the hot/cold branches re-read the materialized
-        # rows instead of re-running distinct+window+probe per branch),
-        # and (2) it severs the logical lineage so Catalyst's
-        # InferFiltersFromConstraints cannot copy the probe across the
-        # equi-join onto the INDEX side — measured doing exactly that,
-        # re-probing every index row for zero pruning (all members
-        # pass their own filter). Bounded by the batch, which already
-        # fits by assumption.
-        flagged = with_might_contain(batch, F.col("_h"), index_bloom,
-                                     "_maybe_seen").localCheckpoint()
-        keep_t = index.schema["keep_id"].dataType.simpleString()
-        hot = flagged.where(F.col("_maybe_seen")).drop("_maybe_seen")
-        cold = (flagged.where(~F.col("_maybe_seen")).drop("_maybe_seen")
-                       .withColumn("_seen_keeper",
-                                   F.lit(None).cast(keep_t))
-                       .withColumn("_in_index",
-                                   F.lit(None).cast("boolean")))
-        joined = hot.join(idx, "_h", "left").unionByName(cold)
-    else:
-        joined = batch.join(idx, "_h", "left")
+    joined = _join_index(batch, idx, ["_h"], F.col("_h"), index_bloom)
     # null-safe keeper comparison: a null-id row sharing content with a
     # real-id row must be drop_batch (plain != yields NULL -> would
     # fall through to a second bogus keep)
@@ -1221,17 +1228,14 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
 
 def updated_dedup_index(index: DataFrame,
                         batch_decisions: DataFrame,
-                        new_docs: DataFrame | None = None,
-                        text_col: str = "text",
                         id_col: str = "doc_id",
                         delta_only: bool = False) -> DataFrame:
     """The index after absorbing a batch: prior entries plus one row per
     content first seen in this batch (its batch keeper). Feed the result
     of :func:`dedup_against_index` as ``batch_decisions`` — it carries
     the content hash, so no join back to the docs is needed (and a
-    null or repeated id can't lose its hash). ``new_docs``/``text_col``
-    remain only for decision frames predating the carried hash.
-    First-wins via anti-join, like :func:`updated_minhash_index`: prior
+    null or repeated id can't lose its hash). First-wins via anti-join,
+    like :func:`updated_minhash_index`: prior
     entries are appended to, never re-aggregated — per-batch cost scales
     with the BATCH, not with the (corpus-novelty-sized) index that
     accumulates over many ingestions.
@@ -1242,19 +1246,12 @@ def updated_dedup_index(index: DataFrame,
     its novelty and readers union the committed segments: persisting
     the full union would make every publish O(corpus novelty) instead
     of O(batch novelty)."""
-    keeps = batch_decisions.filter(F.col("decision") == "keep")
-    if "text_hash" in batch_decisions.columns:
-        fresh = keeps.select("text_hash", F.col(id_col).alias("keep_id"))
-    else:
-        fresh = (keeps.join(
-                     new_docs.select(
-                         F.col(id_col),
-                         _nullsafe_text_hash(text_col).alias("text_hash")),
-                     id_col)
-                 .select("text_hash", F.col(id_col).alias("keep_id")))
-    # flag-carrying decisions only keep unseen hashes, so fresh is
-    # disjoint from the index by construction; the aggregate + anti-join
-    # (both batch-sized probes) also normalize legacy no-hash frames
+    fresh = (batch_decisions.filter(F.col("decision") == "keep")
+                            .select("text_hash",
+                                    F.col(id_col).alias("keep_id")))
+    # the screen only keeps unseen hashes, so fresh is disjoint from the
+    # index by construction; the aggregate + anti-join (both batch-sized
+    # probes) keep that true for a frame screened against another index
     fresh = (fresh.groupBy("text_hash")
                   .agg(F.min("keep_id").alias("keep_id"))
                   .join(index.select("text_hash"), "text_hash",
@@ -1348,25 +1345,8 @@ def near_dup_against_index(new_docs: DataFrame, index: DataFrame,
     idx = index.select("band", "band_hash",
                        F.col("keep_id").alias("_seen"),
                        F.lit(True).alias("_occ"))
-    if index_bloom is not None:
-        from .bloom import with_might_contain
-        # eager localCheckpoint for the same two reasons as
-        # dedup_against_index: one probe pass shared by both branches,
-        # and a lineage barrier so the probe is not inferred onto the
-        # index side of the bucket join (where every member passes —
-        # all cost, no pruning)
-        flagged = with_might_contain(sigs, bucket_key_expr(),
-                                     index_bloom,
-                                     "_maybe_occ").localCheckpoint()
-        keep_t = index.schema["keep_id"].dataType.simpleString()
-        hot = flagged.where(F.col("_maybe_occ")).drop("_maybe_occ")
-        cold = (flagged.where(~F.col("_maybe_occ")).drop("_maybe_occ")
-                       .withColumn("_seen", F.lit(None).cast(keep_t))
-                       .withColumn("_occ", F.lit(None).cast("boolean")))
-        joined = hot.join(idx, ["band", "band_hash"],
-                          "left").unionByName(cold)
-    else:
-        joined = sigs.join(idx, ["band", "band_hash"], "left")
+    joined = _join_index(sigs, idx, ["band", "band_hash"],
+                         bucket_key_expr(), index_bloom)
     batch_prior = ~F.col("_sk").eqNullSafe(F.col("_bmin"))
     prior = F.least(
         F.col("_seen"),

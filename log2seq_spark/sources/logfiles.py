@@ -16,9 +16,8 @@ like a text-mode ``open``: universal newlines (``\n``, ``\r\n`` and a
 lone ``\r`` all end a line) and undecodable bytes become U+FFFD.
 Options:
 
-* ``path`` — comma-separated files / glob patterns; or ``paths`` — a
-  JSON list of them (what ``load([p1, p2])`` passes), which also reads
-  a file whose name holds a comma;
+* ``path`` — one file or glob pattern (a comma is part of the name);
+  ``paths`` — a JSON list of them, what ``load([p1, p2])`` passes;
 * ``encoding`` — text decoding, default utf-8 (errors replaced);
 * ``members`` — comma-separated fnmatch patterns selecting archive
   members (plain files match on basename) at PLANNING time: unmatched
@@ -77,9 +76,6 @@ def _expand(patterns: list[str]) -> list[str]:
     import os
     out = []
     for p in patterns:
-        p = p.strip()
-        if not p:
-            continue
         hits = sorted(_glob.glob(p))
         if not hits:
             kind = "files match pattern" if _glob.has_magic(p) else "such file"
@@ -121,7 +117,7 @@ class LogTextReader(DataSourceReader):
     def __init__(self, options):
         paths = options.get("paths")
         self._paths = _expand(json.loads(paths) if paths is not None
-                              else options["path"].split(","))
+                              else [options["path"]])
         self._encoding = options.get("encoding", "utf-8")
         m = options.get("members")
         self._members = ([p.strip() for p in m.split(",") if p.strip()]

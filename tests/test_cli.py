@@ -30,6 +30,20 @@ def run_cli(spark, capsys, monkeypatch):
     return _run
 
 
+def test_exit_2_on_unknown_encoding_before_any_session(
+        monkeypatch, capsys, tmp_path):
+    import log2seq_spark.__main__ as cli
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+    monkeypatch.setattr(cli, "_cli_spark", no_session)
+    log = tmp_path / "x.log"
+    log.write_text(LINES)
+    assert main(["parse", str(log), "--encoding", "bogus"]) == 2
+    assert ("cannot read input: unknown encoding bogus"
+            in capsys.readouterr().err)
+
+
 def _state_templates(spark, state_dir):
     """(template, n_lines, n_groups) of the newest committed epoch of a
     ``--state-dir`` template state."""
@@ -626,8 +640,8 @@ class TestDedupCommand:
         for i, t in docs:
             first_seen.setdefault(t, i)
         assert sorted(keeps) == sorted(first_seen.values())
-        from log2seq_spark.__main__ import _index_segments
-        segments, _, _ = _index_segments(spark, idx)
+        from log2seq_spark.plans.epochs import index_segments
+        segments, _, _ = index_segments(idx, spark)
         got = {r["text_hash"]: r["keep_id"]
                for r in spark.read.parquet(*segments).collect()}
         scratch = {r["text_hash"]: r["keep_id"]
@@ -673,6 +687,138 @@ class TestDedupCommand:
                      "--out", out, "--index-dir", idx]) == 0
         assert spark.read.parquet(out).collect()[0]["decision"] == \
             "drop_seen"
+
+
+class TestDedupIndexGuards:
+    """``dedup --index-dir`` follows the ``plans/epochs.py`` shard
+    protocol of ``substr --index-dir``: a ``{"mode": ...}`` stamp and a
+    claim-then-publish replay guard (the ``tests/test_substrdedup.py``
+    guard tests, for dedup)."""
+
+    BASE = "the quick brown fox jumps over the lazy sleeping dog"
+    ROWS = {"exact": [("a1", "alpha"), ("a2", "beta"), ("a3", "alpha")],
+            "near": [("a1", BASE), ("a2", BASE.replace("jumps", "leaps")),
+                     ("a3", "entirely different content here today")]}
+    WANT = {"exact": {"a1": ("keep", "a1"), "a2": ("keep", "a2"),
+                      "a3": ("drop_batch", "a1")},
+            "near": {"a1": ("keep", None), "a2": ("drop_near", "a1"),
+                     "a3": ("keep", None)}}
+
+    def _shard(self, spark, tmpdir_path, name, rows):
+        p = os.path.join(tmpdir_path, name)
+        (spark.createDataFrame(rows, "doc_id string, text string")
+         .write.mode("overwrite").parquet(p))
+        return p
+
+    def _dedup(self, src, out, idx, mode="exact", *extra):
+        return main(["dedup", "--mode", mode, "--input", src,
+                     "--out", out, "--index-dir", idx, *extra])
+
+    def _verdicts(self, spark, out):
+        return {r["doc_id"]: (r["decision"], r["keep_id"])
+                for r in spark.read.parquet(out).collect()}
+
+    @pytest.mark.parametrize("mode", ["exact", "near"])
+    def test_replay_after_publish_skips_and_matches(self, spark, capsys,
+                                                    tmpdir_path, mode):
+        from log2seq_spark.plans.epochs import index_segments
+        idx = os.path.join(tmpdir_path, "rp_idx")
+        src = self._shard(spark, tmpdir_path, "rp_s", self.ROWS[mode])
+        outs = [os.path.join(tmpdir_path, f"rp_o{i}") for i in range(2)]
+        for out in outs:
+            assert self._dedup(src, out, idx, mode) == 0
+        assert "already committed" in capsys.readouterr().err
+        for out in outs:    # the shard never matches its own entries
+            assert self._verdicts(spark, out) == self.WANT[mode]
+        segments, _, _ = index_segments(idx, spark)
+        assert segments == [f"{idx}/delta/gen=1"]   # no second delta
+
+    def test_replay_after_compaction_refuses(self, spark, capsys,
+                                             tmpdir_path):
+        idx = os.path.join(tmpdir_path, "rc_idx")
+        out = os.path.join(tmpdir_path, "rc_o")
+        srcs = [self._shard(spark, tmpdir_path, f"rc_s{i}",
+                            [(f"c{i}", f"content {i}")]) for i in range(2)]
+        for src in srcs:    # compact_every=1 -> compaction after 2nd
+            assert self._dedup(src, out, idx, "exact",
+                               "--compact-every", "1") == 0
+        capsys.readouterr()
+        assert self._dedup(srcs[0], out, idx) == 2
+        assert "compacted" in capsys.readouterr().err
+
+    def test_garbage_claim_refuses(self, spark, capsys, tmpdir_path):
+        import hashlib
+        idx = os.path.join(tmpdir_path, "gc_idx")
+        src = self._shard(spark, tmpdir_path, "gc_s", [("d", "a b c")])
+        os.makedirs(os.path.join(idx, "_shards"))
+        with open(os.path.join(idx, "_shards",
+                               hashlib.md5(src.encode()).hexdigest()),
+                  "w") as f:
+            f.write("garb\x00age")
+        assert self._dedup(src, os.path.join(tmpdir_path, "gc_o"),
+                           idx) == 2
+        assert "unreadable shard claim" in capsys.readouterr().err
+
+    def test_mode_drift_refused(self, spark, capsys, tmpdir_path):
+        idx = os.path.join(tmpdir_path, "md_idx")
+        out = os.path.join(tmpdir_path, "md_o")
+        assert self._dedup(self._shard(spark, tmpdir_path, "md_s1",
+                                       self.ROWS["exact"]),
+                           out, idx, "exact") == 0
+        capsys.readouterr()
+        src2 = self._shard(spark, tmpdir_path, "md_s2", self.ROWS["near"])
+        assert self._dedup(src2, out, idx, "near") == 2
+        err = capsys.readouterr().err
+        assert "incompatible" in err and "Traceback" not in err
+        assert len(err.strip().splitlines()) == 1
+
+    def test_stampless_index_with_segments_refused(self, spark, capsys,
+                                                   tmpdir_path):
+        idx = os.path.join(tmpdir_path, "sl_idx")
+        out = os.path.join(tmpdir_path, "sl_o")
+        assert self._dedup(self._shard(spark, tmpdir_path, "sl_s1",
+                                       [("a", "alpha")]), out, idx) == 0
+        # an index written before dedup stamped its mode
+        os.remove(os.path.join(idx, "_params.json"))
+        capsys.readouterr()
+        src2 = self._shard(spark, tmpdir_path, "sl_s2", [("b", "beta")])
+        assert self._dedup(src2, out, idx) == 2
+        assert "no _params.json" in capsys.readouterr().err
+
+    @pytest.mark.parametrize("crash", ["verdict_write", "after_publish"])
+    def test_rerun_after_crash_gives_first_verdicts(
+            self, spark, capsys, tmpdir_path, monkeypatch, crash):
+        """A run killed before its verdicts land, or right after its
+        delta committed, is rerun to the verdicts of an uninterrupted
+        run, and the index holds one delta for the shard."""
+        import log2seq_spark.__main__ as cli
+        from log2seq_spark.plans import epochs
+        from log2seq_spark.plans.epochs import index_segments
+        idx = os.path.join(tmpdir_path, "kc_idx")
+        src = self._shard(spark, tmpdir_path, "kc_s", self.ROWS["exact"])
+        out = os.path.join(tmpdir_path, "kc_o")
+
+        commit = epochs.IndexShard.commit
+
+        def killed(*args, **kwargs):
+            raise RuntimeError("killed")
+
+        def commit_then_killed(*args, **kwargs):
+            commit(*args, **kwargs)
+            killed()
+        if crash == "verdict_write":
+            monkeypatch.setattr(cli, "_write_with_tally", killed)
+        else:
+            monkeypatch.setattr(epochs.IndexShard, "commit",
+                                commit_then_killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            self._dedup(src, out, idx)
+        monkeypatch.undo()
+        assert self._dedup(src, out, idx) == 0
+        capsys.readouterr()
+        assert self._verdicts(spark, out) == self.WANT["exact"]
+        segments, _, _ = index_segments(idx, spark)
+        assert segments == [f"{idx}/delta/gen=1"]
 
 
 class TestParseInputRobustness:
@@ -1330,8 +1476,8 @@ class TestDedupBloomSidecar:
                      "--out", out1, "--index-dir", idx]) == 0
         capsys.readouterr()
         side = bloom.load_bloom(spark, f"{idx}/_bloom")
-        from log2seq_spark.__main__ import _index_segments
-        segments, _, _ = _index_segments(spark, idx)
+        from log2seq_spark.plans.epochs import index_segments
+        segments, _, _ = index_segments(idx, spark)
         hashes = spark.read.parquet(*segments).select("text_hash")
         n_all = hashes.count()
         n_in = hashes.where(
@@ -1387,8 +1533,8 @@ class TestDedupBloomSidecar:
         # 90 distinct contents; compaction resizes m to the 2x-capacity
         # formula, well above the deliberately tiny initial 1024 bits
         assert side["m_bits"] > small_m
-        from log2seq_spark.__main__ import _index_segments
-        segments, _, _ = _index_segments(spark, idx)
+        from log2seq_spark.plans.epochs import index_segments
+        segments, _, _ = index_segments(idx, spark)
         hashes = spark.read.parquet(*segments).select("text_hash")
         assert hashes.where(bloom.might_contain_expr(
             "text_hash", side)).count() == hashes.count()
@@ -1415,8 +1561,8 @@ class TestDedupBloomSidecar:
                      "--out", out2, "--index-dir", idx]) == 0
         # sidecar must now cover shard 1's hashes too
         side = bloom.load_bloom(spark, f"{idx}/_bloom")
-        from log2seq_spark.__main__ import _index_segments
-        segments, _, _ = _index_segments(spark, idx)
+        from log2seq_spark.plans.epochs import index_segments
+        segments, _, _ = index_segments(idx, spark)
         hashes = spark.read.parquet(*segments).select("text_hash")
         assert hashes.where(bloom.might_contain_expr(
             "text_hash", side)).count() == hashes.count()

@@ -7,7 +7,10 @@
 * one raw-log reader: ``spark.read.text`` and ``format("logtext")``
   appear only in ``_read_raw_lines``, and the module imports none of
   ``tarfile``/``lzma``/``gzip``/``bz2`` (archives and compressed files
-  are the readers' business)."""
+  are the readers' business);
+* one index-state protocol: the module makes no ``fsio`` call (stamps,
+  shard claims, segment listing and compaction go through
+  ``plans/epochs.py``)."""
 
 import ast
 import pathlib
@@ -76,3 +79,16 @@ def test_no_archive_or_compression_imports():
         return (isinstance(node, ast.ImportFrom) and node.module
                 and node.module.split(".")[0] in banned)
     assert _sites(imports_banned) == {}
+
+
+def test_no_fsio_calls():
+    def uses_fsio(node):
+        if isinstance(node, ast.ImportFrom):
+            return (any(a.name == "fsio" for a in node.names)
+                    or (node.module or "").split(".")[-1] == "fsio")
+        if isinstance(node, ast.Import):
+            return any(a.name.split(".")[-1] == "fsio" for a in node.names)
+        return (isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "fsio")
+    assert _sites(uses_fsio) == {}

@@ -277,7 +277,7 @@ class TestDedup:
         assert dec[13] == ("keep", 13)
 
         new_idx = dedup.updated_dedup_index(
-            idx, dedup.dedup_against_index(batch, idx), batch)
+            idx, dedup.dedup_against_index(batch, idx))
         scratch = dedup.exact_dedup_index(hist.unionByName(batch))
         got = {r["text_hash"]: r["keep_id"] for r in new_idx.collect()}
         exp = {r["text_hash"]: r["keep_id"] for r in scratch.collect()}
@@ -1753,6 +1753,18 @@ class TestLogTextDataSource:
             .collect()]
         assert got == ["from z", "from a,b"]
 
+    def test_path_option_is_one_name(self, spark, tmpdir_path):
+        # "path" is one file or glob, never split: a comma is part of
+        # the name even when its pieces name files of their own
+        import os
+        for name in ("a,b.log", "a", "b.log"):
+            with open(os.path.join(tmpdir_path, name), "w") as f:
+                f.write(f"from {name}\n")
+        p = os.path.join(tmpdir_path, "a,b.log")
+        assert self._lines(spark, path=p) == ["from a,b.log"]
+        df = spark.read.format("logtext").load([p])
+        assert [r["text"] for r in df.collect()] == ["from a,b.log"]
+
     def test_tar_duplicate_member_names(self, spark, tmpdir_path):
         # tar -u / --append archives hold the SAME member name several
         # times; extractfile(name) resolves to the LAST occurrence, so
@@ -1778,7 +1790,7 @@ class TestLogTextDataSource:
         d = self._fixture(tmpdir_path)
         logfiles.register(spark)
         df = (spark.read.format("logtext")
-              .option("path", f"{d}/a.log,{d}/b.log.gz,{d}/c.tar.gz").load())
+              .load([f"{d}/a.log", f"{d}/b.log.gz", f"{d}/c.tar.gz"]))
         rows = {(r["member"], r["line_no"], r["text"]) for r in df.collect()}
         assert ("", 1, "line a1") in rows and ("", 2, "line a2") in rows
         assert ("", 1, "line b1") in rows
@@ -1791,7 +1803,7 @@ class TestLogTextDataSource:
         d = self._fixture(tmpdir_path)
         logfiles.register(spark)
         df = (spark.read.format("logtext")
-              .option("path", f"{d}/a.log,{d}/b.log.gz,{d}/c.tar.gz").load())
+              .load([f"{d}/a.log", f"{d}/b.log.gz", f"{d}/c.tar.gz"]))
         # a.log + b.log.gz + 2 tar members = 4 independent read partitions
         assert df.rdd.getNumPartitions() == 4
 
@@ -1802,19 +1814,19 @@ class TestLogTextDataSource:
         from log2seq_spark.sources import logfiles
         d = self._fixture(tmpdir_path)
         logfiles.register(spark)
-        paths = f"{d}/a.log,{d}/b.log.gz,{d}/c.tar.gz"
-        one = (spark.read.format("logtext").option("path", paths)
-               .option("members", "one.log").load())
+        paths = [f"{d}/a.log", f"{d}/b.log.gz", f"{d}/c.tar.gz"]
+        one = (spark.read.format("logtext")
+               .option("members", "one.log").load(paths))
         assert one.rdd.getNumPartitions() == 1   # 3 of 4 pruned
         assert {r["text"] for r in one.collect()} == {"line c1", "line c2"}
-        pre = (spark.read.format("logtext").option("path", paths)
-               .option("members", "sub/*").load())
+        pre = (spark.read.format("logtext")
+               .option("members", "sub/*").load(paths))
         assert pre.rdd.getNumPartitions() == 1
         assert [r["text"] for r in pre.collect()] == ["line c3"]
         import pytest as _pytest
         with _pytest.raises(Exception, match="no file or archive member"):
-            (spark.read.format("logtext").option("path", paths)
-             .option("members", "nope-*").load().collect())
+            (spark.read.format("logtext")
+             .option("members", "nope-*").load(paths).collect())
 
     def test_relation_reuse_not_pruned_by_filters(self, spark, tmpdir_path):
         """Regression for the removed pushFilters pruning: Spark caches
@@ -1827,7 +1839,7 @@ class TestLogTextDataSource:
         d = self._fixture(tmpdir_path)
         logfiles.register(spark)
         df = (spark.read.format("logtext")
-              .option("path", f"{d}/a.log,{d}/b.log.gz,{d}/c.tar.gz").load())
+              .load([f"{d}/a.log", f"{d}/b.log.gz", f"{d}/c.tar.gz"]))
         total = df.count()
         filtered = df.filter("member = 'one.log'")
         assert filtered.count() == 2

@@ -422,8 +422,8 @@ class TestSubstrReplayGuard:
         second = {r["doc_id"]: (r["text"], r["n_dropped_tokens"])
                   for r in spark.read.parquet(out2).collect()}
         assert second == first
-        from log2seq_spark.__main__ import _index_segments
-        segments, _, _ = _index_segments(spark, idx)
+        from log2seq_spark.plans.epochs import index_segments
+        segments, _, _ = index_segments(idx, spark)
         assert len(segments) == 1            # no double publish
 
     def test_replay_after_compaction_refuses(self, spark, capsys,

@@ -27,7 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from log2seq_spark.__main__ import _index_segments, main  # noqa: E402
+from log2seq_spark.__main__ import main  # noqa: E402
+from log2seq_spark.plans.epochs import index_segments  # noqa: E402
 from log2seq_spark.session import get_spark  # noqa: E402
 
 N_BLOCKS = 40
@@ -87,7 +88,7 @@ def run(n_shards: int = 6, per_shard: int = 250_000, k: int = 8,
                  spark.read.parquet(out).groupBy("scrub_status")
                       .count().collect()}
         tallies.append(tally)
-        segments, _, _ = _index_segments(spark, idx)
+        segments, _, _ = index_segments(idx, spark)
         index_sizes.append(spark.read.parquet(*segments).count())
         print(f"# shard {s}: {walls[-1]}s {tally} "
               f"index={index_sizes[-1]} ({len(segments)} segments)",
